@@ -17,6 +17,8 @@ import argparse
 import json
 import sys
 
+from relational_to_doc_oriented_nosql_migrator_spark.workload import DIALECTS
+
 
 def build_parser() -> argparse.ArgumentParser:
     p = argparse.ArgumentParser(
@@ -32,7 +34,7 @@ def build_parser() -> argparse.ArgumentParser:
     )
     p.add_argument("--log", help="query log file for workload GAF/UAF stats")
     p.add_argument(
-        "--dialect", default="mysql", choices=("mysql", "postgres"),
+        "--dialect", default="mysql", choices=DIALECTS,
         help="query-log dialect (default mysql)",
     )
     p.add_argument("--out", required=True, help="output directory")

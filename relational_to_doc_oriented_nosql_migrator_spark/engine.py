@@ -63,6 +63,25 @@ def build_testdata_catalog(
     return tpch_catalog(columns, counts), tables
 
 
+def _plan_and_materialize(
+    tables: dict[str, DataFrame],
+    catalog: Catalog,
+    log_content: str | None,
+    log_dialect: str,
+    normalize_dates: bool,
+):
+    """The tail every source shares: fold the query log into the catalog,
+    plan, and build the nested collections. Returns (plan, collections).
+    The calls resolve `convert_schema`, `materialize` and
+    `workload_mod.apply_workload` as module attributes at call time, so a
+    tracer that patches those names (perfbench/spans.py) sees each call."""
+    if log_content:
+        workload_mod.apply_workload(catalog, log_content, log_dialect)
+    plan = convert_schema(catalog)
+    return plan, materialize(tables, catalog, plan,
+                             normalize_dates=normalize_dates)
+
+
 def _pipeline(
     spark: SparkSession,
     sf_dir: str,
@@ -74,11 +93,8 @@ def _pipeline(
     migrate_streamed() (one owner, so the streamed path can never
     silently diverge from the plain one)."""
     catalog, tables = build_testdata_catalog(spark, sf_dir)
-    if log_content:
-        workload_mod.apply_workload(spark, catalog, log_content, log_dialect)
-    plan = convert_schema(catalog)
-    collections = materialize(tables, catalog, plan,
-                              normalize_dates=normalize_dates)
+    plan, collections = _plan_and_materialize(
+        tables, catalog, log_content, log_dialect, normalize_dates)
     return catalog, tables, plan, collections
 
 
@@ -157,11 +173,8 @@ def migrate_from_dump(
     )
 
     _db, tables, catalog = import_sql_dump(spark, sql_text)
-    if log_content:
-        workload_mod.apply_workload(spark, catalog, log_content, log_dialect)
-    plan = convert_schema(catalog)
-    collections = materialize(tables, catalog, plan,
-                              normalize_dates=normalize_dates)
+    plan, collections = _plan_and_materialize(
+        tables, catalog, log_content, log_dialect, normalize_dates)
     if return_plan:
         return collections, catalog, plan
     return collections
@@ -237,7 +250,6 @@ def migrate_from_jdbc(
                 .load()
             )
         tables[t.name] = df
-    if log_content:
-        workload_mod.apply_workload(spark, catalog, log_content, log_dialect)
-    plan = convert_schema(catalog)
-    return materialize(tables, catalog, plan, normalize_dates=normalize_dates)
+    _plan, collections = _plan_and_materialize(
+        tables, catalog, log_content, log_dialect, normalize_dates)
+    return collections

@@ -18,12 +18,6 @@ def split_trim(col: Column | str, sep: str = ",") -> Column:
     return F.transform(F.split(col, sep), lambda x: F.trim(x))
 
 
-def split_tableref(col: Column | str) -> Column:
-    """`fn_split_tableref`: split parser output 'type::db::table' on '::'
-    (reference server/LogManager.js:79-82)."""
-    return F.split(col, "::")
-
-
 def whitespace_normalize(col: Column | str) -> Column:
     """`fn_whitespace_normalize`: collapse \\s+ to one space and trim
     (reference server/LogManager.js:24,41)."""

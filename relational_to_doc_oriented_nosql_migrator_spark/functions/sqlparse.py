@@ -8,18 +8,14 @@ unparseable statements are skipped silently (:69-71).
 Implementation: sqlglot if importable (not in the base image), else a
 regex-based extractor that handles the log-statement shapes the workload
 analyzer sees (SELECT ... FROM a JOIN b / comma lists, INSERT INTO, UPDATE,
-DELETE FROM, CREATE TABLE, and non-correlated subqueries). Exposed to Spark
-as one Arrow-batched pandas UDF — the only Python function in the engine's
-hot path, and it runs on metadata-scale log data.
+DELETE FROM, CREATE TABLE, and non-correlated subqueries). Plain Python,
+called once per statement by the driver-side workload analyzer
+(workload.py).
 """
 
 from __future__ import annotations
 
 import re
-
-import pandas as pd
-from pyspark.sql import functions as F
-from pyspark.sql import types as T
 
 try:  # pragma: no cover - sqlglot not present in the base image
     import sqlglot
@@ -145,12 +141,3 @@ def extract_table_refs(statement: str, dialect: str = "mysql") -> list[str]:
             return refs
     return _extract_regex(statement)
 
-
-def sql_tablelist_udf(dialect: str = "mysql"):
-    """Arrow-batched pandas UDF: statement column -> array<string> refs."""
-
-    @F.pandas_udf(T.ArrayType(T.StringType()))
-    def _tablelist(statements: pd.Series) -> pd.Series:
-        return statements.map(lambda s: extract_table_refs(s, dialect))
-
-    return _tablelist

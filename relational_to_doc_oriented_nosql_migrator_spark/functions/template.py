@@ -29,6 +29,17 @@ def schema_template(schema: StructType) -> dict:
     return doc
 
 
+def document_template(coll) -> dict:
+    """Document-template skeleton of one planned collection
+    (plans.planner.Collection) exactly as the reference client renders
+    it: attributes -> "", embedded collections -> one-element arrays
+    (client/src/components/NoSqlCollection.js:14-29)."""
+    doc: dict = {a: "" for a in coll.attributes}
+    for child in coll.embedded:
+        doc[child.name] = [document_template(child)]
+    return doc
+
+
 def collection_templates(collections: dict[str, DataFrame]) -> dict[str, dict]:
     """One skeleton per output collection (the engine-API equivalent of the
     reference's `sink_http_response` schema summary, server/index.js:

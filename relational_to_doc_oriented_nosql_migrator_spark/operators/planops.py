@@ -29,6 +29,9 @@ import os
 
 from pyspark.sql import DataFrame, SparkSession
 
+from relational_to_doc_oriented_nosql_migrator_spark.functions.template import (
+    document_template,
+)
 from relational_to_doc_oriented_nosql_migrator_spark.plans.catalog import (
     Catalog,
     ForeignKey,
@@ -38,7 +41,6 @@ from relational_to_doc_oriented_nosql_migrator_spark.plans.catalog import (
     northwind_catalog,
 )
 from relational_to_doc_oriented_nosql_migrator_spark.plans.planner import (
-    Collection,
     classify_tables,
     convert_schema,
     create_table_queue,
@@ -179,16 +181,6 @@ def referencing_rows(name: str, catalog: Catalog) -> list[tuple]:
     return sorted(out)
 
 
-def _template(coll: Collection) -> dict:
-    """Document-template skeleton exactly as the reference client renders
-    it: attributes -> "", embedded collections -> one-element arrays
-    (client/src/components/NoSqlCollection.js:14-29)."""
-    doc: dict = {a: "" for a in coll.attributes}
-    for child in coll.embedded:
-        doc[child.name] = [_template(child)]
-    return doc
-
-
 def http_response_rows(catalog: Catalog) -> list[tuple]:
     rows = []
     for t in catalog.tables.values():
@@ -201,7 +193,7 @@ def http_response_rows(catalog: Catalog) -> list[tuple]:
     for root in convert_schema(catalog).collections:
         rows.append(
             ("collection", root.name,
-             json.dumps(_template(root), separators=(",", ":")))
+             json.dumps(document_template(root), separators=(",", ":")))
         )
     return rows
 

@@ -1,19 +1,26 @@
 """Workload-analyzer operators (SURVEY §2.2, §2.4, §2.8) with DuckDB oracles.
 
-The Spark side runs the real pipeline (workload.py: regexp tokenizer ->
-statement filter -> pandas-UDF table-ref extraction -> weighted aggregation).
-The oracle reimplements the same semantics independently in DuckDB SQL
+The Spark side runs the real analyzer (workload.py: one plain-Python pass
+over the log string — tokenizer -> statement filter -> table-ref extraction
+-> per-table counts) and wraps its output with `createDataFrame`, so the
+registry and the migrator share one implementation. The oracle
+reimplements the same semantics independently in DuckDB SQL
 (gaps-and-islands entry reconstruction + regexp ref extraction), so a
 hash match is a genuine cross-engine check, not a tautology.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import functions as F
-
 from relational_to_doc_oriented_nosql_migrator_spark import workload as W
+from relational_to_doc_oriented_nosql_migrator_spark.functions.sqlparse import (
+    extract_table_refs,
+)
 from relational_to_doc_oriented_nosql_migrator_spark.operators.relational import (
     TABLES,
+    q_agg_count_star,
+)
+from relational_to_doc_oriented_nosql_migrator_spark.plans.catalog import (
+    MAF_FACTOR,
 )
 
 # Deterministic fixture logs (formats: reference server/LogManager.js:15-16,
@@ -59,76 +66,78 @@ CANDIDATE_STMTS = [
 ]
 
 
-def _log_df(spark, content: str):
-    return spark.createDataFrame([(content,)], "value string")
-
-
 def q_src_log_text(spark, sf_dir):
     """Whole log as a single text value (reference server/DBMigration.js:
     17-18 reads the file into one string)."""
-    return _log_df(spark, MYSQL_LOG)
+    return spark.createDataFrame([(MYSQL_LOG,)], "value string")
 
 
 def q_fn_regex_log_extract_mysql(spark, sf_dir):
-    return W.statements_df(_log_df(spark, MYSQL_LOG), "mysql")
+    return spark.createDataFrame(
+        [(s,) for s in W.statements(MYSQL_LOG, "mysql")], "stmt string not null")
 
 
 def q_fn_regex_log_extract_pg(spark, sf_dir):
-    return W.statements_df(_log_df(spark, PG_LOG), "postgresql")
+    return spark.createDataFrame(
+        [(s,) for s in W.statements(PG_LOG, "postgres")], "stmt string not null")
 
 
 def q_filter_statement_type(spark, sf_dir):
     """Keep only select|insert|update|delete|create heads
     (reference server/LogManager.js:25,42)."""
-    df = spark.createDataFrame([(s,) for s in CANDIDATE_STMTS], "stmt string")
-    return df.filter(F.lower(F.col("stmt")).rlike(W.STATEMENT_HEAD_RE))
+    return spark.createDataFrame(
+        [(s,) for s in CANDIDATE_STMTS if W.is_statement(s)], "stmt string")
 
 
 def q_fn_sql_tablelist(spark, sf_dir):
-    """Statement -> distinct '{op}::{db}::{table}' ref strings via the
-    pandas UDF (reference server/LogManager.js:53-75)."""
-    stmts = W.statements_df(_log_df(spark, MYSQL_LOG), "mysql")
-    return W.tablelist_df(stmts, "mysql")
+    """Statement -> distinct '{op}::{db}::{table}' ref strings
+    (reference server/LogManager.js:53-75)."""
+    return spark.createDataFrame(
+        [(ref,) for s in W.statements(MYSQL_LOG, "mysql")
+         for ref in extract_table_refs(s, "mysql")],
+        "ref string",
+    )
+
+
+_REFS_SCHEMA = "op string, db string, table_name string"
 
 
 def q_fn_split_tableref(spark, sf_dir):
     """Split parser refs on '::' into (op, db, table_name)
     (reference server/LogManager.js:79-82)."""
-    stmts = W.statements_df(_log_df(spark, MYSQL_LOG), "mysql")
-    return W.split_tableref_df(W.tablelist_df(stmts, "mysql"))
+    return spark.createDataFrame(
+        W.table_refs(W.statements(MYSQL_LOG, "mysql"), "mysql"), _REFS_SCHEMA)
 
 
 def q_filter_dml_type(spark, sf_dir):
     """Keep only select/insert/update/delete refs — drops e.g. CREATE
     (reference server/LogManager.js:85-91)."""
-    stmts = W.statements_df(_log_df(spark, MYSQL_LOG), "mysql")
-    return W.table_refs_df(stmts, "mysql")
+    refs = W.table_refs(W.statements(MYSQL_LOG, "mysql"), "mysql")
+    return spark.createDataFrame(
+        [r for r in refs if r[0] in W.DML_OPS], _REFS_SCHEMA)
 
 
-def _row_counts(spark, sf_dir):
-    from relational_to_doc_oriented_nosql_migrator_spark.operators.relational import (
-        q_agg_count_star,
-    )
-
-    return q_agg_count_star(spark, sf_dir).withColumnRenamed(
-        "num_rows", "num_rows"
-    )
+def _gaf_uaf_rows(spark, sf_dir) -> list[tuple[str, int, int]]:
+    """(table_name, gaf, uaf) for the log's tables present in sf_dir."""
+    num_rows = dict(q_agg_count_star(spark, sf_dir).collect())
+    counts = W.access_counts(MYSQL_LOG, "mysql")
+    return [(name, accesses * num_rows[name], writes * num_rows[name])
+            for name, (accesses, writes) in counts.items() if name in num_rows]
 
 
 def q_agg_workload_gaf_uaf(spark, sf_dir):
     """Row-count-weighted access stats (reference server/LogManager.js:
     77-100 + server/models/Table.js:30-35)."""
-    stmts = W.statements_df(_log_df(spark, MYSQL_LOG), "mysql")
-    refs = W.table_refs_df(stmts, "mysql")
-    return W.workload_stats(refs, _row_counts(spark, sf_dir))
+    return spark.createDataFrame(
+        _gaf_uaf_rows(spark, sf_dir),
+        "table_name string, gaf long not null, uaf long not null",
+    )
 
 
 def q_agg_maf_scalar(spark, sf_dir):
     """maf = 0.0125 * sum(gaf) (reference models/RelationalDatabase.js:23)."""
-    stats = q_agg_workload_gaf_uaf(spark, sf_dir)
-    return stats.agg(
-        (F.sum("gaf").cast("double") * F.lit(0.0125)).alias("maf")
-    )
+    total = sum(gaf for _name, gaf, _uaf in _gaf_uaf_rows(spark, sf_dir))
+    return spark.createDataFrame([(MAF_FACTOR * total,)], "maf double")
 
 
 QUERIES = {
@@ -266,7 +275,7 @@ FROM counted c JOIN row_counts r ON c.table_name = r.table_name
     return {
         "src_log_text": f"SELECT {_sql_lit(MYSQL_LOG)} AS value",
         "fn_regex_log_extract_mysql": _sql_stmts_cte(MYSQL_LOG, "mysql"),
-        "fn_regex_log_extract_pg": _sql_stmts_cte(PG_LOG, "postgresql"),
+        "fn_regex_log_extract_pg": _sql_stmts_cte(PG_LOG, "postgres"),
         "filter_statement_type":
             f"SELECT stmt FROM (VALUES {stmt_values}) AS v(stmt) WHERE"
             f" regexp_matches(lower(stmt),"

@@ -45,12 +45,6 @@ class TableMeta:
     def num_foreign_keys(self) -> int:
         return len(self.foreign_keys)
 
-    def add_gaf(self) -> None:
-        self.gaf += self.num_rows
-
-    def add_uaf(self) -> None:
-        self.uaf += self.num_rows
-
 
 MAF_FACTOR = 0.0125  # reference server/models/RelationalDatabase.js:23
 

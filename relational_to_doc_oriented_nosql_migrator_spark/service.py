@@ -39,8 +39,8 @@ from http.server import BaseHTTPRequestHandler, ThreadingHTTPServer
 from relational_to_doc_oriented_nosql_migrator_spark.engine import (
     migrate_from_dump,
 )
-from relational_to_doc_oriented_nosql_migrator_spark.operators.planops import (
-    _template,
+from relational_to_doc_oriented_nosql_migrator_spark.functions.template import (
+    document_template,
 )
 from relational_to_doc_oriented_nosql_migrator_spark.sinks import (
     write_json_collections,
@@ -85,10 +85,10 @@ def _collections_payload(plan) -> list[dict]:
     """The `collections` half: one document TEMPLATE per root
     collection, rendered exactly as the reference client does
     (client/src/components/NoSqlCollection.js:14-29 via
-    operators.planops._template — the same function the oracle-checked
-    `sink_http_response` registry id uses)."""
+    functions.template.document_template — the same function the
+    oracle-checked `sink_http_response` registry id uses)."""
     return [
-        {"name": c.name, "document": _template(c)}
+        {"name": c.name, "document": document_template(c)}
         for c in plan.collections
     ]
 
@@ -207,7 +207,8 @@ class MigrationHandler(BaseHTTPRequestHandler):
             db_type = fields.get("dbType") or "mysql"
             if isinstance(db_type, bytes):
                 db_type = db_type.decode()
-            dialect = "pg" if db_type.lower().startswith("postgres") else "mysql"
+            dialect = ("postgres" if db_type.lower().startswith("postgres")
+                       else "mysql")
             payload = run_migration(
                 self.server.spark, sql_text, log_content, dialect,
                 self.server.results_dir,

@@ -5,7 +5,6 @@ from relational_to_doc_oriented_nosql_migrator_spark.sources.parquet import (
     load_tables,
     register_views,
 )
-from relational_to_doc_oriented_nosql_migrator_spark.sources.logtext import read_log_text
 from relational_to_doc_oriented_nosql_migrator_spark.sources.introspect import (
     catalog_from_meta_frames,
     jdbc_catalog,
@@ -18,7 +17,6 @@ __all__ = [
     "load_table",
     "load_tables",
     "register_views",
-    "read_log_text",
     "catalog_from_meta_frames",
     "jdbc_catalog",
     "jdbc_meta_frames",

@@ -7,35 +7,38 @@ select|insert|update|delete|create, SQL-parse each into distinct table refs
 table's row count to its gaf (and to uaf for writes); finally
 maf = 0.0125 * sum(gaf) (server/models/RelationalDatabase.js:17-24).
 
-Spark-first: the whole pipeline is DataFrame ops (regexp tokenize -> filter
--> pandas-UDF table-ref extraction -> explode -> groupBy), so a 100 TB query
-log would distribute; only the final per-table stats (metadata-scale) are
-collected to update the driver-side catalog.
+The log is already one string on the driver (the CLI reads the file, the
+service receives it in the POST body) and the reference scans it once in
+memory, so this is one plain-Python pass with no Spark job. The regex
+constants below are Java-syntax patterns (the DuckDB oracles in
+operators/workload_ops.py mirror them); the compiled forms reproduce Java's
+semantics in Python: ASCII `\\d`/`\\s`, Java's multiline `^` after any line
+terminator, and a trim of spaces only, as Spark's `trim` does.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
+import re
+import unicodedata
+from collections import Counter
 
-from relational_to_doc_oriented_nosql_migrator_spark.functions.scalar import (
-    whitespace_normalize,
-)
 from relational_to_doc_oriented_nosql_migrator_spark.functions.sqlparse import (
-    sql_tablelist_udf,
+    extract_table_refs,
 )
 from relational_to_doc_oriented_nosql_migrator_spark.plans.catalog import Catalog
 
 # Entry anchors (reference server/LogManager.js:15-16,36-37). We anchor on
 # the line-start timestamp of each entry; bodies may span lines.
-MYSQL_ENTRY_SPLIT = r"(?m)(?=^\d{6}\s+\d{1,2}:\d{2}:\d{2}\s)"
+_MYSQL_STAMP = r"\d{6}\s+\d{1,2}:\d{2}:\d{2}\s"
+_PG_STAMP = r"\d{4}-\d{2}-\d{2}\s+\d{2}:\d{2}:\d{2}\.\d{3}\s"
+MYSQL_ENTRY_SPLIT = rf"(?m)(?=^{_MYSQL_STAMP})"
 MYSQL_ENTRY_RE = (
     r"(?s)^\d{6}\s+\d{1,2}:\d{2}:\d{2}\s+\d+\s+"
     r"(Connect|Quit|Query|Init DB|Sleep|Shutdown|Create DB|Drop DB|Refresh|"
     r"Statistics|Processlist|Kill|Change user|Binlog Dump|Table Dump|"
     r"Field List|Execute|Prepare|Close stmt|Reset stmt|Fetch|Daemon)\s+(.*)$"
 )
-PG_ENTRY_SPLIT = r"(?m)(?=^\d{4}-\d{2}-\d{2}\s+\d{2}:\d{2}:\d{2}\.\d{3}\s)"
+PG_ENTRY_SPLIT = rf"(?m)(?=^{_PG_STAMP})"
 PG_ENTRY_RE = (
     r"(?s)^\d{4}-\d{2}-\d{2}\s+\d{2}:\d{2}:\d{2}\.\d{3}\s*\+\d{2}\s*\[\d+\]\s*"
     r"(?:LOG:\s*statement:|STATEMENT:)\s*(.*)$"
@@ -46,105 +49,90 @@ STATEMENT_HEAD_RE = r"^(select|insert|update|delete|create)\b"
 # `filter_dml_type` (reference server/LogManager.js:85-91)
 DML_OPS = ("select", "insert", "update", "delete")
 
+# Java's multiline `^` also matches after \r (but not between \r and \n),
+# \u0085, \u2028 and \u2029; Python's only after \n.
+_JAVA_LINE_START = r"(?:(?<=[\n\u0085\u2028\u2029])|(?<=\r)(?!\n))"
+# (split regex, entry regex, keep only `Query` entries)
+_TOKENIZERS = {
+    "mysql": (
+        re.compile(rf"{_JAVA_LINE_START}(?={_MYSQL_STAMP})", re.ASCII),
+        re.compile(MYSQL_ENTRY_RE, re.ASCII),
+        True,
+    ),
+    "postgres": (
+        re.compile(rf"{_JAVA_LINE_START}(?={_PG_STAMP})", re.ASCII),
+        re.compile(PG_ENTRY_RE, re.ASCII),
+        False,
+    ),
+}
+# Accepted query-log dialects; the CLI, the service and the registry pass
+# one of these.
+DIALECTS = tuple(_TOKENIZERS)
+_WHITESPACE = re.compile(r"\s+", re.ASCII)
+_HEADS = DML_OPS + ("create",)
+# Java's `\b` word characters: letters, decimal digits and '_', plus
+# non-spacing marks on a word character (Pattern.Bound).
+_JAVA_WORD_CATEGORIES = {"Lu", "Ll", "Lt", "Lm", "Lo", "Nd", "Mn"}
 
-def statements_df(log_df: DataFrame, dialect: str = "mysql") -> DataFrame:
-    """Wholetext log -> one row per kept, whitespace-normalized statement.
 
-    Implements `fn_regex_log_extract_{mysql,pg}` + `fn_whitespace_normalize`
-    + `filter_statement_type`.
-    """
-    if dialect == "mysql":
-        split_re, entry_re, body_group = MYSQL_ENTRY_SPLIT, MYSQL_ENTRY_RE, 2
-    elif dialect in ("postgresql", "pg"):
-        split_re, entry_re, body_group = PG_ENTRY_SPLIT, PG_ENTRY_RE, 1
-    else:
+def is_statement(stmt: str) -> bool:
+    """`filter_statement_type`: STATEMENT_HEAD_RE on the lowercased
+    statement, with Java's `\\b` after the head."""
+    low = stmt.lower()
+    for head in _HEADS:
+        if low.startswith(head):
+            after = low[len(head):len(head) + 1]
+            return not after or (
+                after != "_"
+                and unicodedata.category(after) not in _JAVA_WORD_CATEGORIES
+            )
+    return False
+
+
+def statements(log_content: str, dialect: str = "mysql") -> list[str]:
+    """Log text -> kept, whitespace-normalized statements in log order
+    (`fn_regex_log_extract_{mysql,pg}` + `fn_whitespace_normalize` +
+    `filter_statement_type`)."""
+    if dialect not in _TOKENIZERS:
         raise ValueError(f"unknown dialect: {dialect}")
-
-    entries = log_df.select(
-        F.explode(F.split(F.col("value"), split_re)).alias("entry")
-    )
-    if dialect == "mysql":
-        entries = entries.select(
-            F.regexp_extract("entry", entry_re, 1).alias("command"),
-            F.regexp_extract("entry", entry_re, body_group).alias("body"),
-        ).filter(F.col("command") == "Query")
-    else:
-        entries = entries.select(
-            F.regexp_extract("entry", entry_re, body_group).alias("body")
-        )
-    return (
-        entries.select(whitespace_normalize(F.col("body")).alias("stmt"))
-        .filter(F.lower(F.col("stmt")).rlike(STATEMENT_HEAD_RE))
-    )
+    split_re, entry_re, query_only = _TOKENIZERS[dialect]
+    out = []
+    for entry in split_re.split(log_content):
+        m = entry_re.search(entry)
+        if m is None or (query_only and m.group(1) != "Query"):
+            continue
+        body = m.group(entry_re.groups)  # the last group
+        stmt = _WHITESPACE.sub(" ", body).strip(" ")
+        if is_statement(stmt):
+            out.append(stmt)
+    return out
 
 
-def tablelist_df(stmts: DataFrame, dialect: str = "mysql") -> DataFrame:
-    """`fn_sql_tablelist`: statements -> exploded '{op}::{db}::{table}'
-    ref strings (the raw parser output, reference server/LogManager.js:67)."""
-    return stmts.select(
-        F.explode(sql_tablelist_udf(dialect)(F.col("stmt"))).alias("ref")
-    )
+def table_refs(stmts: list[str], dialect: str = "mysql") -> list[tuple[str, str, str]]:
+    """`fn_sql_tablelist` -> `fn_split_tableref`: (op, db, table) for each
+    distinct ref of each statement (reference server/LogManager.js:53-82)."""
+    return [tuple(ref.split("::")[:3])
+            for stmt in stmts for ref in extract_table_refs(stmt, dialect)]
 
 
-def split_tableref_df(refs: DataFrame) -> DataFrame:
-    """`fn_split_tableref`: '{op}::{db}::{table}' -> (op, db, table_name)
-    columns (reference server/LogManager.js:79-82)."""
-    parts = F.split(F.col("ref"), "::")
-    return refs.select(
-        parts.getItem(0).alias("op"),
-        parts.getItem(1).alias("db"),
-        parts.getItem(2).alias("table_name"),
-    )
+def access_counts(log_content: str, dialect: str = "mysql") -> dict[str, tuple[int, int]]:
+    """`filter_dml_type` + the counting half of `agg_workload_gaf_uaf`:
+    table -> (accesses, writes) over the DML refs of the log."""
+    accesses: Counter[str] = Counter()
+    writes: Counter[str] = Counter()
+    for op, _db, table in table_refs(statements(log_content, dialect), dialect):
+        if op in DML_OPS:
+            accesses[table] += 1
+            writes[table] += op != "select"
+    return {table: (n, writes[table]) for table, n in accesses.items()}
 
 
-def table_refs_df(stmts: DataFrame, dialect: str = "mysql") -> DataFrame:
-    """Statements -> exploded (op, db, table) refs, DML only
-    (`fn_sql_tablelist` -> `fn_split_tableref` -> `filter_dml_type`)."""
-    return split_tableref_df(tablelist_df(stmts, dialect)).filter(
-        F.col("op").isin(*DML_OPS)
-    )
-
-
-def workload_stats(refs: DataFrame, row_counts: DataFrame) -> DataFrame:
-    """`agg_workload_gaf_uaf`: per-table row-count-weighted access stats.
-
-    row_counts: DataFrame(table_name, num_rows). Tables absent from the
-    catalog are dropped (reference skips unknown tables,
-    server/LogManager.js:91-97); gaf/uaf are LONG row-count sums.
-    """
-    counted = refs.groupBy("table_name").agg(
-        F.count(F.lit(1)).alias("accesses"),
-        F.count(F.when(F.col("op") != "select", F.lit(1))).alias("writes"),
-    )
-    return (
-        counted.join(F.broadcast(row_counts), "table_name", "inner")
-        .select(
-            "table_name",
-            (F.col("accesses") * F.col("num_rows")).cast("long").alias("gaf"),
-            (F.col("writes") * F.col("num_rows")).cast("long").alias("uaf"),
-        )
-    )
-
-
-def maf_of(stats: DataFrame) -> float:
-    """`agg_maf_scalar`: maf = 0.0125 * sum(gaf)."""
-    row = stats.agg((F.sum("gaf") * F.lit(0.0125)).alias("maf")).first()
-    return float(row["maf"] or 0.0)
-
-
-def apply_workload(
-    spark: SparkSession, catalog: Catalog, log_content: str, dialect: str = "mysql"
-) -> None:
-    """Run the full pipeline and fold the stats into the catalog."""
-    log_df = spark.createDataFrame([(log_content,)], "value string")
-    stmts = statements_df(log_df, dialect)
-    refs = table_refs_df(stmts, dialect)
-    row_counts = spark.createDataFrame(
-        [(t.name, t.num_rows) for t in catalog.tables.values()],
-        "table_name string, num_rows long",
-    )
-    for row in workload_stats(refs, row_counts).collect():
-        table = catalog.get_table(row["table_name"])
+def apply_workload(catalog: Catalog, log_content: str, dialect: str = "mysql") -> None:
+    """Fold the log's row-count-weighted access stats into the catalog.
+    Tables absent from the catalog are skipped (reference
+    server/LogManager.js:91-97)."""
+    for name, (accesses, writes) in access_counts(log_content, dialect).items():
+        table = catalog.get_table(name)
         if table is not None:
-            table.gaf = int(row["gaf"])
-            table.uaf = int(row["uaf"])
+            table.gaf = accesses * table.num_rows
+            table.uaf = writes * table.num_rows

@@ -21,11 +21,19 @@ def test_migrate_from_dump_nests_employee_into_dept(spark):
 
 
 def test_migrate_from_dump_applies_workload(spark):
-    # A write-hot log against dept flips the planner away from embedding
-    # everything idle-style; the pipeline must still produce collections.
-    log = "2024-01-02T10:00:00.000000Z\t8 Query\tSELECT * FROM employee"
-    out = migrate_from_dump(spark, DUMP_FIXTURE, log_content=log)
-    assert out  # workload path exercised end to end
+    # A write-hot MySQL 5.x general log against employee (3 rows) flips it
+    # from embedded-in-dept to its own referencing collection.
+    log = "".join(
+        f"240807 10:15:2{i}\t   42 Query\tUPDATE employee SET emp_name = 'x'"
+        f" WHERE emp_id = {10 + i % 3}\n"
+        for i in range(5)
+    )
+    out, catalog, _plan = migrate_from_dump(
+        spark, DUMP_FIXTURE, log_content=log, return_plan=True)
+    employee = catalog.get_table("employee")
+    assert (employee.gaf, employee.uaf) == (15, 15)
+    assert "employee" in out
+    assert "dept_id_REF" in out["employee"].columns
 
 
 def test_cli_dump_to_json_dir(spark, tmp_path):
@@ -54,3 +62,21 @@ def test_cli_parquet_tables_to_json_dir(spark, tmp_path):
     written = set(os.listdir(out_dir))
     # The TPC-H plan's roots: region nest + standalone collections.
     assert {"region", "part", "lineitem"} <= written
+
+
+def test_cli_postgres_log_changes_the_plan(spark, tmp_path):
+    from relational_to_doc_oriented_nosql_migrator_spark import cli
+    from relational_to_doc_oriented_nosql_migrator_spark.operators.workload_ops import (
+        PG_LOG,
+    )
+    from tests.conftest import SF0001
+
+    log = tmp_path / "pg.log"
+    log.write_text(PG_LOG)
+    idle, hot = tmp_path / "idle", tmp_path / "hot"
+    assert cli.main(["--tables", SF0001, "--out", str(idle)]) == 0
+    assert cli.main(["--tables", SF0001, "--log", str(log),
+                     "--dialect", "postgres", "--out", str(hot)]) == 0
+    # write-hot orders leaves the region tree for its own collection
+    assert "orders" not in os.listdir(idle)
+    assert "orders" in os.listdir(hot)

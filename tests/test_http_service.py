@@ -5,6 +5,9 @@ sockets with urllib against a live ThreadingHTTPServer."""
 
 import io
 import json
+import os
+import subprocess
+import sys
 import urllib.request
 import uuid
 import zipfile
@@ -126,3 +129,16 @@ def test_download_before_any_migration_404(spark, tmp_path):
         assert ei.value.code == 404
     finally:
         srv.shutdown()
+
+
+def test_service_import_skips_the_operator_registry():
+    code = (
+        "import sys\n"
+        "import relational_to_doc_oriented_nosql_migrator_spark.service\n"
+        "print([m for m in sys.modules if m.startswith("
+        "'relational_to_doc_oriented_nosql_migrator_spark.operators')])"
+    )
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    out = subprocess.run([sys.executable, "-c", code], capture_output=True,
+                         text=True, check=True, cwd=repo).stdout
+    assert out.strip() == "[]"
