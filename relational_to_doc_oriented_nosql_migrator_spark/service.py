@@ -22,18 +22,35 @@ migration goes through engine.migrate / the distributed sink, not an
 HTTP upload; this endpoint mirrors the reference's actual usage (a
 schema dump + query log, both small).
 
+Requests are independent. Each migration runs in its own Spark session
+(`spark.newSession()`, so the sink's scoped conf changes never reach
+another request) and writes into its own directory, then publishes
+`<resultId>.zip`. The POST response carries `resultId`, and
+`GET /download/result?id=<resultId>` serves exactly that archive; a
+bare `GET /download/result` (what the reference client calls) serves
+the most recently completed one. At most `defaultParallelism`
+migrations run at once; the rest wait for a slot. The server keeps
+the last KEEP_RESULTS archives.
+
 Run:  python -m relational_to_doc_oriented_nosql_migrator_spark.service [--port 3001]
 """
 
 from __future__ import annotations
 
+import contextlib
 import email
 import email.policy
 import json
 import os
+import re
 import shutil
+import sys
 import tempfile
 import threading
+import traceback
+import urllib.parse
+import uuid
+from collections import OrderedDict
 from http.server import BaseHTTPRequestHandler, ThreadingHTTPServer
 
 from relational_to_doc_oriented_nosql_migrator_spark.engine import (
@@ -47,12 +64,48 @@ from relational_to_doc_oriented_nosql_migrator_spark.sinks import (
 )
 
 ZIP_NAME = "collections.zip"
+# Archives the server keeps; publishing a newer one deletes the oldest
+# (never the latest, which is the one just published).
+KEEP_RESULTS = 16
+# Largest request body the server reads; a longer Content-Length gets a
+# 413 before any of the body is read.
+MAX_UPLOAD_BYTES = 64 << 20
+# The only result-id shape the server issues (uuid4().hex).
+_RESULT_ID = re.compile(r"[0-9a-f]{32}")
 
-# Migrations are serialized (the reference server is effectively
-# single-flight too — one Express worker, one shared results dir):
-# two concurrent POSTs would interleave per-collection .json files
-# and zip writes in the shared results_dir.
-_MIGRATION_LOCK = threading.Lock()
+
+def result_zip(results_dir: str, result_id: str) -> str:
+    """Where run_migration publishes the archive of `result_id`."""
+    return os.path.join(results_dir, f"{result_id}.zip")
+
+
+class _Results:
+    """Published archives by result id, in completion order. An id is
+    added only once its archive is in place, so the latest pointer
+    never names a missing or partial file."""
+
+    def __init__(self, results_dir: str):
+        self.results_dir = results_dir
+        self._lock = threading.Lock()
+        self._paths: OrderedDict[str, str] = OrderedDict()
+
+    def publish(self, result_id: str) -> None:
+        path = result_zip(self.results_dir, result_id)
+        with self._lock:
+            self._paths[result_id] = path
+            expired = []
+            while len(self._paths) > KEEP_RESULTS:
+                expired.append(self._paths.popitem(last=False)[1])
+        for old in expired:
+            with contextlib.suppress(FileNotFoundError):
+                os.remove(old)
+
+    def path(self, result_id: str | None = None) -> str | None:
+        """The archive of `result_id`, or of the latest result."""
+        with self._lock:
+            if result_id is None:
+                return next(reversed(self._paths.values()), None)
+            return self._paths.get(result_id)
 
 
 def _catalog_tables_payload(catalog) -> list[dict]:
@@ -102,41 +155,42 @@ def run_migration(
 ) -> dict:
     """POST /migration body: parse the dump, fold in the workload, plan,
     materialize, write the zipped JSON collections for the download
-    endpoint, and return the reference-shaped response payload.
+    endpoint, and return the reference-shaped response payload plus the
+    `resultId` the archive is published under.
 
-    Serialized under _MIGRATION_LOCK, and the results dir is RESET per
-    migration: the zip is built by walking results_dir, so a previous
-    migration's per-collection .json files would otherwise ride along
-    into an unrelated download. The zip itself publishes atomically
-    (temp + rename), so a concurrent GET either serves the previous
-    complete archive, a 404 during the reset gap, or the new complete
-    archive — never a truncated one."""
-    with _MIGRATION_LOCK:
+    Runs in a new session of `spark`: the sink's scoped conf changes
+    stay inside this request. The per-collection files go to a
+    directory of this request alone, which is removed once the zip is
+    built; the zip is then published by a rename to
+    result_zip(results_dir, resultId), so that path only ever holds a
+    complete archive."""
+    session = spark.newSession()
+    result_id = uuid.uuid4().hex
+    work_dir = os.path.join(results_dir, result_id)
+    try:
         collections, catalog, plan = migrate_from_dump(
-            spark, sql_text, log_content=log_content, log_dialect=dialect,
+            session, sql_text, log_content=log_content, log_dialect=dialect,
             return_plan=True,
         )
-        os.makedirs(results_dir, exist_ok=True)
-        for entry in os.listdir(results_dir):
-            p = os.path.join(results_dir, entry)
-            shutil.rmtree(p) if os.path.isdir(p) else os.remove(p)
         # Per-collection whole-array JSON files + zip, like the
         # reference's WriteToFile + archiver flow
         # (server/WriteToFile.js:5-62). The empty-collection drop rides
         # along (filter_nonempty_collection).
-        zip_final = os.path.join(results_dir, ZIP_NAME)
-        zip_tmp = zip_final + ".tmp"
+        zip_tmp = os.path.join(work_dir, ZIP_NAME)
         write_json_collections(
             collections,
-            results_dir,
+            work_dir,
             single_file=True,
             zip_path=zip_tmp,
         )
-        os.replace(zip_tmp, zip_final)
-        return {
-            "tables": _catalog_tables_payload(catalog),
-            "collections": _collections_payload(plan),
-        }
+        os.replace(zip_tmp, result_zip(results_dir, result_id))
+    finally:
+        shutil.rmtree(work_dir, ignore_errors=True)
+    return {
+        "resultId": result_id,
+        "tables": _catalog_tables_payload(catalog),
+        "collections": _collections_payload(plan),
+    }
 
 
 def _parse_multipart(content_type: str, body: bytes) -> dict:
@@ -163,8 +217,9 @@ def _parse_multipart(content_type: str, body: bytes) -> dict:
 
 
 class MigrationHandler(BaseHTTPRequestHandler):
-    """One engine-backed handler per server; the SparkSession and the
-    results directory hang off the server object (set by serve())."""
+    """One engine-backed handler per server; the SparkSession, the
+    results directory, the published results and the admission
+    semaphore hang off the server object (set by serve())."""
 
     # quiet request logging (the reference logs nothing per request)
     def log_message(self, *_args):
@@ -188,6 +243,13 @@ class MigrationHandler(BaseHTTPRequestHandler):
             return
         try:
             length = int(self.headers.get("Content-Length", "0"))
+            if length > MAX_UPLOAD_BYTES:
+                # the unread body must not be taken for a next request
+                self.close_connection = True
+                self._send(413, b"Payload Too Large", "text/plain")
+                return
+            if length < 0:
+                raise ValueError(f"invalid Content-Length {length}")
             fields = _parse_multipart(
                 self.headers.get("Content-Type", ""),
                 self.rfile.read(length),
@@ -209,29 +271,46 @@ class MigrationHandler(BaseHTTPRequestHandler):
                 db_type = db_type.decode()
             dialect = ("postgres" if db_type.lower().startswith("postgres")
                        else "mysql")
-            payload = run_migration(
-                self.server.spark, sql_text, log_content, dialect,
-                self.server.results_dir,
-            )
+            with self.server.admission:
+                payload = run_migration(
+                    self.server.spark, sql_text, log_content, dialect,
+                    self.server.results_dir,
+                )
+            self.server.results.publish(payload["resultId"])
             self._send(
                 200,
                 json.dumps(payload).encode(),
                 "application/json",
             )
         except Exception:
-            # the reference's blanket 500 (server/index.js:55-58)
+            # The client gets the reference's blanket 500
+            # (server/index.js:55-58); the cause goes to the log.
+            sys.stderr.write("POST /migration failed\n"
+                             + traceback.format_exc())
             self._send(500, b"Internal Server Error", "text/plain")
 
     def do_GET(self):
-        if self.path != "/download/result":
+        url = urllib.parse.urlsplit(self.path)
+        if url.path != "/download/result":
             self._send(404, b"Not Found", "text/plain")
             return
-        zip_path = os.path.join(self.server.results_dir, ZIP_NAME)
-        if not os.path.exists(zip_path):
+        ids = urllib.parse.parse_qs(url.query, keep_blank_values=True).get(
+            "id")
+        if ids is None:
+            zip_path = self.server.results.path()
+        elif len(ids) == 1 and _RESULT_ID.fullmatch(ids[0]):
+            zip_path = self.server.results.path(ids[0])
+        else:
+            zip_path = None
+        data = None
+        if zip_path is not None:
+            # an archive can expire between the lookup and the open
+            with contextlib.suppress(FileNotFoundError):
+                with open(zip_path, "rb") as fh:
+                    data = fh.read()
+        if data is None:
             self._send(404, b"Not Found", "text/plain")
             return
-        with open(zip_path, "rb") as fh:
-            data = fh.read()
         self._send(
             200, data, "application/zip",
             {"Content-Disposition": f'attachment; filename="{ZIP_NAME}"'},
@@ -247,6 +326,9 @@ def serve(spark, port: int = 0, results_dir: str | None = None):
     server.results_dir = results_dir or tempfile.mkdtemp(
         prefix="sg_http_results_"
     )
+    server.results = _Results(server.results_dir)
+    server.admission = threading.BoundedSemaphore(
+        spark.sparkContext.defaultParallelism)
     t = threading.Thread(target=server.serve_forever, daemon=True)
     t.start()
     return server

@@ -598,34 +598,30 @@ def write_json_collections(
             if counts is not None and n_docs:
                 counts[name] = n_docs
             continue
-        if single_file:
-            # Parity mode: one JSON array per collection file, like
-            # the reference's JSON.stringify of the whole collection.
-            # One action per collection; the empty check falls out of
-            # the collect. NOT a scale path: this collects the entire
-            # collection to the driver — byte-parity testing on small
-            # outputs only. The default distributed mode is the one to
-            # point at a real corpus. (It still runs under the
-            # streaming-aggregation confs: the nesting plan executes
-            # inside the collect, with the same allocation profile.)
-            with _sort_based_collects(df.sparkSession):
-                docs = [json.loads(r) for r in df.toJSON().collect()]
-            if not docs:
-                # `filter_nonempty_collection` (reference
-                # server/WriteToFile.js:9-11): empty collections
-                # dropped.
-                continue
-            wrote[name] = True
-            if counts is not None:
-                counts[name] = len(docs)
-            with open(f"{target}.json", "w") as fh:
-                json.dump(docs, fh, default=str)
-        else:
-            plain.append((name, df, target))
+        plain.append((name, df, target))
     if plain:
         from concurrent.futures import ThreadPoolExecutor
 
-        def _write_one(item):
+        def _write_array(item):
+            # Parity mode: one compact JSON array per collection file,
+            # like the reference's JSON.stringify of the whole
+            # collection. The rows' own JSON text is joined as is (UTF-8,
+            # no parse and re-dump); the empty check falls out of the
+            # collect. NOT a scale path: this collects the entire
+            # collection to the driver — small outputs only. The default
+            # distributed mode is the one to point at a real corpus.
+            name, df, target = item
+            lines = df.toJSON().collect()
+            if not lines:
+                # `filter_nonempty_collection` (reference
+                # server/WriteToFile.js:9-11): empty collections
+                # dropped.
+                return name, False, 0
+            with open(f"{target}.json", "w", encoding="utf-8") as fh:
+                fh.write("[" + ",".join(lines) + "]")
+            return name, True, len(lines)
+
+        def _write_ndjson(item):
             name, df, target = item
             obs = None
             if counts is not None:
@@ -653,16 +649,18 @@ def write_json_collections(
             return name, True, (int(obs.get["n"]) if obs is not None
                                 else 0)
 
-        # The write JOBS run concurrently from driver threads: each
-        # flat collection's write parallelism is capped by its input
-        # split count, so serial writes leave most cores idle at every
-        # job's stage tail — concurrent submission makes the wall the
-        # max job, not the sum (the scoped confs are session-wide, so
-        # one context manager brackets all of them; plan-time conf
-        # reads happen inside it).
+        # The jobs (collects or writes) run concurrently from driver
+        # threads: each flat collection's parallelism is capped by its
+        # input split count, so serial jobs leave most cores idle at
+        # every job's stage tail — concurrent submission makes the wall
+        # the max job, not the sum. The scoped confs are session-wide,
+        # so one context manager brackets all of them (plan-time conf
+        # reads happen inside it; the nesting plan executes inside each
+        # job, with the same allocation profile in both modes).
+        write_one = _write_array if single_file else _write_ndjson
         with _sort_based_collects(plain[0][1].sparkSession):
             with ThreadPoolExecutor(min(4, len(plain))) as pool:
-                for name, ok, n_docs in pool.map(_write_one, plain):
+                for name, ok, n_docs in pool.map(write_one, plain):
                     wrote[name] = ok
                     if counts is not None and ok:
                         counts[name] = n_docs

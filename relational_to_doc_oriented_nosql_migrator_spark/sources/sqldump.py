@@ -27,6 +27,7 @@ import datetime as _dt
 import re
 from dataclasses import dataclass, field
 
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
 
@@ -44,6 +45,18 @@ _TYPE_MAP: list[tuple[re.Pattern, T.DataType]] = [
     (re.compile(r"^date$", re.I), T.DateType()),
     (re.compile(r"^(datetime|timestamp)", re.I), T.TimestampType()),
 ]
+
+# Arrow column type per Spark type of _TYPE_MAP (StringType otherwise).
+# Timestamps go in naive: Spark reads them in the session time zone,
+# which get_spark pins to UTC, and the parsers make every value naive UTC.
+_ARROW_TYPES = {
+    T.LongType(): pa.int64(),
+    T.DoubleType(): pa.float64(),
+    T.BooleanType(): pa.bool_(),
+    T.DateType(): pa.date32(),
+    T.TimestampType(): pa.timestamp("us"),
+    T.StringType(): pa.string(),
+}
 
 _CONSTRAINT_HEAD = re.compile(
     r"^(primary\s+key|foreign\s+key|constraint|unique|key|index|check)\b",
@@ -132,8 +145,18 @@ def _parse_copy_value(raw: str, dtype: T.DataType):
     if isinstance(dtype, T.DateType):
         return _dt.date.fromisoformat(raw)
     if isinstance(dtype, T.TimestampType):
-        return _dt.datetime.fromisoformat(raw)
+        return _parse_timestamp(raw)
     return raw
+
+
+def _parse_timestamp(raw: str) -> _dt.datetime:
+    """A naive UTC datetime. An offset (pg `timestamptz` text such as
+    `07:30:00+07`) is applied here: pyarrow would keep an aware value's
+    wall-clock time when it goes into the naive Arrow column."""
+    ts = _dt.datetime.fromisoformat(raw)
+    if ts.tzinfo is not None:
+        ts = ts.astimezone(_dt.timezone.utc).replace(tzinfo=None)
+    return ts
 
 
 def _split_statements(text: str) -> list[str]:
@@ -222,6 +245,12 @@ class _TableDef:
     foreign_keys: list[ForeignKey] = field(default_factory=list)
     rows: list[list] = field(default_factory=list)
 
+    @property
+    def schema(self) -> T.StructType:
+        return T.StructType(
+            [T.StructField(n, dt, True) for n, dt in self.fields]
+        )
+
 
 def _parse_create(stmt: str) -> _TableDef | None:
     m = _CREATE_RE.match(stmt)
@@ -277,19 +306,15 @@ def _parse_literal(raw: str, dtype: T.DataType):
     if isinstance(dtype, T.DateType):
         return _dt.date.fromisoformat(v)
     if isinstance(dtype, T.TimestampType):
-        return _dt.datetime.fromisoformat(v)
+        return _parse_timestamp(v)
     return v
 
 
-def import_sql_dump(
-    spark: SparkSession, sql_text: str, default_db: str = "db"
-) -> tuple[str, dict[str, DataFrame], Catalog]:
-    """Dump text -> (db_name, DataFrames per table, annotated Catalog).
-
-    The catalog carries the same metadata the reference introspects from a
-    live server, so `convert_schema`/`materialize` run on dump input
-    unchanged.
-    """
+def _parse_dump(
+    sql_text: str, default_db: str
+) -> tuple[str, dict[str, _TableDef]]:
+    """Dump text -> (db_name, parsed table definitions with their rows),
+    all on the driver in plain Python."""
     db_name = default_db
     defs: dict[str, _TableDef] = {}
     sql_text, copy_blocks = _extract_copy_blocks(sql_text)
@@ -339,14 +364,33 @@ def import_sql_dump(
                 for col, v in zip(col_names, values)
             }
             tdef.rows.append([row.get(f[0]) for f in tdef.fields])
+    return db_name, defs
 
+
+def import_sql_dump(
+    spark: SparkSession, sql_text: str, default_db: str = "db"
+) -> tuple[str, dict[str, DataFrame], Catalog]:
+    """Dump text -> (db_name, DataFrames per table, annotated Catalog).
+
+    The catalog carries the same metadata the reference introspects from a
+    live server, so `convert_schema`/`materialize` run on dump input
+    unchanged.
+    """
+    db_name, defs = _parse_dump(sql_text, default_db)
     tables: dict[str, DataFrame] = {}
     metas: list[TableMeta] = []
     for tdef in defs.values():
-        schema = T.StructType(
-            [T.StructField(n, dt, True) for n, dt in tdef.fields]
+        columns = list(zip(*tdef.rows)) or [()] * len(tdef.fields)
+        arrow = pa.Table.from_arrays(
+            [pa.array(col, _ARROW_TYPES[dt])
+             for col, (_n, dt) in zip(columns, tdef.fields)],
+            names=[n for n, _ in tdef.fields],
         )
-        tables[tdef.name] = spark.createDataFrame(tdef.rows, schema)
+        # An Arrow table becomes a JVM-local relation (LocalTableScan, or
+        # Arrow batches decoded in the JVM past
+        # spark.sql.execution.arrow.localRelationThreshold): every scan of
+        # a dump table in the nesting jobs runs without a Python worker.
+        tables[tdef.name] = spark.createDataFrame(arrow, tdef.schema)
         metas.append(
             TableMeta(
                 name=tdef.name,

@@ -142,3 +142,172 @@ def test_service_import_skips_the_operator_registry():
     out = subprocess.run([sys.executable, "-c", code], capture_output=True,
                          text=True, check=True, cwd=repo).stdout
     assert out.strip() == "[]"
+
+
+def _download(srv, query=""):
+    url = (f"http://127.0.0.1:{srv.server_address[1]}"
+           f"/download/result{query}")
+    with urllib.request.urlopen(url, timeout=60) as resp:
+        assert resp.headers["Content-Type"] == "application/zip"
+        return resp.read()
+
+
+def _dept_docs(data: bytes) -> list:
+    return json.loads(zipfile.ZipFile(io.BytesIO(data)).read("dept.json"))
+
+
+def test_concurrent_posts_get_their_own_results(server):
+    """Two migrations in flight at once: each response's resultId serves
+    exactly that request's archive, and a bare GET afterwards serves one
+    complete archive."""
+    import threading
+
+    extra = DUMP_FIXTURE + "INSERT INTO dept VALUES (4, 'qa', 7.5, NULL);\n"
+    dumps = {"base": DUMP_FIXTURE, "extra": extra}
+    ids, errors = {}, []
+
+    def post(key):
+        try:
+            with _post(server, {"dbType": (None, "mysql"),
+                                "sqlFile": ("d.sql", dumps[key])}) as resp:
+                ids[key] = json.load(resp)["resultId"]
+        except Exception as exc:  # reported by the assert below
+            errors.append(exc)
+
+    threads = [threading.Thread(target=post, args=(k,)) for k in dumps]
+    for t in threads:
+        t.start()
+    for t in threads:
+        t.join(timeout=240)
+    assert not any(t.is_alive() for t in threads) and not errors
+    assert ids["base"] != ids["extra"]
+    base = _dept_docs(_download(server, f"?id={ids['base']}"))
+    more = _dept_docs(_download(server, f"?id={ids['extra']}"))
+    assert sorted(d["id"] for d in base) == [1, 2, 3]
+    assert sorted(d["id"] for d in more) == [1, 2, 3, 4]
+    latest = _dept_docs(_download(server))
+    assert latest in (base, more)
+
+
+def test_download_by_unknown_or_malformed_id_404(server):
+    with _post(server, {"sqlFile": ("d.sql", DUMP_FIXTURE)}) as resp:
+        assert resp.status == 200
+    for query in (f"?id={uuid.uuid4().hex}", "?id=../x", "?id=",
+                  "?id=..%2Fcollections"):
+        with pytest.raises(urllib.error.HTTPError) as ei:
+            _download(server, query)
+        ei.value.close()
+        assert ei.value.code == 404, query
+
+
+def test_request_leaves_root_session_conf_alone(server, spark, monkeypatch):
+    """The sink's scoped confs go to the request's own session: even
+    while the sink runs, the server's root session does not see them."""
+    import contextlib
+
+    from relational_to_doc_oriented_nosql_migrator_spark.sinks import (
+        json_collections as jc,
+    )
+
+    seen = []
+    original = jc._sort_based_collects
+
+    @contextlib.contextmanager
+    def spy(session):
+        with original(session):
+            seen.append(spark.conf.get(jc._OBJ_HASH_CONF, None))
+            yield
+
+    monkeypatch.setattr(jc, "_sort_based_collects", spy)
+    with _post(server, {"sqlFile": ("d.sql", DUMP_FIXTURE)}) as resp:
+        assert resp.status == 200
+    assert seen and seen == [None] * len(seen)
+    assert spark.conf.get(jc._OBJ_HASH_CONF, None) is None
+
+
+def test_requests_keep_the_listener_count_flat(server, spark):
+    """Each request's new session leaves nothing registered on the
+    shared SparkContext's listener bus (other tests' listeners may
+    still be going away, so the count may drop, never grow)."""
+    bus = spark.sparkContext._jsc.sc().listenerBus()
+    with _post(server, {"sqlFile": ("d.sql", DUMP_FIXTURE)}) as resp:
+        assert resp.status == 200
+    before = bus.listeners().size()
+    for _ in range(5):
+        with _post(server, {"sqlFile": ("d.sql", DUMP_FIXTURE)}) as resp:
+            assert resp.status == 200
+    assert bus.listeners().size() <= before
+
+
+@pytest.mark.parametrize("length, status", [
+    (service.MAX_UPLOAD_BYTES + 1, 413),
+    (-1, 500),  # read(-1) would read until the client closes
+])
+def test_bad_upload_length_is_refused_without_reading_the_body(
+        server, length, status):
+    import http.client
+
+    conn = http.client.HTTPConnection("127.0.0.1", server.server_address[1],
+                                      timeout=30)
+    try:
+        conn.putrequest("POST", "/migration")
+        conn.putheader("Content-Type", "multipart/form-data; boundary=x")
+        conn.putheader("Content-Length", str(length))
+        conn.endheaders()  # no body: a server reading it would block
+        resp = conn.getresponse()
+        assert resp.status == status
+        resp.read()
+    finally:
+        conn.close()
+
+
+def test_failed_post_logs_the_traceback(server, capfd):
+    with pytest.raises(urllib.error.HTTPError) as ei:
+        _post(server, {"dbType": (None, "mysql")})  # sqlFile missing
+    assert ei.value.code == 500
+    assert ei.value.read() == b"Internal Server Error"
+    ei.value.close()
+    err = capfd.readouterr().err
+    assert "Traceback (most recent call last)" in err
+    assert "ValueError: sqlFile part is required" in err
+
+
+def test_results_retention_under_concurrent_publishers(tmp_path):
+    """Many threads publishing at once: exactly KEEP_RESULTS archives
+    stay on disk, each still served by its id, every expired id is
+    gone, and the latest pointer is set from the first publish on and
+    ends on an archive that exists."""
+    import threading
+
+    results = service._Results(str(tmp_path))
+    published, unset = [], []
+    lock = threading.Lock()
+
+    def publisher():
+        for _ in range(40):
+            rid = uuid.uuid4().hex
+            with open(service.result_zip(str(tmp_path), rid), "wb") as fh:
+                fh.write(b"zip")
+            results.publish(rid)
+            with lock:
+                published.append(rid)
+            if results.path() is None:
+                unset.append(rid)
+
+    saved = sys.getswitchinterval()
+    sys.setswitchinterval(1e-6)
+    try:
+        threads = [threading.Thread(target=publisher) for _ in range(8)]
+        for t in threads:
+            t.start()
+        for t in threads:
+            t.join(timeout=60)
+    finally:
+        sys.setswitchinterval(saved)
+    assert not any(t.is_alive() for t in threads)
+    assert len(published) == 320 and not unset
+    assert os.path.exists(results.path())
+    kept = {rid for rid in published if results.path(rid) is not None}
+    assert len(kept) == service.KEEP_RESULTS
+    on_disk = {name[:-4] for name in os.listdir(tmp_path)}
+    assert on_disk == kept

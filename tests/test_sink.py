@@ -48,6 +48,30 @@ def test_single_file_parity_mode_and_zip(spark, tmp_path):
     assert "collections.zip" not in names
 
 
+def test_single_file_is_compact_utf8_json(spark, tmp_path):
+    """full.json is the compact JSON array of the rows' own JSON text:
+    no whitespace between tokens, non-ASCII text as UTF-8 (not \\u
+    escapes), and once parsed the same documents as a json.loads /
+    json.dump round trip of the same rows."""
+    df = spark.createDataFrame(
+        [(1, "Zürich — 東京 ✓", [(2, "ü")]), (2, None, [])],
+        "k long, name string, kids array<struct<n: long, s: string>>",
+    )
+    out = str(tmp_path / "out")
+    write_json_collections({"full": df}, out, single_file=True)
+    with open(os.path.join(out, "full.json"), "rb") as fh:
+        raw = fh.read()
+    text = raw.decode("utf-8")
+    assert "Zürich — 東京 ✓" in text and "\\u" not in text
+    docs = json.loads(text)
+    assert text == json.dumps(docs, ensure_ascii=False,
+                              separators=(",", ":"))
+    dumped = json.dumps([json.loads(r) for r in df.toJSON().collect()],
+                        default=str)
+    assert docs == json.loads(dumped)
+    assert docs[1] == {"k": 2, "kids": []}
+
+
 def test_partitioned_parquet_sink_prunes_splits(spark):
     """The hive-partitioned corpus layout must actually prune: a reader
     filtering one split may only touch that split's directory."""

@@ -139,3 +139,132 @@ INSERT INTO t VALUES (3, 'plain', 'z');
     assert rows[1]["b"] == "it's; tricky" and rows[1]["c"] == "x"
     assert rows[2]["b"] == "a'b, c'd" and rows[2]["c"] == "y\\"
     assert rows[3]["b"] == "plain"
+
+
+def test_timestamp_offsets_come_out_as_utc(spark):
+    """A pg `timestamptz` value carries its offset: `07:30+07` in an
+    INSERT literal or a COPY line is 00:30 UTC, not 07:30."""
+    dump = """CREATE TABLE ev (id INT, at TIMESTAMP);
+INSERT INTO ev VALUES (1, '2024-01-01 07:30:00+07');
+COPY ev (id, at) FROM stdin;
+2\t2024-01-01 07:30:00+07
+\\.
+"""
+    _, tables, _ = import_sql_dump(spark, dump)
+    got = tables["ev"].selectExpr("id", "CAST(at AS STRING) AS at")
+    assert sorted(tuple(r) for r in got.collect()) == [
+        (1, "2024-01-01 00:30:00"), (2, "2024-01-01 00:30:00"),
+    ]
+
+
+def test_dump_timestamps_ignore_the_host_time_zone(tmp_path):
+    """A naive dump timestamp is UTC (as on the parquet path) whatever
+    time zone the driver host is in."""
+    import os
+    import subprocess
+    import sys
+
+    code = (
+        "from relational_to_doc_oriented_nosql_migrator_spark.session "
+        "import get_spark\n"
+        "from relational_to_doc_oriented_nosql_migrator_spark.sources."
+        "sqldump import import_sql_dump\n"
+        "spark = get_spark(master='local[1]')\n"
+        "dump = ('CREATE TABLE ev (id INT, at DATETIME);\\n'\n"
+        "        \"INSERT INTO ev VALUES (1, '2024-01-01 00:30:00');\\n\"\n"
+        "        'COPY ev (id, at) FROM stdin;\\n'\n"
+        "        '2\\t2024-01-01 07:30:00+07\\n\\\\.\\n')\n"
+        "_, tables, _ = import_sql_dump(spark, dump)\n"
+        "print(sorted(tuple(r) for r in tables['ev'].selectExpr("
+        "'id', 'CAST(at AS STRING)').collect()))\n"
+        "spark.stop()\n"
+    )
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    env = {**os.environ, "TZ": "Asia/Bangkok",
+           "SPARK_GRAFT_DRIVER_MEM": "512m",
+           "SPARK_LOCAL_DIRS": str(tmp_path)}
+    out = subprocess.run([sys.executable, "-c", code], capture_output=True,
+                         text=True, check=True, cwd=str(tmp_path), env={
+                             **env, "PYTHONPATH": repo},
+                         timeout=300).stdout
+    assert out.strip().splitlines()[-1] == (
+        "[(1, '2024-01-01 00:30:00'), (2, '2024-01-01 00:30:00')]")
+
+
+EDGE_DUMP = r"""CREATE TABLE edge (
+  id INT PRIMARY KEY,
+  flag BOOLEAN,
+  note VARCHAR(60),
+  nothing VARCHAR(10),
+  d DATE,
+  ts DATETIME,
+  amount DOUBLE
+);
+INSERT INTO edge VALUES
+  (1, 1, 'it\'s ''quoted'', ok', NULL, '2024-02-29', '2024-01-01 00:30:00', 1.5),
+  (2, 0, 'Zürich — 東京 ✓', NULL, NULL, NULL, NULL),
+  (3, TRUE, 'back\\slash', NULL, '1999-12-31', '1999-12-31 23:59:59.123456', -0.25),
+  (4, NULL, '', NULL, NULL, '2024-06-01 12:00:00', 1e300);
+CREATE TABLE empty_t (a INT, b VARCHAR(5), c TIMESTAMP, e BOOLEAN);
+"""
+
+
+def _dump_cases():
+    import os
+    import sys
+
+    sys.path.insert(0, os.path.join(
+        os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
+        "perfbench"))
+    import gen
+
+    return {
+        "fixture": DUMP_FIXTURE,
+        "pg_copy": PG_COPY_DUMP,
+        "perfbench_seed7": gen.mysqldump(7, 0.001)[0],
+        "edge": EDGE_DUMP,
+    }
+
+
+def test_arrow_tables_match_the_row_path(spark):
+    """Differential test against the row path the dump source used
+    before (`createDataFrame(rows, schema)`, whose naive timestamps go
+    through the host time zone, so it runs under TZ=UTC here): same
+    schema, same rows in the same order — and no dump table's plan
+    starts a Python worker."""
+    import os
+    import time
+
+    from relational_to_doc_oriented_nosql_migrator_spark.sources.sqldump import (
+        _parse_dump,
+    )
+
+    saved = os.environ.get("TZ")
+    os.environ["TZ"] = "UTC"
+    time.tzset()
+    try:
+        for case, dump in _dump_cases().items():
+            _db, defs = _parse_dump(dump, "db")
+            _db, tables, _ = import_sql_dump(spark, dump)
+            assert list(tables) == list(defs), case
+            for name, tdef in defs.items():
+                ref = spark.createDataFrame(tdef.rows, tdef.schema)
+                got = tables[name]
+                assert got.schema == ref.schema, (case, name)
+                assert got.collect() == ref.collect(), (case, name)
+                lineage = got._jdf.queryExecution().toRdd().toDebugString()
+                assert "PythonRDD" not in lineage, (case, name)
+    finally:
+        if saved is None:
+            del os.environ["TZ"]
+        else:
+            os.environ["TZ"] = saved
+        time.tzset()
+    edge = import_sql_dump(spark, EDGE_DUMP)[1]
+    assert edge["empty_t"].count() == 0
+    rows = {r["id"]: r for r in edge["edge"].collect()}
+    assert rows[1]["note"] == "it's 'quoted', ok"
+    assert rows[2]["note"] == "Zürich — 東京 ✓"
+    assert rows[3]["note"] == "back\\slash"
+    assert [rows[i]["flag"] for i in (1, 2, 3, 4)] == [True, False, True,
+                                                       None]
