@@ -191,12 +191,6 @@ def q_ext_dedup_ngram_jaccard(spark, sf_dir):
     return _pair_jaccard(a.join(b, F.col("doc_a") < F.col("doc_b")))
 
 
-# Base 48-bit md5 hash per distinct shingle, computed exactly once, reduced
-# mod the Mersenne prime. Shared bit-for-bit with the oracle.
-_HS_EXPR = (
-    "transform(sh, s -> CAST(conv(substring(md5(s), 1, 12), 16, 10)"
-    f" AS BIGINT) % {MERSENNE_P})"
-)
 # Raw 48-bit shingle hashes (no mod): md5 computed ONCE per shingle, then
 # reused both for the OPH bin signatures (mod P) and the exact-Jaccard verify
 # (set intersection over ints == over strings, md5 being collision-free at
@@ -257,22 +251,6 @@ _BANDS_EXPR = (
 # (warning + the result's `minhash_audit` dict) and has a documented
 # remedy — run exact dedup upstream to collapse identical docs first.
 MINHASH_BUCKET_CAP = 256
-
-
-
-def minhash_bands_from(spark, sh):
-    """(doc_id, band_key) from a (doc_id, sh) shingle frame — one row per
-    band; the LSH blocking relation. Input partitioning is inherited (all
-    producers spread at the narrow scan)."""
-    sigs = _with_sigs(sh.withColumn("hs", F.expr(_HS_EXPR)))
-    return sigs.select(
-        "doc_id", F.explode(F.expr(_BANDS_EXPR)).alias("band_key")
-    )
-
-
-def minhash_bands_df(spark, sf_dir):
-    """(doc_id, band_key) — one row per band; the LSH blocking relation."""
-    return minhash_bands_from(spark, _shingle_df(spark, sf_dir))
 
 
 def minhash_pairs_from(spark, sh, bucket_cap: int | None = None,

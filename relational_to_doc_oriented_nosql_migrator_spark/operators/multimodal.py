@@ -30,11 +30,6 @@ FRAME_BYTES = 64        # fake video: fixed-size frames
 FRAME_STRIDE = 4        # sample every 4th frame
 FEATURE_DIM = 4         # fake feature vector width
 
-MM_SCHEMA = (
-    "doc_id bigint, blob binary,"
-    " meta struct<format: string, width: int, height: int, n_bytes: bigint>"
-)
-
 
 def attach_media(docs: DataFrame) -> DataFrame:
     """`documents` -> (doc_id, blob, meta): the binary ingestion shape.

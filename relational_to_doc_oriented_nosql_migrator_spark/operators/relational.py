@@ -710,7 +710,7 @@ def q_filter_nonempty_collection(spark, sf_dir):
     return counts.unionByName(empty).filter(F.col("n_docs") > 0)
 
 
-def q_sink_json_collections(spark, sf_dir, threshold=None):
+def q_sink_json_collections(spark, sf_dir):
     """Round-trip through the JSON collection sink (reference
     server/WriteToFile.js:5-62): migrate, write every non-empty collection
     as distributed JSON, read it back, return per-collection doc counts.
@@ -720,10 +720,8 @@ def q_sink_json_collections(spark, sf_dir, threshold=None):
     Heavy roots (subtree past nesting.HEAVY_ROOT_SUBTREE_ROWS — the sf10
     probe corpus, never the driver/bench scales) assemble per-root in
     file space via migrate_streamed, removing the single-row root-
-    document heap floor (r08 verdict #2). threshold overrides
-    HEAVY_ROOT_SUBTREE_ROWS for knee measurement (tools/sink_heap_probe
-    sweeps it at sf10); the registered (spark, sf_dir) call leaves it at
-    the engine default."""
+    document heap floor (r08 verdict #2). The sf10 knee measurement of
+    that threshold is in git history at a6e084f."""
     import shutil
 
     from relational_to_doc_oriented_nosql_migrator_spark.engine import (
@@ -735,8 +733,7 @@ def q_sink_json_collections(spark, sf_dir, threshold=None):
 
     out_dir = __import__("tempfile").mkdtemp(prefix="sink_json_")
     try:
-        collections, streamed = migrate_streamed(spark, sf_dir,
-                                                 threshold=threshold)
+        collections, streamed = migrate_streamed(spark, sf_dir)
         counts: dict[str, int] = {}
         written = write_json_collections(collections, out_dir,
                                          streamed=streamed, counts=counts)

@@ -1366,13 +1366,13 @@ def _adc_wide(cand, codes, dtab):
     ~15 minutes at the 100x dataset. The first fix densified per QUERY
     row via `transform(sequence(0,511), k -> dmap[k])` — which is the
     SAME linear scan, O((M*K)^2) boxed comparisons per query; profiled
-    at 4.3s of the 7.2s warm sf1.0 indexed search (r12, tools/
-    prof_adc.py). Lloyd's empty-cluster gaps are a property of the
-    CODEBOOK, not the query — every query's dtab covers exactly the
-    surviving (subspace, code) pairs — so the gap layout is computed
-    ONCE as a dense slot -> rank array (one tiny global agg,
-    array_position paid M*K times total, not per query) and each
-    query keeps its distances as a slot-sorted COMPACT array. The
+    at 4.3s of the 7.2s warm sf1.0 indexed search (r12; the profiling
+    script is in git history at a6e084f). Lloyd's empty-cluster gaps
+    are a property of the CODEBOOK, not the query — every query's dtab
+    covers exactly the surviving (subspace, code) pairs — so the gap
+    layout is computed ONCE as a dense slot -> rank array (one tiny
+    global agg, array_position paid M*K times total, not per query) and
+    each query keeps its distances as a slot-sorted COMPACT array. The
     candidate-side lookup is then two O(1) array subscripts:
     rank = s2r[slot], d = darr[rank] — the FAISS LUT shape. A
     candidate's slot is always populated because codes are assigned

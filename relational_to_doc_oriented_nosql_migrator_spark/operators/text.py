@@ -419,7 +419,8 @@ def q_ext_text_bigram_logprob(spark, sf_dir):
     spread past SPREAD_MIN_DOCS: the heaviest explode in the text
     family (two bigram aggregations) ran on ONE core at sf10 when the
     corpus read as a single split (104.7s measured, 49.3s spread — the
-    worst non-ANN id in the frozen PROBE_r06 matrix).
+    worst non-ANN id in the frozen round-6 probe matrix, in git history
+    at a6e084f).
     """
     docs = docs_tokenized(spark, sf_dir, spread=spread_for(sf_dir))
     bigrams_expr = (

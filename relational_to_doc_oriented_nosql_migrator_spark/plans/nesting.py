@@ -30,13 +30,14 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from relational_to_doc_oriented_nosql_migrator_spark.functions.scalar import (
+    date_normalize,
+)
 from relational_to_doc_oriented_nosql_migrator_spark.plans.catalog import Catalog
 from relational_to_doc_oriented_nosql_migrator_spark.plans.planner import (
     Collection,
     NoSQLPlan,
 )
-
-BANGKOK_TZ = "Asia/Bangkok"
 
 # When the parent table has only a handful of rows, each nesting group is
 # a corpus-share-sized document (5 regions -> ~1/5 of everything under
@@ -215,7 +216,6 @@ def materialize_streamed_root(
     root_name: str,
     child_names: list[str] | str,
     normalize_dates: bool = True,
-    drop_all_null_docs: bool = True,
     threshold: int = HEAVY_ROOT_SUBTREE_ROWS,
 ) -> StreamedRoot:
     """Build the streamed-assembly pieces for one heavy root: the root
@@ -241,8 +241,7 @@ def materialize_streamed_root(
         df = normalize_date_columns(df)
     attrs = _dedupe(root.attributes)
     df = _root_projection(df, attrs, meta.columns)
-    if drop_all_null_docs:
-        df = df.na.drop(how="all", subset=attrs)
+    df = df.na.drop(how="all", subset=attrs)
     heavy_set = {e.name for e in heavies}
     for emb in root.embedded:
         if emb.name in heavy_set:
@@ -364,13 +363,7 @@ def normalize_date_columns(df: DataFrame) -> DataFrame:
         if isinstance(
             f_.dataType, (T.TimestampType, T.TimestampNTZType, T.DateType)
         ):
-            out = out.withColumn(
-                f_.name,
-                F.date_format(
-                    F.from_utc_timestamp(F.col(f_.name), BANGKOK_TZ),
-                    "yyyy-MM-dd",
-                ),
-            )
+            out = out.withColumn(f_.name, date_normalize(F.col(f_.name)))
     return out
 
 
@@ -573,7 +566,6 @@ def materialize(
     catalog: Catalog,
     plan: NoSQLPlan,
     normalize_dates: bool = True,
-    drop_all_null_docs: bool = True,
 ) -> dict[str, DataFrame]:
     """Materialize every root collection of the plan as a nested DataFrame."""
     out: dict[str, DataFrame] = {}
@@ -582,11 +574,11 @@ def materialize(
         df = tables[root.name]
         if normalize_dates:
             df = normalize_date_columns(df)
-        df = _root_projection(df, _dedupe(root.attributes), meta.columns)
-        if drop_all_null_docs:
-            # `filter_nonempty_doc`: documents where no attribute matched are
-            # dropped (reference server/DBMigration.js:473,481,491).
-            df = df.na.drop(how="all", subset=_dedupe(root.attributes))
+        attrs = _dedupe(root.attributes)
+        df = _root_projection(df, attrs, meta.columns)
+        # `filter_nonempty_doc`: documents where no attribute matched are
+        # dropped (reference server/DBMigration.js:473,481,491).
+        df = df.na.drop(how="all", subset=attrs)
         for emb in root.embedded:
             df = _attach_embedded(tables, catalog, df, root.name, emb,
                                   normalize_dates)

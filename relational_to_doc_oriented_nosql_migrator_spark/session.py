@@ -17,7 +17,7 @@ import os
 
 from pyspark.sql import SparkSession
 
-DEFAULT_SHUFFLE_PARTITIONS = int(os.environ.get("SPARK_GRAFT_SHUFFLE_PARTITIONS", "32"))
+DEFAULT_SHUFFLE_PARTITIONS = 32
 
 
 def get_spark(
@@ -69,8 +69,9 @@ def get_spark(
         # a natural full GC (the r06 sf10 JSON-sink incident) — but an
         # aggressive 1min interval measured +17% across the whole bench
         # suite (forced full GCs stall every query). Long-running
-        # multi-op harnesses opt in via extra_conf (tools/probe_sf10.py
-        # does); per-query sessions must not pay for it.
+        # multi-op harnesses opt in via extra_conf (the sf10 probe script
+        # in git history at a6e084f did); per-query sessions must not pay
+        # for it.
         # The testdata parquet carries TIMESTAMP(NANOS), which Spark has no
         # native type for; read as long and restore micros timestamps at the
         # source (sources/parquet.py).

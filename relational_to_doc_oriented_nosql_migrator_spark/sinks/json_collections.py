@@ -402,14 +402,14 @@ def _rm_one(path: str) -> None:
 
 
 # Ceiling on final part files for one streamed collection: a
-# thousand-root collection batches ~root_count/max_parts roots per task
-# instead of emitting one part file per root (r10 verdict task #4).
-# Tiny root counts (every TPC-H-shaped corpus here) stay one-root-per-
-# part. Override per call via write_json_collections(stream_max_parts=).
+# thousand-root collection batches ~root_count/STREAM_MAX_PARTS roots
+# per task instead of emitting one part file per root (r10 verdict task
+# #4). Tiny root counts (every TPC-H-shaped corpus here) stay
+# one-root-per-part.
 STREAM_MAX_PARTS = 1024
 
 
-def _write_streamed(pieces, target: str, max_parts: int = None) -> bool:
+def _write_streamed(pieces, target: str) -> bool:
     """Assemble one HEAVY root collection in file space (r08 verdict #2):
     every over-threshold child level's documents are written by Spark as
     per-parent-key sorted JSON fragments (text files partitioned by the
@@ -431,8 +431,8 @@ def _write_streamed(pieces, target: str, max_parts: int = None) -> bool:
     root collection's final write parallelizes across the cluster
     instead of serializing through one driver file handle. File order
     (part-00000.., sorted by root key) keeps the output deterministic;
-    past max_parts roots, consecutive sorted roots batch into one part
-    file per task (multiple NDJSON lines — the same layout the
+    past STREAM_MAX_PARTS roots, consecutive sorted roots batch into
+    one part file per task (multiple NDJSON lines — the same layout the
     distributed writer produces), so a thousand-root collection never
     emits a thousand part files (r10 verdict task #4).
 
@@ -451,8 +451,6 @@ def _write_streamed(pieces, target: str, max_parts: int = None) -> bool:
     spark = pieces.roots.sparkSession
     tmps: list[str] = []
     n = len(pieces.children)
-    if max_parts is None:
-        max_parts = STREAM_MAX_PARTS
     try:
         with _sort_based_collects(spark):
             # Roots FIRST: the frame is metadata-light, and an empty
@@ -483,7 +481,7 @@ def _write_streamed(pieces, target: str, max_parts: int = None) -> bool:
             )
             for idx, r in enumerate(sorted(roots, key=root_key))
         ]
-        per_task = -(-len(payloads) // max(1, max_parts))
+        per_task = -(-len(payloads) // max(1, STREAM_MAX_PARTS))
         batches = [
             (bi, payloads[off:off + per_task])
             for bi, off in enumerate(
@@ -527,7 +525,6 @@ def write_json_collections(
     single_file: bool = False,
     zip_path: str | None = None,
     streamed: dict | None = None,
-    stream_max_parts: int | None = None,
     counts: dict | None = None,
 ) -> list[str]:
     """Write each non-empty collection; returns the names written.
@@ -544,9 +541,6 @@ def write_json_collections(
     those collections are assembled per-root in file space instead of
     materializing root-document rows (see _write_streamed). Ignored in
     single_file parity mode (explicitly non-scale).
-
-    stream_max_parts: part-file ceiling per streamed collection
-    (default STREAM_MAX_PARTS).
 
     BREAKING (r11): a bare local out_dir (no filesystem scheme) on a
     non-local master is now rejected loudly — on a multi-node cluster
@@ -591,9 +585,7 @@ def write_json_collections(
         df = _replanned(df)
         target = f"{out_dir.rstrip('/')}/{name}"
         if name in streamed and not single_file:
-            n_docs = _write_streamed(
-                streamed[name], target, stream_max_parts
-            )
+            n_docs = _write_streamed(streamed[name], target)
             wrote[name] = bool(n_docs)
             if counts is not None and n_docs:
                 counts[name] = n_docs

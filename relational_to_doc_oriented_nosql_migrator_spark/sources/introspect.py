@@ -188,17 +188,6 @@ def normalize_sql(sql: str) -> str:
     return " ".join(sql.split()).rstrip(";").strip()
 
 
-def reference_meta_sql(dialect: str, endpoint: str, db: str = "{db}",
-                       table: str = "{table}") -> str:
-    """The exact SQL string the reference ships for `endpoint`
-    ('table_data' | 'table_rows' | 'table_columns' | 'primary_keys' |
-    'foreign_keys' | 'reference_info'), normalized for the JDBC
-    `dbtable` subquery slot (no trailing ';')."""
-    return normalize_sql(
-        REFERENCE_SQL[dialect][endpoint].format(db=db, table=table)
-    )
-
-
 # Reshaped set-returning variants of the same three catalog relations the
 # engine's planner consumes, verbatim shapes
 # (server/MySQLDBManager.js:99-111,152-159,176-226). {db} is the schema.

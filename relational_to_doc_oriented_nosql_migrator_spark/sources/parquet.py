@@ -26,8 +26,6 @@ TPCH_TABLES = (
 # Extension tables for stream/text/vector operators.
 ALL_TABLES = TPCH_TABLES + ("events", "documents", "embeddings")
 
-DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-
 
 def ensure_runtime_confs(spark: SparkSession) -> None:
     """Runtime confs the engine depends on, set here (not only in our session
@@ -162,16 +160,3 @@ def register_views(
     """Register each table as a temp view for spark.sql access."""
     for name in names:
         load_table(spark, sf_dir, name).createOrReplaceTempView(name)
-
-
-def indexed_lookup(df: DataFrame, column: str, value) -> DataFrame:
-    """`src_indexed_lookup`: point-predicate scan.
-
-    The reference issues `SELECT * FROM t WHERE col = ?` per probe
-    (server/MySQLDBManager.js:284-312). Expressed declaratively the predicate
-    is pushed into the parquet scan (visible as PushedFilters in .explain);
-    bulk probes should instead join against a key DataFrame.
-    """
-    from pyspark.sql import functions as F
-
-    return df.filter(F.col(column) == value)

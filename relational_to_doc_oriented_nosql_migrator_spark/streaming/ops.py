@@ -49,21 +49,6 @@ from relational_to_doc_oriented_nosql_migrator_spark.sources.parquet import (
 
 _MEM_COUNTER = itertools.count()
 
-# Progress snapshots of the MOST RECENT run_stream_to_batch execution
-# (one dict per micro-batch, as returned by StreamingQuery.recentProgress).
-# Observability only — tools/stream_state_probe.py reads state-store rows/
-# bytes and per-batch wall times from here to record how state scales
-# with the corpus (r06 verdict task #8); no operator consumes it.
-LAST_STREAM_PROGRESS: list = []
-
-
-def _capture_progress(query) -> None:
-    global LAST_STREAM_PROGRESS
-    try:
-        LAST_STREAM_PROGRESS = list(query.recentProgress)
-    except Exception:  # noqa: BLE001 — never let telemetry fail a run
-        LAST_STREAM_PROGRESS = []
-
 
 def ensure_streaming_confs(spark: SparkSession) -> None:
     """RocksDB state store for every stream op (set at the one source
@@ -172,7 +157,6 @@ def run_stream_to_batch(
                 .start()
             )
             query.awaitTermination()
-            _capture_progress(query)
             return sdf.sparkSession.read.schema(sdf.schema).parquet(out)
         if output_mode != "complete":
             raise ValueError(
@@ -191,7 +175,6 @@ def run_stream_to_batch(
             .start()
         )
         query.awaitTermination()
-        _capture_progress(query)
         return sdf.sparkSession.read.schema(sdf.schema).parquet(out)
     name = f"sg_stream_{next(_MEM_COUNTER)}"
     query = (
@@ -202,7 +185,6 @@ def run_stream_to_batch(
         .start()
     )
     query.awaitTermination()
-    _capture_progress(query)
     return sdf.sparkSession.table(name)
 
 
@@ -221,7 +203,6 @@ def stream_to_json_files(
         .start()
     )
     query.awaitTermination()
-    _capture_progress(query)
 
 
 def stream_tumbling_agg(events: DataFrame, watermark: str = "30 minutes"):
@@ -652,7 +633,6 @@ def stream_cdc_upsert(events: DataFrame, state_base: str,
         .start()
     )
     query.awaitTermination()
-    _capture_progress(query)
 
 
 def _latest_cdc_state(state_base: str, app_id: str | None = None):

@@ -76,6 +76,59 @@ def test_date_normalization(collections):
     assert len(row["o_orderdate"]) == 10  # yyyy-MM-dd
 
 
+def test_materialize_drops_null_docs_and_bangkok_dates(spark):
+    """Tiny in-memory dept <- emp catalog through the real planner and
+    materializer: a root row whose mapped attributes are all NULL yields
+    no document, and timestamps render as Asia/Bangkok dates (18:30 UTC
+    on Jan 1 is already Jan 2 in UTC+7) at the root and in embedded
+    arrays alike, and through functions.date_normalize."""
+    import json
+
+    from relational_to_doc_oriented_nosql_migrator_spark.functions import (
+        date_normalize,
+    )
+    from relational_to_doc_oriented_nosql_migrator_spark.plans import (
+        Catalog,
+        ForeignKey,
+        TableMeta,
+        convert_schema,
+        materialize,
+    )
+
+    dept = spark.sql(
+        "SELECT * FROM VALUES"
+        " (1, 'Sales', TIMESTAMP '2024-01-01 18:30:00'),"
+        " (2, 'Ops', TIMESTAMP '2024-01-01 10:00:00'),"
+        " (CAST(NULL AS INT), CAST(NULL AS STRING), CAST(NULL AS TIMESTAMP))"
+        " AS t(deptId, deptName, founded)"
+    )
+    emp = spark.sql(
+        "SELECT * FROM VALUES"
+        " (10, 'Ann', TIMESTAMP '2024-01-01 18:30:00', 1),"
+        " (11, 'Bob', TIMESTAMP '2024-01-01 16:59:59', 1)"
+        " AS t(empId, empName, hired, deptId)"
+    )
+    catalog = Catalog([
+        TableMeta("dept", 3, ["deptId", "deptName", "founded"], ["deptId"]),
+        TableMeta("emp", 2, ["empId", "empName", "hired", "deptId"],
+                  ["empId"], [ForeignKey("deptId", "dept", "deptId")]),
+    ])
+    out = materialize({"dept": dept, "emp": emp}, catalog,
+                      convert_schema(catalog))
+
+    assert set(out) == {"dept"}
+    docs = sorted((json.loads(j) for j in out["dept"].toJSON().collect()),
+                  key=lambda d: d["deptId"])
+    assert docs == [
+        {"deptId": 1, "deptName": "Sales", "founded": "2024-01-02",
+         "emp": [{"empId": 10, "empName": "Ann", "hired": "2024-01-02"},
+                 {"empId": 11, "empName": "Bob", "hired": "2024-01-01"}]},
+        {"deptId": 2, "deptName": "Ops", "founded": "2024-01-01"},
+    ]
+    ts = spark.sql("SELECT TIMESTAMP '2024-01-01 18:30:00' AS ts")
+    assert ts.select(date_normalize("ts")).first()[0] == "2024-01-02"
+
+
 def test_schema_templates(collections):
     """Client-parity skeletons (reference NoSqlCollection.js:14-29): empty
     strings for scalars, one-element arrays for embedded collections,
