@@ -5,25 +5,16 @@ The reference delegates to node-sql-parser's `tableList`
 table referenced by the statement, tagged with the statement's operation;
 unparseable statements are skipped silently (:69-71).
 
-Implementation: sqlglot if importable (not in the base image), else a
-regex-based extractor that handles the log-statement shapes the workload
-analyzer sees (SELECT ... FROM a JOIN b / comma lists, INSERT INTO, UPDATE,
-DELETE FROM, CREATE TABLE, and non-correlated subqueries). Plain Python,
-called once per statement by the driver-side workload analyzer
-(workload.py).
+Implementation: a regex-based extractor that handles the log-statement
+shapes the workload analyzer sees (SELECT ... FROM a JOIN b / comma lists,
+INSERT INTO, UPDATE, DELETE FROM, CREATE TABLE, and non-correlated
+subqueries). Plain Python, called once per statement by the driver-side
+workload analyzer (workload.py).
 """
 
 from __future__ import annotations
 
 import re
-
-try:  # pragma: no cover - sqlglot not present in the base image
-    import sqlglot
-    from sqlglot import exp
-
-    _HAVE_SQLGLOT = True
-except Exception:  # pragma: no cover
-    _HAVE_SQLGLOT = False
 
 _IDENT = r'(?:`[^`]+`|"[^"]+"|\[[^\]]+\]|[A-Za-z_][\w$]*)(?:\s*\.\s*(?:`[^`]+`|"[^"]+"|[A-Za-z_][\w$]*))?'
 
@@ -116,28 +107,8 @@ def _extract_regex(statement: str) -> list[str]:
     return out
 
 
-def _extract_sqlglot(statement: str, dialect: str) -> list[str]:  # pragma: no cover
-    try:
-        parsed = sqlglot.parse_one(statement, read=dialect)
-    except Exception:
-        return []
-    op = _op_of(statement) or "select"
-    seen, out = set(), []
-    for t in parsed.find_all(exp.Table):
-        entry = f"{op}::{t.db or 'null'}::{t.name}"
-        if entry not in seen:
-            seen.add(entry)
-            out.append(entry)
-    return out
-
-
-def extract_table_refs(statement: str, dialect: str = "mysql") -> list[str]:
+def extract_table_refs(statement: str) -> list[str]:
     """Pure-Python extraction (unit-testable without Spark)."""
     if statement is None:
         return []
-    if _HAVE_SQLGLOT:
-        refs = _extract_sqlglot(statement, dialect)
-        if refs:
-            return refs
     return _extract_regex(statement)
-

@@ -413,10 +413,12 @@ def q_ext_fuzzy_join_names(spark, sf_dir):
     # heavy per-row work (deletion-key explode, levenshtein) runs on
     # the DISTINCT-names frame, a hot name's quadratic id-pair output
     # dominates any input-layout effect in both shapes, and AQE's
-    # skew-join splitting covers the expansion joins.
+    # skew-join splitting covers the expansion joins. The spread has
+    # defaultParallelism partitions, so a session with fewer shuffle
+    # partitions than cores keeps it.
     cust = (
         t(spark, sf_dir, "customer")
-        .repartition(F.col("c_name"))
+        .repartition(spark.sparkContext.defaultParallelism, F.col("c_name"))
         .select(F.col("c_custkey").alias("id"), F.col("c_name").alias("nm"))
     )
     dn = cust.select("nm").distinct()

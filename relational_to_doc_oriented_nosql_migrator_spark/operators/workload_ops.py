@@ -94,7 +94,7 @@ def q_fn_sql_tablelist(spark, sf_dir):
     (reference server/LogManager.js:53-75)."""
     return spark.createDataFrame(
         [(ref,) for s in W.statements(MYSQL_LOG, "mysql")
-         for ref in extract_table_refs(s, "mysql")],
+         for ref in extract_table_refs(s)],
         "ref string",
     )
 
@@ -106,13 +106,13 @@ def q_fn_split_tableref(spark, sf_dir):
     """Split parser refs on '::' into (op, db, table_name)
     (reference server/LogManager.js:79-82)."""
     return spark.createDataFrame(
-        W.table_refs(W.statements(MYSQL_LOG, "mysql"), "mysql"), _REFS_SCHEMA)
+        W.table_refs(W.statements(MYSQL_LOG, "mysql")), _REFS_SCHEMA)
 
 
 def q_filter_dml_type(spark, sf_dir):
     """Keep only select/insert/update/delete refs — drops e.g. CREATE
     (reference server/LogManager.js:85-91)."""
-    refs = W.table_refs(W.statements(MYSQL_LOG, "mysql"), "mysql")
+    refs = W.table_refs(W.statements(MYSQL_LOG, "mysql"))
     return spark.createDataFrame(
         [r for r in refs if r[0] in W.DML_OPS], _REFS_SCHEMA)
 

@@ -193,26 +193,23 @@ def run_migration(
     }
 
 
-def _parse_multipart(content_type: str, body: bytes) -> dict:
-    """Multipart form fields -> {name: bytes-or-str}. Stdlib email
-    parsing (the body IS a MIME document once a header is prefixed);
-    file parts return bytes, plain fields return str."""
+def _parse_multipart(content_type: str, body: bytes) -> dict[str, str]:
+    """Multipart form fields -> {name: UTF-8 text}, file parts and plain
+    fields alike (undecodable bytes are replaced). Stdlib email parsing:
+    the body IS a MIME document once a header is prefixed."""
     msg = email.message_from_bytes(
         b"Content-Type: " + content_type.encode() + b"\r\n\r\n" + body,
         policy=email.policy.HTTP,
     )
     if not msg.is_multipart():
         raise ValueError("expected multipart/form-data")
-    fields: dict = {}
+    fields: dict[str, str] = {}
     for part in msg.iter_parts():
         name = part.get_param("name", header="content-disposition")
         if name is None:
             continue
-        payload = part.get_payload(decode=True)
-        if part.get_filename() is None and payload is not None:
-            fields[name] = payload.decode("utf-8", "replace")
-        else:
-            fields[name] = payload or b""
+        payload = part.get_payload(decode=True) or b""
+        fields[name] = payload.decode("utf-8", "replace")
     return fields
 
 
@@ -254,21 +251,11 @@ class MigrationHandler(BaseHTTPRequestHandler):
                 self.headers.get("Content-Type", ""),
                 self.rfile.read(length),
             )
-            sql_raw = fields.get("sqlFile")
-            if sql_raw is None:
+            sql_text = fields.get("sqlFile")
+            if sql_text is None:
                 raise ValueError("sqlFile part is required")
-            sql_text = (
-                sql_raw.decode("utf-8", "replace")
-                if isinstance(sql_raw, bytes) else sql_raw
-            )
-            log_raw = fields.get("logFile")
-            log_content = (
-                log_raw.decode("utf-8", "replace")
-                if isinstance(log_raw, bytes) else log_raw
-            ) or None
+            log_content = fields.get("logFile") or None
             db_type = fields.get("dbType") or "mysql"
-            if isinstance(db_type, bytes):
-                db_type = db_type.decode()
             dialect = ("postgres" if db_type.lower().startswith("postgres")
                        else "mysql")
             with self.server.admission:

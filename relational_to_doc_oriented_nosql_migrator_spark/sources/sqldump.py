@@ -16,9 +16,12 @@ Sanitization parity with the reference's importSqlFile:
   caller-provided fallback (filename stem in the reference)
 
 Grammar: the CREATE TABLE / INSERT INTO ... VALUES subset that mysqldump
-and pg_dump emit. Dumps are metadata-plus-literals scale; genuinely large
-fact data arrives via parquet/JDBC, so driver-side parsing here mirrors
-where the reference itself is driver-bound.
+and pg_dump emit, plus pg_dump's `COPY ... FROM stdin` data blocks. Values
+decode the way the server that would load the dump reads them: MySQL
+backslash escapes in INSERT literals, pg text-format escapes in COPY data.
+Dumps are metadata-plus-literals scale; genuinely large fact data arrives
+via parquet/JDBC, so driver-side parsing here mirrors where the reference
+itself is driver-bound.
 """
 
 from __future__ import annotations
@@ -91,62 +94,54 @@ _COPY_RE = re.compile(
     re.I,
 )
 
+# The pair of quoted-string patterns every split below builds on: a '...'
+# or "..." literal whose body holds backslash escapes and doubled quotes
+# (written unrolled, so a missing closing quote costs one linear scan).
+_SQ = r"'[^'\\]*(?:(?:\\.|'')[^'\\]*)*'"
+_DQ = r'"[^"\\]*(?:(?:\\.|"")[^"\\]*)*"'
+# A statement: quoted strings and anything but ';' (a quote that never
+# closes is read as a plain character).
+_STATEMENT_RE = re.compile(rf"(?:{_SQ}|{_DQ}|[^;'\"]+|['\"])+", re.S)
+# Tokens for a paren-depth split: strings, parens, commas, the rest.
+_TOP_LEVEL_TOKEN_RE = re.compile(rf"{_SQ}|{_DQ}|[^(),'\"]+|.", re.S)
+# One INSERT's VALUES list: a literal (group 1) or a tuple's closing paren
+# (group 2); '(' and ',' between them are skipped.
+_VALUES_TOKEN_RE = re.compile(rf"({_SQ}|{_DQ}|[^\s,()'\"]+)|(\))", re.S)
+
+# MySQL string-literal escapes (the server's own reading of a mysqldump):
+# \% and \_ stay as written, any other \x not in the table is x, and a
+# doubled quote is one quote.
+_MYSQL_ESCAPES = {
+    "\\0": "\0", "\\b": "\b", "\\n": "\n", "\\r": "\r", "\\t": "\t",
+    "\\Z": "\x1a", "\\%": "\\%", "\\_": "\\_", "''": "'", '""': '"',
+}
+# Per quote character: in a '...' body only '' is a doubled quote.
+_MYSQL_ESCAPE_RE = {
+    q: re.compile(rf"\\.|{q}{q}", re.S) for q in ("'", '"')
+}
+# pg COPY text-format escapes; \N alone is NULL, any other \x is x (COPY
+# TO writes no octal or hex forms).
+_COPY_ESCAPES = {
+    "b": "\b", "f": "\f", "n": "\n", "r": "\r", "t": "\t", "v": "\v",
+}
+_COPY_ESCAPE_RE = re.compile(r"\\(.)", re.S)
+
 
 def _unquote(ident: str) -> str:
     return ident.strip().strip('`"').split(".")[-1].strip('`"')
 
 
-def _extract_copy_blocks(
-    text: str,
-) -> tuple[str, list[tuple[str, list[str] | None, list[str]]]]:
-    """Pull pg_dump `COPY t (cols) FROM stdin; ... \\.` blocks out of the
-    dump BEFORE statement splitting (COPY data is newline-framed, not
-    ';'-terminated, and its lines may contain anything). Returns the dump
-    text without the blocks plus [(table, cols|None, data_lines)]."""
-    out_lines: list[str] = []
-    blocks: list[tuple[str, list[str] | None, list[str]]] = []
-    lines = text.splitlines()
-    i = 0
-    while i < len(lines):
-        m = _COPY_RE.match(lines[i].strip())
-        if not m:
-            out_lines.append(lines[i])
-            i += 1
-            continue
-        cols = (
-            [_unquote(c) for c in m.group(2).split(",")]
-            if m.group(2) else None
-        )
-        data: list[str] = []
-        i += 1
-        while i < len(lines) and lines[i].strip() != "\\.":
-            data.append(lines[i])
-            i += 1
-        i += 1  # skip the \. terminator
-        blocks.append((_unquote(m.group(1)), cols, data))
-    return "\n".join(out_lines), blocks
+def _mysql_string(token: str) -> str:
+    """A quoted MySQL literal token -> its text."""
+    return _MYSQL_ESCAPE_RE[token[0]].sub(
+        lambda m: _MYSQL_ESCAPES.get(m[0], m[0][1]), token[1:-1]
+    )
 
 
-# pg COPY text-format escapes (tab-separated, \N = NULL).
-_COPY_ESCAPES = {"\\t": "\t", "\\n": "\n", "\\r": "\r", "\\\\": "\\"}
-
-
-def _parse_copy_value(raw: str, dtype: T.DataType):
-    if raw == "\\N":
-        return None
-    for esc, ch in _COPY_ESCAPES.items():
-        raw = raw.replace(esc, ch)
-    if isinstance(dtype, T.LongType):
-        return int(raw)
-    if isinstance(dtype, T.DoubleType):
-        return float(raw)
-    if isinstance(dtype, T.BooleanType):
-        return raw.lower() in ("t", "true", "1")
-    if isinstance(dtype, T.DateType):
-        return _dt.date.fromisoformat(raw)
-    if isinstance(dtype, T.TimestampType):
-        return _parse_timestamp(raw)
-    return raw
+def _copy_text(field: str) -> str:
+    return _COPY_ESCAPE_RE.sub(
+        lambda m: _COPY_ESCAPES.get(m[1], m[1]), field
+    )
 
 
 def _parse_timestamp(raw: str) -> _dt.datetime:
@@ -159,81 +154,89 @@ def _parse_timestamp(raw: str) -> _dt.datetime:
     return ts
 
 
-def _split_statements(text: str) -> list[str]:
-    """Split on top-level ';' (quote-aware); drop comments and psql
-    meta-command lines."""
-    lines = []
+# Text -> value per Spark type of _TYPE_MAP (StringType keeps the text).
+_PARSERS = {
+    T.LongType(): int,
+    T.DoubleType(): float,
+    T.BooleanType(): lambda v: v.lower() in ("1", "true", "t"),
+    T.DateType(): _dt.date.fromisoformat,
+    T.TimestampType(): _parse_timestamp,
+    T.StringType(): str,
+}
+
+
+def _mysql_converter(parse):
+    """An INSERT literal token (quoted, NULL or bare) -> value."""
+    def convert(token: str):
+        if token[0] in "'\"":
+            return parse(_mysql_string(token))
+        return None if token.upper() == "NULL" else parse(token)
+    return convert
+
+
+def _copy_converter(parse):
+    """A COPY text field -> value."""
+    def convert(field: str):
+        if field == "\\N":
+            return None
+        return parse(_copy_text(field) if "\\" in field else field)
+    return convert
+
+
+# A COPY block: (table, column list text or None, data lines).
+_CopyBlock = tuple[str, str | None, list[str]]
+
+
+def _scan(text: str) -> tuple[list[str], list[_CopyBlock]]:
+    """One pass over the dump's lines, then one statement split.
+
+    `--` comment lines and psql meta-commands (`\\c` ...) are dropped.
+    pg_dump `COPY t (cols) FROM stdin; ... \\.` blocks are lifted out
+    whole: their data is newline-framed, not ';'-terminated, and a data
+    line may hold anything. Returns the statements and the blocks."""
+    kept: list[str] = []
+    blocks: list[_CopyBlock] = []
+    data: list[str] | None = None
     for line in text.splitlines():
         stripped = line.strip()
-        if stripped.startswith("--") or stripped.startswith("\\"):
+        if data is not None:
+            if stripped == "\\.":
+                data = None
+            else:
+                data.append(line)
+        elif stripped.startswith(("--", "\\")):
             continue
-        lines.append(line)
-    text = "\n".join(lines)
-    stmts, buf, quote = [], [], None
-    i, n = 0, len(text)
-    while i < n:
-        ch = text[i]
-        if quote:
-            # mysqldump escapes quotes/backslashes with a backslash inside
-            # string literals; the escaped char must not close the quote.
-            if ch == "\\" and i + 1 < n:
-                buf.append(ch)
-                buf.append(text[i + 1])
-                i += 2
-                continue
-            buf.append(ch)
-            if ch == quote:
-                quote = None
-        elif ch in ("'", '"'):
-            quote = ch
-            buf.append(ch)
-        elif ch == ";":
-            stmt = "".join(buf).strip()
-            if stmt:
-                stmts.append(stmt)
-            buf = []
+        elif m := _COPY_RE.match(stripped):
+            data = []
+            blocks.append((_unquote(m.group(1)), m.group(2), data))
         else:
-            buf.append(ch)
-        i += 1
-    tail = "".join(buf).strip()
-    if tail:
-        stmts.append(tail)
-    return stmts
+            kept.append(line)
+    statements = [
+        s.strip() for s in _STATEMENT_RE.findall("\n".join(kept))
+    ]
+    return [s for s in statements if s], blocks
 
 
-def _split_top_level(s: str, sep: str = ",") -> list[str]:
-    """Split on sep outside parens/quotes (backslash-escape aware, like
-    `_split_statements`)."""
-    parts, buf, depth, quote = [], [], 0, None
-    i, n = 0, len(s)
-    while i < n:
-        ch = s[i]
-        if quote:
-            if ch == "\\" and i + 1 < n:
-                buf.append(ch)
-                buf.append(s[i + 1])
-                i += 2
-                continue
-            buf.append(ch)
-            if ch == quote:
-                quote = None
-        elif ch in ("'", '"'):
-            quote = ch
-            buf.append(ch)
-        elif ch == "(":
-            depth += 1
-            buf.append(ch)
-        elif ch == ")":
-            depth -= 1
-            buf.append(ch)
-        elif ch == sep and depth == 0:
+def _split_statements(text: str) -> list[str]:
+    """Split on top-level ';' (quote-aware); drop comments, psql
+    meta-command lines and COPY data blocks."""
+    return _scan(text)[0]
+
+
+def _split_top_level(s: str) -> list[str]:
+    """Split on ',' outside parens and quoted strings."""
+    parts, buf, depth = [], [], 0
+    for token in _TOP_LEVEL_TOKEN_RE.findall(s):
+        if token == "," and depth == 0:
             parts.append("".join(buf).strip())
             buf = []
-        else:
-            buf.append(ch)
-        i += 1
-    if buf:
-        parts.append("".join(buf).strip())
+            continue
+        if token == "(":
+            depth += 1
+        elif token == ")":
+            depth -= 1
+        buf.append(token)
+    parts.append("".join(buf).strip())
     return [p for p in parts if p]
 
 
@@ -250,6 +253,25 @@ class _TableDef:
         return T.StructType(
             [T.StructField(n, dt, True) for n, dt in self.fields]
         )
+
+    def row_builder(self, columns: str | None, converter):
+        """Values in `columns` order (a dump's column list text; None is
+        field order) -> a row in field order. Each column's converter is
+        chosen here from its Spark type, not per value."""
+        types = dict(self.fields)
+        position = {n: i for i, (n, _) in enumerate(self.fields)}
+        names = ([_unquote(c) for c in columns.split(",")] if columns
+                 else [n for n, _ in self.fields])
+        slots = [(position[n], converter(_PARSERS[types[n]]))
+                 for n in names]
+        width = len(self.fields)
+
+        def build(values: list[str]) -> list:
+            row = [None] * width
+            for (i, convert), value in zip(slots, values):
+                row[i] = convert(value)
+            return row
+        return build
 
 
 def _parse_create(stmt: str) -> _TableDef | None:
@@ -290,26 +312,6 @@ def _parse_create(stmt: str) -> _TableDef | None:
     return table
 
 
-def _parse_literal(raw: str, dtype: T.DataType):
-    v = raw.strip()
-    if v.upper() == "NULL":
-        return None
-    if v.startswith("'") and v.endswith("'"):
-        v = (v[1:-1].replace("''", "'").replace("\\'", "'")
-             .replace("\\\\", "\\"))
-    if isinstance(dtype, T.LongType):
-        return int(v)
-    if isinstance(dtype, T.DoubleType):
-        return float(v)
-    if isinstance(dtype, T.BooleanType):
-        return v.strip("'").lower() in ("1", "true", "t")
-    if isinstance(dtype, T.DateType):
-        return _dt.date.fromisoformat(v)
-    if isinstance(dtype, T.TimestampType):
-        return _parse_timestamp(v)
-    return v
-
-
 def _parse_dump(
     sql_text: str, default_db: str
 ) -> tuple[str, dict[str, _TableDef]]:
@@ -317,8 +319,8 @@ def _parse_dump(
     all on the driver in plain Python."""
     db_name = default_db
     defs: dict[str, _TableDef] = {}
-    sql_text, copy_blocks = _extract_copy_blocks(sql_text)
-    for stmt in _split_statements(sql_text):
+    statements, copy_blocks = _scan(sql_text)
+    for stmt in statements:
         if _DISCARD_RE.match(stmt):
             continue
         use = _USE_RE.match(stmt)
@@ -330,40 +332,21 @@ def _parse_dump(
             defs[created.name] = created
             continue
         ins = _INSERT_RE.match(stmt)
-        if ins:
-            tname = _unquote(ins.group(1))
-            tdef = defs.get(tname)
-            if tdef is None:
-                continue
-            col_names = [f[0] for f in tdef.fields]
-            if ins.group(2):
-                col_names = [_unquote(c) for c in ins.group(2).split(",")]
-            types = dict(tdef.fields)
-            for tup in _split_top_level(ins.group(3)):
-                if not (tup.startswith("(") and tup.endswith(")")):
-                    continue
-                values = _split_top_level(tup[1:-1])
-                row = {
-                    col: _parse_literal(v, types[col])
-                    for col, v in zip(col_names, values)
-                }
-                tdef.rows.append(
-                    [row.get(f[0]) for f in tdef.fields]
-                )
-
-    for tname, cols, data_lines in copy_blocks:
+        tdef = ins and defs.get(_unquote(ins.group(1)))
+        if tdef:
+            build = tdef.row_builder(ins.group(2), _mysql_converter)
+            values: list[str] = []
+            for literal, close in _VALUES_TOKEN_RE.findall(ins.group(3)):
+                if close:
+                    tdef.rows.append(build(values))
+                    values = []
+                else:
+                    values.append(literal)
+    for tname, columns, lines in copy_blocks:
         tdef = defs.get(tname)
-        if tdef is None:
-            continue
-        col_names = cols or [f[0] for f in tdef.fields]
-        types = dict(tdef.fields)
-        for line in data_lines:
-            values = line.split("\t")
-            row = {
-                col: _parse_copy_value(v, types[col])
-                for col, v in zip(col_names, values)
-            }
-            tdef.rows.append([row.get(f[0]) for f in tdef.fields])
+        if tdef:
+            build = tdef.row_builder(columns, _copy_converter)
+            tdef.rows.extend(build(line.split("\t")) for line in lines)
     return db_name, defs
 
 

@@ -108,11 +108,11 @@ def statements(log_content: str, dialect: str = "mysql") -> list[str]:
     return out
 
 
-def table_refs(stmts: list[str], dialect: str = "mysql") -> list[tuple[str, str, str]]:
+def table_refs(stmts: list[str]) -> list[tuple[str, str, str]]:
     """`fn_sql_tablelist` -> `fn_split_tableref`: (op, db, table) for each
     distinct ref of each statement (reference server/LogManager.js:53-82)."""
     return [tuple(ref.split("::")[:3])
-            for stmt in stmts for ref in extract_table_refs(stmt, dialect)]
+            for stmt in stmts for ref in extract_table_refs(stmt)]
 
 
 def access_counts(log_content: str, dialect: str = "mysql") -> dict[str, tuple[int, int]]:
@@ -120,7 +120,7 @@ def access_counts(log_content: str, dialect: str = "mysql") -> dict[str, tuple[i
     table -> (accesses, writes) over the DML refs of the log."""
     accesses: Counter[str] = Counter()
     writes: Counter[str] = Counter()
-    for op, _db, table in table_refs(statements(log_content, dialect), dialect):
+    for op, _db, table in table_refs(statements(log_content, dialect)):
         if op in DML_OPS:
             accesses[table] += 1
             writes[table] += op != "select"

@@ -7,8 +7,9 @@
   partial-aggregate map-side before the exchange.
 """
 
-import io
 import contextlib
+import io
+import re
 
 import __spark_entry__ as entrymod
 
@@ -78,19 +79,22 @@ def test_basket_pairs_packs_pair_key(spark):
 def test_dedup_containment_expands_pairs_in_bucket(spark):
     # r13 (guide §2.4): the capped posting SELF-JOIN on the shingle key
     # was replaced by in-bucket ordered-pair expansion (collect_list per
-    # shingle + in-array ordered-pair explode). The initial-plan print
-    # duplicates the shared `rare` subtree per consumer (overlap + two
-    # sizes sides), so SMJ occurrences are 5 here: 3 df-cap-join copies
-    # + the doc_a and doc_b sizes joins. The superseded self-join shape
-    # printed 7 (the self-join plus two MORE df-cap-join copies under
-    # its pa/pb sides); its defining nodes are asserted absent via the
-    # in-array markers below.
+    # shingle + in-array ordered-pair explode). The plan print copies the
+    # shared `rare` subtree once per consumer, so the SMJ count is a
+    # bound, not an exact figure: 5 today (3 df-cap-join copies + the
+    # doc_a and doc_b sizes joins); the superseded self-join shape
+    # printed 7.
     plan = _plan(spark, "ext_dedup_containment")
-    assert plan.count("SortMergeJoin") == 5, plan
+    assert plan.count("SortMergeJoin") <= 5, plan
     assert "collect_list" in plan, plan
     # the pair expansion happens in-array (one Generate over the bucket
     # arrays), feeding the pair-count aggregation in-stage.
     assert "flatten(transform(ids" in plan, plan
+    # No shingle-keyed self-join: the s-keyed joins are the df-cap joins,
+    # which carry no pair condition (the self-join printed
+    # `SortMergeJoin [s#..], [s#..], Inner, (doc_a#.. < doc_b#..)`).
+    s_joins = re.findall(r"SortMergeJoin \[s#\d+\], \[s#\d+\].*", plan)
+    assert s_joins and not any("doc_" in j for j in s_joins), plan
 
 
 def test_fuzzy_join_spread_is_name_keyed(spark):

@@ -209,6 +209,40 @@ CREATE TABLE empty_t (a INT, b VARCHAR(5), c TIMESTAMP, e BOOLEAN);
 """
 
 
+# mysqldump escapes, as the MySQL server reads them: \% and \_ stay two
+# characters, an unknown escape drops its backslash.
+MYSQL_ESCAPE_DUMP = r"""CREATE TABLE esc (id INT PRIMARY KEY, s VARCHAR(60));
+INSERT INTO esc VALUES (1, 'a\nb\tc'), (2, 'say \"hi\"'), (3, 'nul\0 sub\Z'),
+  (4, 'back\\slash \'q\' ''d'''), (5, '50\% off'), (6, '\q');
+"""
+
+# pg COPY text escapes: `\t` is a TAB, `\\t` a backslash then t, and `\\N`
+# the two characters \N where a bare `\N` is NULL.
+PG_ESCAPE_DUMP = r"""CREATE TABLE esc (id INT PRIMARY KEY, s VARCHAR(60), t VARCHAR(60));
+COPY esc (id, s, t) FROM stdin;
+1|a\tb|c\\td
+2|\\N|\N
+\.
+""".replace("|", "\t")
+
+
+def test_escapes_decode_as_the_server_reads_them(spark):
+    mysql = import_sql_dump(spark, MYSQL_ESCAPE_DUMP)[1]["esc"]
+    assert {r["id"]: r["s"] for r in mysql.collect()} == {
+        1: "a\nb\tc",
+        2: 'say "hi"',
+        3: "nul\x00 sub\x1a",
+        4: "back\\slash 'q' 'd'",
+        5: "50\\% off",
+        6: "q",
+    }
+    pg = import_sql_dump(spark, PG_ESCAPE_DUMP)[1]["esc"]
+    assert {r["id"]: (r["s"], r["t"]) for r in pg.collect()} == {
+        1: ("a\tb", "c\\td"),
+        2: ("\\N", None),
+    }
+
+
 def _dump_cases():
     import os
     import sys
@@ -223,6 +257,8 @@ def _dump_cases():
         "pg_copy": PG_COPY_DUMP,
         "perfbench_seed7": gen.mysqldump(7, 0.001)[0],
         "edge": EDGE_DUMP,
+        "mysql_escapes": MYSQL_ESCAPE_DUMP,
+        "pg_escapes": PG_ESCAPE_DUMP,
     }
 
 

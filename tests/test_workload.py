@@ -54,7 +54,7 @@ def spark_statements(spark, log: str, dialect: str) -> list[str]:
 
 
 def spark_access_counts(spark, stmts: list[str], dialect: str) -> dict:
-    refs = [(ref,) for s in stmts for ref in extract_table_refs(s, dialect)]
+    refs = [(ref,) for s in stmts for ref in extract_table_refs(s)]
     parts = F.split("ref", "::")
     counted = (
         spark.createDataFrame(refs, "ref string")
