@@ -7,7 +7,7 @@ row-at-a-time N+1 loops.
 Layout:
   plans/      - catalog (IR#1), schema-conversion planner (IR#2), nesting
                 materializer (plan -> join/collect_list DAG)
-  sources/    - parquet/jdbc/log-text readers
+  sources/    - parquet/SQL-dump readers
   sinks/      - JSON collection writer (one file per collection + zip)
   functions/  - scalar functions (date normalize, SQL table-ref extraction)
   operators/  - relational operator builders + large-scale extension ops

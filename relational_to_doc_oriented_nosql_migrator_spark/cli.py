@@ -77,12 +77,12 @@ def main(argv: list[str] | None = None) -> int:
     spark = get_spark(app_name="rdnm-cli", master=args.master)
     log_content = None
     if args.log:
-        with open(args.log) as fh:
+        with open(args.log, encoding="utf-8", errors="replace") as fh:
             log_content = fh.read()
 
     streamed = {}
     if args.dump:
-        with open(args.dump) as fh:
+        with open(args.dump, encoding="utf-8", errors="replace") as fh:
             collections = migrate_from_dump(
                 spark,
                 fh.read(),

@@ -178,78 +178,3 @@ def migrate_from_dump(
     if return_plan:
         return collections, catalog, plan
     return collections
-
-
-def migrate_from_jdbc(
-    spark: SparkSession,
-    url: str,
-    schema: str | None = None,
-    num_partitions: int = 8,
-    log_content: str | None = None,
-    log_dialect: str = "mysql",
-    normalize_dates: bool = True,
-) -> dict[str, DataFrame]:
-    """Live-database migration: JDBC metadata introspection -> planner ->
-    partitioned JDBC table reads -> nested collections (the reference's
-    primary path, reference server/MySQLDBManager.js:254-282, re-expressed
-    as Spark JDBC sources).
-
-    Data reads are range-split on the table's single integer PK when one
-    exists (bounds via a MIN/MAX pushdown — each executor then issues a
-    bounded range query); tables without a splittable key fall back to a
-    single-partition read, which is correct and only a throughput concern
-    for metadata-scale tables.
-    """
-    from relational_to_doc_oriented_nosql_migrator_spark.sources.introspect import (
-        metadata_catalog,
-    )
-    from relational_to_doc_oriented_nosql_migrator_spark.sources.jdbc import (
-        quote_ident,
-        read_partitioned,
-    )
-
-    catalog = metadata_catalog(spark, url, schema)
-    tables: dict[str, DataFrame] = {}
-    for t in catalog.tables.values():
-        df = None
-        if len(t.primary_keys) == 1:
-            pk = t.primary_keys[0]
-            bounds = (
-                spark.read.format("jdbc")
-                .option("url", url)
-                .option(
-                    "dbtable",
-                    f"(SELECT MIN({quote_ident(pk, url)}) AS lo,"
-                    f" MAX({quote_ident(pk, url)}) AS hi"
-                    f" FROM {quote_ident(t.name, url)}) AS b",
-                )
-                .load()
-                .first()
-            )
-            # positional access: identifier case-folding differs per
-            # database (Derby uppercases the lo/hi aliases)
-            if (
-                bounds is not None
-                and isinstance(bounds[0], int)
-                and isinstance(bounds[1], int)
-                and bounds[1] > bounds[0]
-            ):
-                df = read_partitioned(
-                    spark, url, t.name, column=pk,
-                    lower=bounds[0], upper=bounds[1] + 1,
-                    num_partitions=num_partitions,
-                )
-        if df is None:
-            # Quoted like the bounds probe above: an unquoted reserved-
-            # word or mixed-case table name would introspect fine and
-            # then break (or case-fold to a different relation) here.
-            df = (
-                spark.read.format("jdbc")
-                .option("url", url)
-                .option("dbtable", quote_ident(t.name, url))
-                .load()
-            )
-        tables[t.name] = df
-    _plan, collections = _plan_and_materialize(
-        tables, catalog, log_content, log_dialect, normalize_dates)
-    return collections

@@ -235,13 +235,7 @@ def materialize_streamed_root(
     missing = set(child_names) - {e.name for e in root.embedded}
     if missing:
         raise ValueError(f"{root_name} has no embedded child {missing}")
-    meta = catalog.get_table(root.name)
-    df = tables[root.name]
-    if normalize_dates:
-        df = normalize_date_columns(df)
-    attrs = _dedupe(root.attributes)
-    df = _root_projection(df, attrs, meta.columns)
-    df = df.na.drop(how="all", subset=attrs)
+    df, attrs = _root_frame(tables, catalog, root, normalize_dates)
     heavy_set = {e.name for e in heavies}
     for emb in root.embedded:
         if emb.name in heavy_set:
@@ -358,13 +352,18 @@ def normalize_date_columns(df: DataFrame) -> DataFrame:
     268-276,314-319). We scope by column *type* instead: the sniffing is an
     artifact of the untyped driver rows, not a feature (SURVEY §1.1).
     """
-    out = df
-    for f_ in df.schema.fields:
+    dates = {
+        f_.name for f_ in df.schema.fields
         if isinstance(
             f_.dataType, (T.TimestampType, T.TimestampNTZType, T.DateType)
-        ):
-            out = out.withColumn(f_.name, date_normalize(F.col(f_.name)))
-    return out
+        )
+    }
+    if not dates:
+        return df
+    return df.select(*[
+        date_normalize(F.col(c)).alias(c) if c in dates else F.col(c)
+        for c in df.columns
+    ])
 
 
 def _dedupe(names: list[str]) -> list[str]:
@@ -547,18 +546,29 @@ def _attach_embedded(
     return out
 
 
-def _root_projection(
-    df: DataFrame, attributes: list[str], table_columns: list[str]
-) -> DataFrame:
-    """Root attribute mapping: attr matches a column by name or by
-    name+'_REF' (reference server/DBMigration.js:441-447)."""
+def _root_frame(
+    tables: dict[str, DataFrame],
+    catalog: Catalog,
+    root: Collection,
+    normalize_dates: bool,
+) -> tuple[DataFrame, list[str]]:
+    """A root collection's own document fields, before any child is
+    attached, and its deduplicated attribute list. An attribute matches a
+    column by name or by name+'_REF' (reference server/DBMigration.js:
+    441-447); `filter_nonempty_doc` drops documents where no attribute
+    matched (reference server/DBMigration.js:473,481,491)."""
+    df = tables[root.name]
+    if normalize_dates:
+        df = normalize_date_columns(df)
+    attrs = _dedupe(root.attributes)
+    table_columns = catalog.get_table(root.name).columns
     cols = []
-    for attr in attributes:
+    for attr in attrs:
         if attr in table_columns:
             cols.append(F.col(attr))
         elif attr.endswith("_REF") and attr[:-4] in table_columns:
             cols.append(F.col(attr[:-4]).alias(attr))
-    return df.select(*cols)
+    return df.select(*cols).na.drop(how="all", subset=attrs), attrs
 
 
 def materialize(
@@ -570,15 +580,7 @@ def materialize(
     """Materialize every root collection of the plan as a nested DataFrame."""
     out: dict[str, DataFrame] = {}
     for root in plan.collections:
-        meta = catalog.get_table(root.name)
-        df = tables[root.name]
-        if normalize_dates:
-            df = normalize_date_columns(df)
-        attrs = _dedupe(root.attributes)
-        df = _root_projection(df, attrs, meta.columns)
-        # `filter_nonempty_doc`: documents where no attribute matched are
-        # dropped (reference server/DBMigration.js:473,481,491).
-        df = df.na.drop(how="all", subset=attrs)
+        df, _attrs = _root_frame(tables, catalog, root, normalize_dates)
         for emb in root.embedded:
             df = _attach_embedded(tables, catalog, df, root.name, emb,
                                   normalize_dates)

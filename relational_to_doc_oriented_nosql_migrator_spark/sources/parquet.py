@@ -153,10 +153,3 @@ def load_tables(
         }
         return {name: f.result() for name, f in futures.items()}
 
-
-def register_views(
-    spark: SparkSession, sf_dir: str, names: tuple[str, ...] = ALL_TABLES
-) -> None:
-    """Register each table as a temp view for spark.sql access."""
-    for name in names:
-        load_table(spark, sf_dir, name).createOrReplaceTempView(name)

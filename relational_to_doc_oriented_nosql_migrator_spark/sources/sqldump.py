@@ -20,7 +20,7 @@ and pg_dump emit, plus pg_dump's `COPY ... FROM stdin` data blocks. Values
 decode the way the server that would load the dump reads them: MySQL
 backslash escapes in INSERT literals, pg text-format escapes in COPY data.
 Dumps are metadata-plus-literals scale; genuinely large fact data arrives
-via parquet/JDBC, so driver-side parsing here mirrors where the reference
+via parquet, so driver-side parsing here mirrors where the reference
 itself is driver-bound.
 """
 

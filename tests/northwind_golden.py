@@ -17,7 +17,15 @@ normalize_dates=False, so strings round-trip byte-identically.
 from __future__ import annotations
 
 import json
+import os
 import zipfile
+
+from relational_to_doc_oriented_nosql_migrator_spark.plans import (
+    northwind_catalog,
+)
+from relational_to_doc_oriented_nosql_migrator_spark.sinks import (
+    write_json_collections,
+)
 
 GOLDEN_ZIP = "/root/reference/server/results/collections.zip"
 
@@ -193,3 +201,112 @@ def normalize_doc(v):
     if isinstance(v, (int, float)):
         return round(float(v), 6)
     return v
+
+
+# Parents before children so FK targets exist at CREATE time.
+TOPO_ORDER = [
+    "category", "supplier", "region", "shipper", "customer", "employee",
+    "product", "territory", "salesorder", "employeeterritory",
+    "orderdetail",
+]
+
+_SQL_TYPES = {"int": "INT", "double": "DOUBLE"}
+
+
+def _sql_type(col: str, typ: str, key_cols: set) -> str:
+    if typ in _SQL_TYPES:
+        return _SQL_TYPES[typ]
+    # MySQL cannot index TEXT without a prefix length: key-participating
+    # strings become VARCHAR; free text (notes/description/picture) TEXT.
+    return "VARCHAR(64)" if col in key_cols else "TEXT"
+
+
+def _esc(v) -> str:
+    if v is None:
+        return "NULL"
+    if isinstance(v, bool):
+        return "1" if v else "0"
+    if isinstance(v, (int, float)):
+        return repr(v)
+    s = str(v)
+    return "'" + s.replace("\\", "\\\\").replace("'", "\\'") + "'"
+
+
+def _ident(name: str) -> str:
+    return "`" + name + "`"
+
+
+def northwind_statements() -> list:
+    """MySQL CREATE/INSERT statements (no trailing ';') for the
+    reconstructed Northwind fixture, in FK-topological order, with
+    table-level FOREIGN KEY clauses and mysqldump-style \\' escaping."""
+    base = invert_golden(load_golden())
+    catalog = northwind_catalog({k: len(v) for k, v in base.items()})
+    stmts = []
+    for name in TOPO_ORDER:
+        meta = catalog.get_table(name)
+        key_cols = set(meta.primary_keys) | {
+            fk.column for fk in meta.foreign_keys
+        }
+        for t in catalog.tables.values():
+            key_cols |= {
+                fk.referenced_column
+                for fk in t.foreign_keys
+                if fk.referenced_table == name
+            }
+        fields = [c.strip().split(" ") for c in SCHEMAS[name].split(",")]
+        cols = [
+            f"{_ident(col)} {_sql_type(col, typ, key_cols)}"
+            for col, typ in fields
+        ]
+        cons = [
+            "PRIMARY KEY (" + ", ".join(
+                _ident(c) for c in meta.primary_keys
+            ) + ")"
+        ]
+        cons += [
+            f"CONSTRAINT fk_{name}_{fk.column} FOREIGN KEY"
+            f" ({_ident(fk.column)}) REFERENCES"
+            f" {_ident(fk.referenced_table)} ({_ident(fk.referenced_column)})"
+            for fk in meta.foreign_keys
+        ]
+        stmts.append(
+            f"CREATE TABLE {_ident(name)} (\n  "
+            + ",\n  ".join(cols + cons)
+            + "\n)"
+        )
+        col_names = [f[0] for f in fields]
+        rows = base[name]
+        for i in range(0, len(rows), 200):
+            values = ",\n".join(
+                "(" + ", ".join(_esc(r.get(c)) for c in col_names) + ")"
+                for r in rows[i:i + 200]
+            )
+            stmts.append(
+                f"INSERT INTO {_ident(name)} ("
+                + ", ".join(_ident(c) for c in col_names)
+                + f") VALUES\n{values}"
+            )
+    return stmts
+
+
+def northwind_dump() -> str:
+    """MySQL dump text of the reconstructed Northwind fixture (what
+    sources/sqldump.py parses)."""
+    return "\n".join(s + ";" for s in northwind_statements())
+
+
+def collections_to_docs(collections, out_dir) -> dict:
+    """Materialize through the real JSON sink and read the docs back —
+    the same byte path a user of `POST /migration` receives."""
+    written = write_json_collections(
+        collections, out_dir, single_file=True
+    )
+    out = {}
+    for name in written:
+        with open(os.path.join(out_dir, f"{name}.json")) as fh:
+            out[name.lower()] = sorted(
+                (normalize_doc(d) for d in json.load(fh)),
+                key=lambda d: json.dumps(d, sort_keys=True, default=str),
+            )
+    return out

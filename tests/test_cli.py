@@ -52,6 +52,25 @@ def test_cli_dump_to_json_dir(spark, tmp_path):
     assert len(docs) == 3 and any(d.get("employee") for d in docs)
 
 
+def test_cli_latin1_dump_decodes_like_the_service(spark, tmp_path):
+    # A latin-1 mysqldump is not valid UTF-8; the CLI decodes it the way
+    # POST /migration does (undecodable bytes replaced) instead of failing.
+    from relational_to_doc_oriented_nosql_migrator_spark import cli
+
+    dump = tmp_path / "latin1.sql"
+    dump.write_bytes(
+        b"CREATE TABLE cafe (id INT PRIMARY KEY, name VARCHAR(20));\n"
+        b"INSERT INTO cafe VALUES (1,'Caf\xe9');\n"
+    )
+    out_dir = tmp_path / "out"
+    rc = cli.main(
+        ["--dump", str(dump), "--out", str(out_dir), "--single-file"]
+    )
+    assert rc == 0
+    docs = json.loads((out_dir / "cafe.json").read_text(encoding="utf-8"))
+    assert [d["name"] for d in docs] == [b"Caf\xe9".decode("utf-8", "replace")]
+
+
 def test_cli_parquet_tables_to_json_dir(spark, tmp_path):
     from relational_to_doc_oriented_nosql_migrator_spark import cli
     from tests.conftest import SF0001
