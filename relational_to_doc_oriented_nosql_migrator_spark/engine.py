@@ -118,7 +118,6 @@ def migrate_streamed(
     log_content: str | None = None,
     log_dialect: str = "mysql",
     normalize_dates: bool = True,
-    threshold: int | None = None,
 ):
     """migrate() plus the per-root streamed-assembly pieces for HEAVY
     roots (plans/nesting.stream_plan — tiny root cardinality over a
@@ -128,7 +127,6 @@ def migrate_streamed(
     roots the sink uses them only for their schema, never executing the
     root-document materialization."""
     from relational_to_doc_oriented_nosql_migrator_spark.plans.nesting import (
-        HEAVY_ROOT_SUBTREE_ROWS,
         materialize_streamed_root,
         stream_plan,
     )
@@ -136,15 +134,12 @@ def migrate_streamed(
     catalog, tables, plan, collections = _pipeline(
         spark, sf_dir, log_content, log_dialect, normalize_dates
     )
-    thr = HEAVY_ROOT_SUBTREE_ROWS if threshold is None else threshold
     streamed = {
         root_name: materialize_streamed_root(
             tables, catalog, plan, root_name, child_names,
-            normalize_dates=normalize_dates, threshold=thr,
+            normalize_dates=normalize_dates,
         )
-        for root_name, child_names in stream_plan(
-            catalog, plan, threshold=thr,
-        ).items()
+        for root_name, child_names in stream_plan(catalog, plan).items()
     }
     return collections, streamed
 

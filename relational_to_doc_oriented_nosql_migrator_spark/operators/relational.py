@@ -721,9 +721,11 @@ def q_sink_json_collections(spark, sf_dir):
     root set is pinned by the plan golden, operators/plan_golden.json).
     Heavy roots (subtree past nesting.HEAVY_ROOT_SUBTREE_ROWS — the sf10
     probe corpus, never the driver/bench scales) assemble per-root in
-    file space via migrate_streamed, removing the single-row root-
-    document heap floor (r08 verdict #2). The sf10 knee measurement of
-    that threshold is in git history at a6e084f."""
+    file space via migrate_streamed, one part file per root, removing
+    the single-row root-document heap floor (r08 verdict #2): under a
+    1 GB heap the row path OOMs on 30x the sf0.1 tables where the
+    streamed path completes. The sf10 knee measurement of that
+    threshold is in git history at a6e084f."""
     import shutil
 
     from relational_to_doc_oriented_nosql_migrator_spark.engine import (

@@ -91,6 +91,11 @@ TARGET_NEST_ROWS_PER_TASK = 200_000
 # sorter-page copies were humongous G1 allocations — a 4 GB heap OOMed
 # in the fragment sort) down to a ~KB customer document; the floor
 # stops scaling with the corpus entirely.
+#
+# Measured under a 1 GB driver heap on 10x and 30x copies of the sf0.1
+# tables: both paths complete at 10x with equal output, and at 30x the
+# row path dies with OutOfMemoryError while the streamed one completes.
+# The stream planners read this constant at call time (tests patch it).
 HEAVY_ROOT_SUBTREE_ROWS = 5_000_000
 
 
@@ -142,15 +147,13 @@ class StreamedRoot:
     children: list[StreamedLevel]
 
 
-def stream_plan(
-    catalog: Catalog,
-    plan: NoSQLPlan,
-    threshold: int = HEAVY_ROOT_SUBTREE_ROWS,
-) -> dict[str, list[str]]:
-    """root collection name -> ALL embedded children past the subtree
-    threshold (plan order), for roots whose tiny cardinality makes
-    single-row documents a heap hazard (see HEAVY_ROOT_SUBTREE_ROWS).
-    Catalog-metadata only — no Spark job."""
+def stream_plan(catalog: Catalog, plan: NoSQLPlan) -> dict[str, list[str]]:
+    """root collection name -> ALL embedded children whose subtree has
+    at least HEAVY_ROOT_SUBTREE_ROWS rows (plan order), for roots whose
+    tiny cardinality (at most SMALL_PARENT_ROWS catalog rows) makes
+    single-row documents a heap hazard. The cardinality gate also bounds
+    the sink's streamed write at SMALL_PARENT_ROWS part files, one root
+    each. Catalog-metadata only — no Spark job."""
     out: dict[str, list[str]] = {}
     for root in plan.collections:
         if not root.embedded:
@@ -160,7 +163,7 @@ def stream_plan(
             continue
         heavy = [
             e.name for e in root.embedded
-            if _subtree_rows(catalog, e) >= threshold
+            if _subtree_rows(catalog, e) >= HEAVY_ROOT_SUBTREE_ROWS
         ]
         if heavy:
             out[root.name] = heavy
@@ -216,7 +219,6 @@ def materialize_streamed_root(
     root_name: str,
     child_names: list[str] | str,
     normalize_dates: bool = True,
-    threshold: int = HEAVY_ROOT_SUBTREE_ROWS,
 ) -> StreamedRoot:
     """Build the streamed-assembly pieces for one heavy root: the root
     frame WITHOUT the heavy children (all other children attached as
@@ -264,8 +266,7 @@ def materialize_streamed_root(
         )
     roots = df.select(*cols)
     children = [
-        _streamed_level(tables, catalog, e, root_name, normalize_dates,
-                        threshold)
+        _streamed_level(tables, catalog, e, root_name, normalize_dates)
         for e in heavies
     ]
     return StreamedRoot(roots=roots, children=children)
@@ -277,7 +278,6 @@ def _streamed_level(
     emb: Collection,
     parent_table: str,
     normalize_dates: bool,
-    threshold: int,
 ) -> StreamedLevel:
     """One heavy embedded collection as a streamed level. Recurses while
     the level's own documents are still heap hazards: >= 1 embedded
@@ -295,7 +295,7 @@ def _streamed_level(
     my_rows = catalog.get_table(emb.name).num_rows or 0
     heavy = [
         n for n in emb.embedded
-        if _subtree_rows(catalog, n) >= threshold
+        if _subtree_rows(catalog, n) >= HEAVY_ROOT_SUBTREE_ROWS
     ]
     if not heavy or not 0 < my_rows <= SMALL_PARENT_ROWS:
         df, fields, fk_col = _prepare_child(
@@ -336,8 +336,7 @@ def _streamed_level(
         name=emb.name,
         fragments=fragments,
         children=[
-            _streamed_level(tables, catalog, n, emb.name,
-                            normalize_dates, threshold)
+            _streamed_level(tables, catalog, n, emb.name, normalize_dates)
             for n in heavy
         ],
     )

@@ -48,6 +48,44 @@ def test_single_file_parity_mode_and_zip(spark, tmp_path):
     assert "collections.zip" not in names
 
 
+def test_single_file_empty_rerun_removes_old_file(spark, tmp_path):
+    """A rerun in which a collection is empty leaves nothing of the
+    earlier run's file, on disk or in the zip."""
+    out = str(tmp_path / "out")
+    cols = _collections(spark)
+    assert write_json_collections(
+        {"c": cols["full"]}, out, single_file=True
+    ) == ["c"]
+    assert os.path.exists(os.path.join(out, "c.json"))
+    zip_path = str(tmp_path / "collections.zip")
+    assert write_json_collections(
+        {"c": cols["empty"]}, out, single_file=True, zip_path=zip_path
+    ) == []
+    assert os.listdir(out) == []
+    with zipfile.ZipFile(zip_path) as zf:
+        assert zf.namelist() == []
+
+
+def test_ndjson_zip_holds_only_collection_files(spark, tmp_path):
+    """The NDJSON-mode zip archives the part files, not the Hadoop
+    writer's .crc checksums or _SUCCESS marker (which stay on disk)."""
+    out = str(tmp_path / "out")
+    zip_path = str(tmp_path / "collections.zip")
+    assert write_json_collections(
+        _collections(spark), out, zip_path=zip_path
+    ) == ["full"]
+    on_disk = os.listdir(os.path.join(out, "full"))
+    assert "_SUCCESS" in on_disk
+    assert any(f.endswith(".crc") for f in on_disk)
+    with zipfile.ZipFile(zip_path) as zf:
+        names = zf.namelist()
+    parts = sorted(
+        f"full/{f}" for f in on_disk
+        if f.startswith("part-") and f.endswith(".json")
+    )
+    assert parts and sorted(names) == parts
+
+
 def test_single_file_is_compact_utf8_json(spark, tmp_path):
     """full.json is the compact JSON array of the rows' own JSON text:
     no whitespace between tokens, non-ASCII text as UTF-8 (not \\u

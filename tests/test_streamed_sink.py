@@ -7,11 +7,12 @@ nesting.HEAVY_ROOT_SUBTREE_ROWS the sink assembles such roots in FILE
 space: EVERY over-threshold child's documents are written as per-key
 sorted JSON fragments (recursively — a split level whose own children
 are hazards splits again) and each root NDJSON line is stitched by
-streaming concatenation ON AN EXECUTOR (one task per root; the driver
-never loops fragment bytes). These tests force the threshold to 0 at
-sf0.001 and pin that the streamed output is PARSE-IDENTICAL to the
-distributed writer's (same docs, same field presence, same array
-order), so the sf10 path is value-proven at test scale.
+streaming concatenation ON AN EXECUTOR (one task and one part file per
+root; the driver never loops fragment bytes). These tests patch the
+threshold to 0 at sf0.001 and pin that the streamed output is
+PARSE-IDENTICAL to the distributed writer's (same docs, same field
+presence, same array order), so the sf10 path is value-proven at test
+scale.
 """
 
 import glob
@@ -24,7 +25,10 @@ from relational_to_doc_oriented_nosql_migrator_spark.engine import (
     build_testdata_catalog,
     migrate_streamed,
 )
-from relational_to_doc_oriented_nosql_migrator_spark.plans import convert_schema
+from relational_to_doc_oriented_nosql_migrator_spark.plans import (
+    convert_schema,
+    nesting,
+)
 from relational_to_doc_oriented_nosql_migrator_spark.plans.nesting import (
     stream_plan,
 )
@@ -42,27 +46,75 @@ def _read_ndjson_lines(target_dir):
     return out
 
 
-def test_stream_plan_thresholds(spark):
+@pytest.fixture
+def force_streaming(monkeypatch):
+    """Every embedded subtree is past the threshold."""
+    monkeypatch.setattr(nesting, "HEAVY_ROOT_SUBTREE_ROWS", 0)
+
+
+def test_stream_plan_thresholds(spark, monkeypatch):
     """Only tiny-cardinality roots with a past-threshold subtree stream;
     at the default threshold nothing streams below the probe corpus, so
     the recorded bench/sweep plans are untouched."""
     catalog, _tables = build_testdata_catalog(spark, SF0001)
     plan = convert_schema(catalog)
     assert stream_plan(catalog, plan) == {}
-    forced = stream_plan(catalog, plan, threshold=0)
+    monkeypatch.setattr(nesting, "HEAVY_ROOT_SUBTREE_ROWS", 0)
+    forced = stream_plan(catalog, plan)
     # region is the only root with embedded children in the tpch plan;
     # nation is its only (hence only over-threshold) child.
     assert forced == {"region": ["nation"]}
 
 
+def test_stream_plan_gates_on_root_cardinality(monkeypatch):
+    """Two roots, both with a subtree past the threshold: only the one
+    with at most SMALL_PARENT_ROWS catalog rows streams. The sink relies
+    on this gate to write a streamed collection as one part file per
+    root (at most SMALL_PARENT_ROWS files)."""
+    from relational_to_doc_oriented_nosql_migrator_spark.plans.catalog import (
+        Catalog,
+        ForeignKey,
+        TableMeta,
+    )
+    from relational_to_doc_oriented_nosql_migrator_spark.plans.planner import (
+        Collection,
+        NoSQLPlan,
+    )
+
+    n = nesting.SMALL_PARENT_ROWS
+    catalog = Catalog(
+        [
+            TableMeta("big", n + 1, ["bid"], ["bid"]),
+            TableMeta("small", n, ["sid"], ["sid"]),
+            TableMeta("bkid", 10, ["kid", "bfk"], ["kid"],
+                      [ForeignKey("bfk", "big", "bid")]),
+            TableMeta("skid", 10, ["kid", "sfk"], ["kid"],
+                      [ForeignKey("sfk", "small", "sid")]),
+        ]
+    )
+    plan = NoSQLPlan(
+        "t",
+        [
+            Collection("big", ["bid"],
+                       embedded=[Collection("bkid", ["kid"])]),
+            Collection("small", ["sid"],
+                       embedded=[Collection("skid", ["kid"])]),
+        ],
+    )
+    monkeypatch.setattr(nesting, "HEAVY_ROOT_SUBTREE_ROWS", 10)
+    assert stream_plan(catalog, plan) == {"small": ["skid"]}
+
+
 @pytest.fixture(scope="module")
 def both_outputs(spark, tmp_path_factory):
-    # threshold=0 engages the DEEPEST path: region streams, the nation
+    # Threshold 0 engages the DEEPEST path: region streams, the nation
     # level splits on BOTH its children (customer + supplier — the
     # multi-heavy-children shape, r09 verdict #4), and customer splits
     # again on orders — so this parity fixture covers recursion depth 3
     # and multi-child fan-out in one go.
-    collections, streamed = migrate_streamed(spark, SF0001, threshold=0)
+    with pytest.MonkeyPatch.context() as mp:
+        mp.setattr(nesting, "HEAVY_ROOT_SUBTREE_ROWS", 0)
+        collections, streamed = migrate_streamed(spark, SF0001)
     assert set(streamed) == {"region"}
     nation = streamed["region"].children[0]
     assert [c.name for c in streamed["region"].children] == ["nation"]
@@ -124,7 +176,8 @@ def test_leaf_mode_parses_identical(spark, both_outputs, tmp_path):
     the root split) must also parse identically — this is the shape for
     a heavy root whose child level is NOT itself a hazard (large child
     cardinality or small grandchild subtrees). Forced by streaming the
-    root at threshold 0 while the recursion threshold stays high."""
+    region root while the threshold stays at its default, so no level
+    below it splits."""
     from relational_to_doc_oriented_nosql_migrator_spark.plans.nesting import (
         materialize_streamed_root,
     )
@@ -133,7 +186,7 @@ def test_leaf_mode_parses_identical(spark, both_outputs, tmp_path):
     catalog, tables = build_testdata_catalog(spark, SF0001)
     plan = convert_schema(catalog)
     pieces = materialize_streamed_root(
-        tables, catalog, plan, "region", "nation", threshold=10**9
+        tables, catalog, plan, "region", "nation"
     )
     assert pieces.children[0].rows is not None  # leaf shape
     out = str(tmp_path / "single")
@@ -157,7 +210,7 @@ def test_leaf_mode_parses_identical(spark, both_outputs, tmp_path):
     assert single == normal
 
 
-def test_two_heavy_root_children_parity(spark, tmp_path):
+def test_two_heavy_root_children_parity(spark, tmp_path, monkeypatch):
     """A root with TWO over-threshold children streams BOTH (r09 verdict
     #4 — the old planner picked only the heaviest): synthetic catalog
     R -> {A, B} with both subtrees past the threshold, parse parity vs
@@ -220,11 +273,11 @@ def test_two_heavy_root_children_parity(spark, tmp_path):
             "bid int, bval string, rfk2 int",
         ),
     }
-    assert stream_plan(catalog, plan, threshold=4) == {"r": ["a", "b"]}
+    monkeypatch.setattr(nesting, "HEAVY_ROOT_SUBTREE_ROWS", 4)
+    assert stream_plan(catalog, plan) == {"r": ["a", "b"]}
     collections = materialize(tables, catalog, plan, normalize_dates=False)
     pieces = materialize_streamed_root(
-        tables, catalog, plan, "r", ["a", "b"],
-        normalize_dates=False, threshold=4,
+        tables, catalog, plan, "r", ["a", "b"], normalize_dates=False,
     )
     assert [c.name for c in pieces.children] == ["a", "b"]
     normal_dir = str(tmp_path / "normal")
@@ -343,12 +396,12 @@ def test_streamed_assembly_exotic_keys(spark, tmp_path):
 
 
 def test_streamed_rerun_overwrites_stale_parts(spark, both_outputs,
-                                               tmp_path):
+                                               tmp_path, force_streaming):
     """Overwrite semantics (distributed-writer parity): rerunning into
     the same target with FEWER roots must not leave stale part files —
     every reader globs part-*, so a leftover is a phantom document."""
     collections, _n, _s, _w, _w2 = both_outputs
-    _colls, streamed = migrate_streamed(spark, SF0001, threshold=0)
+    _colls, streamed = migrate_streamed(spark, SF0001)
     pieces = streamed["region"]
     out = str(tmp_path / "rerun")
     full_roots = pieces.roots
@@ -363,9 +416,11 @@ def test_streamed_rerun_overwrites_stale_parts(spark, both_outputs,
     parts = glob.glob(os.path.join(out, "region", "part-*"))
     assert len(parts) == 2
     assert len(_read_ndjson_lines(os.path.join(out, "region"))) == 2
+    # publish is a directory swap: no stage/temp litter next to target
+    assert os.listdir(out) == ["region"]
 
 
-def test_materialize_streamed_root_arg_validation(spark):
+def test_materialize_streamed_root_arg_validation(spark, force_streaming):
     """Duplicate child names dedupe (caller convenience); an unknown
     child raises naming the actual missing collection."""
     from relational_to_doc_oriented_nosql_migrator_spark.plans.nesting import (
@@ -375,23 +430,24 @@ def test_materialize_streamed_root_arg_validation(spark):
     catalog, tables = build_testdata_catalog(spark, SF0001)
     plan = convert_schema(catalog)
     pieces = materialize_streamed_root(
-        tables, catalog, plan, "region", ["nation", "nation"], threshold=0
+        tables, catalog, plan, "region", ["nation", "nation"]
     )
     assert [c.name for c in pieces.children] == ["nation"]
     with pytest.raises(ValueError, match="no_such_child"):
         materialize_streamed_root(
-            tables, catalog, plan, "region", ["no_such_child"], threshold=0
+            tables, catalog, plan, "region", ["no_such_child"]
         )
 
 
-def test_streamed_sink_uri_target(spark, both_outputs, tmp_path):
+def test_streamed_sink_uri_target(spark, both_outputs, tmp_path,
+                                  force_streaming):
     """Scheme-qualified targets route fragment listing, fragment reads,
     and the stitched part-file writes through pyarrow.fs — the
     shared-store seam a real cluster needs (fragments and part files
     live on the DFS the Spark writers targeted, not one machine's
     disk). Exercised with file:// against the same parity contract."""
     collections, normal_dir, _s, _w, _w2 = both_outputs
-    _colls, streamed = migrate_streamed(spark, SF0001, threshold=0)
+    _colls, streamed = migrate_streamed(spark, SF0001)
     uri = "file://" + str(tmp_path / "uri_out")
     wrote = write_json_collections(
         {"region": collections["region"]}, uri,
@@ -417,68 +473,24 @@ def test_streamed_sink_uri_target(spark, both_outputs, tmp_path):
     assert leftovers == []
 
 
-def test_streamed_empty_root_skipped(spark, both_outputs):
+def test_streamed_empty_root_skipped(spark, both_outputs, tmp_path,
+                                     force_streaming):
     """filter_nonempty_collection semantics survive streaming: a root
-    frame with zero rows writes nothing and is not reported."""
+    frame with zero rows writes nothing, is not reported, and removes
+    the collection an earlier run wrote to the same target."""
     collections, _n, _s, _w, _w2 = both_outputs
-    _colls, streamed = migrate_streamed(spark, SF0001, threshold=0)
+    _colls, streamed = migrate_streamed(spark, SF0001)
     pieces = streamed["region"]
+    out = str(tmp_path / "rerun_empty")
+    region = {"region": collections["region"]}
+    assert write_json_collections(
+        region, out, streamed={"region": pieces}
+    ) == ["region"]
+    assert os.path.isdir(os.path.join(out, "region"))
     pieces.roots = pieces.roots.filter("1 = 0")
-    out = str(
-        __import__("tempfile").mkdtemp(prefix="sink_streamed_empty_")
-    )
-    try:
-        wrote = write_json_collections(
-            {"region": collections["region"]}, out, streamed={"region": pieces}
-        )
-        assert "region" not in wrote
-        assert not os.path.exists(os.path.join(out, "region"))
-    finally:
-        __import__("shutil").rmtree(out, ignore_errors=True)
-
-
-def test_stream_max_parts_batches_roots(spark, both_outputs, tmp_path,
-                                       monkeypatch):
-    """roots-per-task batching (r10 verdict #4): with STREAM_MAX_PARTS
-    below the root count, consecutive sorted roots share one part file
-    (multiple NDJSON lines) and the parsed output is unchanged — so a
-    thousand-root collection never emits a thousand part files."""
-    from relational_to_doc_oriented_nosql_migrator_spark.sinks import (
-        json_collections,
-    )
-
-    monkeypatch.setattr(json_collections, "STREAM_MAX_PARTS", 2)
-    collections, normal_dir, _s, _w, _w2 = both_outputs
-    _colls, streamed = migrate_streamed(spark, SF0001, threshold=0)
-    out = str(tmp_path / "batched")
-    wrote = write_json_collections(
-        {"region": collections["region"]}, out,
-        streamed={"region": streamed["region"]},
-    )
-    assert wrote == ["region"]
-    parts = sorted(
-        os.path.basename(p)
-        for p in glob.glob(os.path.join(out, "region", "part-*"))
-    )
-    # 5 roots, ceil(5/2)=3 per task -> 2 parts of 3+2 lines
-    assert parts == ["part-00000.json", "part-00001.json"]
-    schema = collections["region"].schema
-    batched = sorted(
-        spark.read.schema(schema)
-        .json(os.path.join(out, "region"))
-        .toJSON()
-        .collect()
-    )
-    normal = sorted(
-        spark.read.schema(schema)
-        .json(os.path.join(normal_dir, "region"))
-        .toJSON()
-        .collect()
-    )
-    assert batched == normal
-    # publish is a directory swap: no stage/temp litter next to target
-    leftovers = [p for p in os.listdir(out) if p != "region"]
-    assert leftovers == []
+    wrote = write_json_collections(region, out, streamed={"region": pieces})
+    assert "region" not in wrote
+    assert os.listdir(out) == []
 
 
 def test_bare_local_out_dir_rejected_off_local_master(tmp_path):
@@ -500,13 +512,14 @@ def test_bare_local_out_dir_rejected_off_local_master(tmp_path):
         write_json_collections({"c": _DF()}, str(tmp_path / "o"))
 
 
-def test_write_time_counts_match_line_counts(spark, tmp_path):
+def test_write_time_counts_match_line_counts(spark, tmp_path,
+                                            force_streaming):
     """The counts= out-param (write-time doc counts: streamed roots
     from the collected roots frame, distributed writes via observe())
     must equal the actual NDJSON line counts of what landed on disk —
     this is the contract that let sink_json_collections drop its
     read-back pass (r11 verdict task #4)."""
-    collections, streamed = migrate_streamed(spark, SF0001, threshold=0)
+    collections, streamed = migrate_streamed(spark, SF0001)
     out = str(tmp_path / "counted")
     counts = {}
     written = write_json_collections(
@@ -537,7 +550,7 @@ def test_duplicate_attempt_adopts_published_part(tmp_path, monkeypatch):
 
     monkeypatch.setattr(jc, "_rename", exploding_rename)
     spec = []  # leaf: segs are complete document strings
-    jc._stitch_part(part, [(0, [], ['{"winner": true}'])], spec)
+    jc._stitch_part(part, [], ['{"winner": true}'], spec)
     with open(part) as fh:
         assert fh.read() == '{"winner": true}\n'
     leftovers = [p for p in os.listdir(tmp_path) if p != "part-00000.json"]
