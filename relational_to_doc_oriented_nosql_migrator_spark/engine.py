@@ -18,49 +18,23 @@ from relational_to_doc_oriented_nosql_migrator_spark.plans import (
     Catalog,
     convert_schema,
     materialize,
-    tpch_catalog,
 )
 from relational_to_doc_oriented_nosql_migrator_spark.sources import (
-    ALL_TABLES,
-    load_tables,
+    parquet_catalog,
+    scan,
 )
 from relational_to_doc_oriented_nosql_migrator_spark import workload as workload_mod
 
 
-def _parquet_row_count(sf_dir: str, name: str) -> int | None:
-    """Row count straight from the parquet footer (no Spark job): the
-    catalog-metadata path a warehouse uses. Returns None when footers are
-    unavailable (non-parquet layout) -> fall back to df.count()."""
-    import glob
-    import os
-
-    try:
-        import pyarrow.parquet as pq
-
-        pattern = os.path.join(sf_dir, f"{name}.parquet")
-        paths = glob.glob(pattern) or glob.glob(
-            os.path.join(pattern, "*.parquet")
-        )
-        if not paths:
-            return None
-        return sum(pq.read_metadata(p).num_rows for p in paths)
-    except Exception:
-        return None
-
-
 def build_testdata_catalog(
-    spark: SparkSession, sf_dir: str, tables: dict[str, DataFrame] | None = None
+    spark: SparkSession, sf_dir: str
 ) -> tuple[Catalog, dict[str, DataFrame]]:
-    """Catalog for the driver testdata: schemas + row counts from parquet
-    footers (one metadata read per table, no scan jobs — `agg_count_star`
-    remains the query-surface equivalent), FK graph from plans/catalog.py."""
-    tables = tables or load_tables(spark, sf_dir, ALL_TABLES)
-    columns = {name: df.columns for name, df in tables.items()}
-    counts = {}
-    for name, df in tables.items():
-        footer = _parquet_row_count(sf_dir, name)
-        counts[name] = footer if footer is not None else df.count()
-    return tpch_catalog(columns, counts), tables
+    """Catalog and lazy frames for a directory of parquet tables, both
+    from the parquet footers (sources.parquet_catalog): no Spark job
+    runs, neither to infer a schema nor to count rows (`agg_count_star`
+    remains the query-surface equivalent)."""
+    catalog, footers = parquet_catalog(sf_dir)
+    return catalog, {name: scan(spark, t) for name, t in footers.items()}
 
 
 def _plan_and_materialize(

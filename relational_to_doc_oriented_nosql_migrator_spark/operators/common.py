@@ -6,7 +6,11 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from relational_to_doc_oriented_nosql_migrator_spark.sources.parquet import load_table
+from relational_to_doc_oriented_nosql_migrator_spark.sources.parquet import (
+    load_table,
+    parquet_paths,
+    read_footer,
+)
 
 
 def t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
@@ -58,37 +62,10 @@ def cleanup_scratch() -> None:
         shutil.rmtree(_SCRATCH_DIRS.pop(), True)
 
 
-def parquet_paths(sf_dir: str, name: str) -> list[str]:
-    """Resolve a table's parquet file paths: single-file driver layout
-    (<name>.parquet) or a part-file directory (the production layout the
-    scale generator writes). The ONE copy of this layout rule — the
-    planner catalog and the footer-metadata guards/gates both use it.
-    Raises FileNotFoundError naming the table when neither exists."""
-    import glob
-    import os
-
-    pattern = os.path.join(sf_dir, f"{name}.parquet")
-    paths = (
-        sorted(glob.glob(os.path.join(pattern, "*.parquet")))
-        if os.path.isdir(pattern)
-        else glob.glob(pattern)
-    )
-    if not paths:
-        raise FileNotFoundError(
-            f"no parquet for table {name!r} at {pattern}"
-            " (expected a file, or a directory of part-*.parquet files)"
-        )
-    return paths
-
-
 def footer_rows(sf_dir: str, name: str) -> int:
     """Table row count from parquet FOOTER metadata only — no Spark job
     (the planner's catalog trick)."""
-    import pyarrow.parquet as pq
-
-    return sum(
-        pq.read_metadata(p).num_rows for p in parquet_paths(sf_dir, name)
-    )
+    return read_footer(sf_dir, name).num_rows
 
 
 def footer_col_minmax(

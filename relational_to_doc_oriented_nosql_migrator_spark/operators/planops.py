@@ -7,8 +7,9 @@ scenarios and return its decisions as DataFrames; the oracles are frozen
 golden literals (`VALUES` SQL), so the correctness gate doubles as a
 golden-structure test of the rule cascade:
 
-- ``tpch``       — the driver-testdata FK graph (columns read from the
-                   sf_dir parquet footers), idle workload.
+- ``tpch``       — the driver-testdata FK graph, columns and row counts
+                   from the sf_dir parquet footers (the migrator's own
+                   `sources.parquet_catalog`), idle workload.
 - ``tpch_hot``   — same graph with read traffic on every table and
                    update-hot ``orders`` (uaf = rows x 50): exercises the
                    workload branch of server/DBMigration.js:356-369.
@@ -36,8 +37,6 @@ from relational_to_doc_oriented_nosql_migrator_spark.plans.catalog import (
     Catalog,
     ForeignKey,
     TableMeta,
-    TPCH_FOREIGN_KEYS,
-    TPCH_PRIMARY_KEYS,
     northwind_catalog,
 )
 from relational_to_doc_oriented_nosql_migrator_spark.plans.planner import (
@@ -46,46 +45,19 @@ from relational_to_doc_oriented_nosql_migrator_spark.plans.planner import (
     create_table_queue,
     is_self_referencing,
 )
+from relational_to_doc_oriented_nosql_migrator_spark.sources.parquet import (
+    parquet_catalog,
+)
 
 # ---------------------------------------------------------------------------
 # Catalog scenarios
 # ---------------------------------------------------------------------------
 
 
-def _testdata_catalog(sf_dir: str) -> Catalog:
-    """Testdata catalog from parquet footers only (no Spark jobs — the
-    planner is metadata-scale and must not scan data)."""
-    import pyarrow.parquet as pq
-
-    from relational_to_doc_oriented_nosql_migrator_spark.operators.common import (
-        parquet_paths,
-    )
-
-    columns: dict[str, list[str]] = {}
-    counts: dict[str, int] = {}
-    for name in TPCH_FOREIGN_KEYS:
-        # Layout resolution (single file vs part-file directory) is the
-        # shared common.parquet_paths rule.
-        paths = parquet_paths(sf_dir, name)
-        columns[name] = pq.read_schema(paths[0]).names
-        counts[name] = sum(pq.read_metadata(p).num_rows for p in paths)
-    tables = [
-        TableMeta(
-            name=name,
-            num_rows=counts[name],
-            columns=columns[name],
-            primary_keys=list(TPCH_PRIMARY_KEYS.get(name, [])),
-            foreign_keys=[ForeignKey(*e) for e in TPCH_FOREIGN_KEYS[name]],
-        )
-        for name in TPCH_FOREIGN_KEYS
-    ]
-    return Catalog(tables)
-
-
 def _tpch_hot_catalog(sf_dir: str) -> Catalog:
     """Read traffic everywhere, update-hot orders: uaf/maf comparisons are
     row-count-*ratio* based, so the decisions are scale-factor-invariant."""
-    catalog = _testdata_catalog(sf_dir)
+    catalog, _footers = parquet_catalog(sf_dir)
     for t in catalog.tables.values():
         t.gaf = t.num_rows * 10
     orders = catalog.get_table("orders")
@@ -107,7 +79,7 @@ def _selfref_catalog() -> Catalog:
 
 def _scenarios(sf_dir: str) -> dict[str, Catalog]:
     return {
-        "tpch": _testdata_catalog(sf_dir),
+        "tpch": parquet_catalog(sf_dir)[0],
         "tpch_hot": _tpch_hot_catalog(sf_dir),
         "northwind": northwind_catalog(),
         "selfref": _selfref_catalog(),
@@ -262,7 +234,7 @@ def q_plan_referencing(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def q_sink_http_response(spark: SparkSession, sf_dir: str) -> DataFrame:
-    rows = http_response_rows(_testdata_catalog(sf_dir))
+    rows = http_response_rows(parquet_catalog(sf_dir)[0])
     return spark.createDataFrame(
         rows, "side string, name string, detail string"
     )

@@ -126,21 +126,17 @@ TPCH_PRIMARY_KEYS: dict[str, list[str]] = {
 def tpch_catalog(
     columns: dict[str, list[str]],
     row_counts: dict[str, int],
-    include: tuple[str, ...] | None = None,
 ) -> Catalog:
     """Build the testdata catalog from observed schemas + row counts."""
-    names = include or tuple(TPCH_FOREIGN_KEYS)
     tables = [
         TableMeta(
             name=name,
             num_rows=row_counts.get(name, 0),
             columns=list(columns.get(name, [])),
             primary_keys=list(TPCH_PRIMARY_KEYS.get(name, [])),
-            foreign_keys=[
-                ForeignKey(*edge) for edge in TPCH_FOREIGN_KEYS.get(name, [])
-            ],
+            foreign_keys=[ForeignKey(*edge) for edge in edges],
         )
-        for name in names
+        for name, edges in TPCH_FOREIGN_KEYS.items()
     ]
     return Catalog(tables)
 

@@ -18,6 +18,8 @@ import os
 from pyspark.sql import SparkSession
 
 DEFAULT_SHUFFLE_PARTITIONS = 32
+_PACKAGE_PARENT = os.path.dirname(
+    os.path.dirname(os.path.abspath(__file__)))
 
 
 def get_spark(
@@ -76,6 +78,10 @@ def get_spark(
         # native type for; read as long and restore micros timestamps at the
         # source (sources/parquet.py).
         .config("spark.sql.legacy.parquet.nanosAsLong", "true")
+        # Python tasks (the streamed sink's per-root stitch) import this
+        # package on the workers: put its parent directory on their path.
+        # Spark merges this with any PYTHONPATH the workers already have.
+        .config("spark.executorEnv.PYTHONPATH", _PACKAGE_PARENT)
     )
     for key, value in (extra_conf or {}).items():
         builder = builder.config(key, value)

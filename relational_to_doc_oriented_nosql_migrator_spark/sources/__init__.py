@@ -1,6 +1,6 @@
 from relational_to_doc_oriented_nosql_migrator_spark.sources.parquet import (
-    ALL_TABLES,
-    load_tables,
+    parquet_catalog,
+    scan,
 )
 
-__all__ = ["ALL_TABLES", "load_tables"]
+__all__ = ["parquet_catalog", "scan"]

@@ -4,27 +4,32 @@ The reference's `getAllDatas` is `SELECT * FROM t` shipped over TCP per call
 (reference server/MySQLDBManager.js:254-282). Here a "full scan" is a lazy
 parquet DataFrame: Catalyst prunes columns and pushes predicates into the
 scan, so downstream operators never pay for `SELECT *` unless they use it.
+
+This module owns a parquet table. Like the reference, which reads table
+metadata from INFORMATION_SCHEMA (server/DBMigration.js:30-91), it never
+scans data to learn a schema: one footer read per data file gives the
+Spark schema, the row count and the TIMESTAMP(NANOS) columns, and the
+scan is built with that schema, so Spark runs no inference or count job.
 """
 
 from __future__ import annotations
 
+import glob
 import os
+from typing import NamedTuple
 
+import pyarrow as pa
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
+from pyspark.sql.pandas.types import from_arrow_type
 
-# Relational star schema (FK graph in plans/catalog.py).
-TPCH_TABLES = (
-    "region",
-    "nation",
-    "customer",
-    "supplier",
-    "part",
-    "orders",
-    "lineitem",
+from relational_to_doc_oriented_nosql_migrator_spark.plans.catalog import (
+    TPCH_FOREIGN_KEYS,
+    Catalog,
+    tpch_catalog,
 )
-# Extension tables for stream/text/vector operators.
-ALL_TABLES = TPCH_TABLES + ("events", "documents", "embeddings")
 
 
 def ensure_runtime_confs(spark: SparkSession) -> None:
@@ -32,9 +37,10 @@ def ensure_runtime_confs(spark: SparkSession) -> None:
     factory) because the driver calls `entry()`/`queries()` with its own
     vanilla SparkSession:
 
-    - nanosAsLong: the testdata stores TIMESTAMP(NANOS), which Spark 4.1
-      reads as correct TIMESTAMP_NTZ under this flag and rejects outright
-      without it.
+    - nanosAsLong: parquet TIMESTAMP(NANOS) (pandas' default, and the
+      encoding of early testdata) reads as long nanos under this flag,
+      which `scan` turns into micros TIMESTAMP_NTZ; Spark 4.1 rejects the
+      column outright without it.
     - AQE + partition coalescing: the nesting DAG chains several joins and
       groupBys; with a static 200-partition shuffle on a vanilla session the
       task count dwarfs the data at small SF and under-parallelizes at large
@@ -74,7 +80,7 @@ def ensure_runtime_confs(spark: SparkSession) -> None:
     # Huge-method codegen fallback for JVMs without the factory's JIT
     # flag (see session.ensure_codegen_confs) — hooked here, the one
     # conf site every path that reads a table crosses (registry ops via
-    # operators.common.t, the migrate/entry pipeline via load_tables).
+    # operators.common.t, the migrate/entry pipeline via scan).
     from relational_to_doc_oriented_nosql_migrator_spark.session import (
         ensure_codegen_confs,
     )
@@ -82,55 +88,110 @@ def ensure_runtime_confs(spark: SparkSession) -> None:
     ensure_codegen_confs(spark)
 
 
-def _nanos_timestamp_columns(path: str) -> list[str]:
-    """Columns stored as parquet TIMESTAMP(NANOS): under nanosAsLong Spark
-    surfaces them as LONG nanos-since-epoch; detect from the footer so we
-    can restore proper (micros) timestamps. ms/us timestamp columns are
-    unaffected and read natively.
-
-    Accepts a single file, a directory of part files (the production
-    layout), or a glob — the footer is read from the first data file."""
-    try:
-        import glob as _glob
-        import os
-
-        import pyarrow as pa
-        import pyarrow.parquet as pq
-
-        if os.path.isdir(path):
-            candidates = sorted(
-                p
-                for p in _glob.glob(os.path.join(path, "**", "*"),
-                                    recursive=True)
-                if os.path.isfile(p) and not os.path.basename(p).startswith(
-                    ("_", ".")
-                )
-            )
-        elif any(ch in path for ch in "*?["):
-            candidates = sorted(_glob.glob(path))
-        else:
-            candidates = [path]
-        if not candidates:
-            return []
-        schema = pq.read_schema(candidates[0])
-        return [
-            f.name
-            for f in schema
-            if pa.types.is_timestamp(f.type) and f.type.unit == "ns"
-        ]
-    except Exception:
-        return []
+def parquet_files(path: str) -> list[str]:
+    """The data files behind a parquet path: a file, a directory of
+    part-*.parquet files (the layout Spark and the scale generator
+    write), or a glob over either. The one copy of this layout rule.
+    Raises FileNotFoundError when there are none."""
+    files: list[str] = []
+    for p in sorted(glob.glob(path)):
+        files += (sorted(glob.glob(os.path.join(p, "*.parquet")))
+                  if os.path.isdir(p) else [p])
+    if not files:
+        raise FileNotFoundError(
+            f"no parquet at {path} (expected a file, a directory of"
+            " part-*.parquet files, or a glob over either)"
+        )
+    return files
 
 
-def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    """`src_full_scan`: lazy full-table scan of one parquet table."""
+def _table_path(sf_dir: str, name: str) -> str:
+    return os.path.join(sf_dir, f"{name}.parquet")
+
+
+def parquet_paths(sf_dir: str, name: str) -> list[str]:
+    """Data files of table `name` under `sf_dir` (see parquet_files)."""
+    return parquet_files(_table_path(sf_dir, name))
+
+
+# Spark's parquet reader widens unsigned integers, and reads arrow's
+# all-null type (stored as INT32) as int.
+_READ_AS = {
+    pa.uint8(): T.ShortType(),
+    pa.uint16(): T.IntegerType(),
+    pa.uint32(): T.LongType(),
+    pa.uint64(): T.DecimalType(20, 0),
+    pa.null(): T.IntegerType(),
+}
+
+
+def _read_type(at: pa.DataType) -> T.DataType:
+    """The type Spark's parquet reader gives an arrow footer type, with
+    every field nullable at every depth, as Spark reads a file."""
+    if pa.types.is_duration(at) or (
+            pa.types.is_timestamp(at) and at.unit == "ns"):
+        # TIMESTAMP(NANOS) under nanosAsLong; a duration is arrow's own
+        # type over a plain INT64.
+        return T.LongType()
+    if pa.types.is_struct(at):
+        return T.StructType(
+            [T.StructField(f.name, _read_type(f.type)) for f in at])
+    if (pa.types.is_list(at) or pa.types.is_large_list(at)
+            or pa.types.is_fixed_size_list(at)):
+        return T.ArrayType(_read_type(at.value_type))
+    if pa.types.is_map(at):
+        return T.MapType(_read_type(at.key_type), _read_type(at.item_type))
+    return _READ_AS.get(at) or from_arrow_type(at, prefer_timestamp_ntz=True)
+
+
+class ParquetTable(NamedTuple):
+    """What one footer read tells about a parquet table."""
+
+    path: str  # what the reader is given: file, directory or glob
+    schema: T.StructType  # Spark's read schema (nanos columns as long)
+    num_rows: int  # summed over the part files
+    nanos_columns: tuple[str, ...]  # top-level TIMESTAMP(NANOS) columns
+
+
+def footer_schema(md: pq.FileMetaData) -> tuple[T.StructType, tuple[str, ...]]:
+    """(Spark read schema, top-level TIMESTAMP(NANOS) columns) of one
+    parquet footer. INT96 (the legacy timestamp Spark itself writes)
+    surfaces in arrow as timestamp[ns] but reads as TIMESTAMP."""
+    int96 = {
+        md.schema.column(i).path for i in range(md.num_columns)
+        if md.schema.column(i).physical_type == "INT96"
+    }
+    fields, nanos = [], []
+    for f in md.schema.to_arrow_schema():
+        if f.name in int96:
+            fields.append(T.StructField(f.name, T.TimestampType()))
+            continue
+        fields.append(T.StructField(f.name, _read_type(f.type)))
+        if pa.types.is_timestamp(f.type) and f.type.unit == "ns":
+            nanos.append(f.name)
+    return T.StructType(fields), tuple(nanos)
+
+
+def read_footer(sf_dir: str, name: str) -> ParquetTable:
+    """Table `name` under `sf_dir` from one footer read per data file (see
+    parquet_files): the schema from the first, the row count summed over
+    all. No Spark job."""
+    path = _table_path(sf_dir, name)
+    metas = [pq.read_metadata(f) for f in parquet_files(path)]
+    schema, nanos = footer_schema(metas[0])
+    return ParquetTable(path, schema, sum(m.num_rows for m in metas), nanos)
+
+
+def scan(spark: SparkSession, table: ParquetTable) -> DataFrame:
+    """Lazy scan of `table` with its footer schema, so Spark runs no
+    schema-inference job. TIMESTAMP(NANOS) columns (long nanos under
+    nanosAsLong) become micros TIMESTAMP_NTZ: naive, like the source data
+    and the DuckDB oracle, which truncates nanos to micros the same way.
+    The session time zone is pinned to UTC, so the LTZ->NTZ cast is the
+    identity."""
     ensure_runtime_confs(spark)
-    path = os.path.join(sf_dir, f"{name}.parquet")
-    df = spark.read.parquet(path)
-    for col in _nanos_timestamp_columns(path):
-        # long nanos -> micros TIMESTAMP_NTZ (naive, like the source data
-        # and the DuckDB oracle, which truncates nanos to micros the same
-        # way). Session tz is pinned UTC so the LTZ->NTZ cast is identity.
+    df = spark.read.schema(table.schema).parquet(table.path)
+    for col in table.nanos_columns:
         df = df.withColumn(
             col,
             F.expr(f"timestamp_micros({col} div 1000)").cast("timestamp_ntz"),
@@ -138,18 +199,22 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return df
 
 
-def load_tables(
-    spark: SparkSession, sf_dir: str, names: tuple[str, ...] = ALL_TABLES
-) -> dict[str, DataFrame]:
-    """Load all tables concurrently: each spark.read.parquet is a driver
-    round trip for schema discovery (~250ms), so a serial loop costs
-    len(names) x that latency before any query runs."""
-    from concurrent.futures import ThreadPoolExecutor
+def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
+    """`src_full_scan`: lazy full-table scan of one parquet table, typed
+    from its footer (no Spark job)."""
+    return scan(spark, read_footer(sf_dir, name))
 
-    with ThreadPoolExecutor(max_workers=min(8, len(names))) as pool:
-        futures = {
-            name: pool.submit(load_table, spark, sf_dir, name)
-            for name in names
-        }
-        return {name: f.result() for name, f in futures.items()}
 
+def parquet_catalog(sf_dir: str) -> tuple[Catalog, dict[str, ParquetTable]]:
+    """The catalog of every table of plans/catalog.py's TPCH_FOREIGN_KEYS
+    under `sf_dir`, and each table's footer: columns and row counts from
+    one footer read per data file, no Spark job; the FK graph from
+    plans/catalog.py."""
+    footers = {
+        name: read_footer(sf_dir, name) for name in TPCH_FOREIGN_KEYS
+    }
+    catalog = tpch_catalog(
+        {name: t.schema.names for name, t in footers.items()},
+        {name: t.num_rows for name, t in footers.items()},
+    )
+    return catalog, footers

@@ -30,10 +30,10 @@ state is one tiny tuple per user.
 
 from __future__ import annotations
 
-import glob
 import itertools
 import os
 
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -43,8 +43,9 @@ from relational_to_doc_oriented_nosql_migrator_spark.operators.common import (
     scratch_dir,
 )
 from relational_to_doc_oriented_nosql_migrator_spark.sources.parquet import (
-    _nanos_timestamp_columns,
     ensure_runtime_confs,
+    footer_schema,
+    parquet_files,
 )
 
 _MEM_COUNTER = itertools.count()
@@ -83,15 +84,14 @@ def read_events_stream(
         # directory, and the glob keeps it at sf_dir while matching only
         # the events table file(s).
         path = os.path.join(sf_dir, "events.*")
-    # The on-disk schema (under nanosAsLong TIMESTAMP(NANOS) -> long).
-    disk_schema = spark.read.parquet(path).schema
+    # The on-disk schema (under nanosAsLong TIMESTAMP(NANOS) -> long),
+    # from the footer of the first file.
+    disk_schema, nanos_cols = footer_schema(
+        pq.read_metadata(parquet_files(path)[0]))
     reader = spark.readStream.schema(disk_schema)
     if max_files_per_trigger:
         reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
     sdf = reader.parquet(path)
-    # Footer inspection needs a concrete file, not the glob.
-    first_file = sorted(glob.glob(path))[0] if glob.glob(path) else path
-    nanos_cols = set(_nanos_timestamp_columns(first_file))
     for field in disk_schema.fields:
         # Plain TIMESTAMP (not NTZ): watermarks only accept it. Session tz
         # is pinned UTC (ensure_runtime_confs), so the cast back to NTZ in

@@ -555,3 +555,29 @@ def test_duplicate_attempt_adopts_published_part(tmp_path, monkeypatch):
         assert fh.read() == '{"winner": true}\n'
     leftovers = [p for p in os.listdir(tmp_path) if p != "part-00000.json"]
     assert leftovers == []
+
+
+def test_streamed_stitch_runs_outside_the_repository(tmp_path):
+    """The per-root stitch runs in Python tasks, which import the package
+    on the workers. A CLI started outside the repository root, with the
+    package only on the driver's sys.path, must still write every root."""
+    import subprocess
+    import sys
+
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    out = str(tmp_path / "out")
+    code = (
+        "import sys\n"
+        f"sys.path.insert(0, {repo!r})\n"
+        "from relational_to_doc_oriented_nosql_migrator_spark import cli\n"
+        "from relational_to_doc_oriented_nosql_migrator_spark.plans import "
+        "nesting\n"
+        "nesting.HEAVY_ROOT_SUBTREE_ROWS = 0\n"
+        f"sys.exit(cli.main(['--tables', {SF0001!r}, '--out', {out!r}]))\n"
+    )
+    env = {k: v for k, v in os.environ.items() if k != "PYTHONPATH"}
+    env.update(SPARK_GRAFT_CPUS="2", SPARK_GRAFT_DRIVER_MEM="1g")
+    run = subprocess.run([sys.executable, "-c", code], cwd=str(tmp_path),
+                         env=env, capture_output=True, text=True, timeout=600)
+    assert run.returncode == 0, run.stderr[-3000:]
+    assert len(_read_ndjson_lines(os.path.join(out, "region"))) == 5
