@@ -8,7 +8,8 @@ document collections out.
 
 Prints one JSON summary line: collections written, document counts, and
 the output directory — the CLI twin of the reference's zip download
-(server/WriteToFile.js:27-35).
+(server/WriteToFile.js:27-35). A dump migrates on the driver without
+Spark (engine.migrate_dump_on_driver); parquet tables run on Spark.
 """
 
 from __future__ import annotations
@@ -46,7 +47,7 @@ def build_parser() -> argparse.ArgumentParser:
     p.add_argument(
         "--single-file", action="store_true",
         help="one JSON array per collection (reference byte-parity mode; "
-        "collects to the driver — small outputs only)",
+        "with --tables it collects to the driver — small outputs only)",
     )
     p.add_argument(
         "--no-normalize-dates", action="store_true",
@@ -55,16 +56,44 @@ def build_parser() -> argparse.ArgumentParser:
     )
     p.add_argument(
         "--master", default=None,
-        help="Spark master override (default: local[$SPARK_GRAFT_CPUS])",
+        help="Spark master override for --tables (default: "
+        "local[$SPARK_GRAFT_CPUS])",
     )
     return p
 
 
 def main(argv: list[str] | None = None) -> int:
     args = build_parser().parse_args(argv)
+    log_content = None
+    if args.log:
+        with open(args.log, encoding="utf-8", errors="replace") as fh:
+            log_content = fh.read()
+
+    if args.dump:
+        # A dump is parsed and migrated on the driver
+        # (engine.migrate_dump_on_driver): no Spark session starts.
+        from relational_to_doc_oriented_nosql_migrator_spark.engine import (
+            migrate_dump_on_driver,
+        )
+        from relational_to_doc_oriented_nosql_migrator_spark.sinks import (
+            write_documents,
+        )
+
+        with open(args.dump, encoding="utf-8", errors="replace") as fh:
+            documents, _catalog, _plan = migrate_dump_on_driver(
+                fh.read(),
+                log_content=log_content,
+                log_dialect=args.dialect,
+                normalize_dates=not args.no_normalize_dates,
+            )
+        counts = write_documents(
+            documents, args.out, single_file=args.single_file,
+            zip_path=args.zip_path,
+        )
+        print(json.dumps({"out": args.out, "collections": counts}))
+        return 0
 
     from relational_to_doc_oriented_nosql_migrator_spark.engine import (
-        migrate_from_dump,
         migrate_streamed,
     )
     from relational_to_doc_oriented_nosql_migrator_spark.session import (
@@ -75,32 +104,16 @@ def main(argv: list[str] | None = None) -> int:
     )
 
     spark = get_spark(app_name="rdnm-cli", master=args.master)
-    log_content = None
-    if args.log:
-        with open(args.log, encoding="utf-8", errors="replace") as fh:
-            log_content = fh.read()
-
-    streamed = {}
-    if args.dump:
-        with open(args.dump, encoding="utf-8", errors="replace") as fh:
-            collections = migrate_from_dump(
-                spark,
-                fh.read(),
-                log_content=log_content,
-                log_dialect=args.dialect,
-                normalize_dates=not args.no_normalize_dates,
-            )
-    else:
-        # Heavy roots (plans/nesting.stream_plan) assemble per-root in
-        # file space — the parquet-tables path carries the catalog row
-        # counts the decision needs; dump inputs are small by nature.
-        collections, streamed = migrate_streamed(
-            spark,
-            args.tables,
-            log_content=log_content,
-            log_dialect=args.dialect,
-            normalize_dates=not args.no_normalize_dates,
-        )
+    # Heavy roots (plans/nesting.stream_plan) assemble per-root in file
+    # space — the parquet-tables path carries the catalog row counts the
+    # decision needs.
+    collections, streamed = migrate_streamed(
+        spark,
+        args.tables,
+        log_content=log_content,
+        log_dialect=args.dialect,
+        normalize_dates=not args.no_normalize_dates,
+    )
 
     # Doc counts are write-time byproducts of the sink (streamed roots
     # from the collected roots frame, distributed writes via an

@@ -7,10 +7,16 @@ Reference lifecycle (server/DBMigration.js:14-182):
 
 Here: parquet tables + out-of-band FK metadata -> optional query-log
 workload -> driver-side planning (plans/planner.py) -> Catalyst-executed
-nesting DAG (plans/nesting.py) -> JSON sink (sinks/).
+nesting DAG (plans/nesting.py) -> JSON sink (sinks/). A SQL dump, already
+Python rows on the driver, takes the same catalog -> workload -> plan
+steps and then the driver-side document builder (plans/documents.py):
+migrate_dump_on_driver starts no Spark session.
 """
 
 from __future__ import annotations
+
+import contextlib
+import time
 
 from pyspark.sql import DataFrame, SparkSession
 
@@ -19,9 +25,18 @@ from relational_to_doc_oriented_nosql_migrator_spark.plans import (
     convert_schema,
     materialize,
 )
+from relational_to_doc_oriented_nosql_migrator_spark.plans.documents import (
+    build_documents,
+)
+from relational_to_doc_oriented_nosql_migrator_spark.plans.shape import (
+    document_shapes,
+)
 from relational_to_doc_oriented_nosql_migrator_spark.sources import (
     parquet_catalog,
     scan,
+)
+from relational_to_doc_oriented_nosql_migrator_spark.sources.sqldump import (
+    read_dump,
 )
 from relational_to_doc_oriented_nosql_migrator_spark import workload as workload_mod
 
@@ -147,3 +162,43 @@ def migrate_from_dump(
     if return_plan:
         return collections, catalog, plan
     return collections
+
+
+@contextlib.contextmanager
+def timed_stage(stages: dict | None, name: str):
+    """Record the wall seconds of the block as stages[name]."""
+    start = time.perf_counter()
+    try:
+        yield
+    finally:
+        if stages is not None:
+            stages[name] = round(time.perf_counter() - start, 6)
+
+
+def migrate_dump_on_driver(
+    sql_text: str,
+    log_content: str | None = None,
+    log_dialect: str = "mysql",
+    normalize_dates: bool = True,
+    stages: dict | None = None,
+):
+    """migrate_from_dump without Spark: the same catalog, workload and
+    plan, then every collection's documents built on the driver
+    (plans/documents.py) as the JSON texts Spark's toJSON writes for the
+    nested frames. Returns ({collection: [document JSON]}, catalog, plan);
+    empty collections map to empty lists.
+
+    stages, when given, receives the wall seconds of `parse`, `workload`,
+    `plan` and `build`. Like _plan_and_materialize, the workload and
+    planner calls resolve as module attributes at call time."""
+    with timed_stage(stages, "parse"):
+        _db, defs, catalog = read_dump(sql_text)
+    with timed_stage(stages, "workload"):
+        if log_content:
+            workload_mod.apply_workload(catalog, log_content, log_dialect)
+    with timed_stage(stages, "plan"):
+        plan = convert_schema(catalog)
+    with timed_stage(stages, "build"):
+        documents = build_documents(
+            defs, document_shapes(catalog, plan), normalize_dates)
+    return documents, catalog, plan

@@ -38,6 +38,11 @@ from relational_to_doc_oriented_nosql_migrator_spark.plans.planner import (
     Collection,
     NoSQLPlan,
 )
+from relational_to_doc_oriented_nosql_migrator_spark.plans.shape import (
+    Field,
+    Shape,
+    document_shapes,
+)
 
 # When the parent table has only a handful of rows, each nesting group is
 # a corpus-share-sized document (5 regions -> ~1/5 of everything under
@@ -230,33 +235,30 @@ def materialize_streamed_root(
     under the nested schema (pinned by tests/test_streamed_sink.py)."""
     if isinstance(child_names, str):
         child_names = [child_names]
-    child_names = _dedupe(child_names)
-    root = next(c for c in plan.collections if c.name == root_name)
+    child_names = set(child_names)
+    root = next(s for s in document_shapes(catalog, plan)
+                if s.name == root_name)
     # Plan order, regardless of caller order:
-    heavies = [e for e in root.embedded if e.name in set(child_names)]
-    missing = set(child_names) - {e.name for e in root.embedded}
+    heavies = [e for e in root.embedded if e.name in child_names]
+    missing = child_names - {e.name for e in root.embedded}
     if missing:
         raise ValueError(f"{root_name} has no embedded child {missing}")
-    df, attrs = _root_frame(tables, catalog, root, normalize_dates)
-    heavy_set = {e.name for e in heavies}
+    df = _root_frame(tables, root, normalize_dates)
     for emb in root.embedded:
-        if emb.name in heavy_set:
+        if emb.name in child_names:
             continue
         df = _attach_embedded(tables, catalog, df, root.name, emb,
                               normalize_dates)
-    # Normal-mode column order is attrs..., then embedded children in
+    # Normal-mode column order is the fields, then embedded children in
     # plan order (each attach appends its array column): splice the
     # heavy children back at their positions.
-    projected = [a for a in attrs if a in df.columns]
-    order = projected + [e.name for e in root.embedded]
+    order = _field_names(root) + [e.name for e in root.embedded]
     segs = _split_segments(order, [e.name for e in heavies],
                            set(df.columns))
-    cols = []
-    for i, e in enumerate(heavies):
-        fk = _find_fk(catalog, e.name, root_name)
-        cols.append(
-            _stream_key(F.col(fk.referenced_column)).alias(f"__fk{i}")
-        )
+    cols = [
+        _stream_key(F.col(e.parent_key)).alias(f"__fk{i}")
+        for i, e in enumerate(heavies)
+    ]
     for i, seg in enumerate(segs):
         cols.append(
             (
@@ -266,8 +268,7 @@ def materialize_streamed_root(
         )
     roots = df.select(*cols)
     children = [
-        _streamed_level(tables, catalog, e, root_name, normalize_dates)
-        for e in heavies
+        _streamed_level(tables, catalog, e, normalize_dates) for e in heavies
     ]
     return StreamedRoot(roots=roots, children=children)
 
@@ -275,8 +276,7 @@ def materialize_streamed_root(
 def _streamed_level(
     tables: dict[str, DataFrame],
     catalog: Catalog,
-    emb: Collection,
-    parent_table: str,
+    emb: Shape,
     normalize_dates: bool,
 ) -> StreamedLevel:
     """One heavy embedded collection as a streamed level. Recurses while
@@ -299,7 +299,7 @@ def _streamed_level(
     ]
     if not heavy or not 0 < my_rows <= SMALL_PARENT_ROWS:
         df, fields, fk_col = _prepare_child(
-            tables, catalog, emb, parent_table, normalize_dates
+            tables, catalog, emb, normalize_dates
         )
         rows = df.filter(F.col(fk_col).isNotNull()).select(
             _stream_key(F.col(fk_col)).alias("__pk"),
@@ -308,19 +308,18 @@ def _streamed_level(
         return StreamedLevel(name=emb.name, rows=rows)
     heavy_names = [n.name for n in heavy]
     frag_df, frag_fields, frag_fk = _prepare_child(
-        tables, catalog, emb, parent_table, normalize_dates,
+        tables, catalog, emb, normalize_dates,
         skip_children=set(heavy_names),
     )
     # frag_fields lacks the heavy children; their normal-mode positions
-    # are attrs..., then embedded in plan order.
-    full_order = _dedupe(emb.attributes) + [n.name for n in emb.embedded]
+    # are the fields, then embedded in plan order.
+    full_order = _field_names(emb) + [n.name for n in emb.embedded]
     segs = _split_segments(full_order, heavy_names, set(frag_fields))
     cols = [_stream_key(F.col(frag_fk)).alias("__pk")]
     for j, n in enumerate(heavy):
-        hfk = _find_fk(catalog, n.name, emb.name)
         cols.append(
             F.coalesce(
-                _stream_key(F.col(hfk.referenced_column)),
+                _stream_key(F.col(n.parent_key)),
                 F.lit(NULL_KEY_SENTINEL),
             ).alias(f"__k{j}")
         )
@@ -336,7 +335,7 @@ def _streamed_level(
         name=emb.name,
         fragments=fragments,
         children=[
-            _streamed_level(tables, catalog, n, emb.name, normalize_dates)
+            _streamed_level(tables, catalog, n, normalize_dates)
             for n in heavy
         ],
     )
@@ -365,17 +364,16 @@ def normalize_date_columns(df: DataFrame) -> DataFrame:
     ])
 
 
-def _dedupe(names: list[str]) -> list[str]:
-    seen: set[str] = set()
-    out: list[str] = []
-    for n in names:
-        if n not in seen:
-            seen.add(n)
-            out.append(n)
-    return out
+def _field_names(shape: Shape) -> list[str]:
+    return [f.name for f in shape.fields]
 
 
-def _subtree_rows(catalog: Catalog, emb: Collection) -> int:
+def _field_col(f: Field, prefix: str = "") -> Column:
+    col = F.col(prefix + f.column)
+    return col if prefix + f.column == f.name else col.alias(f.name)
+
+
+def _subtree_rows(catalog: Catalog, emb: Collection | Shape) -> int:
     """Catalog row count of an embedded collection plus everything nested
     under it — the true payload volume of the child frame being
     repartitioned, since earlier attaches fold descendants into arrays."""
@@ -385,34 +383,28 @@ def _subtree_rows(catalog: Catalog, emb: Collection) -> int:
     return rows
 
 
-def _find_fk(catalog: Catalog, child: str, parent: str):
-    meta = catalog.get_table(child)
-    for fk in meta.foreign_keys:
-        if fk.referenced_table == parent:
-            return fk
-    raise ValueError(f"no FK from {child} to {parent}")
+def _table(tables: dict[str, DataFrame], name: str,
+           normalize_dates: bool) -> DataFrame:
+    df = tables[name]
+    return normalize_date_columns(df) if normalize_dates else df
 
 
 def _prepare_child(
     tables: dict[str, DataFrame],
     catalog: Catalog,
-    emb: Collection,
-    parent_table: str,
+    emb: Shape,
     normalize_dates: bool,
     skip_children: set[str] | None = None,
 ) -> tuple[DataFrame, list[str], str]:
     """Build the child DataFrame for one embedded collection.
 
-    Returns (df, struct_field_names, fk_column): df carries the deduped
-    attribute columns, any already-nested child arrays, and the FK column
-    linking it to the parent. skip_children omits embedded collections
-    (the streamed-assembly path splices them back in file space — see
+    Returns (df, struct_field_names, link_column): df carries the
+    fields, any already-nested child arrays, and the link column to the
+    parent. skip_children omits embedded collections (the
+    streamed-assembly path splices them back in file space — see
     StreamedLevel).
     """
-    fk = _find_fk(catalog, emb.name, parent_table)
-    df = tables[emb.name]
-    if normalize_dates:
-        df = normalize_date_columns(df)
+    df = _table(tables, emb.name, normalize_dates)
 
     # Bottom-up: attach this collection's own embedded children first, so
     # their arrays become ordinary columns of the child.
@@ -422,52 +414,29 @@ def _prepare_child(
         df = _attach_embedded(tables, catalog, df, emb.name, nested,
                               normalize_dates)
 
-    attrs = _dedupe(emb.attributes)
-
-    if emb.embedded_attributes_from:
-        # Two-way embedded junction: denormalize the other endpoint's
-        # attributes into each junction document (reference
-        # server/DBMigration.js:524-575). The reference's per-junction-row
-        # point probe is an inner equi-join with fan-out.
-        other = emb.embedded_attributes_from
-        other_fk = _find_fk(catalog, emb.name, other)
-        other_meta = catalog.get_table(other)
-        other_df = tables[other]
-        if normalize_dates:
-            other_df = normalize_date_columns(other_df)
-        other_cols = [c for c in other_meta.columns
-                      if c != other_fk.referenced_column]
-        prefixed = other_df.select(
-            [F.col(other_fk.referenced_column).alias("__other_key")]
-            + [F.col(c).alias(f"__other_{c}") for c in other_cols]
+    prefix = ""
+    if emb.other:
+        # Two-way embedded junction: the reference's per-junction-row
+        # point probe (server/DBMigration.js:524-575) is an inner
+        # equi-join with fan-out; the other endpoint's columns come in
+        # prefixed and replace the junction's (Shape.other).
+        other = emb.other
+        prefix = "__other_"
+        prefixed = _table(tables, other.table, normalize_dates).select(
+            [F.col(other.key).alias("__other_key")]
+            + [F.col(f.column).alias(prefix + f.column)
+               for f in emb.fields if f.other]
         )
         df = df.join(
-            prefixed,
-            df[other_fk.column] == prefixed["__other_key"],
-            "inner",
+            prefixed, df[other.column] == prefixed["__other_key"], "inner"
         )
-
-        # Attribute resolution mirrors the reference's merge order: the
-        # junction document is built first, then matching other-endpoint
-        # values overwrite it (server/DBMigration.js:559-569).
-        def resolve(attr: str) -> Column:
-            if attr in other_cols:
-                return F.col(f"__other_{attr}").alias(attr)
-            return F.col(attr)
-
-        keep = [resolve(a) for a in attrs]
-        keep += [F.col(n.name) for n in embedded]
-        keep.append(F.col(fk.column))
-        df = df.select(*keep)
-    else:
-        keep = [F.col(a) for a in attrs]
-        keep += [F.col(n.name) for n in embedded]
-        if fk.column not in attrs:
-            keep.append(F.col(fk.column))
-        df = df.select(*keep)
-
-    fields = attrs + [n.name for n in embedded]
-    return df, fields, fk.column
+    names = _field_names(emb)
+    keep = [_field_col(f, prefix if f.other else "") for f in emb.fields]
+    keep += [F.col(n.name) for n in embedded]
+    if emb.link not in names:
+        keep.append(F.col(emb.link))
+    fields = names + [n.name for n in embedded]
+    return df.select(*keep), fields, emb.link
 
 
 def _attach_embedded(
@@ -475,14 +444,13 @@ def _attach_embedded(
     catalog: Catalog,
     parent_df: DataFrame,
     parent_table: str,
-    emb: Collection,
+    emb: Shape,
     normalize_dates: bool,
 ) -> DataFrame:
     """Nest one embedded collection under parent_df as an array column."""
     child_df, fields, fk_col = _prepare_child(
-        tables, catalog, emb, parent_table, normalize_dates
+        tables, catalog, emb, normalize_dates
     )
-    fk = _find_fk(catalog, emb.name, parent_table)
 
     # Repartition on the FK BEFORE aggregating: map-side partial
     # collect_list gives zero reduction (it's a list append), but it
@@ -539,7 +507,7 @@ def _attach_embedded(
     right = grouped if parent_is_raw else grouped.hint("shuffle_hash")
     out = left.join(
         right,
-        parent_df[fk.referenced_column] == grouped["__nest_key"],
+        parent_df[emb.parent_key] == grouped["__nest_key"],
         "left",
     ).drop("__nest_key")
     return out
@@ -547,27 +515,15 @@ def _attach_embedded(
 
 def _root_frame(
     tables: dict[str, DataFrame],
-    catalog: Catalog,
-    root: Collection,
+    root: Shape,
     normalize_dates: bool,
-) -> tuple[DataFrame, list[str]]:
+) -> DataFrame:
     """A root collection's own document fields, before any child is
-    attached, and its deduplicated attribute list. An attribute matches a
-    column by name or by name+'_REF' (reference server/DBMigration.js:
-    441-447); `filter_nonempty_doc` drops documents where no attribute
-    matched (reference server/DBMigration.js:473,481,491)."""
-    df = tables[root.name]
-    if normalize_dates:
-        df = normalize_date_columns(df)
-    attrs = _dedupe(root.attributes)
-    table_columns = catalog.get_table(root.name).columns
-    cols = []
-    for attr in attrs:
-        if attr in table_columns:
-            cols.append(F.col(attr))
-        elif attr.endswith("_REF") and attr[:-4] in table_columns:
-            cols.append(F.col(attr[:-4]).alias(attr))
-    return df.select(*cols).na.drop(how="all", subset=attrs), attrs
+    attached; `filter_nonempty_doc` drops documents where no field is
+    set (reference server/DBMigration.js:473,481,491)."""
+    df = _table(tables, root.name, normalize_dates)
+    return df.select(*[_field_col(f) for f in root.fields]).na.drop(
+        how="all", subset=_field_names(root))
 
 
 def materialize(
@@ -576,10 +532,11 @@ def materialize(
     plan: NoSQLPlan,
     normalize_dates: bool = True,
 ) -> dict[str, DataFrame]:
-    """Materialize every root collection of the plan as a nested DataFrame."""
+    """Materialize every root collection of the plan as a nested
+    DataFrame, built from its document shape (plans/shape.py)."""
     out: dict[str, DataFrame] = {}
-    for root in plan.collections:
-        df, _attrs = _root_frame(tables, catalog, root, normalize_dates)
+    for root in document_shapes(catalog, plan):
+        df = _root_frame(tables, root, normalize_dates)
         for emb in root.embedded:
             df = _attach_embedded(tables, catalog, df, root.name, emb,
                                   normalize_dates)

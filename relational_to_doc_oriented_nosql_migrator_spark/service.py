@@ -1,4 +1,4 @@
-"""HTTP migration service — the reference's REST surface, Spark-backed.
+"""HTTP migration service — the reference's REST surface.
 
 The reference engine IS an HTTP service: `POST /migration` takes a
 multipart upload (fields `sqlFile`, optional `logFile`, form field
@@ -9,28 +9,33 @@ server/index.js:33-61 for the POST contract, :63-66 for the download,
 server/WriteToFile.js:5-62 for the results layout). This module closes
 that last reference-surface gap with a dependency-free stdlib server
 (`http.server` + `email` multipart parsing — no Flask/Express
-analogue is installable here) around the same engine seams the CLI
-uses: sources/sqldump.import_sql_dump -> workload ->
-plans.convert_schema -> plans.materialize -> sinks.
+analogue is installable here) around the engine seam the CLI uses for
+a dump: engine.migrate_dump_on_driver (sources/sqldump.read_dump ->
+workload -> plans.convert_schema -> plans/documents.py) ->
+sinks.write_documents.
 
-Scale stance: the HTTP surface is a CONTROL-PLANE endpoint — dump
-parsing, planning, and the response payload are metadata-sized, and
-the collection write behind /download/result uses the sink's
-single-file parity mode exactly like the reference's per-collection
+Scale stance: the HTTP surface is a CONTROL-PLANE endpoint. An upload
+is at most MAX_UPLOAD_BYTES and is parsed into Python rows on the
+driver, so its documents are built there too, with no Spark session
+and no JVM; they are the same JSON texts the Spark nesting path writes
+for the dump. The collection files behind /download/result use the
+sink's single-file parity mode, like the reference's per-collection
 JSON.stringify files (server/WriteToFile.js:13-20). A corpus-scale
-migration goes through engine.migrate / the distributed sink, not an
-HTTP upload; this endpoint mirrors the reference's actual usage (a
-schema dump + query log, both small).
+migration goes through the CLI's parquet path on Spark, not an HTTP
+upload; this endpoint mirrors the reference's actual usage (a schema
+dump + query log, both small).
 
-Requests are independent. Each migration runs in its own Spark session
-(`spark.newSession()`, so the sink's scoped conf changes never reach
-another request) and writes into its own directory, then publishes
-`<resultId>.zip`. The POST response carries `resultId`, and
+Requests are independent. Each migration writes into its own
+directory, then publishes `<resultId>.zip`. The POST response carries
+`resultId` (and the `X-Migration-Id` header), and
 `GET /download/result?id=<resultId>` serves exactly that archive; a
 bare `GET /download/result` (what the reference client calls) serves
-the most recently completed one. At most `defaultParallelism`
-migrations run at once; the rest wait for a slot. The server keeps
-the last KEEP_RESULTS archives.
+the most recently completed one. At most `SPARK_GRAFT_CPUS` migrations
+(the CPU count when unset) run at once; the rest wait for a slot. The
+server keeps the last KEEP_RESULTS archives. Each POST writes one JSON
+line to stderr: its id, status, stage wall seconds, documents per
+collection and bytes in and out, and on a failure the error class
+(after the traceback).
 
 Run:  python -m relational_to_doc_oriented_nosql_migrator_spark.service [--port 3001]
 """
@@ -47,21 +52,28 @@ import shutil
 import sys
 import tempfile
 import threading
+import time
 import traceback
 import urllib.parse
 import uuid
 from collections import OrderedDict
 from http.server import BaseHTTPRequestHandler, ThreadingHTTPServer
 
-from relational_to_doc_oriented_nosql_migrator_spark.engine import (
+from relational_to_doc_oriented_nosql_migrator_spark.engine import (  # noqa: F401
+    timed_stage,
+    migrate_dump_on_driver,
     migrate_from_dump,
 )
 from relational_to_doc_oriented_nosql_migrator_spark.functions.template import (
     document_template,
 )
-from relational_to_doc_oriented_nosql_migrator_spark.sinks import (
+from relational_to_doc_oriented_nosql_migrator_spark.sinks import (  # noqa: F401
+    write_documents,
     write_json_collections,
 )
+
+# migrate_from_dump and write_json_collections (the Spark path) stay
+# importable here: perfbench/spans.py wraps them by these module names.
 
 ZIP_NAME = "collections.zip"
 # Archives the server keeps; publishing a newer one deletes the oldest
@@ -147,42 +159,41 @@ def _collections_payload(plan) -> list[dict]:
 
 
 def run_migration(
-    spark,
     sql_text: str,
     log_content: str | None,
     dialect: str,
     results_dir: str,
+    record: dict | None = None,
 ) -> dict:
     """POST /migration body: parse the dump, fold in the workload, plan,
-    materialize, write the zipped JSON collections for the download
-    endpoint, and return the reference-shaped response payload plus the
-    `resultId` the archive is published under.
+    build the documents on the driver, write the zipped JSON collections
+    for the download endpoint, and return the reference-shaped response
+    payload plus the `resultId` the archive is published under.
 
-    Runs in a new session of `spark`: the sink's scoped conf changes
-    stay inside this request. The per-collection files go to a
-    directory of this request alone, which is removed once the zip is
-    built; the zip is then published by a rename to
-    result_zip(results_dir, resultId), so that path only ever holds a
-    complete archive."""
-    session = spark.newSession()
-    result_id = uuid.uuid4().hex
+    The per-collection files go to a directory of this request alone,
+    which is removed once the zip is built; the zip is then published by
+    a rename to result_zip(results_dir, resultId), so that path only
+    ever holds a complete archive. `record`, when given, supplies the
+    id (`id`) and receives the stage wall seconds (`stages`), documents
+    per collection (`documents`) and the archive size (`bytes_out`)."""
+    record = {} if record is None else record
+    result_id = record.setdefault("id", uuid.uuid4().hex)
+    stages = record.setdefault("stages", {})
     work_dir = os.path.join(results_dir, result_id)
     try:
-        collections, catalog, plan = migrate_from_dump(
-            session, sql_text, log_content=log_content, log_dialect=dialect,
-            return_plan=True,
+        documents, catalog, plan = migrate_dump_on_driver(
+            sql_text, log_content=log_content, log_dialect=dialect,
+            stages=stages,
         )
         # Per-collection whole-array JSON files + zip, like the
         # reference's WriteToFile + archiver flow
         # (server/WriteToFile.js:5-62). The empty-collection drop rides
         # along (filter_nonempty_collection).
         zip_tmp = os.path.join(work_dir, ZIP_NAME)
-        write_json_collections(
-            collections,
-            work_dir,
-            single_file=True,
-            zip_path=zip_tmp,
-        )
+        with timed_stage(stages, "zip"):
+            record["documents"] = write_documents(
+                documents, work_dir, single_file=True, zip_path=zip_tmp)
+        record["bytes_out"] = os.path.getsize(zip_tmp)
         os.replace(zip_tmp, result_zip(results_dir, result_id))
     finally:
         shutil.rmtree(work_dir, ignore_errors=True)
@@ -214,9 +225,9 @@ def _parse_multipart(content_type: str, body: bytes) -> dict[str, str]:
 
 
 class MigrationHandler(BaseHTTPRequestHandler):
-    """One engine-backed handler per server; the SparkSession, the
-    results directory, the published results and the admission
-    semaphore hang off the server object (set by serve())."""
+    """One engine-backed handler per server; the results directory, the
+    published results and the admission semaphore hang off the server
+    object (set by serve())."""
 
     # quiet request logging (the reference logs nothing per request)
     def log_message(self, *_args):
@@ -238,43 +249,53 @@ class MigrationHandler(BaseHTTPRequestHandler):
         if self.path != "/migration":
             self._send(404, b"Not Found", "text/plain")
             return
+        start = time.perf_counter()
+        record = {"id": uuid.uuid4().hex}
         try:
-            length = int(self.headers.get("Content-Length", "0"))
+            record["bytes_in"] = length = int(
+                self.headers.get("Content-Length", "0"))
             if length > MAX_UPLOAD_BYTES:
                 # the unread body must not be taken for a next request
                 self.close_connection = True
-                self._send(413, b"Payload Too Large", "text/plain")
-                return
-            if length < 0:
-                raise ValueError(f"invalid Content-Length {length}")
-            fields = _parse_multipart(
-                self.headers.get("Content-Type", ""),
-                self.rfile.read(length),
-            )
-            sql_text = fields.get("sqlFile")
-            if sql_text is None:
-                raise ValueError("sqlFile part is required")
-            log_content = fields.get("logFile") or None
-            db_type = fields.get("dbType") or "mysql"
-            dialect = ("postgres" if db_type.lower().startswith("postgres")
-                       else "mysql")
-            with self.server.admission:
-                payload = run_migration(
-                    self.server.spark, sql_text, log_content, dialect,
-                    self.server.results_dir,
-                )
-            self.server.results.publish(payload["resultId"])
-            self._send(
-                200,
-                json.dumps(payload).encode(),
-                "application/json",
-            )
-        except Exception:
+                response = (413, b"Payload Too Large", "text/plain")
+            else:
+                response = (200, json.dumps(self._migrate(
+                    length, record)).encode(), "application/json")
+        except Exception as exc:
             # The client gets the reference's blanket 500
             # (server/index.js:55-58); the cause goes to the log.
+            record["error"] = type(exc).__name__
             sys.stderr.write("POST /migration failed\n"
                              + traceback.format_exc())
-            self._send(500, b"Internal Server Error", "text/plain")
+            response = (500, b"Internal Server Error", "text/plain")
+        record["status"] = response[0]
+        record["wall_s"] = round(time.perf_counter() - start, 6)
+        # logged before the response goes out, so a client that has its
+        # answer can find the record
+        sys.stderr.write(json.dumps(record) + "\n")
+        self._send(*response, {"X-Migration-Id": record["id"]})
+
+    def _migrate(self, length: int, record: dict) -> dict:
+        if length < 0:
+            raise ValueError(f"invalid Content-Length {length}")
+        fields = _parse_multipart(
+            self.headers.get("Content-Type", ""),
+            self.rfile.read(length),
+        )
+        sql_text = fields.get("sqlFile")
+        if sql_text is None:
+            raise ValueError("sqlFile part is required")
+        log_content = fields.get("logFile") or None
+        db_type = fields.get("dbType") or "mysql"
+        dialect = ("postgres" if db_type.lower().startswith("postgres")
+                   else "mysql")
+        with self.server.admission:
+            payload = run_migration(
+                sql_text, log_content, dialect, self.server.results_dir,
+                record,
+            )
+        self.server.results.publish(payload["resultId"])
+        return payload
 
     def do_GET(self):
         url = urllib.parse.urlsplit(self.path)
@@ -304,18 +325,17 @@ class MigrationHandler(BaseHTTPRequestHandler):
         )
 
 
-def serve(spark, port: int = 0, results_dir: str | None = None):
+def serve(port: int = 0, results_dir: str | None = None):
     """Start the service on `port` (0 = ephemeral); returns the
     ThreadingHTTPServer (serve_forever runs on a daemon thread — call
     .shutdown() to stop). results_dir defaults to a fresh tempdir."""
     server = ThreadingHTTPServer(("127.0.0.1", port), MigrationHandler)
-    server.spark = spark
     server.results_dir = results_dir or tempfile.mkdtemp(
         prefix="sg_http_results_"
     )
     server.results = _Results(server.results_dir)
     server.admission = threading.BoundedSemaphore(
-        spark.sparkContext.defaultParallelism)
+        int(os.environ.get("SPARK_GRAFT_CPUS") or os.cpu_count()))
     t = threading.Thread(target=server.serve_forever, daemon=True)
     t.start()
     return server
@@ -324,14 +344,11 @@ def serve(spark, port: int = 0, results_dir: str | None = None):
 def main(argv=None) -> int:
     import argparse
 
-    from relational_to_doc_oriented_nosql_migrator_spark.session import get_spark
-
     ap = argparse.ArgumentParser(description=__doc__)
     ap.add_argument("--port", type=int, default=3001)
     ap.add_argument("--results-dir", default=None)
     args = ap.parse_args(argv)
-    spark = get_spark(app_name="migration-service")
-    server = serve(spark, args.port, args.results_dir)
+    server = serve(args.port, args.results_dir)
     print(f"serving on 127.0.0.1:{server.server_address[1]} "
           f"(results: {server.results_dir})")
     try:

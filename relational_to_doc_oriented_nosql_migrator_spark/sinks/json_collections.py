@@ -583,18 +583,61 @@ def write_json_collections(
                         counts[name] = n_docs
     written = [n for n in collections if wrote.get(n)]
     if zip_path:
-        zip_abs = os.path.abspath(zip_path)
-        with zipfile.ZipFile(zip_path, "w", zipfile.ZIP_DEFLATED) as zf:
-            for root, _dirs, files in os.walk(out_dir):
-                for f in files:
-                    # Collection files only: not the Hadoop writer's
-                    # checksums and commit marker.
-                    if f == "_SUCCESS" or f.endswith(".crc"):
-                        continue
-                    full = os.path.join(root, f)
-                    # Never zip the archive into itself (zip_path may live
-                    # inside out_dir, like the reference's results/ dir).
-                    if os.path.abspath(full) == zip_abs:
-                        continue
-                    zf.write(full, os.path.relpath(full, out_dir))
+        _zip_dir(out_dir, zip_path)
     return written
+
+
+def _zip_dir(out_dir: str, zip_path: str) -> None:
+    """Pack out_dir's collection files into zip_path (reference
+    results/collections.zip parity)."""
+    zip_abs = os.path.abspath(zip_path)
+    with zipfile.ZipFile(zip_path, "w", zipfile.ZIP_DEFLATED) as zf:
+        for root, _dirs, files in os.walk(out_dir):
+            for f in files:
+                # Collection files only: not the Hadoop writer's
+                # checksums and commit marker.
+                if f == "_SUCCESS" or f.endswith(".crc"):
+                    continue
+                full = os.path.join(root, f)
+                # Never zip the archive into itself (zip_path may live
+                # inside out_dir, like the reference's results/ dir).
+                if os.path.abspath(full) == zip_abs:
+                    continue
+                zf.write(full, os.path.relpath(full, out_dir))
+
+
+def write_documents(
+    documents: dict[str, list[str]],
+    out_dir: str,
+    single_file: bool = False,
+    zip_path: str | None = None,
+) -> dict[str, int]:
+    """write_json_collections for documents already rendered on the
+    driver ({collection: [document JSON]}, plans/documents.py), in the
+    same layout: `<name>.json` arrays in single_file mode, else one
+    NDJSON `<name>/part-00000.json` that replaces the whole earlier
+    `<name>/`. An empty collection writes nothing and removes its
+    earlier output. Returns {name: documents written} for the written
+    collections. Local paths only."""
+    os.makedirs(out_dir, exist_ok=True)
+    counts: dict[str, int] = {}
+    for name, docs in documents.items():
+        target = os.path.join(out_dir, name)
+        if single_file:
+            _rm_one(f"{target}.json")
+        else:
+            _rm_rf(target)
+        if not docs:
+            continue
+        if single_file:
+            path, text = f"{target}.json", "[" + ",".join(docs) + "]"
+        else:
+            os.makedirs(target)
+            path = os.path.join(target, "part-00000.json")
+            text = "\n".join(docs) + "\n"
+        with open(path, "w", encoding="utf-8") as fh:
+            fh.write(text)
+        counts[name] = len(docs)
+    if zip_path:
+        _zip_dir(out_dir, zip_path)
+    return counts

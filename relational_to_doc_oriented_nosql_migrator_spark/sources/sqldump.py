@@ -350,18 +350,34 @@ def _parse_dump(
     return db_name, defs
 
 
+def read_dump(
+    sql_text: str, default_db: str = "db"
+) -> tuple[str, dict[str, _TableDef], Catalog]:
+    """Dump text -> (db_name, parsed tables with their rows, annotated
+    Catalog), on the driver. The catalog carries the same metadata the
+    reference introspects from a live server, so `convert_schema` runs on
+    dump input unchanged."""
+    db_name, defs = _parse_dump(sql_text, default_db)
+    catalog = Catalog([
+        TableMeta(
+            name=tdef.name,
+            num_rows=len(tdef.rows),
+            columns=[n for n, _ in tdef.fields],
+            primary_keys=tdef.primary_keys,
+            foreign_keys=tdef.foreign_keys,
+        )
+        for tdef in defs.values()
+    ])
+    return db_name, defs, catalog
+
+
 def import_sql_dump(
     spark: SparkSession, sql_text: str, default_db: str = "db"
 ) -> tuple[str, dict[str, DataFrame], Catalog]:
-    """Dump text -> (db_name, DataFrames per table, annotated Catalog).
-
-    The catalog carries the same metadata the reference introspects from a
-    live server, so `convert_schema`/`materialize` run on dump input
-    unchanged.
-    """
-    db_name, defs = _parse_dump(sql_text, default_db)
+    """Dump text -> (db_name, DataFrames per table, annotated Catalog)
+    (see read_dump)."""
+    db_name, defs, catalog = read_dump(sql_text, default_db)
     tables: dict[str, DataFrame] = {}
-    metas: list[TableMeta] = []
     for tdef in defs.values():
         columns = list(zip(*tdef.rows)) or [()] * len(tdef.fields)
         arrow = pa.Table.from_arrays(
@@ -374,13 +390,4 @@ def import_sql_dump(
         # spark.sql.execution.arrow.localRelationThreshold): every scan of
         # a dump table in the nesting jobs runs without a Python worker.
         tables[tdef.name] = spark.createDataFrame(arrow, tdef.schema)
-        metas.append(
-            TableMeta(
-                name=tdef.name,
-                num_rows=len(tdef.rows),
-                columns=[n for n, _ in tdef.fields],
-                primary_keys=tdef.primary_keys,
-                foreign_keys=tdef.foreign_keys,
-            )
-        )
-    return db_name, tables, Catalog(metas)
+    return db_name, tables, catalog

@@ -99,3 +99,40 @@ def test_cli_postgres_log_changes_the_plan(spark, tmp_path):
     # write-hot orders leaves the region tree for its own collection
     assert "orders" not in os.listdir(idle)
     assert "orders" in os.listdir(hot)
+
+
+def test_cli_dump_writes_ndjson_without_spark(tmp_path):
+    """--dump migrates on the driver: no SparkContext starts, and each
+    collection is one NDJSON part file that replaces the collection's
+    earlier directory as a whole."""
+    import subprocess
+    import sys
+
+    dump = tmp_path / "mini.sql"
+    dump.write_text(DUMP_FIXTURE)
+    out_dir = tmp_path / "out"
+    (out_dir / "dept").mkdir(parents=True)
+    (out_dir / "dept" / "part-00003-stale.json").write_text("{}\n")
+    code = (
+        "import sys\n"
+        "from pyspark import SparkContext\n"
+        "from relational_to_doc_oriented_nosql_migrator_spark import cli\n"
+        "assert cli.main(sys.argv[1:]) == 0\n"
+        "print(SparkContext._active_spark_context is None)\n"
+    )
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    out = subprocess.run(
+        [sys.executable, "-c", code, "--dump", str(dump), "--out",
+         str(out_dir), "--zip", str(tmp_path / "c.zip")],
+        capture_output=True, text=True, check=True, cwd=repo, timeout=120,
+    ).stdout.splitlines()
+    assert json.loads(out[0]) == {"out": str(out_dir),
+                                  "collections": {"dept": 3}}
+    assert out[1] == "True"
+    assert os.listdir(out_dir / "dept") == ["part-00000.json"]
+    lines = (out_dir / "dept" / "part-00000.json").read_text().splitlines()
+    assert sorted(json.loads(line)["id"] for line in lines) == [1, 2, 3]
+    import zipfile
+
+    with zipfile.ZipFile(tmp_path / "c.zip") as zf:
+        assert zf.namelist() == ["dept/part-00000.json"]

@@ -36,9 +36,9 @@ def _multipart(fields: dict) -> tuple[bytes, str]:
 
 
 @pytest.fixture(scope="module")
-def server(spark, tmp_path_factory):
+def server(tmp_path_factory):
     srv = service.serve(
-        spark, results_dir=str(tmp_path_factory.mktemp("results"))
+        results_dir=str(tmp_path_factory.mktemp("results"))
     )
     yield srv
     srv.shutdown()
@@ -119,8 +119,8 @@ def test_unknown_paths_404(server):
         assert ei.value.code == 404
 
 
-def test_download_before_any_migration_404(spark, tmp_path):
-    srv = service.serve(spark, results_dir=str(tmp_path / "empty"))
+def test_download_before_any_migration_404(tmp_path):
+    srv = service.serve(results_dir=str(tmp_path / "empty"))
     try:
         url = (f"http://127.0.0.1:{srv.server_address[1]}"
                "/download/result")
@@ -200,45 +200,6 @@ def test_download_by_unknown_or_malformed_id_404(server):
         assert ei.value.code == 404, query
 
 
-def test_request_leaves_root_session_conf_alone(server, spark, monkeypatch):
-    """The sink's scoped confs go to the request's own session: even
-    while the sink runs, the server's root session does not see them."""
-    import contextlib
-
-    from relational_to_doc_oriented_nosql_migrator_spark.sinks import (
-        json_collections as jc,
-    )
-
-    seen = []
-    original = jc._sort_based_collects
-
-    @contextlib.contextmanager
-    def spy(session):
-        with original(session):
-            seen.append(spark.conf.get(jc._OBJ_HASH_CONF, None))
-            yield
-
-    monkeypatch.setattr(jc, "_sort_based_collects", spy)
-    with _post(server, {"sqlFile": ("d.sql", DUMP_FIXTURE)}) as resp:
-        assert resp.status == 200
-    assert seen and seen == [None] * len(seen)
-    assert spark.conf.get(jc._OBJ_HASH_CONF, None) is None
-
-
-def test_requests_keep_the_listener_count_flat(server, spark):
-    """Each request's new session leaves nothing registered on the
-    shared SparkContext's listener bus (other tests' listeners may
-    still be going away, so the count may drop, never grow)."""
-    bus = spark.sparkContext._jsc.sc().listenerBus()
-    with _post(server, {"sqlFile": ("d.sql", DUMP_FIXTURE)}) as resp:
-        assert resp.status == 200
-    before = bus.listeners().size()
-    for _ in range(5):
-        with _post(server, {"sqlFile": ("d.sql", DUMP_FIXTURE)}) as resp:
-            assert resp.status == 200
-    assert bus.listeners().size() <= before
-
-
 @pytest.mark.parametrize("length, status", [
     (service.MAX_UPLOAD_BYTES + 1, 413),
     (-1, 500),  # read(-1) would read until the client closes
@@ -311,3 +272,69 @@ def test_results_retention_under_concurrent_publishers(tmp_path):
     assert len(kept) == service.KEEP_RESULTS
     on_disk = {name[:-4] for name in os.listdir(tmp_path)}
     assert on_disk == kept
+
+
+def test_each_post_logs_one_record_with_its_id(server, capfd):
+    """One JSON line per POST on stderr: id (= resultId = the
+    X-Migration-Id header), status, stage seconds, documents per
+    collection and bytes in and out; a failure adds its error class."""
+    capfd.readouterr()
+    with _post(server, {"sqlFile": ("d.sql", DUMP_FIXTURE)}) as resp:
+        result_id = json.load(resp)["resultId"]
+        assert resp.headers["X-Migration-Id"] == result_id
+    with pytest.raises(urllib.error.HTTPError) as ei:
+        _post(server, {"dbType": (None, "mysql")})  # sqlFile missing
+    failed_id = ei.value.headers["X-Migration-Id"]
+    ei.value.close()
+    records = [json.loads(line) for line in capfd.readouterr().err
+               .splitlines() if line.startswith("{")]
+    ok, failed = records
+    assert ok["id"] == result_id and ok["status"] == 200
+    assert set(ok["stages"]) == {"parse", "workload", "plan", "build", "zip"}
+    assert ok["documents"] == {"dept": 3}
+    assert ok["bytes_in"] > len(DUMP_FIXTURE) and ok["bytes_out"] > 0
+    assert failed["id"] == failed_id != result_id
+    assert failed["status"] == 500 and failed["error"] == "ValueError"
+
+
+def test_service_starts_no_jvm(tmp_path):
+    """serve() plus one POST and one download in a fresh process: no
+    SparkContext, no java child process, and the admission limit is
+    SPARK_GRAFT_CPUS."""
+    code = (
+        "import io, json, os, urllib.request, zipfile\n"
+        "from pyspark import SparkContext\n"
+        "from relational_to_doc_oriented_nosql_migrator_spark import service\n"
+        "from relational_to_doc_oriented_nosql_migrator_spark.operators."
+        "relational import DUMP_FIXTURE\n"
+        "from tests.test_http_service import _post\n"
+        f"srv = service.serve(results_dir={str(tmp_path)!r})\n"
+        "with _post(srv, {'sqlFile': ('d.sql', DUMP_FIXTURE)}) as r:\n"
+        "    rid = json.load(r)['resultId']\n"
+        "url = f'http://127.0.0.1:{srv.server_address[1]}"
+        "/download/result?id={rid}'\n"
+        "with urllib.request.urlopen(url) as r:\n"
+        "    docs = json.loads(zipfile.ZipFile(io.BytesIO(r.read()))"
+        ".read('dept.json'))\n"
+        "children = []\n"
+        "for pid in os.listdir('/proc'):\n"
+        "    try:\n"
+        "        with open(f'/proc/{pid}/stat') as fh:\n"
+        "            stat = fh.read()\n"
+        "    except OSError:\n"
+        "        continue\n"
+        "    if int(stat.rsplit(')', 1)[1].split()[1]) == os.getpid():\n"
+        "        children.append(stat.split('(', 1)[1].rsplit(')', 1)[0])\n"
+        "print(json.dumps({'docs': len(docs), 'children': children,\n"
+        "    'sc': SparkContext._active_spark_context is not None,\n"
+        "    'slots': srv.admission._initial_value}))\n"
+        "srv.shutdown()\n"
+    )
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    env = {**os.environ, "SPARK_GRAFT_CPUS": "3"}
+    out = subprocess.run([sys.executable, "-c", code], capture_output=True,
+                         text=True, check=True, cwd=repo, env=env,
+                         timeout=120).stdout
+    got = json.loads(out.strip().splitlines()[-1])
+    assert "java" not in got.pop("children")
+    assert got == {"docs": 3, "sc": False, "slots": 3}

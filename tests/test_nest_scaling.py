@@ -26,6 +26,9 @@ from relational_to_doc_oriented_nosql_migrator_spark.plans.nesting import (
 from relational_to_doc_oriented_nosql_migrator_spark.plans.planner import (
     Collection,
 )
+from relational_to_doc_oriented_nosql_migrator_spark.plans.shape import (
+    embedded_shape,
+)
 
 
 def _catalog(child_rows: int, grandchild_rows: int = 0) -> Catalog:
@@ -67,7 +70,7 @@ def _nest_exchange_counts(spark, child_rows: int) -> list[int]:
         [(i, f"c{i}", i % 10) for i in range(50)],
         "ck int, cval string, pk_fk int")
     cat = _catalog(child_rows=child_rows)
-    emb = Collection("c", ["ck", "cval"])
+    emb = embedded_shape(cat, "p", Collection("c", ["ck", "cval"]))
     out = _attach_embedded(
         {"p": parent, "c": child}, cat, parent, "p", emb,
         normalize_dates=False,
@@ -104,9 +107,10 @@ def test_large_child_scales_partitions(spark):
     parent = spark.createDataFrame([(1, "a")], "pk int, pname string")
     child = spark.createDataFrame(
         [(7, "x", 1), (8, "y", 1)], "ck int, cval string, pk_fk int")
+    cat = _catalog(child_rows=claimed)
     out = _attach_embedded(
-        {"p": parent, "c": child}, _catalog(child_rows=claimed),
-        parent, "p", Collection("c", ["ck", "cval"]),
+        {"p": parent, "c": child}, cat,
+        parent, "p", embedded_shape(cat, "p", Collection("c", ["ck", "cval"])),
         normalize_dates=False,
     )
     row = out.select("pk", F.to_json("c").alias("c")).collect()[0]

@@ -85,6 +85,7 @@ def generate(
     from relational_to_doc_oriented_nosql_migrator_spark.session import get_spark
     from relational_to_doc_oriented_nosql_migrator_spark.sources.parquet import (
         load_table,
+        read_footer,
     )
 
     if spark is None:
@@ -105,9 +106,9 @@ def generate(
         path = os.path.join(out_dir, f"{table}.parquet")
         df.write.mode("overwrite").parquet(path)
         if verbose:
-            # count the WRITTEN parquet (footer metadata) — re-counting
-            # df would re-execute the whole scale-up pipeline.
-            print(f"{table}: {spark.read.parquet(path).count()} rows")
+            # count the WRITTEN parquet from its footers: no Spark job
+            # (re-counting df would re-execute the whole scale-up).
+            print(f"{table}: {read_footer(out_dir, table).num_rows} rows")
 
     def wanted(table):
         return only is None or table in only
