@@ -139,19 +139,14 @@ def migrate_from_dump(
     log_content: str | None = None,
     log_dialect: str = "mysql",
     normalize_dates: bool = True,
-    return_plan: bool = False,
 ):
     """The reference's actual entry point (`POST /migration`, reference
     server/index.js:33-43 -> DBMigration.migrate): a SQL dump plus an
     optional query log in, nested document collections out. Schema, FK
     graph, and row counts come from the dump itself (sources/sqldump.py);
     the query log folds GAF/UAF workload stats into the embed-vs-reference
-    decision exactly as the parquet path does.
-
-    return_plan=True additionally returns the introspected catalog and
-    the conversion plan as (collections, catalog, plan) — the HTTP
-    service's response payload needs both, and this seam keeps it from
-    duplicating the dump pipeline."""
+    decision exactly as the parquet path does. Returns (collections,
+    catalog, plan), like migrate_dump_on_driver."""
     from relational_to_doc_oriented_nosql_migrator_spark.sources.sqldump import (
         import_sql_dump,
     )
@@ -159,9 +154,7 @@ def migrate_from_dump(
     _db, tables, catalog = import_sql_dump(spark, sql_text)
     plan, collections = _plan_and_materialize(
         tables, catalog, log_content, log_dialect, normalize_dates)
-    if return_plan:
-        return collections, catalog, plan
-    return collections
+    return collections, catalog, plan
 
 
 @contextlib.contextmanager

@@ -161,18 +161,24 @@ def stream_plan(catalog: Catalog, plan: NoSQLPlan) -> dict[str, list[str]]:
     each. Catalog-metadata only — no Spark job."""
     out: dict[str, list[str]] = {}
     for root in plan.collections:
-        if not root.embedded:
-            continue
-        parent_rows = catalog.get_table(root.name).num_rows or 0
-        if parent_rows == 0 or parent_rows > SMALL_PARENT_ROWS:
-            continue
-        heavy = [
-            e.name for e in root.embedded
-            if _subtree_rows(catalog, e) >= HEAVY_ROOT_SUBTREE_ROWS
-        ]
+        heavy = _heavy_children(catalog, root)
         if heavy:
-            out[root.name] = heavy
+            out[root.name] = [e.name for e in heavy]
     return out
+
+
+def _heavy_children(catalog: Catalog, node: Collection | Shape) -> list:
+    """The one streaming rule, for a root and for every streamed level
+    below it: node's embedded children whose subtree has at least
+    HEAVY_ROOT_SUBTREE_ROWS rows (plan order), or none unless node has
+    1..SMALL_PARENT_ROWS catalog rows."""
+    if not node.embedded:
+        return []
+    rows = catalog.get_table(node.name).num_rows or 0
+    if not 0 < rows <= SMALL_PARENT_ROWS:
+        return []
+    return [e for e in node.embedded
+            if _subtree_rows(catalog, e) >= HEAVY_ROOT_SUBTREE_ROWS]
 
 
 def _stream_key(col: Column) -> Column:
@@ -292,12 +298,8 @@ def _streamed_level(
     keep their fragment line framing via NULL_KEY_SENTINEL (the sink's
     directory lookup misses, omitting the array — same result as the
     distributed path's null-key FK join)."""
-    my_rows = catalog.get_table(emb.name).num_rows or 0
-    heavy = [
-        n for n in emb.embedded
-        if _subtree_rows(catalog, n) >= HEAVY_ROOT_SUBTREE_ROWS
-    ]
-    if not heavy or not 0 < my_rows <= SMALL_PARENT_ROWS:
+    heavy = _heavy_children(catalog, emb)
+    if not heavy:
         df, fields, fk_col = _prepare_child(
             tables, catalog, emb, normalize_dates
         )

@@ -1,8 +1,6 @@
 """SparkSession factory tuned for the engine.
 
 Defaults are chosen for correctness-at-scale first:
-- AQE on (runtime re-plan, skew-join splitting, partition coalescing) so the
-  same logical plans survive a 100x scale-up without hand-tuning.
 - Session timezone pinned to UTC so timestamp semantics are deterministic
   across engines (the DuckDB oracle reads the same naive parquet timestamps).
 - Arrow enabled for any pandas-UDF path (vectorized Python boundary).
@@ -33,16 +31,12 @@ def get_spark(
     builder = (
         SparkSession.builder.appName(app_name)
         .master(master)
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-        .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config(
             "spark.sql.shuffle.partitions",
             str(shuffle_partitions or DEFAULT_SHUFFLE_PARTITIONS),
         )
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.sql.parquet.filterPushdown", "true")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 << 20))
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
         # HotSpot never JIT-compiles methods over 8000 bytecode bytes
@@ -63,7 +57,6 @@ def get_spark(
             "-XX:-DontCompileHugeMethods -XX:ReservedCodeCacheSize=512m",
         )
         .config("spark.ui.enabled", "false")
-        .config("spark.sql.files.maxPartitionBytes", str(128 << 20))
         # NOTE on spark.cleaner.periodicGC.interval: deliberately LEFT AT
         # the 30min default here. ContextCleaner frees broadcast/shuffle
         # residue only when the driver GC collects the weak refs, and a

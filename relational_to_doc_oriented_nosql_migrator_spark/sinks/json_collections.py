@@ -1,10 +1,12 @@
 """JSON collection sink (operator `sink_json_collections`, SURVEY §2.1).
 
 The reference writes one JSON file per non-empty collection (a single JSON
-array per file) and zips the directory (reference server/WriteToFile.js:5-62;
+array per file) and zips the results (reference server/WriteToFile.js:5-62;
 empty-collection filter at :9-11). Spark-first equivalent: distributed
 newline-delimited JSON per collection directory — the scalable layout — with
 an optional single-array file mode for byte-level parity on small outputs.
+write_documents owns the layout of documents held on the driver (both
+modes) and every zip holds only the collections its call wrote.
 
 Null fields are omitted on write (Spark's JSON writer default), matching the
 reference's key-absent semantics for unmatched attributes / empty embeds.
@@ -20,10 +22,11 @@ import os
 import urllib.parse
 import uuid
 import zipfile
+from concurrent.futures import ThreadPoolExecutor
 from dataclasses import dataclass
 
 from pyarrow import fs as pafs
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
 
 # Hash aggregation holds EVERY group's collect_list buffer of a partition
@@ -119,14 +122,6 @@ def _iter_part_lines(dirpath: str):
                 line = line.rstrip("\n")
                 if line:
                     yield line
-
-
-def _part_bytes(dirpath: str) -> int:
-    """Total bytes across a directory's part-* files — the post-write
-    emptiness check (an empty NDJSON write is all-zero-byte part files),
-    replacing the pre-write isEmpty() whose take(1) re-executed the
-    whole map side of a nested collection's plan."""
-    return sum(i.size or 0 for i in _part_files(dirpath)[1])
 
 
 def _listdir(tmp: str, prefix: str) -> list[tuple[str, str]]:
@@ -441,6 +436,39 @@ def _write_streamed(pieces, target: str) -> int:
             _rm_rf(t)
 
 
+def _pooled(job, frames: dict[str, DataFrame]) -> dict:
+    """{name: job(name, frame)} with the jobs (collects or writes)
+    submitted concurrently from driver threads: each flat collection's
+    parallelism is capped by its input split count, so serial jobs leave
+    most cores idle at every job's stage tail — concurrent submission
+    makes the wall the max job, not the sum. The scoped confs are
+    session-wide, so one context manager brackets all of them (plan-time
+    conf reads happen inside it)."""
+    if not frames:
+        return {}
+    spark = next(iter(frames.values())).sparkSession
+    with _sort_based_collects(spark):
+        with ThreadPoolExecutor(min(4, len(frames))) as pool:
+            return dict(zip(frames, pool.map(job, frames, frames.values())))
+
+
+def _write_ndjson(df: DataFrame, target: str) -> int:
+    """Write one collection as NDJSON part files under target; returns
+    its document count, observed on the write job itself (one
+    CollectMetrics pass-through node: the writer emits one line per
+    row), so neither a pre-write isEmpty() nor a read-back re-executes
+    the collection's plan. A collection of 0 documents is dropped with
+    its directory, like the reference drops empty collections
+    (`filter_nonempty_collection`, server/WriteToFile.js:9-11)."""
+    obs = Observation()
+    df.observe(obs, F.count(F.lit(1)).alias("n")).write.mode(
+        "overwrite").json(target)
+    n_docs = int(obs.get["n"])
+    if not n_docs:
+        _rm_rf(target)
+    return n_docs
+
+
 def write_json_collections(
     collections: dict[str, DataFrame],
     out_dir: str,
@@ -449,17 +477,16 @@ def write_json_collections(
     streamed: dict | None = None,
     counts: dict | None = None,
 ) -> list[str]:
-    """Write each non-empty collection; returns the names written. An
-    empty collection writes nothing and removes the output an earlier
-    run left for it in out_dir, in every mode.
+    """Write each non-empty collection; returns the names written, in
+    collection order. An empty collection writes nothing and removes the
+    output an earlier run left for it in out_dir, in every mode. The zip
+    holds the collections this call wrote and nothing else of out_dir.
 
     counts: optional caller-owned dict, filled with {name: docs written}
     for every written collection AT WRITE TIME — streamed roots are
     counted from the driver-collected roots frame, distributed writes
     via an observe() metric on the write job itself, single_file from
-    the collected list. The old pattern (re-reading the NDJSON output
-    to count lines) cost a second full pass over every written byte at
-    the 100x dataset; these counts are free byproducts of the write.
+    the collected list. No output is re-read to count it.
 
     streamed: optional {collection name: plans.nesting.StreamedRoot} —
     those collections are assembled per-root in file space instead of
@@ -477,7 +504,7 @@ def write_json_collections(
     streamed = streamed or {}
     if "://" in out_dir and (single_file or zip_path):
         # The parity modes are explicitly local (driver-side open() and
-        # os.walk): a URI out_dir would yield a silently EMPTY zip or a
+        # zip): a URI out_dir would yield a silently EMPTY zip or a
         # FileNotFoundError mid-write — reject it loudly instead.
         raise ValueError(
             "single_file / zip_path are local parity modes; out_dir "
@@ -502,108 +529,53 @@ def write_json_collections(
                 "fragments across their local disks. Use a shared-store "
                 "URI (hdfs://, s3://, file:// on a shared mount)."
             )
-    _mkdirs(out_dir)
-    wrote: dict[str, bool] = {}
-    plain: list[tuple[str, DataFrame, str]] = []
-    for name, df in collections.items():
-        df = _replanned(df)
-        target = f"{out_dir.rstrip('/')}/{name}"
-        if name in streamed and not single_file:
-            n_docs = _write_streamed(streamed[name], target)
-            wrote[name] = bool(n_docs)
-            if counts is not None and n_docs:
-                counts[name] = n_docs
-            continue
-        plain.append((name, df, target))
-    if plain:
-        from concurrent.futures import ThreadPoolExecutor
-
-        def _write_array(item):
-            # Parity mode: one compact JSON array per collection file,
-            # like the reference's JSON.stringify of the whole
-            # collection. The rows' own JSON text is joined as is (UTF-8,
-            # no parse and re-dump); the empty check falls out of the
-            # collect. NOT a scale path: this collects the entire
-            # collection to the driver — small outputs only. The default
-            # distributed mode is the one to point at a real corpus.
-            name, df, target = item
-            lines = df.toJSON().collect()
-            if not lines:
-                # `filter_nonempty_collection` (reference
-                # server/WriteToFile.js:9-11): empty collections
-                # dropped, along with an earlier run's file.
-                _rm_one(f"{target}.json")
-                return name, False, 0
-            with open(f"{target}.json", "w", encoding="utf-8") as fh:
-                fh.write("[" + ",".join(lines) + "]")
-            return name, True, len(lines)
-
-        def _write_ndjson(item):
-            name, df, target = item
-            obs = None
-            if counts is not None:
-                from pyspark.sql import Observation
-
-                # Row count as a metric of the write job itself (one
-                # CollectMetrics pass-through node): the writer emits
-                # exactly one NDJSON line per row, so this IS the doc
-                # count — no read-back pass over the written bytes.
-                obs = Observation()
-                df = df.observe(obs, F.count(F.lit(1)).alias("n"))
-            # Write FIRST, then decide emptiness from the written part
-            # files' byte sizes (one fs metadata listing): the old
-            # isEmpty() pre-check ran take(1), which re-executes the
-            # whole map side of a nested collection's plan — at the
-            # sf10 probe that was a second pass over every child
-            # shuffle per collection. An empty write is all zero-byte
-            # part files; drop it like the reference drops empty
-            # collections (`filter_nonempty_collection`,
-            # server/WriteToFile.js:9-11).
-            df.write.mode("overwrite").json(target)
-            if _part_bytes(target) == 0:
-                _rm_rf(target)
-                return name, False, 0
-            return name, True, (int(obs.get["n"]) if obs is not None
-                                else 0)
-
-        # The jobs (collects or writes) run concurrently from driver
-        # threads: each flat collection's parallelism is capped by its
-        # input split count, so serial jobs leave most cores idle at
-        # every job's stage tail — concurrent submission makes the wall
-        # the max job, not the sum. The scoped confs are session-wide,
-        # so one context manager brackets all of them (plan-time conf
-        # reads happen inside it; the nesting plan executes inside each
-        # job, with the same allocation profile in both modes).
-        write_one = _write_array if single_file else _write_ndjson
-        with _sort_based_collects(plain[0][1].sparkSession):
-            with ThreadPoolExecutor(min(4, len(plain))) as pool:
-                for name, ok, n_docs in pool.map(write_one, plain):
-                    wrote[name] = ok
-                    if counts is not None and ok:
-                        counts[name] = n_docs
-    written = [n for n in collections if wrote.get(n)]
-    if zip_path:
-        _zip_dir(out_dir, zip_path)
-    return written
+    frames = {name: _replanned(df) for name, df in collections.items()}
+    if single_file:
+        # Parity mode: each collection's rows as their own JSON text
+        # (UTF-8, no parse and re-dump), laid out by write_documents.
+        # NOT a scale path: this collects every collection to the
+        # driver — small outputs only. The default distributed mode is
+        # the one to point at a real corpus.
+        texts = _pooled(lambda _name, df: df.toJSON().collect(), frames)
+        wrote = write_documents(texts, out_dir, single_file=True,
+                                zip_path=zip_path)
+    else:
+        _mkdirs(out_dir)
+        root = out_dir.rstrip("/")
+        n_docs = {name: _write_streamed(streamed[name], f"{root}/{name}")
+                  for name in frames if name in streamed}
+        n_docs.update(_pooled(
+            lambda name, df: _write_ndjson(df, f"{root}/{name}"),
+            {n: df for n, df in frames.items() if n not in streamed},
+        ))
+        wrote = {name: n_docs[name] for name in frames if n_docs[name]}
+        if zip_path:
+            _zip_dir(out_dir, zip_path, list(wrote), single_file=False)
+    if counts is not None:
+        counts.update(wrote)
+    return list(wrote)
 
 
-def _zip_dir(out_dir: str, zip_path: str) -> None:
-    """Pack out_dir's collection files into zip_path (reference
-    results/collections.zip parity)."""
-    zip_abs = os.path.abspath(zip_path)
+def _zip_dir(out_dir: str, zip_path: str, names: list[str],
+             single_file: bool) -> None:
+    """Pack the named collections, in order, into zip_path (reference
+    results/collections.zip parity): `<name>.json`, or the files under
+    `<name>/` without the Hadoop writer's checksums and commit marker.
+    Nothing else in out_dir goes in — not an earlier run's collections,
+    not the archive itself when it lives there."""
+    entries = []
+    for name in names:
+        if single_file:
+            entries.append(f"{name}.json")
+        else:
+            entries.extend(
+                f"{name}/{f}"
+                for f in sorted(os.listdir(os.path.join(out_dir, name)))
+                if f != "_SUCCESS" and not f.endswith(".crc")
+            )
     with zipfile.ZipFile(zip_path, "w", zipfile.ZIP_DEFLATED) as zf:
-        for root, _dirs, files in os.walk(out_dir):
-            for f in files:
-                # Collection files only: not the Hadoop writer's
-                # checksums and commit marker.
-                if f == "_SUCCESS" or f.endswith(".crc"):
-                    continue
-                full = os.path.join(root, f)
-                # Never zip the archive into itself (zip_path may live
-                # inside out_dir, like the reference's results/ dir).
-                if os.path.abspath(full) == zip_abs:
-                    continue
-                zf.write(full, os.path.relpath(full, out_dir))
+        for entry in entries:
+            zf.write(os.path.join(out_dir, entry), entry)
 
 
 def write_documents(
@@ -612,13 +584,15 @@ def write_documents(
     single_file: bool = False,
     zip_path: str | None = None,
 ) -> dict[str, int]:
-    """write_json_collections for documents already rendered on the
-    driver ({collection: [document JSON]}, plans/documents.py), in the
-    same layout: `<name>.json` arrays in single_file mode, else one
-    NDJSON `<name>/part-00000.json` that replaces the whole earlier
-    `<name>/`. An empty collection writes nothing and removes its
-    earlier output. Returns {name: documents written} for the written
-    collections. Local paths only."""
+    """The one writer of collection documents already rendered as JSON
+    text on the driver ({collection: [document JSON]}: plans/documents.py,
+    or write_json_collections' single_file collects): `<name>.json`
+    arrays in single_file mode (the reference's JSON.stringify of the
+    whole collection), else one NDJSON `<name>/part-00000.json` that
+    replaces the whole earlier `<name>/`. An empty collection writes
+    nothing and removes its earlier output. Returns {name: documents
+    written} for the written collections, in collection order; the zip
+    holds exactly those. Local paths only."""
     os.makedirs(out_dir, exist_ok=True)
     counts: dict[str, int] = {}
     for name, docs in documents.items():
@@ -639,5 +613,5 @@ def write_documents(
             fh.write(text)
         counts[name] = len(docs)
     if zip_path:
-        _zip_dir(out_dir, zip_path)
+        _zip_dir(out_dir, zip_path, list(counts), single_file)
     return counts

@@ -41,7 +41,8 @@ from relational_to_doc_oriented_nosql_migrator_spark.plans.catalog import (
 )
 
 _TYPE_MAP: list[tuple[re.Pattern, T.DataType]] = [
-    (re.compile(r"^(tiny|small|medium|big)?int", re.I), T.LongType()),
+    (re.compile(r"^((tiny|small|medium|big)?int|(small|big)?serial)", re.I),
+     T.LongType()),
     (re.compile(r"^(decimal|numeric|float|double|real)", re.I),
      T.DoubleType()),
     (re.compile(r"^bool", re.I), T.BooleanType()),
@@ -350,14 +351,39 @@ def _parse_dump(
     return db_name, defs
 
 
+_NUMERIC = (T.LongType(), T.DoubleType())
+
+
+def _check_fk_types(defs: dict[str, _TableDef]) -> None:
+    """Raise ValueError for a foreign key whose column type differs from
+    the referenced column's, as MySQL and Postgres refuse it when the
+    dump loads. Numeric pairs pass: both executors join them by value."""
+    for tdef in defs.values():
+        for fk in tdef.foreign_keys:
+            ref = defs.get(fk.referenced_table)
+            ctype = dict(tdef.fields).get(fk.column)
+            rtype = ref and dict(ref.fields).get(fk.referenced_column)
+            if ctype is None or rtype is None or ctype == rtype or (
+                    ctype in _NUMERIC and rtype in _NUMERIC):
+                continue
+            raise ValueError(
+                f"table {tdef.name}: foreign key column {fk.column} "
+                f"({ctype.simpleString()}) references "
+                f"{fk.referenced_table}.{fk.referenced_column} "
+                f"({rtype.simpleString()}), a different type"
+            )
+
+
 def read_dump(
     sql_text: str, default_db: str = "db"
 ) -> tuple[str, dict[str, _TableDef], Catalog]:
     """Dump text -> (db_name, parsed tables with their rows, annotated
     Catalog), on the driver. The catalog carries the same metadata the
     reference introspects from a live server, so `convert_schema` runs on
-    dump input unchanged."""
+    dump input unchanged. A foreign key between columns of different
+    types raises ValueError (see _check_fk_types)."""
     db_name, defs = _parse_dump(sql_text, default_db)
+    _check_fk_types(defs)
     catalog = Catalog([
         TableMeta(
             name=tdef.name,

@@ -13,7 +13,7 @@ from relational_to_doc_oriented_nosql_migrator_spark.operators.relational import
 
 
 def test_migrate_from_dump_nests_employee_into_dept(spark):
-    out = migrate_from_dump(spark, DUMP_FIXTURE)
+    out, _catalog, _plan = migrate_from_dump(spark, DUMP_FIXTURE)
     assert set(out) == {"dept"}
     docs = {r["id"]: r.asDict(recursive=True) for r in out["dept"].collect()}
     emp_names = {e["emp_name"] for e in (docs[1]["employee"] or [])}
@@ -29,7 +29,7 @@ def test_migrate_from_dump_applies_workload(spark):
         for i in range(5)
     )
     out, catalog, _plan = migrate_from_dump(
-        spark, DUMP_FIXTURE, log_content=log, return_plan=True)
+        spark, DUMP_FIXTURE, log_content=log)
     employee = catalog.get_table("employee")
     assert (employee.gaf, employee.uaf) == (15, 15)
     assert "employee" in out
@@ -136,3 +136,58 @@ def test_cli_dump_writes_ndjson_without_spark(tmp_path):
 
     with zipfile.ZipFile(tmp_path / "c.zip") as zf:
         assert zf.namelist() == ["dept/part-00000.json"]
+
+
+def _hot_employee_log(tmp_path):
+    log = tmp_path / "hot.log"
+    log.write_text("".join(
+        f"240807 10:15:2{i}\t   42 Query\tUPDATE employee SET emp_name = 'x'"
+        f" WHERE emp_id = {10 + i % 3}\n"
+        for i in range(5)
+    ))
+    return str(log)
+
+
+def test_cli_dump_rerun_zip_holds_only_this_runs_collections(
+        tmp_path, capsys):
+    """A rerun into the same --out whose plan drops a collection: the
+    earlier run's file stays on disk, but the zip holds only what this
+    run wrote."""
+    import zipfile
+
+    from relational_to_doc_oriented_nosql_migrator_spark import cli
+
+    dump = tmp_path / "d.sql"
+    dump.write_text(DUMP_FIXTURE)
+    out_dir = str(tmp_path / "out")
+    assert cli.main(["--dump", str(dump), "--log", _hot_employee_log(tmp_path),
+                     "--out", out_dir, "--single-file"]) == 0
+    assert sorted(os.listdir(out_dir)) == ["dept.json", "employee.json"]
+    capsys.readouterr()
+    zip_path = tmp_path / "c.zip"
+    assert cli.main(["--dump", str(dump), "--out", out_dir, "--single-file",
+                     "--zip", str(zip_path)]) == 0
+    summary = json.loads(capsys.readouterr().out)
+    assert summary["collections"] == {"dept": 3}
+    with zipfile.ZipFile(zip_path) as zf:
+        assert zf.namelist() == ["dept.json"]
+
+
+def test_cli_tables_single_file_zip_matches_summary(spark, tmp_path, capsys):
+    """The Spark single-file mode from the CLI: one JSON array per
+    written collection in the zip, as long as the summary's count."""
+    import zipfile
+
+    from relational_to_doc_oriented_nosql_migrator_spark import cli
+    from tests.conftest import SF0001
+
+    zip_path = tmp_path / "c.zip"
+    assert cli.main(["--tables", SF0001, "--out", str(tmp_path / "out"),
+                     "--single-file", "--zip", str(zip_path)]) == 0
+    counts = json.loads(capsys.readouterr().out)["collections"]
+    assert {"region", "part", "lineitem"} <= set(counts)
+    with zipfile.ZipFile(zip_path) as zf:
+        assert zf.namelist() == [f"{name}.json" for name in counts]
+        lengths = {name: len(json.loads(zf.read(f"{name}.json")))
+                   for name in counts}
+    assert lengths == counts

@@ -127,8 +127,8 @@ def _collections(out_dir: str) -> dict[str, list[str]]:
 
 def _assert_same(spark, tmp_path, dump, log=None, normalize_dates=True):
     spark_dir, driver_dir = tmp_path / "spark", tmp_path / "driver"
-    collections = migrate_from_dump(spark, dump, log_content=log,
-                                    normalize_dates=normalize_dates)
+    collections, _catalog, _plan = migrate_from_dump(
+        spark, dump, log_content=log, normalize_dates=normalize_dates)
     write_json_collections(collections, str(spark_dir), single_file=True)
     documents, _catalog, _plan = migrate_dump_on_driver(
         dump, log_content=log, normalize_dates=normalize_dates)

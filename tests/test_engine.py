@@ -129,16 +129,23 @@ def test_materialize_drops_null_docs_and_bangkok_dates(spark):
     assert ts.select(date_normalize("ts")).first()[0] == "2024-01-02"
 
 
-def test_schema_templates(collections):
+def test_schema_templates():
     """Client-parity skeletons (reference NoSqlCollection.js:14-29): empty
     strings for scalars, one-element arrays for embedded collections,
     nested to full depth."""
     from relational_to_doc_oriented_nosql_migrator_spark.functions import (
-        collection_templates,
+        document_template,
+    )
+    from relational_to_doc_oriented_nosql_migrator_spark.plans import (
+        convert_schema,
+    )
+    from relational_to_doc_oriented_nosql_migrator_spark.sources import (
+        parquet_catalog,
     )
 
-    templates = collection_templates(collections)
-    region = templates["region"]
+    plan = convert_schema(parquet_catalog(SF0001)[0])
+    region = document_template(
+        next(c for c in plan.collections if c.name == "region"))
     assert region["r_name"] == ""
     nation = region["nation"][0]
     assert nation["n_name"] == ""

@@ -129,8 +129,8 @@ def test_collection6_supplier_two_way_product_values(materialized, golden):
 def test_dump_text_parses_and_migrates(spark, tmp_path):
     """A MySQL dump generated from the fixture drives the reference's dump
     entry point end to end through the single-file JSON sink."""
-    collections = migrate_from_dump(spark, northwind_dump(),
-                                    normalize_dates=False)
+    collections, _catalog, _plan = migrate_from_dump(
+        spark, northwind_dump(), normalize_dates=False)
     docs = collections_to_docs(collections, str(tmp_path / "a"))
     # The normative planner fully embeds the child tables: the roots are
     # the six reference-free tables, one doc per base row.

@@ -6,6 +6,7 @@ import json
 import os
 import zipfile
 
+import pytest
 from pyspark.sql import functions as F
 
 from relational_to_doc_oriented_nosql_migrator_spark.sinks import (
@@ -84,6 +85,30 @@ def test_ndjson_zip_holds_only_collection_files(spark, tmp_path):
         if f.startswith("part-") and f.endswith(".json")
     )
     assert parts and sorted(names) == parts
+
+
+@pytest.mark.parametrize("single_file", [False, True])
+def test_rerun_zip_holds_only_this_calls_collections(spark, tmp_path,
+                                                     single_file):
+    """Two calls on one out_dir, the second without collection b: b's
+    earlier output stays on disk, but the second call's zip holds only
+    a."""
+    out = str(tmp_path / "out")
+    full = _collections(spark)["full"]
+    assert write_json_collections(
+        {"a": full, "b": full}, out, single_file=single_file
+    ) == ["a", "b"]
+    zip_path = str(tmp_path / "collections.zip")
+    assert write_json_collections(
+        {"a": full}, out, single_file=single_file, zip_path=zip_path
+    ) == ["a"]
+    assert any(f.startswith("b") for f in os.listdir(out))
+    with zipfile.ZipFile(zip_path) as zf:
+        names = zf.namelist()
+    if single_file:
+        assert names == ["a.json"]
+    else:
+        assert names and all(n.startswith("a/part-") for n in names)
 
 
 def test_single_file_is_compact_utf8_json(spark, tmp_path):

@@ -119,7 +119,7 @@ def test_pg_copy_drives_full_migration(spark):
         migrate_from_dump,
     )
 
-    out = migrate_from_dump(spark, PG_COPY_DUMP)
+    out, _catalog, _plan = migrate_from_dump(spark, PG_COPY_DUMP)
     docs = {r["id"]: r.asDict(recursive=True) for r in out["dept"].collect()}
     assert {e["emp_name"] for e in docs[1]["employee"]} == {
         "ada", "alan lo\\vell"
@@ -304,3 +304,77 @@ def test_arrow_tables_match_the_row_path(spark):
     assert rows[3]["note"] == "back\\slash"
     assert [rows[i]["flag"] for i in (1, 2, 3, 4)] == [True, False, True,
                                                        None]
+
+
+_FK_TYPE_MISMATCH = """
+CREATE TABLE p (
+  id VARCHAR(10) NOT NULL,
+  PRIMARY KEY (id)
+);
+CREATE TABLE c (
+  cid INT NOT NULL,
+  pid INT,
+  PRIMARY KEY (cid),
+  FOREIGN KEY (pid) REFERENCES p (id)
+);
+INSERT INTO p VALUES ('1'),('02'),('3');
+INSERT INTO c VALUES (10,1),(11,2),(12,3);
+"""
+
+
+def test_fk_type_mismatch_is_rejected_on_both_dump_paths(spark):
+    """MySQL and Postgres refuse an FK whose column type differs from
+    the referenced column's; both dump entry points fail the same way
+    instead of embedding (Spark) or dropping (driver) the child rows."""
+    import pytest
+
+    from relational_to_doc_oriented_nosql_migrator_spark.engine import (
+        migrate_dump_on_driver,
+        migrate_from_dump,
+    )
+
+    match = r"table c: foreign key column pid \(bigint\) references p\.id \(string\)"
+    with pytest.raises(ValueError, match=match):
+        migrate_dump_on_driver(_FK_TYPE_MISMATCH)
+    with pytest.raises(ValueError, match=match):
+        migrate_from_dump(spark, _FK_TYPE_MISMATCH)
+
+
+def test_numeric_fk_pairs_are_accepted(spark):
+    """An INT column may reference a DECIMAL one: both executors join
+    numeric keys by value."""
+    from relational_to_doc_oriented_nosql_migrator_spark.engine import (
+        migrate_dump_on_driver,
+        migrate_from_dump,
+    )
+
+    import json
+
+    dump = _FK_TYPE_MISMATCH.replace("VARCHAR(10)", "DECIMAL(10,0)")
+    documents, _catalog, _plan = migrate_dump_on_driver(dump)
+    collections, _catalog, _plan = migrate_from_dump(spark, dump)
+    for texts in (documents["p"], collections["p"].toJSON().collect()):
+        docs = [json.loads(t) for t in texts]
+        assert sorted(len(d["c"]) for d in docs) == [1, 1, 1]
+
+
+def test_serial_keys_are_integers_that_integer_fks_reference():
+    """Postgres SERIAL columns are integers, so an INTEGER column may
+    reference one, and their values come out as numbers."""
+    import json
+
+    from relational_to_doc_oriented_nosql_migrator_spark.engine import (
+        migrate_dump_on_driver,
+    )
+
+    dump = """
+CREATE TABLE p (id SERIAL PRIMARY KEY, name TEXT);
+CREATE TABLE c (cid BIGSERIAL PRIMARY KEY, pid INTEGER,
+  FOREIGN KEY (pid) REFERENCES p (id));
+INSERT INTO p VALUES (1,'a');
+INSERT INTO c VALUES (7,1);
+"""
+    documents, _catalog, _plan = migrate_dump_on_driver(dump)
+    assert [json.loads(d) for d in documents["p"]] == [
+        {"id": 1, "name": "a", "c": [{"cid": 7}]}
+    ]
