@@ -14,6 +14,8 @@ Layout:
                 (dedup, similarity, text, windows)
   streaming/  - Structured Streaming variants over the events table
   workload.py - query-log -> GAF/UAF/MAF workload statistics
+  dump_migration.py - a SQL dump's migration on the driver: plain Python
+                that loads no Spark or Arrow module (service, CLI --dump)
   session.py  - tuned SparkSession factory
 """
 

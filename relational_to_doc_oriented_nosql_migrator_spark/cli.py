@@ -6,10 +6,13 @@ document collections out.
     python -m relational_to_doc_oriented_nosql_migrator_spark.cli \
         --dump northwind.sql --log queries.log --dialect mysql --out out/
 
-Prints one JSON summary line: collections written, document counts, and
-the output directory — the CLI twin of the reference's zip download
-(server/WriteToFile.js:27-35). A dump migrates on the driver without
-Spark (engine.migrate_dump_on_driver); parquet tables run on Spark.
+Prints one JSON summary line: a run id, the output directory, the wall
+seconds per stage and the documents written per collection — the CLI
+twin of the reference's zip download (server/WriteToFile.js:27-35) and
+of the service's per-request record. A dump migrates on the driver
+without Spark (dump_migration.migrate_dump_on_driver; stages `parse`,
+`workload`, `plan`, `build`, `write`); parquet tables run on Spark
+(stages `migrate`, `write`).
 """
 
 from __future__ import annotations
@@ -17,7 +20,15 @@ from __future__ import annotations
 import argparse
 import json
 import sys
+import uuid
 
+from relational_to_doc_oriented_nosql_migrator_spark.dump_migration import (
+    migrate_dump_on_driver,
+    timed_stage,
+)
+from relational_to_doc_oriented_nosql_migrator_spark.sinks.documents import (
+    write_documents,
+)
 from relational_to_doc_oriented_nosql_migrator_spark.workload import DIALECTS
 
 
@@ -64,33 +75,30 @@ def build_parser() -> argparse.ArgumentParser:
 
 def main(argv: list[str] | None = None) -> int:
     args = build_parser().parse_args(argv)
+    stages: dict[str, float] = {}
+    summary = {"id": uuid.uuid4().hex, "out": args.out, "stages": stages}
     log_content = None
     if args.log:
         with open(args.log, encoding="utf-8", errors="replace") as fh:
             log_content = fh.read()
 
     if args.dump:
-        # A dump is parsed and migrated on the driver
-        # (engine.migrate_dump_on_driver): no Spark session starts.
-        from relational_to_doc_oriented_nosql_migrator_spark.engine import (
-            migrate_dump_on_driver,
-        )
-        from relational_to_doc_oriented_nosql_migrator_spark.sinks import (
-            write_documents,
-        )
-
+        # A dump is parsed and migrated on the driver: no Spark session
+        # starts.
         with open(args.dump, encoding="utf-8", errors="replace") as fh:
             documents, _catalog, _plan = migrate_dump_on_driver(
                 fh.read(),
                 log_content=log_content,
                 log_dialect=args.dialect,
                 normalize_dates=not args.no_normalize_dates,
+                stages=stages,
             )
-        counts = write_documents(
-            documents, args.out, single_file=args.single_file,
-            zip_path=args.zip_path,
-        )
-        print(json.dumps({"out": args.out, "collections": counts}))
+        with timed_stage(stages, "write"):
+            summary["collections"] = write_documents(
+                documents, args.out, single_file=args.single_file,
+                zip_path=args.zip_path,
+            )
+        print(json.dumps(summary))
         return 0
 
     from relational_to_doc_oriented_nosql_migrator_spark.engine import (
@@ -107,28 +115,31 @@ def main(argv: list[str] | None = None) -> int:
     # Heavy roots (plans/nesting.stream_plan) assemble per-root in file
     # space — the parquet-tables path carries the catalog row counts the
     # decision needs.
-    collections, streamed = migrate_streamed(
-        spark,
-        args.tables,
-        log_content=log_content,
-        log_dialect=args.dialect,
-        normalize_dates=not args.no_normalize_dates,
-    )
+    with timed_stage(stages, "migrate"):
+        collections, streamed = migrate_streamed(
+            spark,
+            args.tables,
+            log_content=log_content,
+            log_dialect=args.dialect,
+            normalize_dates=not args.no_normalize_dates,
+        )
 
     # Doc counts are write-time byproducts of the sink (streamed roots
     # from the collected roots frame, distributed writes via an
     # observe() metric): no NDJSON re-read, no re-execution of each
     # collection's plan for a .count().
     counts: dict[str, int] = {}
-    write_json_collections(
-        collections,
-        args.out,
-        single_file=args.single_file,
-        zip_path=args.zip_path,
-        streamed=streamed,
-        counts=counts,
-    )
-    print(json.dumps({"out": args.out, "collections": counts}))
+    with timed_stage(stages, "write"):
+        write_json_collections(
+            collections,
+            args.out,
+            single_file=args.single_file,
+            zip_path=args.zip_path,
+            streamed=streamed,
+            counts=counts,
+        )
+    summary["collections"] = counts
+    print(json.dumps(summary))
     return 0
 
 

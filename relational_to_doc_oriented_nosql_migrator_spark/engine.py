@@ -9,34 +9,24 @@ Here: parquet tables + out-of-band FK metadata -> optional query-log
 workload -> driver-side planning (plans/planner.py) -> Catalyst-executed
 nesting DAG (plans/nesting.py) -> JSON sink (sinks/). A SQL dump, already
 Python rows on the driver, takes the same catalog -> workload -> plan
-steps and then the driver-side document builder (plans/documents.py):
-migrate_dump_on_driver starts no Spark session.
+steps and then the driver-side document builder (plans/documents.py) in
+dump_migration.py, which starts no Spark session.
 """
 
 from __future__ import annotations
-
-import contextlib
-import time
 
 from pyspark.sql import DataFrame, SparkSession
 
 from relational_to_doc_oriented_nosql_migrator_spark.plans import (
     Catalog,
     convert_schema,
+)
+from relational_to_doc_oriented_nosql_migrator_spark.plans.nesting import (
     materialize,
 )
-from relational_to_doc_oriented_nosql_migrator_spark.plans.documents import (
-    build_documents,
-)
-from relational_to_doc_oriented_nosql_migrator_spark.plans.shape import (
-    document_shapes,
-)
-from relational_to_doc_oriented_nosql_migrator_spark.sources import (
+from relational_to_doc_oriented_nosql_migrator_spark.sources.parquet import (
     parquet_catalog,
     scan,
-)
-from relational_to_doc_oriented_nosql_migrator_spark.sources.sqldump import (
-    read_dump,
 )
 from relational_to_doc_oriented_nosql_migrator_spark import workload as workload_mod
 
@@ -45,7 +35,7 @@ def build_testdata_catalog(
     spark: SparkSession, sf_dir: str
 ) -> tuple[Catalog, dict[str, DataFrame]]:
     """Catalog and lazy frames for a directory of parquet tables, both
-    from the parquet footers (sources.parquet_catalog): no Spark job
+    from the parquet footers (sources.parquet.parquet_catalog): no Spark job
     runs, neither to infer a schema nor to count rows (`agg_count_star`
     remains the query-surface equivalent)."""
     catalog, footers = parquet_catalog(sf_dir)
@@ -146,7 +136,7 @@ def migrate_from_dump(
     graph, and row counts come from the dump itself (sources/sqldump.py);
     the query log folds GAF/UAF workload stats into the embed-vs-reference
     decision exactly as the parquet path does. Returns (collections,
-    catalog, plan), like migrate_dump_on_driver."""
+    catalog, plan), like dump_migration.migrate_dump_on_driver."""
     from relational_to_doc_oriented_nosql_migrator_spark.sources.sqldump import (
         import_sql_dump,
     )
@@ -155,43 +145,3 @@ def migrate_from_dump(
     plan, collections = _plan_and_materialize(
         tables, catalog, log_content, log_dialect, normalize_dates)
     return collections, catalog, plan
-
-
-@contextlib.contextmanager
-def timed_stage(stages: dict | None, name: str):
-    """Record the wall seconds of the block as stages[name]."""
-    start = time.perf_counter()
-    try:
-        yield
-    finally:
-        if stages is not None:
-            stages[name] = round(time.perf_counter() - start, 6)
-
-
-def migrate_dump_on_driver(
-    sql_text: str,
-    log_content: str | None = None,
-    log_dialect: str = "mysql",
-    normalize_dates: bool = True,
-    stages: dict | None = None,
-):
-    """migrate_from_dump without Spark: the same catalog, workload and
-    plan, then every collection's documents built on the driver
-    (plans/documents.py) as the JSON texts Spark's toJSON writes for the
-    nested frames. Returns ({collection: [document JSON]}, catalog, plan);
-    empty collections map to empty lists.
-
-    stages, when given, receives the wall seconds of `parse`, `workload`,
-    `plan` and `build`. Like _plan_and_materialize, the workload and
-    planner calls resolve as module attributes at call time."""
-    with timed_stage(stages, "parse"):
-        _db, defs, catalog = read_dump(sql_text)
-    with timed_stage(stages, "workload"):
-        if log_content:
-            workload_mod.apply_workload(catalog, log_content, log_dialect)
-    with timed_stage(stages, "plan"):
-        plan = convert_schema(catalog)
-    with timed_stage(stages, "build"):
-        documents = build_documents(
-            defs, document_shapes(catalog, plan), normalize_dates)
-    return documents, catalog, plan

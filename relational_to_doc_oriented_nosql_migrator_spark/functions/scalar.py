@@ -9,7 +9,9 @@ from __future__ import annotations
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
-BANGKOK_TZ = "Asia/Bangkok"
+from relational_to_doc_oriented_nosql_migrator_spark.plans.shape import (
+    BANGKOK_TZ,
+)
 
 
 def split_trim(col: Column | str, sep: str = ",") -> Column:

@@ -9,7 +9,7 @@ golden-structure test of the rule cascade:
 
 - ``tpch``       — the driver-testdata FK graph, columns and row counts
                    from the sf_dir parquet footers (the migrator's own
-                   `sources.parquet_catalog`), idle workload.
+                   `sources.parquet.parquet_catalog`), idle workload.
 - ``tpch_hot``   — same graph with read traffic on every table and
                    update-hot ``orders`` (uaf = rows x 50): exercises the
                    workload branch of server/DBMigration.js:356-369.

@@ -12,7 +12,6 @@ from relational_to_doc_oriented_nosql_migrator_spark.plans.planner import (
     create_table_queue,
     is_self_referencing,
 )
-from relational_to_doc_oriented_nosql_migrator_spark.plans.nesting import materialize
 
 __all__ = [
     "Catalog",
@@ -25,5 +24,4 @@ __all__ = [
     "convert_schema",
     "create_table_queue",
     "is_self_referencing",
-    "materialize",
 ]

@@ -17,12 +17,14 @@ from collections import defaultdict
 from operator import itemgetter
 from zoneinfo import ZoneInfo
 
-from pyspark.sql import types as T
-
-from relational_to_doc_oriented_nosql_migrator_spark.functions.scalar import (
+from relational_to_doc_oriented_nosql_migrator_spark.plans.shape import (
     BANGKOK_TZ,
+    Shape,
 )
-from relational_to_doc_oriented_nosql_migrator_spark.plans.shape import Shape
+from relational_to_doc_oriented_nosql_migrator_spark.sources.sqldump import (
+    DateType,
+    TimestampType,
+)
 
 _BANGKOK = ZoneInfo(BANGKOK_TZ)
 
@@ -108,7 +110,7 @@ class _Builder:
             tdef = self.defs[name]
             rows = tdef.rows
             dates = [i for i, (_n, dtype) in enumerate(tdef.fields)
-                     if isinstance(dtype, (T.DateType, T.TimestampType))]
+                     if isinstance(dtype, (DateType, TimestampType))]
             if self.normalize_dates and dates:
                 rows = [list(r) for r in rows]
                 for r in rows:

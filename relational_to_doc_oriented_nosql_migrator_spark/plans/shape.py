@@ -7,6 +7,7 @@ they cannot disagree on the document layout. Metadata only, no Spark.
 
 A document is its fields in order (null fields omitted), then one array
 per embedded child in plan order (absent when no child row matches).
+With date normalization a timestamp becomes its date in BANGKOK_TZ.
 """
 
 from __future__ import annotations
@@ -21,6 +22,10 @@ from relational_to_doc_oriented_nosql_migrator_spark.plans.planner import (
     Collection,
     NoSQLPlan,
 )
+
+# The zone of the reference's date normalization (reference
+# server/MySQLDBManager.js:268-276).
+BANGKOK_TZ = "Asia/Bangkok"
 
 
 @dataclass(frozen=True)

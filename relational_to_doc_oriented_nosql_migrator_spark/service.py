@@ -10,17 +10,18 @@ server/WriteToFile.js:5-62 for the results layout). This module closes
 that last reference-surface gap with a dependency-free stdlib server
 (`http.server` + `email` multipart parsing — no Flask/Express
 analogue is installable here) around the engine seam the CLI uses for
-a dump: engine.migrate_dump_on_driver (sources/sqldump.read_dump ->
-workload -> plans.convert_schema -> plans/documents.py) ->
+a dump: dump_migration.migrate_dump_on_driver (sources/sqldump.read_dump
+-> workload -> plans.convert_schema -> plans/documents.py) ->
 sinks.write_documents.
 
 Scale stance: the HTTP surface is a CONTROL-PLANE endpoint. An upload
 is at most MAX_UPLOAD_BYTES and is parsed into Python rows on the
 driver, so its documents are built there too, with no Spark session
 and no JVM; they are the same JSON texts the Spark nesting path writes
-for the dump. The collection files behind /download/result use the
-sink's single-file parity mode, like the reference's per-collection
-JSON.stringify files (server/WriteToFile.js:13-20). A corpus-scale
+for the dump. The process loads no pyspark, py4j or pyarrow module. The
+collection files behind /download/result use the sink's single-file
+parity mode, like the reference's per-collection JSON.stringify files
+(server/WriteToFile.js:13-20). A corpus-scale
 migration goes through the CLI's parquet path on Spark, not an HTTP
 upload; this endpoint mirrors the reference's actual usage (a schema
 dump + query log, both small).
@@ -59,21 +60,16 @@ import uuid
 from collections import OrderedDict
 from http.server import BaseHTTPRequestHandler, ThreadingHTTPServer
 
-from relational_to_doc_oriented_nosql_migrator_spark.engine import (  # noqa: F401
-    timed_stage,
+from relational_to_doc_oriented_nosql_migrator_spark.dump_migration import (
     migrate_dump_on_driver,
-    migrate_from_dump,
+    timed_stage,
 )
 from relational_to_doc_oriented_nosql_migrator_spark.functions.template import (
     document_template,
 )
-from relational_to_doc_oriented_nosql_migrator_spark.sinks import (  # noqa: F401
+from relational_to_doc_oriented_nosql_migrator_spark.sinks.documents import (
     write_documents,
-    write_json_collections,
 )
-
-# migrate_from_dump and write_json_collections (the Spark path) stay
-# importable here: perfbench/spans.py wraps them by these module names.
 
 ZIP_NAME = "collections.zip"
 # Archives the server keeps; publishing a newer one deletes the oldest
@@ -339,6 +335,25 @@ def serve(port: int = 0, results_dir: str | None = None):
     t = threading.Thread(target=server.serve_forever, daemon=True)
     t.start()
     return server
+
+
+def __getattr__(name: str):
+    """migrate_from_dump and write_json_collections, the Spark path, which
+    the service never calls: perfbench/spans.py wraps them by these module
+    names, so they resolve here, imported on first lookup."""
+    if name == "migrate_from_dump":
+        from relational_to_doc_oriented_nosql_migrator_spark.engine import (
+            migrate_from_dump,
+        )
+
+        return migrate_from_dump
+    if name == "write_json_collections":
+        from relational_to_doc_oriented_nosql_migrator_spark.sinks import (
+            write_json_collections,
+        )
+
+        return write_json_collections
+    raise AttributeError(f"module {__name__!r} has no attribute {name!r}")
 
 
 def main(argv=None) -> int:

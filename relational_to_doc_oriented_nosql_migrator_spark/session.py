@@ -12,8 +12,12 @@ Defaults are chosen for correctness-at-scale first:
 from __future__ import annotations
 
 import os
+from typing import TYPE_CHECKING
 
-from pyspark.sql import SparkSession
+# pyspark is imported where a session is built: the package __init__
+# imports this module, and the driver-side dump path loads no Spark.
+if TYPE_CHECKING:
+    from pyspark.sql import SparkSession
 
 DEFAULT_SHUFFLE_PARTITIONS = 32
 _PACKAGE_PARENT = os.path.dirname(
@@ -26,6 +30,8 @@ def get_spark(
     shuffle_partitions: int | None = None,
     extra_conf: dict[str, str] | None = None,
 ) -> SparkSession:
+    from pyspark.sql import SparkSession
+
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "*")
     master = master or f"local[{cpus}]"
     builder = (

@@ -5,8 +5,8 @@ array per file) and zips the results (reference server/WriteToFile.js:5-62;
 empty-collection filter at :9-11). Spark-first equivalent: distributed
 newline-delimited JSON per collection directory — the scalable layout — with
 an optional single-array file mode for byte-level parity on small outputs.
-write_documents owns the layout of documents held on the driver (both
-modes) and every zip holds only the collections its call wrote.
+sinks/documents.py owns the layout of documents held on the driver (both
+modes) and the zip, which holds only the collections its call wrote.
 
 Null fields are omitted on write (Spark's JSON writer default), matching the
 reference's key-absent semantics for unmatched attributes / empty embeds.
@@ -18,16 +18,19 @@ import contextlib
 import functools
 import io
 import json
-import os
 import urllib.parse
 import uuid
-import zipfile
 from concurrent.futures import ThreadPoolExecutor
 from dataclasses import dataclass
 
 from pyarrow import fs as pafs
 from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
+
+from relational_to_doc_oriented_nosql_migrator_spark.sinks.documents import (
+    write_documents,
+    zip_collections,
+)
 
 # Hash aggregation holds EVERY group's collect_list buffer of a partition
 # in memory before emitting; for the top nesting levels a group is a
@@ -550,68 +553,7 @@ def write_json_collections(
         ))
         wrote = {name: n_docs[name] for name in frames if n_docs[name]}
         if zip_path:
-            _zip_dir(out_dir, zip_path, list(wrote), single_file=False)
+            zip_collections(out_dir, zip_path, list(wrote), single_file=False)
     if counts is not None:
         counts.update(wrote)
     return list(wrote)
-
-
-def _zip_dir(out_dir: str, zip_path: str, names: list[str],
-             single_file: bool) -> None:
-    """Pack the named collections, in order, into zip_path (reference
-    results/collections.zip parity): `<name>.json`, or the files under
-    `<name>/` without the Hadoop writer's checksums and commit marker.
-    Nothing else in out_dir goes in — not an earlier run's collections,
-    not the archive itself when it lives there."""
-    entries = []
-    for name in names:
-        if single_file:
-            entries.append(f"{name}.json")
-        else:
-            entries.extend(
-                f"{name}/{f}"
-                for f in sorted(os.listdir(os.path.join(out_dir, name)))
-                if f != "_SUCCESS" and not f.endswith(".crc")
-            )
-    with zipfile.ZipFile(zip_path, "w", zipfile.ZIP_DEFLATED) as zf:
-        for entry in entries:
-            zf.write(os.path.join(out_dir, entry), entry)
-
-
-def write_documents(
-    documents: dict[str, list[str]],
-    out_dir: str,
-    single_file: bool = False,
-    zip_path: str | None = None,
-) -> dict[str, int]:
-    """The one writer of collection documents already rendered as JSON
-    text on the driver ({collection: [document JSON]}: plans/documents.py,
-    or write_json_collections' single_file collects): `<name>.json`
-    arrays in single_file mode (the reference's JSON.stringify of the
-    whole collection), else one NDJSON `<name>/part-00000.json` that
-    replaces the whole earlier `<name>/`. An empty collection writes
-    nothing and removes its earlier output. Returns {name: documents
-    written} for the written collections, in collection order; the zip
-    holds exactly those. Local paths only."""
-    os.makedirs(out_dir, exist_ok=True)
-    counts: dict[str, int] = {}
-    for name, docs in documents.items():
-        target = os.path.join(out_dir, name)
-        if single_file:
-            _rm_one(f"{target}.json")
-        else:
-            _rm_rf(target)
-        if not docs:
-            continue
-        if single_file:
-            path, text = f"{target}.json", "[" + ",".join(docs) + "]"
-        else:
-            os.makedirs(target)
-            path = os.path.join(target, "part-00000.json")
-            text = "\n".join(docs) + "\n"
-        with open(path, "w", encoding="utf-8") as fh:
-            fh.write(text)
-        counts[name] = len(docs)
-    if zip_path:
-        _zip_dir(out_dir, zip_path, list(counts), single_file)
-    return counts

@@ -1,6 +1,2 @@
-from relational_to_doc_oriented_nosql_migrator_spark.sources.parquet import (
-    parquet_catalog,
-    scan,
-)
-
-__all__ = ["parquet_catalog", "scan"]
+"""Migration inputs: parquet tables (sources.parquet, Spark) and SQL dumps
+(sources.sqldump, parsed on the driver)."""

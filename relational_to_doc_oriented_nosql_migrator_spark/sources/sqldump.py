@@ -29,10 +29,7 @@ from __future__ import annotations
 import datetime as _dt
 import re
 from dataclasses import dataclass, field
-
-import pyarrow as pa
-from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import types as T
+from typing import TYPE_CHECKING
 
 from relational_to_doc_oriented_nosql_migrator_spark.plans.catalog import (
     Catalog,
@@ -40,27 +37,61 @@ from relational_to_doc_oriented_nosql_migrator_spark.plans.catalog import (
     TableMeta,
 )
 
-_TYPE_MAP: list[tuple[re.Pattern, T.DataType]] = [
-    (re.compile(r"^((tiny|small|medium|big)?int|(small|big)?serial)", re.I),
-     T.LongType()),
-    (re.compile(r"^(decimal|numeric|float|double|real)", re.I),
-     T.DoubleType()),
-    (re.compile(r"^bool", re.I), T.BooleanType()),
-    (re.compile(r"^date$", re.I), T.DateType()),
-    (re.compile(r"^(datetime|timestamp)", re.I), T.TimestampType()),
-]
+if TYPE_CHECKING:
+    from pyspark.sql import DataFrame, SparkSession
+    from pyspark.sql.types import StructType
 
-# Arrow column type per Spark type of _TYPE_MAP (StringType otherwise).
-# Timestamps go in naive: Spark reads them in the session time zone,
-# which get_spark pins to UTC, and the parsers make every value naive UTC.
-_ARROW_TYPES = {
-    T.LongType(): pa.int64(),
-    T.DoubleType(): pa.float64(),
-    T.BooleanType(): pa.bool_(),
-    T.DateType(): pa.date32(),
-    T.TimestampType(): pa.timestamp("us"),
-    T.StringType(): pa.string(),
-}
+
+class _ColumnType:
+    """A dump column's type, named after the Spark type its values load
+    as (_TableDef.schema builds that type from the name). Parsing a dump
+    needs neither Spark nor Arrow."""
+
+    simple = ""
+
+    def simpleString(self) -> str:
+        return self.simple
+
+    def __eq__(self, other) -> bool:
+        return type(self) is type(other)
+
+    def __hash__(self) -> int:
+        return hash(type(self).__name__)
+
+
+class LongType(_ColumnType):
+    simple = "bigint"
+
+
+class DoubleType(_ColumnType):
+    simple = "double"
+
+
+class BooleanType(_ColumnType):
+    simple = "boolean"
+
+
+class DateType(_ColumnType):
+    simple = "date"
+
+
+class TimestampType(_ColumnType):
+    simple = "timestamp"
+
+
+class StringType(_ColumnType):
+    simple = "string"
+
+
+_TYPE_MAP: list[tuple[re.Pattern, _ColumnType]] = [
+    (re.compile(r"^((tiny|small|medium|big)?int|(small|big)?serial)", re.I),
+     LongType()),
+    (re.compile(r"^(decimal|numeric|float|double|real)", re.I),
+     DoubleType()),
+    (re.compile(r"^bool", re.I), BooleanType()),
+    (re.compile(r"^date$", re.I), DateType()),
+    (re.compile(r"^(datetime|timestamp)", re.I), TimestampType()),
+]
 
 _CONSTRAINT_HEAD = re.compile(
     r"^(primary\s+key|foreign\s+key|constraint|unique|key|index|check)\b",
@@ -155,14 +186,14 @@ def _parse_timestamp(raw: str) -> _dt.datetime:
     return ts
 
 
-# Text -> value per Spark type of _TYPE_MAP (StringType keeps the text).
+# Text -> value per column type (StringType keeps the text).
 _PARSERS = {
-    T.LongType(): int,
-    T.DoubleType(): float,
-    T.BooleanType(): lambda v: v.lower() in ("1", "true", "t"),
-    T.DateType(): _dt.date.fromisoformat,
-    T.TimestampType(): _parse_timestamp,
-    T.StringType(): str,
+    LongType(): int,
+    DoubleType(): float,
+    BooleanType(): lambda v: v.lower() in ("1", "true", "t"),
+    DateType(): _dt.date.fromisoformat,
+    TimestampType(): _parse_timestamp,
+    StringType(): str,
 }
 
 
@@ -244,34 +275,55 @@ def _split_top_level(s: str) -> list[str]:
 @dataclass
 class _TableDef:
     name: str
-    fields: list[tuple[str, T.DataType]] = field(default_factory=list)
+    fields: list[tuple[str, _ColumnType]] = field(default_factory=list)
     primary_keys: list[str] = field(default_factory=list)
     foreign_keys: list[ForeignKey] = field(default_factory=list)
     rows: list[list] = field(default_factory=list)
 
     @property
-    def schema(self) -> T.StructType:
-        return T.StructType(
-            [T.StructField(n, dt, True) for n, dt in self.fields]
-        )
+    def schema(self) -> StructType:
+        """The Spark schema: each column's Spark type of the same name."""
+        from pyspark.sql import types as T
+
+        return T.StructType([
+            T.StructField(n, getattr(T, type(dt).__name__)(), True)
+            for n, dt in self.fields
+        ])
 
     def row_builder(self, columns: str | None, converter):
         """Values in `columns` order (a dump's column list text; None is
-        field order) -> a row in field order. Each column's converter is
-        chosen here from its Spark type, not per value."""
+        field order) -> a row appended to `rows` in field order. Each
+        column's converter is chosen here from its type, not per value.
+
+        A row whose value count differs from the column list's raises
+        ValueError, as the server loading the dump refuses it (MySQL
+        ERROR 1136, pg COPY's "missing data for column" / "extra data
+        after last expected column"); so does a column list naming a
+        column the table lacks. Rows are numbered from 1 within the
+        statement or COPY block, as the servers number them."""
         types = dict(self.fields)
         position = {n: i for i, (n, _) in enumerate(self.fields)}
         names = ([_unquote(c) for c in columns.split(",")] if columns
                  else [n for n, _ in self.fields])
+        for n in names:
+            if n not in position:
+                raise ValueError(f"table {self.name}: unknown column {n}")
         slots = [(position[n], converter(_PARSERS[types[n]]))
                  for n in names]
-        width = len(self.fields)
+        width, count = len(self.fields), len(slots)
+        rows = self.rows
+        first = len(rows)
 
-        def build(values: list[str]) -> list:
+        def build(values: list[str]) -> None:
+            if len(values) != count:
+                raise ValueError(
+                    f"table {self.name}: row {len(rows) - first + 1}: "
+                    f"expected {count} values, found {len(values)}"
+                )
             row = [None] * width
             for (i, convert), value in zip(slots, values):
                 row[i] = convert(value)
-            return row
+            rows.append(row)
         return build
 
 
@@ -302,7 +354,7 @@ def _parse_create(stmt: str) -> _TableDef | None:
         if len(parts) < 2:
             continue
         name, rest = _unquote(parts[0]), parts[1]
-        dtype: T.DataType = T.StringType()
+        dtype: _ColumnType = StringType()
         for pattern, spark_type in _TYPE_MAP:
             if pattern.match(rest):
                 dtype = spark_type
@@ -339,7 +391,7 @@ def _parse_dump(
             values: list[str] = []
             for literal, close in _VALUES_TOKEN_RE.findall(ins.group(3)):
                 if close:
-                    tdef.rows.append(build(values))
+                    build(values)
                     values = []
                 else:
                     values.append(literal)
@@ -347,11 +399,12 @@ def _parse_dump(
         tdef = defs.get(tname)
         if tdef:
             build = tdef.row_builder(columns, _copy_converter)
-            tdef.rows.extend(build(line.split("\t")) for line in lines)
+            for line in lines:
+                build(line.split("\t"))
     return db_name, defs
 
 
-_NUMERIC = (T.LongType(), T.DoubleType())
+_NUMERIC = (LongType(), DoubleType())
 
 
 def _check_fk_types(defs: dict[str, _TableDef]) -> None:
@@ -402,12 +455,25 @@ def import_sql_dump(
 ) -> tuple[str, dict[str, DataFrame], Catalog]:
     """Dump text -> (db_name, DataFrames per table, annotated Catalog)
     (see read_dump)."""
+    import pyarrow as pa
+
+    # Timestamps go in naive: Spark reads them in the session time zone,
+    # which get_spark pins to UTC, and the parsers make every value naive
+    # UTC.
+    arrow_types = {
+        LongType(): pa.int64(),
+        DoubleType(): pa.float64(),
+        BooleanType(): pa.bool_(),
+        DateType(): pa.date32(),
+        TimestampType(): pa.timestamp("us"),
+        StringType(): pa.string(),
+    }
     db_name, defs, catalog = read_dump(sql_text, default_db)
     tables: dict[str, DataFrame] = {}
     for tdef in defs.values():
         columns = list(zip(*tdef.rows)) or [()] * len(tdef.fields)
         arrow = pa.Table.from_arrays(
-            [pa.array(col, _ARROW_TYPES[dt])
+            [pa.array(col, arrow_types[dt])
              for col, (_n, dt) in zip(columns, tdef.fields)],
             names=[n for n, _ in tdef.fields],
         )

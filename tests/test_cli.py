@@ -126,8 +126,9 @@ def test_cli_dump_writes_ndjson_without_spark(tmp_path):
          str(out_dir), "--zip", str(tmp_path / "c.zip")],
         capture_output=True, text=True, check=True, cwd=repo, timeout=120,
     ).stdout.splitlines()
-    assert json.loads(out[0]) == {"out": str(out_dir),
-                                  "collections": {"dept": 3}}
+    summary = json.loads(out[0])
+    assert summary["out"] == str(out_dir)
+    assert summary["collections"] == {"dept": 3}
     assert out[1] == "True"
     assert os.listdir(out_dir / "dept") == ["part-00000.json"]
     lines = (out_dir / "dept" / "part-00000.json").read_text().splitlines()
@@ -175,7 +176,9 @@ def test_cli_dump_rerun_zip_holds_only_this_runs_collections(
 
 def test_cli_tables_single_file_zip_matches_summary(spark, tmp_path, capsys):
     """The Spark single-file mode from the CLI: one JSON array per
-    written collection in the zip, as long as the summary's count."""
+    written collection in the zip, as long as the summary's count. The
+    summary has a run id and the wall seconds of the Spark migration and
+    the write."""
     import zipfile
 
     from relational_to_doc_oriented_nosql_migrator_spark import cli
@@ -184,10 +187,31 @@ def test_cli_tables_single_file_zip_matches_summary(spark, tmp_path, capsys):
     zip_path = tmp_path / "c.zip"
     assert cli.main(["--tables", SF0001, "--out", str(tmp_path / "out"),
                      "--single-file", "--zip", str(zip_path)]) == 0
-    counts = json.loads(capsys.readouterr().out)["collections"]
+    summary = json.loads(capsys.readouterr().out)
+    assert len(summary["id"]) == 32 and int(summary["id"], 16) >= 0
+    assert list(summary["stages"]) == ["migrate", "write"]
+    assert summary["stages"]["write"] > 0
+    counts = summary["collections"]
     assert {"region", "part", "lineitem"} <= set(counts)
     with zipfile.ZipFile(zip_path) as zf:
         assert zf.namelist() == [f"{name}.json" for name in counts]
         lengths = {name: len(json.loads(zf.read(f"{name}.json")))
                    for name in counts}
     assert lengths == counts
+
+
+def test_cli_dump_summary_has_an_id_and_stage_times(tmp_path, capsys):
+    """--dump reports the service record's stages plus the write."""
+    from relational_to_doc_oriented_nosql_migrator_spark import cli
+
+    dump = tmp_path / "d.sql"
+    dump.write_text(DUMP_FIXTURE)
+    assert cli.main(["--dump", str(dump), "--out", str(tmp_path / "out"),
+                     "--log", _hot_employee_log(tmp_path)]) == 0
+    summary = json.loads(capsys.readouterr().out)
+    assert len(summary["id"]) == 32 and int(summary["id"], 16) >= 0
+    assert list(summary["stages"]) == [
+        "parse", "workload", "plan", "build", "write"]
+    assert all(s >= 0 for s in summary["stages"].values())
+    assert summary["collections"] == {"dept": 3, "employee": 3}
+

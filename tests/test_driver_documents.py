@@ -1,7 +1,7 @@
 """Differential test of the two dump executors: the driver-side document
-builder (engine.migrate_dump_on_driver, what the service and CLI --dump
-run) against the Spark nesting path (engine.migrate_from_dump + the
-single-file sink). Both must write the same collections, and per
+builder (dump_migration.migrate_dump_on_driver, what the service and CLI
+--dump run) against the Spark nesting path (engine.migrate_from_dump +
+the single-file sink). Both must write the same collections, and per
 collection the same documents, byte for byte."""
 
 import json
@@ -10,8 +10,10 @@ import sys
 
 import pytest
 
-from relational_to_doc_oriented_nosql_migrator_spark.engine import (
+from relational_to_doc_oriented_nosql_migrator_spark.dump_migration import (
     migrate_dump_on_driver,
+)
+from relational_to_doc_oriented_nosql_migrator_spark.engine import (
     migrate_from_dump,
 )
 from relational_to_doc_oriented_nosql_migrator_spark.sinks import (

@@ -81,10 +81,10 @@ def test_materialize_drops_null_docs_and_bangkok_dates(spark):
     materializer: a root row whose mapped attributes are all NULL yields
     no document, and timestamps render as Asia/Bangkok dates (18:30 UTC
     on Jan 1 is already Jan 2 in UTC+7) at the root and in embedded
-    arrays alike, and through functions.date_normalize."""
+    arrays alike, and through functions.scalar.date_normalize."""
     import json
 
-    from relational_to_doc_oriented_nosql_migrator_spark.functions import (
+    from relational_to_doc_oriented_nosql_migrator_spark.functions.scalar import (
         date_normalize,
     )
     from relational_to_doc_oriented_nosql_migrator_spark.plans import (
@@ -92,6 +92,8 @@ def test_materialize_drops_null_docs_and_bangkok_dates(spark):
         ForeignKey,
         TableMeta,
         convert_schema,
+    )
+    from relational_to_doc_oriented_nosql_migrator_spark.plans.nesting import (
         materialize,
     )
 
@@ -139,7 +141,7 @@ def test_schema_templates():
     from relational_to_doc_oriented_nosql_migrator_spark.plans import (
         convert_schema,
     )
-    from relational_to_doc_oriented_nosql_migrator_spark.sources import (
+    from relational_to_doc_oriented_nosql_migrator_spark.sources.parquet import (
         parquet_catalog,
     )
 

@@ -8,6 +8,8 @@ from relational_to_doc_oriented_nosql_migrator_spark.plans import (
     ForeignKey,
     TableMeta,
     convert_schema,
+)
+from relational_to_doc_oriented_nosql_migrator_spark.plans.nesting import (
     materialize,
 )
 

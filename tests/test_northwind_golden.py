@@ -24,8 +24,10 @@ from relational_to_doc_oriented_nosql_migrator_spark.plans import (
     Collection,
     NoSQLPlan,
     convert_schema,
-    materialize,
     northwind_catalog,
+)
+from relational_to_doc_oriented_nosql_migrator_spark.plans.nesting import (
+    materialize,
 )
 from tests.northwind_golden import (
     collections_to_docs,

@@ -1,11 +1,15 @@
 """SQL-dump import (`src_sql_dump_import`): parsing, sanitization parity,
 catalog metadata, and end-to-end migration from dump input."""
 
+import pytest
+
 from relational_to_doc_oriented_nosql_migrator_spark.operators.relational import (
     DUMP_FIXTURE,
 )
 from relational_to_doc_oriented_nosql_migrator_spark.plans import (
     convert_schema,
+)
+from relational_to_doc_oriented_nosql_migrator_spark.plans.nesting import (
     materialize,
 )
 from relational_to_doc_oriented_nosql_migrator_spark.sources.sqldump import (
@@ -328,8 +332,10 @@ def test_fk_type_mismatch_is_rejected_on_both_dump_paths(spark):
     instead of embedding (Spark) or dropping (driver) the child rows."""
     import pytest
 
-    from relational_to_doc_oriented_nosql_migrator_spark.engine import (
+    from relational_to_doc_oriented_nosql_migrator_spark.dump_migration import (
         migrate_dump_on_driver,
+    )
+    from relational_to_doc_oriented_nosql_migrator_spark.engine import (
         migrate_from_dump,
     )
 
@@ -343,8 +349,10 @@ def test_fk_type_mismatch_is_rejected_on_both_dump_paths(spark):
 def test_numeric_fk_pairs_are_accepted(spark):
     """An INT column may reference a DECIMAL one: both executors join
     numeric keys by value."""
-    from relational_to_doc_oriented_nosql_migrator_spark.engine import (
+    from relational_to_doc_oriented_nosql_migrator_spark.dump_migration import (
         migrate_dump_on_driver,
+    )
+    from relational_to_doc_oriented_nosql_migrator_spark.engine import (
         migrate_from_dump,
     )
 
@@ -363,7 +371,7 @@ def test_serial_keys_are_integers_that_integer_fks_reference():
     reference one, and their values come out as numbers."""
     import json
 
-    from relational_to_doc_oriented_nosql_migrator_spark.engine import (
+    from relational_to_doc_oriented_nosql_migrator_spark.dump_migration import (
         migrate_dump_on_driver,
     )
 
@@ -378,3 +386,40 @@ INSERT INTO c VALUES (7,1);
     assert [json.loads(d) for d in documents["p"]] == [
         {"id": 1, "name": "a", "c": [{"cid": 7}]}
     ]
+
+
+_WIDTH_TABLE = "CREATE TABLE t (id INT PRIMARY KEY, name VARCHAR(10));\n"
+
+
+@pytest.mark.parametrize("dump, match", [
+    # MySQL ERROR 1136: Column count doesn't match value count at row 2
+    (_WIDTH_TABLE + "INSERT INTO t VALUES (1,'a'),(2),(3,'c');\n",
+     r"table t: row 2: expected 2 values, found 1"),
+    (_WIDTH_TABLE + "INSERT INTO t VALUES (1,'a'),(2,'b'),(3,'c','x');\n",
+     r"table t: row 3: expected 2 values, found 3"),
+    (_WIDTH_TABLE + "INSERT INTO t (id) VALUES (1),(2,'b');\n",
+     r"table t: row 2: expected 1 values, found 2"),
+    # pg COPY: "missing data for column" / "extra data after last
+    # expected column"
+    (_WIDTH_TABLE + "COPY t (id, name) FROM stdin;\n1\ta\n2\n\\.\n",
+     r"table t: row 2: expected 2 values, found 1"),
+    (_WIDTH_TABLE + "COPY t FROM stdin;\n1\ta\textra\n\\.\n",
+     r"table t: row 1: expected 2 values, found 3"),
+    (_WIDTH_TABLE + "INSERT INTO t (id, nme) VALUES (1,'a');\n",
+     r"table t: unknown column nme"),
+    (_WIDTH_TABLE + "COPY t (id, nme) FROM stdin;\n1\ta\n\\.\n",
+     r"table t: unknown column nme"),
+], ids=["insert_short", "insert_long", "insert_column_list", "copy_short",
+        "copy_long", "insert_unknown_column", "copy_unknown_column"])
+def test_rows_must_match_their_column_list(spark, dump, match):
+    """A row whose value count differs from its column list, or a column
+    list naming a column the table lacks, raises ValueError on both dump
+    paths, as the server loading the dump refuses it."""
+    from relational_to_doc_oriented_nosql_migrator_spark.dump_migration import (
+        migrate_dump_on_driver,
+    )
+
+    with pytest.raises(ValueError, match=match):
+        migrate_dump_on_driver(dump)
+    with pytest.raises(ValueError, match=match):
+        import_sql_dump(spark, dump)
