@@ -6,7 +6,7 @@ plan (plans/planner.py) and build every collection's documents
 (plans/documents.py) as the JSON texts Spark's toJSON writes for the
 nested frames (engine.migrate_from_dump, the Spark side of the
 differential). A dump is bounded by the upload limit and already Python
-rows on the driver, so no step needs a cluster.
+columns on the driver, so no step needs a cluster.
 
 Layering: this module and everything it imports load no pyspark, py4j or
 pyarrow module, so a dump request does not pay for a batch engine it

@@ -8,7 +8,7 @@ Reference lifecycle (server/DBMigration.js:14-182):
 Here: parquet tables + out-of-band FK metadata -> optional query-log
 workload -> driver-side planning (plans/planner.py) -> Catalyst-executed
 nesting DAG (plans/nesting.py) -> JSON sink (sinks/). A SQL dump, already
-Python rows on the driver, takes the same catalog -> workload -> plan
+Python columns on the driver, takes the same catalog -> workload -> plan
 steps and then the driver-side document builder (plans/documents.py) in
 dump_migration.py, which starts no Spark session.
 """

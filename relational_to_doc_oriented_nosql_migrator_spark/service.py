@@ -15,7 +15,7 @@ a dump: dump_migration.migrate_dump_on_driver (sources/sqldump.read_dump
 sinks.write_documents.
 
 Scale stance: the HTTP surface is a CONTROL-PLANE endpoint. An upload
-is at most MAX_UPLOAD_BYTES and is parsed into Python rows on the
+is at most MAX_UPLOAD_BYTES and is parsed into Python columns on the
 driver, so its documents are built there too, with no Spark session
 and no JVM; they are the same JSON texts the Spark nesting path writes
 for the dump. The process loads no pyspark, py4j or pyarrow module. The

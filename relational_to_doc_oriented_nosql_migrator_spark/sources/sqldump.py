@@ -16,19 +16,34 @@ Sanitization parity with the reference's importSqlFile:
   caller-provided fallback (filename stem in the reference)
 
 Grammar: the CREATE TABLE / INSERT INTO ... VALUES subset that mysqldump
-and pg_dump emit, plus pg_dump's `COPY ... FROM stdin` data blocks. Values
-decode the way the server that would load the dump reads them: MySQL
-backslash escapes in INSERT literals, pg text-format escapes in COPY data.
+and pg_dump emit, plus pg_dump's `COPY ... FROM stdin` data blocks.
+`INSERT IGNORE INTO` and `REPLACE INTO` (mysqldump --insert-ignore,
+--replace) load their rows like INSERT: as with INSERT, primary-key
+duplicates are not modelled, so every row loads. Values decode the way the
+server that would load the dump reads them: MySQL backslash escapes in
+INSERT literals, pg text-format escapes in COPY data. A charset introducer
+(`_binary 'ab'`, mysqldump 8.0's BLOB form) reads as its quoted text; hex
+and bit literals (`0x41`, `X'41'`, `b'1'`) raise ValueError. MySQL's zero
+date (`'0000-00-00'`, `'0000-00-00 00:00:00'`) loads as NULL. A value its
+column type cannot read raises ValueError naming the table, column and row.
 Dumps are metadata-plus-literals scale; genuinely large fact data arrives
 via parquet, so driver-side parsing here mirrors where the reference
 itself is driver-bound.
+
+Rows are stored by column: one findall per INSERT yields one tuple of raw
+tokens per row, and each column is decoded at once by its type's
+converter (int/float over the bare tokens, quote slicing over plain
+strings), falling back to the per-value converter only for a column that
+holds NULLs, escapes or quoted numbers.
 """
 
 from __future__ import annotations
 
 import datetime as _dt
+import functools
 import re
 from dataclasses import dataclass, field
+from operator import itemgetter
 from typing import TYPE_CHECKING
 
 from relational_to_doc_oriented_nosql_migrator_spark.plans.catalog import (
@@ -109,7 +124,8 @@ _CREATE_RE = re.compile(
     re.I | re.S,
 )
 _INSERT_RE = re.compile(
-    r"^insert\s+into\s+([`\"\w.]+)\s*(?:\(([^)]*)\))?\s*values\s*(.*)$",
+    r"^(?:insert(?:\s+ignore)?|replace)\s+into\s+([`\"\w.]+)\s*"
+    r"(?:\(([^)]*)\))?\s*values\s*(.*)$",
     re.I | re.S,
 )
 _USE_RE = re.compile(r"^use\s+([`\"\w]+)", re.I)
@@ -136,9 +152,27 @@ _DQ = r'"[^"\\]*(?:(?:\\.|"")[^"\\]*)*"'
 _STATEMENT_RE = re.compile(rf"(?:{_SQ}|{_DQ}|[^;'\"]+|['\"])+", re.S)
 # Tokens for a paren-depth split: strings, parens, commas, the rest.
 _TOP_LEVEL_TOKEN_RE = re.compile(rf"{_SQ}|{_DQ}|[^(),'\"]+|.", re.S)
-# One INSERT's VALUES list: a literal (group 1) or a tuple's closing paren
-# (group 2); '(' and ',' between them are skipped.
-_VALUES_TOKEN_RE = re.compile(rf"({_SQ}|{_DQ}|[^\s,()'\"]+)|(\))", re.S)
+# One INSERT literal: a quoted string, with an optional charset introducer
+# (`_binary 'ab'`) or hex/bit prefix (`X'41'`, `b'1'`), or a bare token
+# (a number, NULL, `0x41`).
+_LITERAL = rf"(?:_\w+\s*|[xXbB])?(?:{_SQ}|{_DQ})|[^\s,()'\"]+"
+# One INSERT's VALUES list token by token: a literal (group 1) or a tuple's
+# closing paren (group 2); '(' and ',' between them are skipped. Only an
+# error report walks it (see _TableDef.insert).
+_VALUES_TOKEN_RE = re.compile(rf"({_LITERAL})|(\))", re.S)
+_INTRODUCER_RE = re.compile(r"_\w+\s*(?=['\"])")
+_HEX_OR_BIT_RE = re.compile(r"[xX]'|0x|([bB]'|0b)")
+
+
+@functools.lru_cache(maxsize=64)
+def _tuple_re(width: int) -> re.Pattern:
+    """One VALUES tuple of `width` literals per match (groups 1..width).
+    Any other character but the whitespace and commas between tuples
+    lands in the last group, so a row of another width or a stray token
+    shows there."""
+    body = r"\s*,\s*".join([f"({_LITERAL})"] * width)
+    return re.compile(rf"\(\s*{body}\s*\)|([^\s,])", re.S)
+
 
 # MySQL string-literal escapes (the server's own reading of a mysqldump):
 # \% and \_ stay as written, any other \x not in the table is x, and a
@@ -176,10 +210,22 @@ def _copy_text(field: str) -> str:
     )
 
 
-def _parse_timestamp(raw: str) -> _dt.datetime:
+# MySQL's zero date, which names no calendar day: it loads as NULL.
+_ZERO_DATE = "0000-00-00"
+
+
+def _parse_date(raw: str) -> _dt.date | None:
+    if raw.startswith(_ZERO_DATE):
+        return None
+    return _dt.date.fromisoformat(raw)
+
+
+def _parse_timestamp(raw: str) -> _dt.datetime | None:
     """A naive UTC datetime. An offset (pg `timestamptz` text such as
     `07:30:00+07`) is applied here: pyarrow would keep an aware value's
     wall-clock time when it goes into the naive Arrow column."""
+    if raw.startswith(_ZERO_DATE):
+        return None
     ts = _dt.datetime.fromisoformat(raw)
     if ts.tzinfo is not None:
         ts = ts.astimezone(_dt.timezone.utc).replace(tzinfo=None)
@@ -191,19 +237,37 @@ _PARSERS = {
     LongType(): int,
     DoubleType(): float,
     BooleanType(): lambda v: v.lower() in ("1", "true", "t"),
-    DateType(): _dt.date.fromisoformat,
+    DateType(): _parse_date,
     TimestampType(): _parse_timestamp,
     StringType(): str,
 }
 
 
 def _mysql_converter(parse):
-    """An INSERT literal token (quoted, NULL or bare) -> value."""
+    """An INSERT literal token (quoted, introduced, NULL or bare) ->
+    value."""
     def convert(token: str):
         if token[0] in "'\"":
             return parse(_mysql_string(token))
-        return None if token.upper() == "NULL" else parse(token)
+        if token.upper() == "NULL":
+            return None
+        if m := _INTRODUCER_RE.match(token):
+            return parse(_mysql_string(token[m.end():]))
+        if m := _HEX_OR_BIT_RE.match(token):
+            raise ValueError(
+                f"{'bit' if m[1] else 'hexadecimal'} literals are not read")
+        return parse(token)
     return convert
+
+
+def _mysql_texts(tokens) -> list[str] | None:
+    """The texts of a column of plain '...' literals (no NULL, escape or
+    doubled quote), at C speed; None for any other column."""
+    joined = "".join(tokens)
+    if ("\\" in joined or joined.count("'") != 2 * len(tokens)
+            or any(map("'".__ne__, map(itemgetter(0), tokens)))):
+        return None
+    return list(map(itemgetter(slice(1, -1)), tokens))
 
 
 def _copy_converter(parse):
@@ -213,6 +277,12 @@ def _copy_converter(parse):
             return None
         return parse(_copy_text(field) if "\\" in field else field)
     return convert
+
+
+def _copy_texts(fields: tuple[str, ...]) -> tuple[str, ...] | None:
+    """A COPY column's fields as its texts when none holds a backslash
+    (so no NULL and no escape); None for any other column."""
+    return None if "\\" in "".join(fields) else fields
 
 
 # A COPY block: (table, column list text or None, data lines).
@@ -278,7 +348,12 @@ class _TableDef:
     fields: list[tuple[str, _ColumnType]] = field(default_factory=list)
     primary_keys: list[str] = field(default_factory=list)
     foreign_keys: list[ForeignKey] = field(default_factory=list)
-    rows: list[list] = field(default_factory=list)
+    # one value list per field, in field order
+    columns: list[list] = field(default_factory=list)
+
+    @property
+    def num_rows(self) -> int:
+        return len(self.columns[0]) if self.columns else 0
 
     @property
     def schema(self) -> StructType:
@@ -290,41 +365,95 @@ class _TableDef:
             for n, dt in self.fields
         ])
 
-    def row_builder(self, columns: str | None, converter):
-        """Values in `columns` order (a dump's column list text; None is
-        field order) -> a row appended to `rows` in field order. Each
-        column's converter is chosen here from its type, not per value.
+    # A row whose value count differs from its column list raises
+    # ValueError, as the server loading the dump refuses it (MySQL ERROR
+    # 1136, pg COPY's "missing data for column" / "extra data after last
+    # expected column"); so does a column list naming a column the table
+    # lacks. Rows are numbered from 1 within the statement or COPY block,
+    # as the servers number them.
 
-        A row whose value count differs from the column list's raises
-        ValueError, as the server loading the dump refuses it (MySQL
-        ERROR 1136, pg COPY's "missing data for column" / "extra data
-        after last expected column"); so does a column list naming a
-        column the table lacks. Rows are numbered from 1 within the
-        statement or COPY block, as the servers number them."""
-        types = dict(self.fields)
-        position = {n: i for i, (n, _) in enumerate(self.fields)}
+    def insert(self, columns: str | None, body: str) -> None:
+        """Append an INSERT's VALUES list (`body`), its literals in
+        `columns` order (a dump's column list text; None is field
+        order)."""
+        names = self._names(columns)
+        rows = _tuple_re(len(names)).findall(body)
+        if any(map(itemgetter(-1), rows)):
+            # the first row of another width, numbered as the server would
+            row, found = 1, 0
+            for _literal, close in _VALUES_TOKEN_RE.findall(body):
+                if not close:
+                    found += 1
+                elif found != len(names):
+                    break
+                else:
+                    row, found = row + 1, 0
+            raise self._width_error(row, len(names), found)
+        self._append(names, rows, _mysql_texts, _mysql_converter)
+
+    def copy(self, columns: str | None, lines: list[str]) -> None:
+        """Append a COPY block's tab-separated data lines."""
+        names = self._names(columns)
+        rows = [line.split("\t") for line in lines]
+        if any(map(len(names).__ne__, map(len, rows))):
+            row = next(i for i, r in enumerate(rows) if len(r) != len(names))
+            raise self._width_error(row + 1, len(names), len(rows[row]))
+        self._append(names, rows, _copy_texts, _copy_converter)
+
+    def _names(self, columns: str | None) -> list[str]:
         names = ([_unquote(c) for c in columns.split(",")] if columns
                  else [n for n, _ in self.fields])
+        known = dict(self.fields)
         for n in names:
-            if n not in position:
+            if n not in known:
                 raise ValueError(f"table {self.name}: unknown column {n}")
-        slots = [(position[n], converter(_PARSERS[types[n]]))
-                 for n in names]
-        width, count = len(self.fields), len(slots)
-        rows = self.rows
-        first = len(rows)
+        if len(set(names)) < len(names):
+            raise ValueError(
+                f"table {self.name}: a column is listed twice in {names}")
+        return names
 
-        def build(values: list[str]) -> None:
-            if len(values) != count:
+    def _width_error(self, row: int, expected: int,
+                     found: int) -> ValueError:
+        return ValueError(f"table {self.name}: row {row}: expected "
+                          f"{expected} values, found {found}")
+
+    def _append(self, names, rows, texts, converter) -> None:
+        """Decode `rows` (token tuples in `names` order) column by column
+        and extend every field's column; unlisted fields get NULLs."""
+        listed = dict(zip(names, zip(*rows)))
+        for (name, dtype), column in zip(self.fields, self.columns):
+            if name not in listed:
+                column.extend([None] * len(rows))
+            else:
+                column.extend(self._decode(
+                    name, dtype, listed[name], texts, converter))
+
+    def _decode(self, name, dtype, tokens, texts, converter) -> list:
+        """One column's tokens -> values. int and float map over the
+        tokens and every other type over the texts of a plain column;
+        anything those cannot read (NULL, escapes, quoted numbers, zero
+        dates) takes the column's per-value converter."""
+        parse = _PARSERS[dtype]
+        try:
+            if parse is int or parse is float:
+                return list(map(parse, tokens))
+            plain = texts(tokens)
+            if plain is not None:
+                return plain if parse is str else list(map(parse, plain))
+        except ValueError:
+            pass
+        convert = converter(parse)
+        values = []
+        for token in tokens:
+            try:
+                values.append(convert(token))
+            except ValueError as e:
                 raise ValueError(
-                    f"table {self.name}: row {len(rows) - first + 1}: "
-                    f"expected {count} values, found {len(values)}"
-                )
-            row = [None] * width
-            for (i, convert), value in zip(slots, values):
-                row[i] = convert(value)
-            rows.append(row)
-        return build
+                    f"table {self.name}: column {name}: row "
+                    f"{len(values) + 1}: cannot read {token} as "
+                    f"{dtype.simpleString()}: {e}"
+                ) from None
+        return values
 
 
 def _parse_create(stmt: str) -> _TableDef | None:
@@ -362,14 +491,15 @@ def _parse_create(stmt: str) -> _TableDef | None:
         table.fields.append((name, dtype))
         if re.search(r"\bprimary\s+key\b", rest, re.I):
             table.primary_keys.append(name)
+    table.columns = [[] for _ in table.fields]
     return table
 
 
 def _parse_dump(
     sql_text: str, default_db: str
 ) -> tuple[str, dict[str, _TableDef]]:
-    """Dump text -> (db_name, parsed table definitions with their rows),
-    all on the driver in plain Python."""
+    """Dump text -> (db_name, parsed table definitions with their
+    columns), all on the driver in plain Python."""
     db_name = default_db
     defs: dict[str, _TableDef] = {}
     statements, copy_blocks = _scan(sql_text)
@@ -387,20 +517,11 @@ def _parse_dump(
         ins = _INSERT_RE.match(stmt)
         tdef = ins and defs.get(_unquote(ins.group(1)))
         if tdef:
-            build = tdef.row_builder(ins.group(2), _mysql_converter)
-            values: list[str] = []
-            for literal, close in _VALUES_TOKEN_RE.findall(ins.group(3)):
-                if close:
-                    build(values)
-                    values = []
-                else:
-                    values.append(literal)
+            tdef.insert(ins.group(2), ins.group(3))
     for tname, columns, lines in copy_blocks:
         tdef = defs.get(tname)
         if tdef:
-            build = tdef.row_builder(columns, _copy_converter)
-            for line in lines:
-                build(line.split("\t"))
+            tdef.copy(columns, lines)
     return db_name, defs
 
 
@@ -430,7 +551,7 @@ def _check_fk_types(defs: dict[str, _TableDef]) -> None:
 def read_dump(
     sql_text: str, default_db: str = "db"
 ) -> tuple[str, dict[str, _TableDef], Catalog]:
-    """Dump text -> (db_name, parsed tables with their rows, annotated
+    """Dump text -> (db_name, parsed tables with their columns, annotated
     Catalog), on the driver. The catalog carries the same metadata the
     reference introspects from a live server, so `convert_schema` runs on
     dump input unchanged. A foreign key between columns of different
@@ -440,7 +561,7 @@ def read_dump(
     catalog = Catalog([
         TableMeta(
             name=tdef.name,
-            num_rows=len(tdef.rows),
+            num_rows=tdef.num_rows,
             columns=[n for n, _ in tdef.fields],
             primary_keys=tdef.primary_keys,
             foreign_keys=tdef.foreign_keys,
@@ -471,10 +592,9 @@ def import_sql_dump(
     db_name, defs, catalog = read_dump(sql_text, default_db)
     tables: dict[str, DataFrame] = {}
     for tdef in defs.values():
-        columns = list(zip(*tdef.rows)) or [()] * len(tdef.fields)
         arrow = pa.Table.from_arrays(
             [pa.array(col, arrow_types[dt])
-             for col, (_n, dt) in zip(columns, tdef.fields)],
+             for col, (_n, dt) in zip(tdef.columns, tdef.fields)],
             names=[n for n, _ in tdef.fields],
         )
         # An Arrow table becomes a JVM-local relation (LocalTableScan, or

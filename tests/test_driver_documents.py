@@ -6,7 +6,6 @@ collection the same documents, byte for byte."""
 
 import json
 import os
-import sys
 
 import pytest
 
@@ -20,7 +19,7 @@ from relational_to_doc_oriented_nosql_migrator_spark.sinks import (
     write_documents,
     write_json_collections,
 )
-from tests.test_sqldump import _dump_cases
+from tests.test_sqldump import _dump_cases, _perfbench_gen
 
 # A two-way junction: enrollment embeds into both endpoints with the
 # other endpoint's columns, which replace the junction's (course.title
@@ -96,15 +95,6 @@ DOUBLES_DUMP = (
             "-2.5", "100", "3.0", "4.35", "NaN", "Infinity", "-Infinity",
         ])) + ";\n"
 )
-
-
-def _perfbench_gen():
-    sys.path.insert(0, os.path.join(
-        os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
-        "perfbench"))
-    import gen
-
-    return gen
 
 
 def _array_texts(text: str) -> list[str]:

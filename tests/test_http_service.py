@@ -156,6 +156,19 @@ def _dept_docs(data: bytes) -> list:
     return json.loads(zipfile.ZipFile(io.BytesIO(data)).read("dept.json"))
 
 
+def test_post_with_zero_dates_migrates(server):
+    """MySQL's zero dates load as NULL, so a dump that holds them
+    migrates instead of answering 500."""
+    dump = DUMP_FIXTURE + (
+        "INSERT INTO dept VALUES (4, 'qa', 7.5, '0000-00-00');\n")
+    with _post(server, {"sqlFile": ("zero.sql", dump)}) as resp:
+        assert resp.status == 200
+        result_id = json.load(resp)["resultId"]
+    docs = {d["id"]: d for d in _dept_docs(_download(server,
+                                                     f"?id={result_id}"))}
+    assert docs[4] == {"id": 4, "name": "qa", "budget": 7.5}
+
+
 def test_concurrent_posts_get_their_own_results(server):
     """Two migrations in flight at once: each response's resultId serves
     exactly that request's archive, and a bare GET afterwards serves one

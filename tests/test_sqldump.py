@@ -247,7 +247,24 @@ def test_escapes_decode_as_the_server_reads_them(spark):
     }
 
 
-def _dump_cases():
+# What mysqldump 8.0 writes beyond plain INSERTs: --insert-ignore and
+# --replace rows, `_binary` introducers on BLOB values, and zero dates.
+MYSQLDUMP8_DUMP = r"""CREATE TABLE blob_t (
+  id INT NOT NULL,
+  data BLOB,
+  made DATE,
+  seen DATETIME,
+  PRIMARY KEY (id)
+);
+INSERT IGNORE INTO blob_t VALUES (1,_binary 'ab','0000-00-00',NULL),
+  (2,_binary'c\'d',NULL,'0000-00-00 00:00:00');
+REPLACE INTO blob_t (id, data, seen) VALUES
+  (3,_utf8mb4 'x\\y','2024-01-02 03:04:05'),(4,NULL,'0000-00-00 00:00:00');
+INSERT INTO blob_t VALUES (5,'plain','2024-02-29','2024-02-29 12:00:00');
+"""
+
+
+def _perfbench_gen():
     import os
     import sys
 
@@ -256,6 +273,11 @@ def _dump_cases():
         "perfbench"))
     import gen
 
+    return gen
+
+
+def _dump_cases():
+    gen = _perfbench_gen()
     return {
         "fixture": DUMP_FIXTURE,
         "pg_copy": PG_COPY_DUMP,
@@ -263,6 +285,7 @@ def _dump_cases():
         "edge": EDGE_DUMP,
         "mysql_escapes": MYSQL_ESCAPE_DUMP,
         "pg_escapes": PG_ESCAPE_DUMP,
+        "mysqldump8": MYSQLDUMP8_DUMP,
     }
 
 
@@ -288,7 +311,8 @@ def test_arrow_tables_match_the_row_path(spark):
             _db, tables, _ = import_sql_dump(spark, dump)
             assert list(tables) == list(defs), case
             for name, tdef in defs.items():
-                ref = spark.createDataFrame(tdef.rows, tdef.schema)
+                ref = spark.createDataFrame(list(zip(*tdef.columns)),
+                                            tdef.schema)
                 got = tables[name]
                 assert got.schema == ref.schema, (case, name)
                 assert got.collect() == ref.collect(), (case, name)
@@ -409,8 +433,12 @@ _WIDTH_TABLE = "CREATE TABLE t (id INT PRIMARY KEY, name VARCHAR(10));\n"
      r"table t: unknown column nme"),
     (_WIDTH_TABLE + "COPY t (id, nme) FROM stdin;\n1\ta\n\\.\n",
      r"table t: unknown column nme"),
+    # MySQL ERROR 1110: Column 'id' specified twice
+    (_WIDTH_TABLE + "INSERT INTO t (id, id) VALUES (1,2);\n",
+     r"table t: a column is listed twice"),
 ], ids=["insert_short", "insert_long", "insert_column_list", "copy_short",
-        "copy_long", "insert_unknown_column", "copy_unknown_column"])
+        "copy_long", "insert_unknown_column", "copy_unknown_column",
+        "insert_repeated_column"])
 def test_rows_must_match_their_column_list(spark, dump, match):
     """A row whose value count differs from its column list, or a column
     list naming a column the table lacks, raises ValueError on both dump
@@ -423,3 +451,106 @@ def test_rows_must_match_their_column_list(spark, dump, match):
         migrate_dump_on_driver(dump)
     with pytest.raises(ValueError, match=match):
         import_sql_dump(spark, dump)
+
+
+def test_insert_ignore_and_replace_rows_load(spark):
+    """mysqldump --insert-ignore and --replace rows load like INSERT rows
+    on both dump paths (primary-key duplicates are not modelled)."""
+    from relational_to_doc_oriented_nosql_migrator_spark.dump_migration import (
+        migrate_dump_on_driver,
+    )
+
+    dump = ("CREATE TABLE t (id INT, PRIMARY KEY (id));\n"
+            "INSERT IGNORE INTO t VALUES (1),(2);\n"
+            "REPLACE INTO t VALUES (3);\n"
+            "insert  ignore  into t (id) values (4);\n")
+    documents = migrate_dump_on_driver(dump)[0]
+    assert documents["t"] == [f'{{"id":{i}}}' for i in (1, 2, 3, 4)]
+    table = import_sql_dump(spark, dump)[1]["t"]
+    assert [r["id"] for r in table.collect()] == [1, 2, 3, 4]
+
+
+def test_introducers_and_zero_dates(spark):
+    """A charset introducer reads as its quoted text, and MySQL's zero
+    dates load as NULL, on both dump paths."""
+    from relational_to_doc_oriented_nosql_migrator_spark.dump_migration import (
+        migrate_dump_on_driver,
+    )
+    from relational_to_doc_oriented_nosql_migrator_spark.sources.sqldump import (
+        read_dump,
+    )
+
+    want = {
+        1: ("ab", None, None),
+        2: ("c'd", None, None),
+        3: ("x\\y", None, "2024-01-02 03:04:05"),
+        4: (None, None, None),
+        5: ("plain", "2024-02-29", "2024-02-29 12:00:00"),
+    }
+    tdef = read_dump(MYSQLDUMP8_DUMP)[1]["blob_t"]
+    assert {row[0]: (row[1], row[2] and str(row[2]), row[3] and str(row[3]))
+            for row in zip(*tdef.columns)} == want
+    table = import_sql_dump(spark, MYSQLDUMP8_DUMP)[1]["blob_t"]
+    got = table.selectExpr("id", "data", "CAST(made AS STRING)",
+                           "CAST(seen AS STRING)").collect()
+    assert {r[0]: tuple(r[1:]) for r in got} == want
+    documents = migrate_dump_on_driver(MYSQLDUMP8_DUMP)[0]["blob_t"]
+    assert documents[0] == '{"id":1,"data":"ab"}'
+
+
+_VALUE_TABLE = ("CREATE TABLE t (id INT PRIMARY KEY, name VARCHAR(10), "
+                "d DATE);\n")
+
+
+@pytest.mark.parametrize("values, match", [
+    ("(1,X'41',NULL)", r"table t: column name: row 1: cannot read X'41' "
+     r"as string: hexadecimal literals are not read"),
+    ("(1,'a',NULL),(2,0x41,NULL)", r"table t: column name: row 2: cannot "
+     r"read 0x41 as string: hexadecimal literals are not read"),
+    ("(1,b'1',NULL)", r"table t: column name: row 1: cannot read b'1' as "
+     r"string: bit literals are not read"),
+    ("(1,'a',NULL),(2,'b',NULL),(x3,'c',NULL)", r"table t: column id: row "
+     r"3: cannot read x3 as bigint"),
+    ("(1,'a','2024-13-01')", r"table t: column d: row 1: cannot read "
+     r"'2024-13-01' as date"),
+], ids=["hex_quoted", "hex_bare", "bit", "bad_int", "bad_date"])
+def test_unreadable_values_name_table_column_and_row(spark, values, match):
+    """A literal its column type cannot read, hex and bit literals
+    included, raises ValueError naming the table, column and row on both
+    dump paths."""
+    from relational_to_doc_oriented_nosql_migrator_spark.dump_migration import (
+        migrate_dump_on_driver,
+    )
+
+    dump = _VALUE_TABLE + f"INSERT INTO t VALUES {values};\n"
+    with pytest.raises(ValueError, match=match):
+        migrate_dump_on_driver(dump)
+    with pytest.raises(ValueError, match=match):
+        import_sql_dump(spark, dump)
+
+
+@pytest.mark.parametrize("seed", range(1, 11))
+def test_parsed_columns_equal_the_generated_tables(seed):
+    """A parse oracle that does not go through the parser: the columns
+    read from `gen.mysqldump` equal the tables the generator wrote it
+    from (its timestamps are written as dates)."""
+    import datetime as dt
+
+    gen = _perfbench_gen()
+    from relational_to_doc_oriented_nosql_migrator_spark.sources.sqldump import (
+        read_dump,
+    )
+
+    tables = gen.make_tables(seed, 0.001, gen.TPCH_TABLES)
+    _db, defs, catalog = read_dump(gen.mysqldump(seed, 0.001)[0])
+    assert list(defs) == list(gen.TPCH_TABLES)
+    for name, table in tables.items():
+        tdef = defs[name]
+        assert [n for n, _ in tdef.fields] == table.column_names, name
+        assert catalog.get_table(name).num_rows == table.num_rows, name
+        for (column, _dtype), got in zip(tdef.fields, tdef.columns):
+            want = [v.date() if isinstance(v, dt.datetime) else v
+                    for v in table.column(column).to_pylist()]
+            assert got == want, (name, column)
+            assert [type(v) for v in got] == [type(v) for v in want], (
+                name, column)
