@@ -78,14 +78,18 @@ def main(argv: list[str] | None = None) -> int:
     stages: dict[str, float] = {}
     summary = {"id": uuid.uuid4().hex, "out": args.out, "stages": stages}
     log_content = None
+    # Files are read as POST /migration reads an upload: line ends stay
+    # as written (newline=""), so a raw \r inside a literal is data.
     if args.log:
-        with open(args.log, encoding="utf-8", errors="replace") as fh:
+        with open(args.log, encoding="utf-8", errors="replace",
+                  newline="") as fh:
             log_content = fh.read()
 
     if args.dump:
         # A dump is parsed and migrated on the driver: no Spark session
         # starts.
-        with open(args.dump, encoding="utf-8", errors="replace") as fh:
+        with open(args.dump, encoding="utf-8", errors="replace",
+                  newline="") as fh:
             documents, _catalog, _plan = migrate_dump_on_driver(
                 fh.read(),
                 log_content=log_content,

@@ -8,15 +8,14 @@ catalog metadata (PKs, single-column FK edges, row counts) the reference
 pulls from INFORMATION_SCHEMA — so a dump is a first-class source on equal
 footing with parquet.
 
-Sanitization parity with the reference's importSqlFile:
-- `DROP DATABASE` / `CREATE DATABASE` statements are discarded
-  (MySQLDBManager.js:74-82 strips them before piping to the server)
-- psql meta-commands (`\\c` etc.) are discarded (PostgresDBManager.js:64-80)
-- the database name is taken from `USE <db>` when present, else the
-  caller-provided fallback (filename stem in the reference)
-
-Grammar: the CREATE TABLE / INSERT INTO ... VALUES subset that mysqldump
-and pg_dump emit, plus pg_dump's `COPY ... FROM stdin` data blocks.
+The dump is read as the server loading it reads it, in one quote-aware
+walk in file order: comments (`-- ...`, `/* ... */`) are skipped anywhere
+outside a literal, psql meta-commands (`\\c` etc.) between statements
+(PostgresDBManager.js:64-80), and a `COPY ... FROM stdin` block's rows end
+at `\\n`, `\\r\\n` or `\\r` only. Only CREATE TABLE, INSERT/REPLACE, COPY
+and `USE <db>` (the database name; else the caller's fallback, the
+filename stem in the reference) are read; every other statement, DROP and
+CREATE DATABASE among them (MySQLDBManager.js:74-82), changes nothing.
 `INSERT IGNORE INTO` and `REPLACE INTO` (mysqldump --insert-ignore,
 --replace) load their rows like INSERT: as with INSERT, primary-key
 duplicates are not modelled, so every row loads. Values decode the way the
@@ -104,7 +103,7 @@ _TYPE_MAP: list[tuple[re.Pattern, _ColumnType]] = [
     (re.compile(r"^(decimal|numeric|float|double|real)", re.I),
      DoubleType()),
     (re.compile(r"^bool", re.I), BooleanType()),
-    (re.compile(r"^date$", re.I), DateType()),
+    (re.compile(r"^date\b", re.I), DateType()),
     (re.compile(r"^(datetime|timestamp)", re.I), TimestampType()),
 ]
 
@@ -129,16 +128,8 @@ _INSERT_RE = re.compile(
     re.I | re.S,
 )
 _USE_RE = re.compile(r"^use\s+([`\"\w]+)", re.I)
-_DISCARD_RE = re.compile(
-    r"^(drop\s+database|create\s+database|drop\s+table|set|lock\s+tables|"
-    r"unlock\s+tables|start\s+transaction|commit|begin|alter\s+table\s+\S+"
-    r"\s+owner)\b",
-    re.I,
-)
-
-
 _COPY_RE = re.compile(
-    r"^copy\s+([`\"\w.]+)\s*(?:\(([^)]*)\))?\s+from\s+stdin\s*;?\s*$",
+    r"^copy\s+([`\"\w.]+)\s*(?:\(([^)]*)\))?\s+from\s+stdin$",
     re.I,
 )
 
@@ -147,31 +138,46 @@ _COPY_RE = re.compile(
 # (written unrolled, so a missing closing quote costs one linear scan).
 _SQ = r"'[^'\\]*(?:(?:\\.|'')[^'\\]*)*'"
 _DQ = r'"[^"\\]*(?:(?:\\.|"")[^"\\]*)*"'
-# A statement: quoted strings and anything but ';' (a quote that never
+# A comment, which both servers skip anywhere outside a literal: `-- ...`
+# to the end of the line, or `/* ... */`. mysqldump's version-gated
+# `/*!40101 SET ... */` is skipped too: what it runs changes no table.
+_COMMENT = r"--[^\r\n]*|/\*.*?\*/"
+# What lies between statements: whitespace, empty statements, comments
+# and psql meta-command lines (`\c db`).
+_GAP_RE = re.compile(rf"(?:\s+|;|{_COMMENT}|\\[^\r\n]*)*", re.S)
+# A statement, up to its ';': quoted strings and comments are single
+# tokens, so a quote inside a comment opens nothing (a quote that never
 # closes is read as a plain character).
-_STATEMENT_RE = re.compile(rf"(?:{_SQ}|{_DQ}|[^;'\"]+|['\"])+", re.S)
-# Tokens for a paren-depth split: strings, parens, commas, the rest.
-_TOP_LEVEL_TOKEN_RE = re.compile(rf"{_SQ}|{_DQ}|[^(),'\"]+|.", re.S)
+_STATEMENT_RE = re.compile(
+    rf"(?:{_SQ}|{_DQ}|{_COMMENT}|[^;'\"/-]+|[^;])+", re.S)
+# A COPY block's data ends at a `\.` line (the pattern opens with the
+# literal, which re finds fast); its rows end at pg COPY FROM's row
+# terminators, and every other line separator is data.
+_COPY_END_RE = re.compile(r"\\\.(?<![^\r\n]\\\.)(?![^\r\n])")
+_COPY_ROW_END_RE = re.compile(r"\r\n?|\n")
+# Tokens for a paren-depth split: strings, comments, parens, commas, the
+# rest.
+_TOP_LEVEL_TOKEN_RE = re.compile(
+    rf"{_SQ}|{_DQ}|{_COMMENT}|[^(),'\"/-]+|.", re.S)
 # One INSERT literal: a quoted string, with an optional charset introducer
 # (`_binary 'ab'`) or hex/bit prefix (`X'41'`, `b'1'`), or a bare token
 # (a number, NULL, `0x41`).
 _LITERAL = rf"(?:_\w+\s*|[xXbB])?(?:{_SQ}|{_DQ})|[^\s,()'\"]+"
-# One INSERT's VALUES list token by token: a literal (group 1) or a tuple's
-# closing paren (group 2); '(' and ',' between them are skipped. Only an
-# error report walks it (see _TableDef.insert).
-_VALUES_TOKEN_RE = re.compile(rf"({_LITERAL})|(\))", re.S)
+# One INSERT's VALUES list token by token: a comment, a literal or a
+# paren. Only an error report walks it (see _TableDef.insert).
+_VALUES_TOKEN_RE = re.compile(rf"{_COMMENT}|{_LITERAL}|[()]", re.S)
 _INTRODUCER_RE = re.compile(r"_\w+\s*(?=['\"])")
 _HEX_OR_BIT_RE = re.compile(r"[xX]'|0x|([bB]'|0b)")
 
 
 @functools.lru_cache(maxsize=64)
 def _tuple_re(width: int) -> re.Pattern:
-    """One VALUES tuple of `width` literals per match (groups 1..width).
-    Any other character but the whitespace and commas between tuples
-    lands in the last group, so a row of another width or a stray token
-    shows there."""
+    """One VALUES tuple of `width` literals per match (groups 1..width),
+    or a comment between tuples (every group empty). Any other character
+    but the whitespace and commas between tuples lands in the last group,
+    so a row of another width or a stray token shows there."""
     body = r"\s*,\s*".join([f"({_LITERAL})"] * width)
-    return re.compile(rf"\(\s*{body}\s*\)|([^\s,])", re.S)
+    return re.compile(rf"\(\s*{body}\s*\)|{_COMMENT}|([^\s,])", re.S)
 
 
 # MySQL string-literal escapes (the server's own reading of a mysqldump):
@@ -256,6 +262,8 @@ def _mysql_converter(parse):
         if m := _HEX_OR_BIT_RE.match(token):
             raise ValueError(
                 f"{'bit' if m[1] else 'hexadecimal'} literals are not read")
+        if "--" in token or "/*" in token:
+            raise ValueError("a comment inside a row is not read")
         return parse(token)
     return convert
 
@@ -285,48 +293,35 @@ def _copy_texts(fields: tuple[str, ...]) -> tuple[str, ...] | None:
     return None if "\\" in "".join(fields) else fields
 
 
-# A COPY block: (table, column list text or None, data lines).
-_CopyBlock = tuple[str, str | None, list[str]]
-
-
-def _scan(text: str) -> tuple[list[str], list[_CopyBlock]]:
-    """One pass over the dump's lines, then one statement split.
-
-    `--` comment lines and psql meta-commands (`\\c` ...) are dropped.
-    pg_dump `COPY t (cols) FROM stdin; ... \\.` blocks are lifted out
-    whole: their data is newline-framed, not ';'-terminated, and a data
-    line may hold anything. Returns the statements and the blocks."""
-    kept: list[str] = []
-    blocks: list[_CopyBlock] = []
-    data: list[str] | None = None
-    for line in text.splitlines():
-        stripped = line.strip()
-        if data is not None:
-            if stripped == "\\.":
-                data = None
-            else:
-                data.append(line)
-        elif stripped.startswith(("--", "\\")):
-            continue
-        elif m := _COPY_RE.match(stripped):
-            data = []
-            blocks.append((_unquote(m.group(1)), m.group(2), data))
-        else:
-            kept.append(line)
-    statements = [
-        s.strip() for s in _STATEMENT_RE.findall("\n".join(kept))
-    ]
-    return [s for s in statements if s], blocks
+def _scan(text: str):
+    """Walk the dump once, in file order, and yield each statement as
+    (text, None), or a `COPY t (cols) FROM stdin` header as (header, data
+    rows). The data runs from the next line to a `\\.` line: it is framed
+    by lines, not by ';', and a row may hold anything."""
+    pos, end = 0, len(text)
+    while (pos := _GAP_RE.match(text, pos).end()) < end:
+        m = _STATEMENT_RE.match(text, pos)
+        stmt, pos, rows = m[0].rstrip(), m.end() + 1, None
+        if _COPY_RE.match(stmt):
+            stop = _COPY_END_RE.search(text, pos)
+            # the rest of the header's line, then one row per line
+            _rest, *rows = _COPY_ROW_END_RE.split(
+                text[pos:stop.start() if stop else end])
+            if rows and not rows[-1]:
+                rows.pop()
+            pos = stop.end() if stop else end
+        yield stmt, rows
 
 
 def _split_statements(text: str) -> list[str]:
-    """Split on top-level ';' (quote-aware); drop comments, psql
-    meta-command lines and COPY data blocks."""
-    return _scan(text)[0]
+    """The dump's statements, without comments, psql meta-commands and
+    COPY blocks."""
+    return [stmt for stmt, rows in _scan(text) if rows is None]
 
 
 def _split_top_level(s: str) -> list[str]:
-    """Split on ',' outside parens and quoted strings."""
+    """Split on ',' outside parens, quoted strings and comments; a comment
+    reads as a space."""
     parts, buf, depth = [], [], 0
     for token in _TOP_LEVEL_TOKEN_RE.findall(s):
         if token == "," and depth == 0:
@@ -337,6 +332,8 @@ def _split_top_level(s: str) -> list[str]:
             depth += 1
         elif token == ")":
             depth -= 1
+        elif token.startswith(("--", "/*")):
+            token = " "
         buf.append(token)
     parts.append("".join(buf).strip())
     return [p for p in parts if p]
@@ -380,15 +377,20 @@ class _TableDef:
         rows = _tuple_re(len(names)).findall(body)
         if any(map(itemgetter(-1), rows)):
             # the first row of another width, numbered as the server would
+            # (a comment inside a row counts as one of its values)
             row, found = 1, 0
-            for _literal, close in _VALUES_TOKEN_RE.findall(body):
-                if not close:
+            for token in _VALUES_TOKEN_RE.findall(body):
+                if token == "(":
+                    found = 0
+                elif token != ")":
                     found += 1
                 elif found != len(names):
                     break
                 else:
                     row, found = row + 1, 0
             raise self._width_error(row, len(names), found)
+        if not all(map(itemgetter(0), rows)):
+            rows = list(filter(itemgetter(0), rows))  # drop the comments
         self._append(names, rows, _mysql_texts, _mysql_converter)
 
     def copy(self, columns: str | None, lines: list[str]) -> None:
@@ -502,10 +504,7 @@ def _parse_dump(
     columns), all on the driver in plain Python."""
     db_name = default_db
     defs: dict[str, _TableDef] = {}
-    statements, copy_blocks = _scan(sql_text)
-    for stmt in statements:
-        if _DISCARD_RE.match(stmt):
-            continue
+    for stmt, rows in _scan(sql_text):
         use = _USE_RE.match(stmt)
         if use:
             db_name = _unquote(use.group(1))
@@ -514,14 +513,12 @@ def _parse_dump(
         if created:
             defs[created.name] = created
             continue
-        ins = _INSERT_RE.match(stmt)
-        tdef = ins and defs.get(_unquote(ins.group(1)))
-        if tdef:
-            tdef.insert(ins.group(2), ins.group(3))
-    for tname, columns, lines in copy_blocks:
-        tdef = defs.get(tname)
-        if tdef:
-            tdef.copy(columns, lines)
+        into = (_INSERT_RE if rows is None else _COPY_RE).match(stmt)
+        tdef = into and defs.get(_unquote(into.group(1)))
+        if tdef and rows is None:
+            tdef.insert(into.group(2), into.group(3))
+        elif tdef:
+            tdef.copy(into.group(2), rows)
     return db_name, defs
 
 

@@ -169,6 +169,30 @@ def test_post_with_zero_dates_migrates(server):
     assert docs[4] == {"id": 4, "name": "qa", "budget": 7.5}
 
 
+def test_cli_reads_a_dump_as_the_service_does(server, tmp_path):
+    """One dump's bytes, with CRLF line ends and literals holding a raw
+    \r, a CRLF and U+2028, give the same documents through `cli --dump`
+    as through a POST."""
+    from relational_to_doc_oriented_nosql_migrator_spark import cli
+
+    dump = ("CREATE TABLE t (id INT PRIMARY KEY, s VARCHAR(20));\r\n"
+            "INSERT INTO t VALUES (1,'a\rb\u2028c'),\r\n"
+            "(2,'d\r\ne');\r\n").encode()
+    path, out = tmp_path / "crlf.sql", tmp_path / "out"
+    path.write_bytes(dump)
+    assert cli.main(["--dump", str(path), "--out", str(out),
+                     "--single-file"]) == 0
+    with _post(server, {"sqlFile": ("crlf.sql", dump)}) as resp:
+        result_id = json.load(resp)["resultId"]
+    archive = zipfile.ZipFile(io.BytesIO(_download(server,
+                                                   f"?id={result_id}")))
+    assert sorted(archive.namelist()) == sorted(os.listdir(out))
+    for name in archive.namelist():
+        assert archive.read(name) == (out / name).read_bytes(), name
+    assert json.loads(archive.read("t.json")) == [
+        {"id": 1, "s": "a\rb\u2028c"}, {"id": 2, "s": "d\r\ne"}]
+
+
 def test_concurrent_posts_get_their_own_results(server):
     """Two migrations in flight at once: each response's resultId serves
     exactly that request's archive, and a bare GET afterwards serves one

@@ -264,6 +264,34 @@ INSERT INTO blob_t VALUES (5,'plain','2024-02-29','2024-02-29 12:00:00');
 """
 
 
+# Comments wherever the servers skip them (quotes and ';' inside them
+# included), CRLF and lone-CR line ends, and raw line separators inside
+# literals and COPY fields: mysqldump and pg_dump write them all raw but
+# \n and \r.
+COMMENTS_DUMP = (
+    "/* leading */ CREATE TABLE dept (\r\n"
+    "  id INT PRIMARY KEY, -- the key, don't (drop) it\r\n"
+    "  name VARCHAR(40) /* a name; */,\r\n"
+    "  est date DEFAULT NULL\r\n"
+    "); -- a trailing comment with a ' quote\r\n"
+    "CREATE TABLE emp (\n"
+    "  emp_id INT PRIMARY KEY,\n"
+    "  dept_id INT,\n"
+    "  note TEXT,\n"
+    "  FOREIGN KEY (dept_id) REFERENCES dept (id)\n"
+    ");\n"
+    "INSERT INTO dept VALUES (1,'a\u2028b\u2029c','2024-01-02'),\n"
+    "-- between tuples, don't split\n"
+    "(2,'d\x85e\x0bf\x0cg\x1ch\x1di\x1ej\rk\r\nl',NULL);\n"
+    "COPY emp (emp_id, dept_id, note) FROM stdin;\r\n"
+    "10\t1\tx\u2028y\x0cz\x1e\r\n"
+    "11\t2\t-- not a comment\r"
+    "12\t2\t\\\\c not meta\n"
+    "\\.\n"
+    "INSERT INTO emp VALUES (13, 1, 'p\n-- q\n\\\\r s');\n"
+)
+
+
 def _perfbench_gen():
     import os
     import sys
@@ -286,6 +314,7 @@ def _dump_cases():
         "mysql_escapes": MYSQL_ESCAPE_DUMP,
         "pg_escapes": PG_ESCAPE_DUMP,
         "mysqldump8": MYSQLDUMP8_DUMP,
+        "comments": COMMENTS_DUMP,
     }
 
 
@@ -436,9 +465,12 @@ _WIDTH_TABLE = "CREATE TABLE t (id INT PRIMARY KEY, name VARCHAR(10));\n"
     # MySQL ERROR 1110: Column 'id' specified twice
     (_WIDTH_TABLE + "INSERT INTO t (id, id) VALUES (1,2);\n",
      r"table t: a column is listed twice"),
+    # a comment inside a row is not skipped: it counts as a value
+    (_WIDTH_TABLE + "INSERT INTO t VALUES (1,'a'),(2, /* c */ 'b');\n",
+     r"table t: row 2: expected 2 values, found 3"),
 ], ids=["insert_short", "insert_long", "insert_column_list", "copy_short",
         "copy_long", "insert_unknown_column", "copy_unknown_column",
-        "insert_repeated_column"])
+        "insert_repeated_column", "insert_comment_in_row"])
 def test_rows_must_match_their_column_list(spark, dump, match):
     """A row whose value count differs from its column list, or a column
     list naming a column the table lacks, raises ValueError on both dump
@@ -513,7 +545,11 @@ _VALUE_TABLE = ("CREATE TABLE t (id INT PRIMARY KEY, name VARCHAR(10), "
      r"3: cannot read x3 as bigint"),
     ("(1,'a','2024-13-01')", r"table t: column d: row 1: cannot read "
      r"'2024-13-01' as date"),
-], ids=["hex_quoted", "hex_bare", "bit", "bad_int", "bad_date"])
+    ("(1,'a',NULL),(2,NULL/*c*/,NULL)", r"table t: column name: row 2: "
+     r"cannot read NULL/\*c\*/ as string: a comment inside a row is not "
+     r"read"),
+], ids=["hex_quoted", "hex_bare", "bit", "bad_int", "bad_date",
+        "comment_in_value"])
 def test_unreadable_values_name_table_column_and_row(spark, values, match):
     """A literal its column type cannot read, hex and bit literals
     included, raises ValueError naming the table, column and row on both
@@ -554,3 +590,133 @@ def test_parsed_columns_equal_the_generated_tables(seed):
             assert got == want, (name, column)
             assert [type(v) for v in got] == [type(v) for v in want], (
                 name, column)
+
+
+def _loaded_rows(spark, dump: str, table: str) -> list[tuple]:
+    """`table`'s column names, then its rows, as both dump paths load
+    them, after checking that they agree: the driver-side parse
+    (read_dump, which migrate_dump_on_driver runs) and the Spark
+    tables."""
+    from relational_to_doc_oriented_nosql_migrator_spark.sources.sqldump import (
+        read_dump,
+    )
+
+    tdef = read_dump(dump)[1][table]
+    rows = [tuple(n for n, _ in tdef.fields), *zip(*tdef.columns)]
+    got = import_sql_dump(spark, dump)[1][table]
+    assert [tuple(got.columns), *map(tuple, got.collect())] == rows
+    return rows
+
+
+_T = "CREATE TABLE t (id INT PRIMARY KEY, s VARCHAR(40));\n"
+# Line separators other than \n and \r\n, which str.splitlines also splits
+# on; a dump holds them raw.
+_SEPARATORS = "\u2028\u2029\x85\x0b\x0c\x1c\x1d\x1e"
+
+
+@pytest.mark.parametrize("dump, want", [
+    (_T + f"INSERT INTO t VALUES (1,'a{_SEPARATORS}\rb');\n",
+     [(1, f"a{_SEPARATORS}\rb")]),
+    (_T + f"COPY t (id, s) FROM stdin;\n1\ta{_SEPARATORS}b\n2\tc\n\\.\n",
+     [(1, f"a{_SEPARATORS}b"), (2, "c")]),
+    (_T.replace(";\n", "; -- note\n") + "INSERT INTO t VALUES (1,'a'),(2,'b');\n",
+     [(1, "a"), (2, "b")]),
+    (_T.replace(";\n", "; -- don't\n") + "INSERT INTO t VALUES (1,'a'),(2,'b');\n",
+     [(1, "a"), (2, "b")]),
+    ("/* x */ " + _T + "INSERT INTO t VALUES (1,'a');\n", [(1, "a")]),
+    ("CREATE TABLE t (\n  id INT, -- the key\n  s VARCHAR(40)\n);\n"
+     "INSERT INTO t VALUES (1,'a');\n", [(1, "a")]),
+    (_T + "INSERT INTO t VALUES (1,'a\n-- b'),(2,'c\n\\\\d');\n",
+     [(1, "a\n-- b"), (2, "c\n\\d")]),
+    (_T + "COPY t FROM stdin;\n1\ta\n\\.\nINSERT INTO t VALUES (2,'b');\n",
+     [(1, "a"), (2, "b")]),
+], ids=["separators_in_insert", "separators_in_copy", "trailing_comment",
+        "quote_in_trailing_comment", "leading_block_comment",
+        "comment_in_create_body", "comment_and_backslash_lines_in_strings",
+        "file_order"])
+def test_dump_reads_as_the_server_reads_it(spark, dump, want):
+    """Comments are skipped wherever the server skips them and never
+    inside a literal; line separators other than a COPY row's terminator
+    are data; statements and COPY blocks apply in file order."""
+    assert _loaded_rows(spark, dump, "t") == [("id", "s"), *want]
+
+
+def test_full_line_comments_between_tuples_load_every_row(spark):
+    dump = (_T + "INSERT INTO t VALUES\n(1,'a'),\n-- one\n(2,'b')\n"
+            "-- two\n,(3,'c');\n")
+    assert _loaded_rows(spark, dump, "t") == [
+        ("id", "s"), (1, "a"), (2, "b"), (3, "c")]
+
+
+def test_dates_with_qualifiers_are_dates(spark):
+    """`date NOT NULL` and `date DEFAULT NULL` are DATE columns, as a
+    bare DATE is (a datetime is a timestamp): zero dates load as NULL, an
+    invalid date raises, and a key may reference a bare DATE column."""
+    import datetime as dt
+
+    from relational_to_doc_oriented_nosql_migrator_spark.dump_migration import (
+        migrate_dump_on_driver,
+    )
+
+    dump = ("CREATE TABLE p (d DATE, PRIMARY KEY (d));\n"
+            "CREATE TABLE c (id INT, d date NOT NULL, made date DEFAULT NULL,"
+            " at datetime NOT NULL, PRIMARY KEY (id),"
+            " FOREIGN KEY (d) REFERENCES p (d));\n"
+            "INSERT INTO p VALUES ('2024-01-02');\n"
+            "INSERT INTO c VALUES (1,'2024-01-02','0000-00-00',"
+            "'2024-01-02 03:04:05'),(2,'2024-01-02','2024-02-29',"
+            "'2024-01-02 03:04:05');\n")
+    day, at = dt.date(2024, 1, 2), dt.datetime(2024, 1, 2, 3, 4, 5)
+    assert _loaded_rows(spark, dump, "c") == [
+        ("id", "d", "made", "at"), (1, day, None, at), (2, day, dt.date(2024, 2, 29), at)]
+    for normalize in (True, False):
+        doc = migrate_dump_on_driver(dump, normalize_dates=normalize)[0]
+        assert '{"id":2,"made":"2024-02-29",' in doc["p"][0]
+    bad = dump.replace("2024-02-29", "2024-13-45")
+    match = r"table c: column made: row 2: cannot read '2024-13-45' as date"
+    with pytest.raises(ValueError, match=match):
+        migrate_dump_on_driver(bad)
+    with pytest.raises(ValueError, match=match):
+        import_sql_dump(spark, bad)
+
+
+# What mysqldump escapes in a string literal, and what pg's COPY TO
+# escapes in a text field; every other character is written raw.
+_MYSQLDUMP_ESCAPES = str.maketrans({
+    "\0": "\\0", "\n": "\\n", "\r": "\\r", "\\": "\\\\", "'": "\\'",
+    '"': '\\"', "\x1a": "\\Z"})
+_COPY_TO_ESCAPES = str.maketrans({
+    "\b": "\\b", "\f": "\\f", "\n": "\\n", "\r": "\\r", "\t": "\\t",
+    "\v": "\\v", "\\": "\\\\"})
+_ROUND_TRIP_ALPHABET = (
+    ["'", '"', "\\", ";", "--", "/*", "*/", "\\N", "\t", "\x85", "\u2028",
+     "\u2029", "\U0001F600", "a", "Z", " ", "(", ")", ","]
+    + [chr(c) for c in range(0x20)])
+
+
+def test_values_round_trip_through_both_dump_formats(spark):
+    """Values written the way mysqldump (an extended INSERT) and pg_dump
+    (a COPY block) write them come back exactly, on both dump paths; the
+    expected values come from the generator, not from the parser."""
+    import random
+
+    rng = random.Random(14)
+    values = [None, ""] + [
+        "".join(rng.choice(_ROUND_TRIP_ALPHABET)
+                for _ in range(rng.randrange(1, 16)))
+        for _ in range(200)]
+    literals = ["NULL" if v is None
+                else "'" + v.translate(_MYSQLDUMP_ESCAPES) + "'"
+                for v in values]
+    fields = ["\\N" if v is None else v.translate(_COPY_TO_ESCAPES)
+              for v in values]
+    dump = (
+        "CREATE TABLE ins (id INT PRIMARY KEY, s TEXT);\n"
+        "CREATE TABLE cp (id INT PRIMARY KEY, s TEXT);\n"
+        "INSERT INTO ins VALUES "
+        + ",".join(f"({i},{lit})" for i, lit in enumerate(literals)) + ";\n"
+        "COPY cp (id, s) FROM stdin;\n"
+        + "".join(f"{i}\t{f}\n" for i, f in enumerate(fields)) + "\\.\n")
+    want = [("id", "s"), *enumerate(values)]
+    assert _loaded_rows(spark, dump, "ins") == want
+    assert _loaded_rows(spark, dump, "cp") == want
