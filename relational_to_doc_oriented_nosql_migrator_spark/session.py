@@ -81,6 +81,12 @@ def get_spark(
         # package on the workers: put its parent directory on their path.
         # Spark merges this with any PYTHONPATH the workers already have.
         .config("spark.executorEnv.PYTHONPATH", _PACKAGE_PARENT)
+        # PySpark 4 records the Python call site of every Column call in
+        # the JVM (a session lookup, a conf read and two py4j calls each)
+        # for the DataFrame query context of an error. Building the
+        # nesting frames makes thousands of such calls; errors keep their
+        # Python traceback and message without it.
+        .config("spark.python.sql.dataFrameDebugging.enabled", "false")
     )
     for key, value in (extra_conf or {}).items():
         builder = builder.config(key, value)

@@ -440,18 +440,22 @@ def _write_streamed(pieces, target: str) -> int:
 
 
 def _pooled(job, frames: dict[str, DataFrame]) -> dict:
-    """{name: job(name, frame)} with the jobs (collects or writes)
-    submitted concurrently from driver threads: each flat collection's
-    parallelism is capped by its input split count, so serial jobs leave
-    most cores idle at every job's stage tail — concurrent submission
-    makes the wall the max job, not the sum. The scoped confs are
-    session-wide, so one context manager brackets all of them (plan-time
-    conf reads happen inside it)."""
+    """{name: job(name, frame)} with every job (a collect or a write)
+    submitted at once, one driver thread per collection. A flat
+    collection's parallelism is capped by its input split count, and
+    much of a small job's wall is driver-side planning and the commit
+    protocol, so jobs queued behind a narrower pool leave cores idle;
+    with all of them in flight the wall is the slowest job, not a sum.
+    Memory stays bounded: concurrent jobs add no task slots (a local[N]
+    master still runs at most N tasks), and each task aggregates sort-
+    based (see _sort_based_collects). The scoped confs are session-wide,
+    so one context manager brackets all of them (plan-time conf reads
+    happen inside it)."""
     if not frames:
         return {}
     spark = next(iter(frames.values())).sparkSession
     with _sort_based_collects(spark):
-        with ThreadPoolExecutor(min(4, len(frames))) as pool:
+        with ThreadPoolExecutor(len(frames)) as pool:
             return dict(zip(frames, pool.map(job, frames, frames.values())))
 
 

@@ -18,9 +18,13 @@ filename stem in the reference) are read; every other statement, DROP and
 CREATE DATABASE among them (MySQLDBManager.js:74-82), changes nothing.
 `INSERT IGNORE INTO` and `REPLACE INTO` (mysqldump --insert-ignore,
 --replace) load their rows like INSERT: as with INSERT, primary-key
-duplicates are not modelled, so every row loads. Values decode the way the
-server that would load the dump reads them: MySQL backslash escapes in
-INSERT literals, pg text-format escapes in COPY data. A charset introducer
+duplicates are not modelled, so every row loads. A comment may stand
+between the words of a statement's head, and a backtick- or double-quoted
+name is one token whatever it holds. Values decode the way the server
+that would load the dump reads them: MySQL backslash escapes in INSERT
+literals until a `SET standard_conforming_strings = on` (pg_dump's
+header), after which a '...' literal keeps `\\` as data and E'...' keeps
+pg's escapes; pg text-format escapes in COPY data. A charset introducer
 (`_binary 'ab'`, mysqldump 8.0's BLOB form) reads as its quoted text; hex
 and bit literals (`0x41`, `X'41'`, `b'1'`) raise ValueError. MySQL's zero
 date (`'0000-00-00'`, `'0000-00-00 00:00:00'`) loads as NULL. A value its
@@ -107,77 +111,116 @@ _TYPE_MAP: list[tuple[re.Pattern, _ColumnType]] = [
     (re.compile(r"^(datetime|timestamp)", re.I), TimestampType()),
 ]
 
-_CONSTRAINT_HEAD = re.compile(
-    r"^(primary\s+key|foreign\s+key|constraint|unique|key|index|check)\b",
-    re.I,
-)
-_PK_RE = re.compile(r"primary\s+key\s*\(([^)]*)\)", re.I)
-_FK_RE = re.compile(
-    r"foreign\s+key\s*\(([^)]*)\)\s*references\s+"
-    r"([`\"\w]+)\s*\(([^)]*)\)",
-    re.I,
-)
-_CREATE_RE = re.compile(
-    r"^create\s+table\s+(?:if\s+not\s+exists\s+)?([`\"\w.]+)\s*\((.*)\)"
-    r"[^)]*$",
-    re.I | re.S,
-)
-_INSERT_RE = re.compile(
-    r"^(?:insert(?:\s+ignore)?|replace)\s+into\s+([`\"\w.]+)\s*"
-    r"(?:\(([^)]*)\))?\s*values\s*(.*)$",
-    re.I | re.S,
-)
-_USE_RE = re.compile(r"^use\s+([`\"\w]+)", re.I)
-_COPY_RE = re.compile(
-    r"^copy\s+([`\"\w.]+)\s*(?:\(([^)]*)\))?\s+from\s+stdin$",
-    re.I,
-)
-
-# The pair of quoted-string patterns every split below builds on: a '...'
-# or "..." literal whose body holds backslash escapes and doubled quotes
+# The quoted-string patterns every split below builds on: a '...' or
+# "..." literal whose body holds backslash escapes and doubled quotes
 # (written unrolled, so a missing closing quote costs one linear scan).
 _SQ = r"'[^'\\]*(?:(?:\\.|'')[^'\\]*)*'"
 _DQ = r'"[^"\\]*(?:(?:\\.|"")[^"\\]*)*"'
+# A standard-conforming pg string (after `SET standard_conforming_strings
+# = on`, which pg_dump writes in every header): a '...' body keeps `\` as
+# data and only a doubled quote is special; an E'...' body keeps its
+# backslash escapes.
+_SQ_STANDARD = rf"(?<!\b[eE])'[^']*(?:''[^']*)*'|(?<=\b[eE]){_SQ}"
 # A comment, which both servers skip anywhere outside a literal: `-- ...`
 # to the end of the line, or `/* ... */`. mysqldump's version-gated
 # `/*!40101 SET ... */` is skipped too: what it runs changes no table.
 _COMMENT = r"--[^\r\n]*|/\*.*?\*/"
+# Whitespace or a comment, as between the words of a statement head.
+_S = rf"(?:\s|{_COMMENT})"
+# A quoted identifier (a doubled quote inside is one quote) or a bare
+# word, and a name of such parts, qualified (`db`.`t`, "public"."t").
+_BQ = r"`[^`]*(?:``[^`]*)*`"
+_DQ_NAME = r'"[^"]*(?:""[^"]*)*"'
+_IDENT = rf"{_BQ}|{_DQ_NAME}|[\w$]+"
+_NAME = rf"(?:{_IDENT})(?:\s*\.\s*(?:{_IDENT}))*"
+_NAME_RE = re.compile(_NAME)
+_IDENT_RE = re.compile(_IDENT)
+# A parenthesized column list, whose quoted names and comments may hold
+# a ')'.
+_COLUMN_LIST = rf"\(((?:{_BQ}|{_DQ_NAME}|{_COMMENT}|[^)`\"])*+)\)"
+
+_CONSTRAINT_HEAD = re.compile(
+    r"^(primary\s+key|foreign\s+key|constraint|unique|key|index|check)\b",
+    re.I,
+)
+_PK_RE = re.compile(rf"primary\s+key\s*{_COLUMN_LIST}", re.I)
+_FK_RE = re.compile(
+    rf"foreign\s+key\s*{_COLUMN_LIST}\s*references\s+({_NAME})\s*"
+    rf"{_COLUMN_LIST}",
+    re.I,
+)
+_CREATE_RE = re.compile(
+    rf"^create{_S}+table\b{_S}*(?:if{_S}+not{_S}+exists\b{_S}*)?({_NAME})"
+    rf"{_S}*\((.*)\)[^)]*$",
+    re.I | re.S,
+)
+_INSERT_RE = re.compile(
+    rf"^(?:insert(?:{_S}+ignore)?|replace){_S}+into\b{_S}*({_NAME}){_S}*"
+    rf"(?:{_COLUMN_LIST})?{_S}*values{_S}*(.*)$",
+    re.I | re.S,
+)
+_USE_RE = re.compile(rf"^use\b{_S}*({_NAME})", re.I | re.S)
+_COPY_RE = re.compile(
+    rf"^copy\b{_S}*({_NAME}){_S}*(?:{_COLUMN_LIST})?{_S}+from{_S}+stdin$",
+    re.I | re.S,
+)
+_STANDARD_STRINGS_RE = re.compile(
+    rf"^set{_S}+standard_conforming_strings{_S}*(?:=|\bto\b){_S}*'?(\w+)'?$",
+    re.I | re.S,
+)
 # What lies between statements: whitespace, empty statements, comments
 # and psql meta-command lines (`\c db`).
 _GAP_RE = re.compile(rf"(?:\s+|;|{_COMMENT}|\\[^\r\n]*)*", re.S)
-# A statement, up to its ';': quoted strings and comments are single
-# tokens, so a quote inside a comment opens nothing (a quote that never
-# closes is read as a plain character).
-_STATEMENT_RE = re.compile(
-    rf"(?:{_SQ}|{_DQ}|{_COMMENT}|[^;'\"/-]+|[^;])+", re.S)
 # A COPY block's data ends at a `\.` line (the pattern opens with the
 # literal, which re finds fast); its rows end at pg COPY FROM's row
 # terminators, and every other line separator is data.
 _COPY_END_RE = re.compile(r"\\\.(?<![^\r\n]\\\.)(?![^\r\n])")
 _COPY_ROW_END_RE = re.compile(r"\r\n?|\n")
-# Tokens for a paren-depth split: strings, comments, parens, commas, the
-# rest.
-_TOP_LEVEL_TOKEN_RE = re.compile(
-    rf"{_SQ}|{_DQ}|{_COMMENT}|[^(),'\"/-]+|.", re.S)
-# One INSERT literal: a quoted string, with an optional charset introducer
-# (`_binary 'ab'`) or hex/bit prefix (`X'41'`, `b'1'`), or a bare token
-# (a number, NULL, `0x41`).
-_LITERAL = rf"(?:_\w+\s*|[xXbB])?(?:{_SQ}|{_DQ})|[^\s,()'\"]+"
-# One INSERT's VALUES list token by token: a comment, a literal or a
-# paren. Only an error report walks it (see _TableDef.insert).
-_VALUES_TOKEN_RE = re.compile(rf"{_COMMENT}|{_LITERAL}|[()]", re.S)
 _INTRODUCER_RE = re.compile(r"_\w+\s*(?=['\"])")
 _HEX_OR_BIT_RE = re.compile(r"[xX]'|0x|([bB]'|0b)")
 
 
-@functools.lru_cache(maxsize=64)
-def _tuple_re(width: int) -> re.Pattern:
-    """One VALUES tuple of `width` literals per match (groups 1..width),
-    or a comment between tuples (every group empty). Any other character
-    but the whitespace and commas between tuples lands in the last group,
-    so a row of another width or a stray token shows there."""
-    body = r"\s*,\s*".join([f"({_LITERAL})"] * width)
-    return re.compile(rf"\(\s*{body}\s*\)|{_COMMENT}|([^\s,])", re.S)
+class _Grammar:
+    """The dump's patterns for one reading of '...' literals: backslash-
+    escaped (mysqldump, and pg until standard_conforming_strings is on)
+    or standard-conforming. `string` turns a quoted token into its
+    text."""
+
+    def __init__(self, sq: str, string):
+        self.string = string
+        # One INSERT literal: a quoted string, with an optional charset
+        # introducer (`_binary 'ab'`), hex/bit prefix (`X'41'`, `b'1'`) or
+        # pg's E, or a bare token (a number, NULL, `0x41`).
+        self.literal = rf"(?:_\w+\s*|[xXbBeE])?(?:{sq}|{_DQ})|[^\s,()'\"]+"
+        # A statement, up to its ';': quoted strings, quoted names and
+        # comments are single tokens, so a quote inside a comment opens
+        # nothing (a quote that never closes is read as a plain
+        # character).
+        self.statement = re.compile(
+            rf"(?:{sq}|{_DQ}|{_BQ}|{_COMMENT}|[^;'\"`/-]+|[^;])+", re.S)
+        # Tokens for a paren-depth split: strings, quoted names, comments,
+        # parens, commas, the rest.
+        self.top_level_token = re.compile(
+            rf"{sq}|{_DQ}|{_BQ}|{_COMMENT}|[^(),'\"`/-]+|.", re.S)
+        # One INSERT's VALUES list token by token: a comment, a literal or
+        # a paren. Only an error report walks it (see _TableDef.insert).
+        self.values_token = re.compile(
+            rf"{_COMMENT}|{self.literal}|[()]", re.S)
+
+    def converter(self, parse):
+        """An INSERT literal token -> value, for a column read by
+        `parse`."""
+        return _insert_converter(parse, self.string)
+
+    @functools.lru_cache(maxsize=128)
+    def tuple_re(self, width: int) -> re.Pattern:
+        """One VALUES tuple of `width` literals per match (groups
+        1..width), or a comment between tuples (every group empty). Any
+        other character but the whitespace and commas between tuples
+        lands in the last group, so a row of another width or a stray
+        token shows there."""
+        body = r"\s*,\s*".join([f"({self.literal})"] * width)
+        return re.compile(rf"\(\s*{body}\s*\)|{_COMMENT}|([^\s,])", re.S)
 
 
 # MySQL string-literal escapes (the server's own reading of a mysqldump):
@@ -197,10 +240,27 @@ _COPY_ESCAPES = {
     "b": "\b", "f": "\f", "n": "\n", "r": "\r", "t": "\t", "v": "\v",
 }
 _COPY_ESCAPE_RE = re.compile(r"\\(.)", re.S)
+# pg E'...' escapes: octal, hex and Unicode forms and the table; any
+# other \x is x.
+_E_ESCAPES = {"b": "\b", "f": "\f", "n": "\n", "r": "\r", "t": "\t"}
+_E_ESCAPE_RE = re.compile(
+    r"\\(?:([0-7]{1,3})|x([0-9A-Fa-f]{1,2})|u([0-9A-Fa-f]{4})"
+    r"|U([0-9A-Fa-f]{8})|(.))|''",
+    re.S,
+)
 
 
 def _unquote(ident: str) -> str:
-    return ident.strip().strip('`"').split(".")[-1].strip('`"')
+    """A name's last part as the server reads it: `db`.`t` is t, and a
+    doubled quote inside a quoted part is one quote."""
+    ident = ident.strip()
+    name = _NAME_RE.match(ident)
+    if not name:
+        return ident
+    part = _IDENT_RE.findall(name[0])[-1]
+    if part[0] in '`"':
+        return part[1:-1].replace(part[0] * 2, part[0])
+    return part
 
 
 def _mysql_string(token: str) -> str:
@@ -208,6 +268,29 @@ def _mysql_string(token: str) -> str:
     return _MYSQL_ESCAPE_RE[token[0]].sub(
         lambda m: _MYSQL_ESCAPES.get(m[0], m[0][1]), token[1:-1]
     )
+
+
+def _standard_string(token: str) -> str:
+    """A quoted standard-conforming literal token -> its text."""
+    return token[1:-1].replace(token[0] * 2, token[0])
+
+
+def _e_escape(m: re.Match) -> str:
+    if m[0] == "''":
+        return "'"
+    if m[5] is not None:
+        return _E_ESCAPES.get(m[5], m[5])
+    octal, *hexes = m.groups()[:4]
+    return chr(int(octal, 8) if octal else int(next(filter(None, hexes)), 16))
+
+
+def _e_string(token: str) -> str:
+    """A pg E'...' literal token, E first -> its text."""
+    return _E_ESCAPE_RE.sub(_e_escape, token[2:-1])
+
+
+_BACKSLASH_STRINGS = _Grammar(_SQ, _mysql_string)
+_STANDARD_STRINGS = _Grammar(_SQ_STANDARD, _standard_string)
 
 
 def _copy_text(field: str) -> str:
@@ -249,16 +332,18 @@ _PARSERS = {
 }
 
 
-def _mysql_converter(parse):
-    """An INSERT literal token (quoted, introduced, NULL or bare) ->
-    value."""
+def _insert_converter(parse, string):
+    """An INSERT literal token (quoted, introduced, E'...', NULL or bare)
+    -> value; `string` reads a quoted token's text."""
     def convert(token: str):
         if token[0] in "'\"":
-            return parse(_mysql_string(token))
+            return parse(string(token))
         if token.upper() == "NULL":
             return None
+        if token[0] in "eE" and token[1:2] == "'":
+            return parse(_e_string(token))
         if m := _INTRODUCER_RE.match(token):
-            return parse(_mysql_string(token[m.end():]))
+            return parse(string(token[m.end():]))
         if m := _HEX_OR_BIT_RE.match(token):
             raise ValueError(
                 f"{'bit' if m[1] else 'hexadecimal'} literals are not read")
@@ -268,7 +353,7 @@ def _mysql_converter(parse):
     return convert
 
 
-def _mysql_texts(tokens) -> list[str] | None:
+def _insert_texts(tokens) -> list[str] | None:
     """The texts of a column of plain '...' literals (no NULL, escape or
     doubled quote), at C speed; None for any other column."""
     joined = "".join(tokens)
@@ -295,12 +380,15 @@ def _copy_texts(fields: tuple[str, ...]) -> tuple[str, ...] | None:
 
 def _scan(text: str):
     """Walk the dump once, in file order, and yield each statement as
-    (text, None), or a `COPY t (cols) FROM stdin` header as (header, data
-    rows). The data runs from the next line to a `\\.` line: it is framed
-    by lines, not by ';', and a row may hold anything."""
+    (text, None, grammar), or a `COPY t (cols) FROM stdin` header as
+    (header, data rows, grammar). The data runs from the next line to a
+    `\\.` line: it is framed by lines, not by ';', and a row may hold
+    anything. The grammar reads '...' literals with backslash escapes
+    until a `SET standard_conforming_strings` turns them standard."""
+    grammar = _BACKSLASH_STRINGS
     pos, end = 0, len(text)
     while (pos := _GAP_RE.match(text, pos).end()) < end:
-        m = _STATEMENT_RE.match(text, pos)
+        m = grammar.statement.match(text, pos)
         stmt, pos, rows = m[0].rstrip(), m.end() + 1, None
         if _COPY_RE.match(stmt):
             stop = _COPY_END_RE.search(text, pos)
@@ -310,20 +398,26 @@ def _scan(text: str):
             if rows and not rows[-1]:
                 rows.pop()
             pos = stop.end() if stop else end
-        yield stmt, rows
+        elif standard := _STANDARD_STRINGS_RE.match(stmt):
+            grammar = (_STANDARD_STRINGS if standard[1].lower() in
+                       ("on", "true", "yes", "1", "default")
+                       else _BACKSLASH_STRINGS)
+        yield stmt, rows, grammar
 
 
 def _split_statements(text: str) -> list[str]:
     """The dump's statements, without comments, psql meta-commands and
     COPY blocks."""
-    return [stmt for stmt, rows in _scan(text) if rows is None]
+    return [stmt for stmt, rows, _grammar in _scan(text) if rows is None]
 
 
-def _split_top_level(s: str) -> list[str]:
-    """Split on ',' outside parens, quoted strings and comments; a comment
-    reads as a space."""
+def _split_top_level(
+    s: str, grammar: _Grammar = _BACKSLASH_STRINGS
+) -> list[str]:
+    """Split on ',' outside parens, quoted strings and names and
+    comments; a comment reads as a space."""
     parts, buf, depth = [], [], 0
-    for token in _TOP_LEVEL_TOKEN_RE.findall(s):
+    for token in grammar.top_level_token.findall(s):
         if token == "," and depth == 0:
             parts.append("".join(buf).strip())
             buf = []
@@ -337,6 +431,11 @@ def _split_top_level(s: str) -> list[str]:
         buf.append(token)
     parts.append("".join(buf).strip())
     return [p for p in parts if p]
+
+
+def _column_names(columns: str) -> list[str]:
+    """A column list's names (the text between its parens)."""
+    return [_unquote(c) for c in _split_top_level(columns)]
 
 
 @dataclass
@@ -369,17 +468,18 @@ class _TableDef:
     # lacks. Rows are numbered from 1 within the statement or COPY block,
     # as the servers number them.
 
-    def insert(self, columns: str | None, body: str) -> None:
+    def insert(self, columns: str | None, body: str,
+               grammar: _Grammar = _BACKSLASH_STRINGS) -> None:
         """Append an INSERT's VALUES list (`body`), its literals in
         `columns` order (a dump's column list text; None is field
-        order)."""
+        order), read by `grammar`."""
         names = self._names(columns)
-        rows = _tuple_re(len(names)).findall(body)
+        rows = grammar.tuple_re(len(names)).findall(body)
         if any(map(itemgetter(-1), rows)):
             # the first row of another width, numbered as the server would
             # (a comment inside a row counts as one of its values)
             row, found = 1, 0
-            for token in _VALUES_TOKEN_RE.findall(body):
+            for token in grammar.values_token.findall(body):
                 if token == "(":
                     found = 0
                 elif token != ")":
@@ -391,7 +491,7 @@ class _TableDef:
             raise self._width_error(row, len(names), found)
         if not all(map(itemgetter(0), rows)):
             rows = list(filter(itemgetter(0), rows))  # drop the comments
-        self._append(names, rows, _mysql_texts, _mysql_converter)
+        self._append(names, rows, _insert_texts, grammar.converter)
 
     def copy(self, columns: str | None, lines: list[str]) -> None:
         """Append a COPY block's tab-separated data lines."""
@@ -403,7 +503,7 @@ class _TableDef:
         self._append(names, rows, _copy_texts, _copy_converter)
 
     def _names(self, columns: str | None) -> list[str]:
-        names = ([_unquote(c) for c in columns.split(",")] if columns
+        names = (_column_names(columns) if columns
                  else [n for n, _ in self.fields])
         known = dict(self.fields)
         for n in names:
@@ -458,22 +558,23 @@ class _TableDef:
         return values
 
 
-def _parse_create(stmt: str) -> _TableDef | None:
+def _parse_create(
+    stmt: str, grammar: _Grammar = _BACKSLASH_STRINGS
+) -> _TableDef | None:
     m = _CREATE_RE.match(stmt)
     if not m:
         return None
     table = _TableDef(name=_unquote(m.group(1)))
-    for item in _split_top_level(m.group(2)):
+    for item in _split_top_level(m.group(2), grammar):
         head = item.strip()
         if _CONSTRAINT_HEAD.match(head):
             pk = _PK_RE.search(head)
             if pk:
-                table.primary_keys = [_unquote(c)
-                                      for c in pk.group(1).split(",")]
+                table.primary_keys = _column_names(pk.group(1))
             fk = _FK_RE.search(head)
             if fk:
-                cols = [_unquote(c) for c in fk.group(1).split(",")]
-                refcols = [_unquote(c) for c in fk.group(3).split(",")]
+                cols = _column_names(fk.group(1))
+                refcols = _column_names(fk.group(3))
                 # Composite FKs become independent single-column edges
                 # (reference server/models/ForeignKey.js:1-9).
                 for col, refcol in zip(cols, refcols):
@@ -481,10 +582,11 @@ def _parse_create(stmt: str) -> _TableDef | None:
                         ForeignKey(col, _unquote(fk.group(2)), refcol)
                     )
             continue
-        parts = head.split(None, 1)
-        if len(parts) < 2:
+        ident = _NAME_RE.match(head)
+        rest = head[ident.end():].strip() if ident else ""
+        if not rest:
             continue
-        name, rest = _unquote(parts[0]), parts[1]
+        name = _unquote(ident[0])
         dtype: _ColumnType = StringType()
         for pattern, spark_type in _TYPE_MAP:
             if pattern.match(rest):
@@ -504,19 +606,19 @@ def _parse_dump(
     columns), all on the driver in plain Python."""
     db_name = default_db
     defs: dict[str, _TableDef] = {}
-    for stmt, rows in _scan(sql_text):
+    for stmt, rows, grammar in _scan(sql_text):
         use = _USE_RE.match(stmt)
         if use:
             db_name = _unquote(use.group(1))
             continue
-        created = _parse_create(stmt)
+        created = _parse_create(stmt, grammar)
         if created:
             defs[created.name] = created
             continue
         into = (_INSERT_RE if rows is None else _COPY_RE).match(stmt)
         tdef = into and defs.get(_unquote(into.group(1)))
         if tdef and rows is None:
-            tdef.insert(into.group(2), into.group(3))
+            tdef.insert(into.group(2), into.group(3), grammar)
         elif tdef:
             tdef.copy(into.group(2), rows)
     return db_name, defs

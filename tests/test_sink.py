@@ -230,3 +230,23 @@ def test_single_file_exempt_from_nonlocal_guard(tmp_path):
     with pytest.raises(RuntimeError, match="reached past the guard"):
         write_json_collections({"c": _DF()}, str(tmp_path / "o"),
                                single_file=True)
+
+
+def test_pooled_submits_every_collection_at_once(spark):
+    """Every collection's job is in flight at once: each job waits until
+    all of them have started, so a pool narrower than the collection
+    count breaks the barrier at its timeout."""
+    import threading
+
+    from relational_to_doc_oriented_nosql_migrator_spark.sinks.json_collections import (
+        _pooled,
+    )
+
+    frames = {f"c{i}": spark.range(i + 1) for i in range(7)}
+    barrier = threading.Barrier(len(frames), timeout=30)
+
+    def job(_name, df):
+        barrier.wait()
+        return df.count()
+
+    assert _pooled(job, frames) == {f"c{i}": i + 1 for i in range(7)}

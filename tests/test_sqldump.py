@@ -292,6 +292,40 @@ COMMENTS_DUMP = (
 )
 
 
+# Comments between the words of a statement head, and backtick- or
+# double-quoted names holding ';', ',' or ')' (a doubled quote inside a
+# name is one quote); mysqldump writes `/*!32312 IF NOT EXISTS*/`.
+HEADS_DUMP = """CREATE TABLE `a;b` (
+  `i)d` INT NOT NULL,
+  `na,me` VARCHAR(40),
+  PRIMARY KEY (`i)d`)
+);
+CREATE /* t */ TABLE /*!32312 IF NOT EXISTS*/ "c)d" (
+  id INT PRIMARY KEY,
+  ab_id INT,
+  "q""t" TEXT,
+  FOREIGN KEY (ab_id) REFERENCES `a;b` (`i)d`)
+);
+INSERT /* x */ INTO `a;b` VALUES (1,'one'),(2,'two');
+INSERT /* x */ IGNORE INTO `a;b` (`i)d`, /* ) */ `na,me`) VALUES (3,'th;ree');
+REPLACE -- r
+INTO "c)d" VALUES (10,1,'x'),(11,3,NULL);
+insert/**/into`c)d`(id,ab_id)values(12,2);
+"""
+
+# pg_dump --inserts output: its header turns standard_conforming_strings
+# on, after which a '...' literal keeps `\` as data and only E'...'
+# unescapes.
+PG_STANDARD_DUMP = r"""SET statement_timeout = 0;
+SET standard_conforming_strings = on;
+CREATE TABLE public.path (id integer NOT NULL, p text, q text,
+  PRIMARY KEY (id));
+INSERT INTO public.path VALUES (1, 'C:\new', 'C:\dir\');
+INSERT INTO public.path VALUES (2, E'tab\there\\', 'it''s; \');
+INSERT INTO public.path (id, p) VALUES (3, E'\x41\101\u00e9\'\q');
+"""
+
+
 def _perfbench_gen():
     import os
     import sys
@@ -315,6 +349,8 @@ def _dump_cases():
         "pg_escapes": PG_ESCAPE_DUMP,
         "mysqldump8": MYSQLDUMP8_DUMP,
         "comments": COMMENTS_DUMP,
+        "heads": HEADS_DUMP,
+        "pg_standard_strings": PG_STANDARD_DUMP,
     }
 
 
@@ -630,14 +666,25 @@ _SEPARATORS = "\u2028\u2029\x85\x0b\x0c\x1c\x1d\x1e"
      [(1, "a\n-- b"), (2, "c\n\\d")]),
     (_T + "COPY t FROM stdin;\n1\ta\n\\.\nINSERT INTO t VALUES (2,'b');\n",
      [(1, "a"), (2, "b")]),
+    ("SET standard_conforming_strings = on;\n" + _T
+     + "INSERT INTO t VALUES (1,'C:\\new'),(2,'C:\\'),(3,'it''s'),"
+     "(4,E'a\\tb\\'c\\\\'),(5,e'\\x41\\101\\u00e9\\q');\n",
+     [(1, "C:\\new"), (2, "C:\\"), (3, "it's"), (4, "a\tb'c\\"),
+      (5, "AA\u00e9q")]),
+    ("SET standard_conforming_strings = on;\n"
+     "SET standard_conforming_strings TO off;\n" + _T
+     + "INSERT INTO t VALUES (1,'C:\\new');\n", [(1, "C:\new")]),
 ], ids=["separators_in_insert", "separators_in_copy", "trailing_comment",
         "quote_in_trailing_comment", "leading_block_comment",
         "comment_in_create_body", "comment_and_backslash_lines_in_strings",
-        "file_order"])
+        "file_order", "standard_conforming_strings",
+        "standard_conforming_strings_off"])
 def test_dump_reads_as_the_server_reads_it(spark, dump, want):
     """Comments are skipped wherever the server skips them and never
     inside a literal; line separators other than a COPY row's terminator
-    are data; statements and COPY blocks apply in file order."""
+    are data; statements and COPY blocks apply in file order. After pg's
+    `SET standard_conforming_strings = on` a '...' literal keeps `\\` as
+    data, a trailing one too, and E'...' unescapes as pg reads it."""
     assert _loaded_rows(spark, dump, "t") == [("id", "s"), *want]
 
 
@@ -646,6 +693,26 @@ def test_full_line_comments_between_tuples_load_every_row(spark):
             "-- two\n,(3,'c');\n")
     assert _loaded_rows(spark, dump, "t") == [
         ("id", "s"), (1, "a"), (2, "b"), (3, "c")]
+
+
+def test_statement_heads_skip_comments_and_read_quoted_names(spark):
+    """A comment between a head's words is skipped, and a quoted name is
+    one token, whatever it holds: every row loads, under the name the
+    server gives it, on both dump paths."""
+    from relational_to_doc_oriented_nosql_migrator_spark.dump_migration import (
+        migrate_dump_on_driver,
+    )
+
+    assert _loaded_rows(spark, HEADS_DUMP, "a;b") == [
+        ("i)d", "na,me"), (1, "one"), (2, "two"), (3, "th;ree")]
+    assert _loaded_rows(spark, HEADS_DUMP, "c)d") == [
+        ("id", "ab_id", 'q"t'), (10, 1, "x"), (11, 3, None), (12, 2, None)]
+    documents = migrate_dump_on_driver(HEADS_DUMP)[0]
+    assert documents["a;b"] == [
+        '{"i)d":1,"na,me":"one","c)d":[{"id":10,"q\\"t":"x"}]}',
+        '{"i)d":2,"na,me":"two","c)d":[{"id":12}]}',
+        '{"i)d":3,"na,me":"th;ree","c)d":[{"id":11}]}',
+    ]
 
 
 def test_dates_with_qualifiers_are_dates(spark):
