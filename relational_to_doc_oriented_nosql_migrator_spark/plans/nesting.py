@@ -262,13 +262,13 @@ def materialize_streamed_root(
     segs = _split_segments(order, [e.name for e in heavies],
                            set(df.columns))
     cols = [
-        _stream_key(F.col(e.parent_key)).alias(f"__fk{i}")
+        _stream_key(_col(e.parent_key)).alias(f"__fk{i}")
         for i, e in enumerate(heavies)
     ]
     for i, seg in enumerate(segs):
         cols.append(
             (
-                F.to_json(F.struct(*[F.col(c) for c in seg]))
+                F.to_json(F.struct(*[_col(c) for c in seg]))
                 if seg else F.lit("{}")
             ).alias(f"__seg{i}")
         )
@@ -303,9 +303,9 @@ def _streamed_level(
         df, fields, fk_col = _prepare_child(
             tables, catalog, emb, normalize_dates
         )
-        rows = df.filter(F.col(fk_col).isNotNull()).select(
-            _stream_key(F.col(fk_col)).alias("__pk"),
-            F.struct(*[F.col(f_) for f_ in fields]).alias("__st"),
+        rows = df.filter(_col(fk_col).isNotNull()).select(
+            _stream_key(_col(fk_col)).alias("__pk"),
+            F.struct(*[_col(f_) for f_ in fields]).alias("__st"),
         )
         return StreamedLevel(name=emb.name, rows=rows)
     heavy_names = [n.name for n in heavy]
@@ -317,22 +317,22 @@ def _streamed_level(
     # are the fields, then embedded in plan order.
     full_order = _field_names(emb) + [n.name for n in emb.embedded]
     segs = _split_segments(full_order, heavy_names, set(frag_fields))
-    cols = [_stream_key(F.col(frag_fk)).alias("__pk")]
+    cols = [_stream_key(_col(frag_fk)).alias("__pk")]
     for j, n in enumerate(heavy):
         cols.append(
             F.coalesce(
-                _stream_key(F.col(n.parent_key)),
+                _stream_key(_col(n.parent_key)),
                 F.lit(NULL_KEY_SENTINEL),
             ).alias(f"__k{j}")
         )
     for j, seg in enumerate(segs):
         cols.append(
             (
-                F.struct(*[F.col(c) for c in seg]) if seg
+                F.struct(*[_col(c) for c in seg]) if seg
                 else F.struct(F.lit(None).alias("__none"))
             ).alias(f"__seg{j}")
         )
-    fragments = frag_df.filter(F.col(frag_fk).isNotNull()).select(*cols)
+    fragments = frag_df.filter(_col(frag_fk).isNotNull()).select(*cols)
     return StreamedLevel(
         name=emb.name,
         fragments=fragments,
@@ -361,9 +361,20 @@ def normalize_date_columns(df: DataFrame) -> DataFrame:
     if not dates:
         return df
     return df.select(*[
-        date_normalize(F.col(c)).alias(c) if c in dates else F.col(c)
+        date_normalize(_col(c)).alias(c) if c in dates else _col(c)
         for c in df.columns
     ])
+
+
+def _quoted(name: str) -> str:
+    """`name` as one quoted identifier: Spark reads no `.` in it as a
+    struct field access and no backtick as a quote."""
+    return "`" + name.replace("`", "``") + "`"
+
+
+def _col(name: str) -> Column:
+    """The column called `name`, whatever characters the name holds."""
+    return F.col(_quoted(name))
 
 
 def _field_names(shape: Shape) -> list[str]:
@@ -371,7 +382,7 @@ def _field_names(shape: Shape) -> list[str]:
 
 
 def _field_col(f: Field, prefix: str = "") -> Column:
-    col = F.col(prefix + f.column)
+    col = _col(prefix + f.column)
     return col if prefix + f.column == f.name else col.alias(f.name)
 
 
@@ -425,18 +436,19 @@ def _prepare_child(
         other = emb.other
         prefix = "__other_"
         prefixed = _table(tables, other.table, normalize_dates).select(
-            [F.col(other.key).alias("__other_key")]
-            + [F.col(f.column).alias(prefix + f.column)
+            [_col(other.key).alias("__other_key")]
+            + [_col(f.column).alias(prefix + f.column)
                for f in emb.fields if f.other]
         )
         df = df.join(
-            prefixed, df[other.column] == prefixed["__other_key"], "inner"
+            prefixed, df[_quoted(other.column)] == prefixed["__other_key"],
+            "inner",
         )
     names = _field_names(emb)
     keep = [_field_col(f, prefix if f.other else "") for f in emb.fields]
-    keep += [F.col(n.name) for n in embedded]
+    keep += [_col(n.name) for n in embedded]
     if emb.link not in names:
-        keep.append(F.col(emb.link))
+        keep.append(_col(emb.link))
     fields = names + [n.name for n in embedded]
     return df.select(*keep), fields, emb.link
 
@@ -481,11 +493,11 @@ def _attach_embedded(
     if 0 < parent_rows <= SMALL_PARENT_ROWS:
         npart = min(npart, max(1, parent_rows // HEAVY_GROUPS_PER_TASK))
     grouped = (
-        child_df.repartition(npart, F.col(fk_col))
-        .groupBy(F.col(fk_col).alias("__nest_key"))
+        child_df.repartition(npart, _col(fk_col))
+        .groupBy(_col(fk_col).alias("__nest_key"))
         .agg(
             F.array_sort(
-                F.collect_list(F.struct(*[F.col(f_) for f_ in fields]))
+                F.collect_list(F.struct(*[_col(f_) for f_ in fields]))
             ).alias(emb.name)
         )
     )
@@ -509,7 +521,7 @@ def _attach_embedded(
     right = grouped if parent_is_raw else grouped.hint("shuffle_hash")
     out = left.join(
         right,
-        parent_df[emb.parent_key] == grouped["__nest_key"],
+        parent_df[_quoted(emb.parent_key)] == grouped["__nest_key"],
         "left",
     ).drop("__nest_key")
     return out
@@ -525,7 +537,7 @@ def _root_frame(
     set (reference server/DBMigration.js:473,481,491)."""
     df = _table(tables, root.name, normalize_dates)
     return df.select(*[_field_col(f) for f in root.fields]).na.drop(
-        how="all", subset=_field_names(root))
+        how="all", subset=[_quoted(n) for n in _field_names(root)])
 
 
 def materialize(

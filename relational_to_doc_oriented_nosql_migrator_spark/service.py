@@ -31,10 +31,20 @@ directory, then publishes `<resultId>.zip`. The POST response carries
 `resultId` (and the `X-Migration-Id` header), and
 `GET /download/result?id=<resultId>` serves exactly that archive; a
 bare `GET /download/result` (what the reference client calls) serves
-the most recently completed one. At most `SPARK_GRAFT_CPUS` migrations
-(the CPU count when unset) run at once; the rest wait for a slot. The
-server keeps the last KEEP_RESULTS archives. Each POST writes one JSON
-line to stderr: its id, status, stage wall seconds, documents per
+the most recently completed one. The server keeps the last KEEP_RESULTS
+archives.
+
+Each migration runs in a worker process, so concurrent requests use
+more than one core: parse, build and zip are pure Python, and threads of
+one process would share its GIL. serve() forks `SPARK_GRAFT_CPUS`
+workers (the CPU count when unset) from the plain-Python server before
+it starts serving, so every worker starts with the request path already
+imported. A request waits for an idle worker; the pool's size is the
+admission limit. The HTTP thread reads the body and hands it to a
+worker, which parses the upload, migrates it and publishes its zip; the
+server alone records the result id and writes the log. A worker that
+dies fails its request with a 500 and is replaced. Each POST writes one
+JSON line to stderr: its id, status, stage wall seconds, documents per
 collection and bytes in and out, and on a failure the error class
 (after the traceback).
 
@@ -47,9 +57,12 @@ import contextlib
 import email
 import email.policy
 import json
+import multiprocessing
 import os
+import queue
 import re
 import shutil
+import signal
 import sys
 import tempfile
 import threading
@@ -155,25 +168,55 @@ def _collections_payload(plan) -> list[dict]:
 
 
 def run_migration(
-    sql_text: str,
-    log_content: str | None,
-    dialect: str,
+    workers: _Workers,
+    content_type: str,
+    body: bytes,
     results_dir: str,
-    record: dict | None = None,
+    record: dict,
 ) -> dict:
-    """POST /migration body: parse the dump, fold in the workload, plan,
-    build the documents on the driver, write the zipped JSON collections
-    for the download endpoint, and return the reference-shaped response
-    payload plus the `resultId` the archive is published under.
+    """POST /migration body, run on one of `workers` (_run_in_worker):
+    parse the upload and the dump, fold in the workload, plan, build the
+    documents, write the zipped JSON collections for the download
+    endpoint, and return the reference-shaped response payload plus the
+    `resultId` the archive is published under. Waits for an idle worker
+    first. A failure in the worker is raised here again, with the
+    worker's traceback as its cause.
+
+    `record` supplies the id (`id`) and receives the stage wall seconds
+    (`stages`), documents per collection (`documents`) and the archive
+    size (`bytes_out`), on a failure as far as the migration got."""
+    payload, done, exc, worker_tb = workers.run(
+        content_type, body, results_dir, record)
+    record.update(done)
+    if exc is not None:
+        raise exc from _WorkerTraceback(worker_tb)
+    return payload
+
+
+class _WorkerTraceback(Exception):
+    """Where in its worker a failed migration raised."""
+
+    def __str__(self) -> str:
+        return self.args[0]
+
+
+def _run_in_worker(content_type: str, body: bytes, results_dir: str,
+                   record: dict) -> dict:
+    """run_migration's work, in a worker process.
 
     The per-collection files go to a directory of this request alone,
     which is removed once the zip is built; the zip is then published by
     a rename to result_zip(results_dir, resultId), so that path only
-    ever holds a complete archive. `record`, when given, supplies the
-    id (`id`) and receives the stage wall seconds (`stages`), documents
-    per collection (`documents`) and the archive size (`bytes_out`)."""
-    record = {} if record is None else record
-    result_id = record.setdefault("id", uuid.uuid4().hex)
+    ever holds a complete archive."""
+    fields = _parse_multipart(content_type, body)
+    sql_text = fields.get("sqlFile")
+    if sql_text is None:
+        raise ValueError("sqlFile part is required")
+    log_content = fields.get("logFile") or None
+    db_type = fields.get("dbType") or "mysql"
+    dialect = ("postgres" if db_type.lower().startswith("postgres")
+               else "mysql")
+    result_id = record["id"]
     stages = record.setdefault("stages", {})
     work_dir = os.path.join(results_dir, result_id)
     try:
@@ -220,10 +263,105 @@ def _parse_multipart(content_type: str, body: bytes) -> dict[str, str]:
     return fields
 
 
+def _worker_loop(conn, parent_ends) -> None:
+    """A worker process: run each job that arrives on `conn` with
+    _run_in_worker and send back (payload, record, exception, traceback).
+    Returns when the server closes the pipe."""
+    # the server stops its workers itself, after their last job
+    signal.signal(signal.SIGINT, signal.SIG_IGN)
+    # Only the server may hold a worker's pipe open: a copy kept by a
+    # sibling would hide the server's close (or death) from the worker.
+    for end in parent_ends:
+        end.close()
+    while True:
+        try:
+            job = conn.recv()
+        except EOFError:
+            return
+        record = job[-1]
+        try:
+            reply = (_run_in_worker(*job), record, None, None)
+        except Exception as exc:
+            reply = (None, record, exc, traceback.format_exc())
+        conn.send(reply)
+
+
+class _Workers:
+    """A fixed pool of forked worker processes, each running one job at
+    a time. A job waits for an idle worker. A worker that dies during a
+    job fails that job and is replaced by a new fork."""
+
+    def __init__(self, size: int):
+        self.size = size
+        self._fork_ctx = multiprocessing.get_context("fork")
+        self._lock = threading.Lock()
+        self._closed = False
+        self._live: list[tuple] = []  # (process, server's pipe end)
+        # the most recently used worker first: its memory is warm
+        self._idle: queue.LifoQueue = queue.LifoQueue()
+        for _ in range(size):
+            self._idle.put(self._fork())
+
+    def _fork(self) -> tuple:
+        conn, child_end = self._fork_ctx.Pipe()
+        ends = [c for _p, c in self._live] + [conn]
+        proc = self._fork_ctx.Process(target=_worker_loop,
+                                      args=(child_end, ends), daemon=True)
+        proc.start()
+        child_end.close()
+        self._live.append((proc, conn))
+        return proc, conn
+
+    def run(self, *job):
+        """The reply of an idle worker to `job`; RuntimeError if the
+        worker dies before it replies."""
+        worker = self._idle.get()
+        try:
+            if worker is None:
+                raise RuntimeError("the migration workers are stopped")
+            proc, conn = worker
+            try:
+                conn.send(job)
+                return conn.recv()
+            except (EOFError, OSError):
+                conn.close()
+                proc.join()
+                with self._lock:
+                    self._live.remove(worker)
+                    worker = None if self._closed else self._fork()
+                raise RuntimeError(f"migration worker {proc.pid} exited "
+                                   f"with code {proc.exitcode}") from None
+        finally:
+            self._idle.put(worker)
+
+    def close(self) -> None:
+        """Let every worker finish its job, then stop and join it."""
+        with self._lock:
+            if self._closed:
+                return
+            self._closed = True
+        for _ in range(self.size):
+            worker = self._idle.get()
+            if worker is not None:
+                worker[1].close()  # the worker reads EOF and returns
+        # a request that still asks for a worker gets None: stopped
+        self._idle.put(None)
+        for proc, _conn in self._live:
+            proc.join()
+
+
+class _Server(ThreadingHTTPServer):
+    def shutdown(self) -> None:
+        """Stop serving, then stop the workers once their jobs are
+        done."""
+        super().shutdown()
+        self.workers.close()
+
+
 class MigrationHandler(BaseHTTPRequestHandler):
     """One engine-backed handler per server; the results directory, the
-    published results and the admission semaphore hang off the server
-    object (set by serve())."""
+    published results and the worker pool hang off the server object
+    (set by serve())."""
 
     # quiet request logging (the reference logs nothing per request)
     def log_message(self, *_args):
@@ -274,22 +412,10 @@ class MigrationHandler(BaseHTTPRequestHandler):
     def _migrate(self, length: int, record: dict) -> dict:
         if length < 0:
             raise ValueError(f"invalid Content-Length {length}")
-        fields = _parse_multipart(
-            self.headers.get("Content-Type", ""),
-            self.rfile.read(length),
+        payload = run_migration(
+            self.server.workers, self.headers.get("Content-Type", ""),
+            self.rfile.read(length), self.server.results_dir, record,
         )
-        sql_text = fields.get("sqlFile")
-        if sql_text is None:
-            raise ValueError("sqlFile part is required")
-        log_content = fields.get("logFile") or None
-        db_type = fields.get("dbType") or "mysql"
-        dialect = ("postgres" if db_type.lower().startswith("postgres")
-                   else "mysql")
-        with self.server.admission:
-            payload = run_migration(
-                sql_text, log_content, dialect, self.server.results_dir,
-                record,
-            )
         self.server.results.publish(payload["resultId"])
         return payload
 
@@ -324,14 +450,21 @@ class MigrationHandler(BaseHTTPRequestHandler):
 def serve(port: int = 0, results_dir: str | None = None):
     """Start the service on `port` (0 = ephemeral); returns the
     ThreadingHTTPServer (serve_forever runs on a daemon thread — call
-    .shutdown() to stop). results_dir defaults to a fresh tempdir."""
-    server = ThreadingHTTPServer(("127.0.0.1", port), MigrationHandler)
+    .shutdown() to stop it and its workers). results_dir defaults to a
+    fresh tempdir. The workers are forked first, so they hold no copy of
+    the listening socket."""
+    workers = _Workers(
+        int(os.environ.get("SPARK_GRAFT_CPUS") or os.cpu_count()))
+    try:
+        server = _Server(("127.0.0.1", port), MigrationHandler)
+    except BaseException:
+        workers.close()
+        raise
+    server.workers = workers
     server.results_dir = results_dir or tempfile.mkdtemp(
         prefix="sg_http_results_"
     )
     server.results = _Results(server.results_dir)
-    server.admission = threading.BoundedSemaphore(
-        int(os.environ.get("SPARK_GRAFT_CPUS") or os.cpu_count()))
     t = threading.Thread(target=server.serve_forever, daemon=True)
     t.start()
     return server

@@ -336,8 +336,8 @@ def test_each_post_logs_one_record_with_its_id(server, capfd):
 
 def test_service_starts_no_jvm(tmp_path):
     """serve() plus one POST and one download in a fresh process: no
-    SparkContext, no java child process, and the admission limit is
-    SPARK_GRAFT_CPUS."""
+    SparkContext and no java child process; the children are the
+    SPARK_GRAFT_CPUS migration workers."""
     code = (
         "import io, json, os, urllib.request, zipfile\n"
         "from pyspark import SparkContext\n"
@@ -364,7 +364,7 @@ def test_service_starts_no_jvm(tmp_path):
         "        children.append(stat.split('(', 1)[1].rsplit(')', 1)[0])\n"
         "print(json.dumps({'docs': len(docs), 'children': children,\n"
         "    'sc': SparkContext._active_spark_context is not None,\n"
-        "    'slots': srv.admission._initial_value}))\n"
+        "    'workers': srv.workers.size}))\n"
         "srv.shutdown()\n"
     )
     repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
@@ -373,5 +373,93 @@ def test_service_starts_no_jvm(tmp_path):
                          text=True, check=True, cwd=repo, env=env,
                          timeout=120).stdout
     got = json.loads(out.strip().splitlines()[-1])
-    assert "java" not in got.pop("children")
-    assert got == {"docs": 3, "sc": False, "slots": 3}
+    children = got.pop("children")
+    assert len(children) == 3 and "java" not in children
+    assert got == {"docs": 3, "sc": False, "workers": 3}
+
+
+def _children(pid: int) -> set[int]:
+    """The pids whose parent is `pid`."""
+    out = set()
+    for entry in os.listdir("/proc"):
+        try:
+            with open(f"/proc/{entry}/stat") as fh:
+                ppid = int(fh.read().rsplit(")", 1)[1].split()[1])
+        except (OSError, ValueError, IndexError):
+            continue
+        if ppid == pid:
+            out.add(int(entry))
+    return out
+
+
+def test_a_worker_crash_fails_only_its_request(tmp_path, monkeypatch,
+                                               capfd):
+    """A worker that dies mid-migration gives its POST a logged 500 with
+    its id, the next POST runs on a fresh worker, and shutdown() leaves
+    no worker behind."""
+    real = service.migrate_dump_on_driver
+
+    def crash_on_marker(sql_text, **kwargs):
+        if "-- crash" in sql_text:
+            os._exit(3)
+        return real(sql_text, **kwargs)
+
+    # patched before serve() forks, so the workers run it
+    monkeypatch.setattr(service, "migrate_dump_on_driver", crash_on_marker)
+    monkeypatch.setenv("SPARK_GRAFT_CPUS", "1")
+    before = _children(os.getpid())
+    srv = service.serve(results_dir=str(tmp_path))
+    try:
+        assert len(_children(os.getpid()) - before) == 1
+        capfd.readouterr()
+        with pytest.raises(urllib.error.HTTPError) as ei:
+            _post(srv, {"sqlFile": ("d.sql", DUMP_FIXTURE + "-- crash\n")})
+        assert ei.value.code == 500
+        crashed_id = ei.value.headers["X-Migration-Id"]
+        ei.value.close()
+        with _post(srv, {"sqlFile": ("d.sql", DUMP_FIXTURE)}) as resp:
+            result_id = json.load(resp)["resultId"]
+        assert len(_dept_docs(_download(srv, f"?id={result_id}"))) == 3
+    finally:
+        srv.shutdown()
+    assert _children(os.getpid()) == before
+    err = capfd.readouterr().err
+    assert "exited with code 3" in err
+    records = [json.loads(line) for line in err.splitlines()
+               if line.startswith("{")]
+    assert [(r["id"], r["status"]) for r in records] == [
+        (crashed_id, 500), (result_id, 200)]
+    assert records[0]["error"] == "RuntimeError"
+
+
+def test_sigint_stops_the_service_and_joins_its_workers(tmp_path):
+    """SIGINT to `service.main` stops the server, and the process joins
+    every worker before it exits."""
+    import re
+    import signal
+    import types
+
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    proc = subprocess.Popen(
+        [sys.executable, "-m",
+         "relational_to_doc_oriented_nosql_migrator_spark.service",
+         "--port", "0", "--results-dir", str(tmp_path)],
+        cwd=repo, stdout=subprocess.PIPE, text=True,
+        env={**os.environ, "SPARK_GRAFT_CPUS": "2",
+             "PYTHONUNBUFFERED": "1"},
+    )
+    try:
+        port = re.search(r"127\.0\.0\.1:(\d+)", proc.stdout.readline())[1]
+        workers = _children(proc.pid)
+        assert len(workers) == 2
+        srv = types.SimpleNamespace(server_address=("127.0.0.1", int(port)))
+        with _post(srv, {"sqlFile": ("d.sql", DUMP_FIXTURE)}) as resp:
+            assert resp.status == 200
+        proc.send_signal(signal.SIGINT)
+        assert proc.wait(timeout=60) == 0
+    finally:
+        if proc.poll() is None:
+            proc.kill()
+            proc.wait()
+        proc.stdout.close()
+    assert not [pid for pid in workers if os.path.exists(f"/proc/{pid}")]

@@ -1,7 +1,8 @@
 """The driver-side dump path is plain Python: a fresh interpreter that
-serves a POST and a download and runs CLI `--dump` loads no Spark, Arrow
-or numpy module. Spark-side names that the benchmark tracer wraps still
-resolve."""
+serves a POST and a download and runs CLI `--dump`, and the service
+worker that ran the POST, load no Spark, Arrow or numpy module; the
+worker imports no module that the server had not loaded when it forked.
+Spark-side names that the benchmark tracer wraps still resolve."""
 
 import json
 import os
@@ -30,11 +31,19 @@ def test_dump_path_loads_no_spark_arrow_or_numpy(tmp_path):
     dump = tmp_path / "d.sql"
     dump.write_text(DUMP)
     code = (
-        "import io, json, sys, urllib.request, zipfile\n"
+        "import io, json, os, sys, urllib.request, zipfile\n"
         "from relational_to_doc_oriented_nosql_migrator_spark import cli, "
         "service\n"
         "dump, out, zip_path, results = sys.argv[1:]\n"
+        "real = service.migrate_dump_on_driver\n"
+        "def reporting(*args, **kwargs):\n"
+        "    documents = real(*args, **kwargs)\n"
+        "    with open(os.path.join(results, 'worker.json'), 'w') as fh:\n"
+        "        json.dump([os.getpid(), sorted(sys.modules)], fh)\n"
+        "    return documents\n"
+        "service.migrate_dump_on_driver = reporting  # before the fork\n"
         "srv = service.serve(results_dir=results)\n"
+        "forked_with = set(sys.modules)\n"
         "base = f'http://127.0.0.1:{srv.server_address[1]}'\n"
         "body = (b'--b\\r\\nContent-Disposition: form-data; name=\"sqlFile\"; "
         "filename=\"d.sql\"\\r\\n\\r\\n' + open(dump, 'rb').read()\n"
@@ -50,13 +59,21 @@ def test_dump_path_loads_no_spark_arrow_or_numpy(tmp_path):
         "srv.shutdown()\n"
         "assert cli.main(['--dump', dump, '--out', out, '--zip', zip_path]) "
         "== 0\n"
+        "with open(os.path.join(results, 'worker.json')) as fh:\n"
+        "    worker, worker_modules = json.load(fh)\n"
+        f"heavy = {HEAVY!r}\n"
         "print(json.dumps({'served': served, 'heavy': sorted(\n"
-        f"    m for m in sys.modules if m.split('.')[0] in {HEAVY!r})}}))\n"
+        "    m for m in sys.modules if m.split('.')[0] in heavy),\n"
+        "    'in_worker': worker != os.getpid(), 'worker_heavy': sorted(\n"
+        "    m for m in worker_modules if m.split('.')[0] in heavy),\n"
+        "    'worker_imported': sorted(set(worker_modules) - forked_with)}))\n"
     )
     out = _run(code, str(dump), str(tmp_path / "out"),
                str(tmp_path / "c.zip"), str(tmp_path))
     got = json.loads(out.strip().splitlines()[-1])
-    assert got == {"served": ["dept.json"], "heavy": []}
+    # a worker imports nothing itself: the server forks it warm
+    assert got == {"served": ["dept.json"], "heavy": [], "in_worker": True,
+                   "worker_heavy": [], "worker_imported": []}
 
 
 def test_traced_targets_resolve_and_install():

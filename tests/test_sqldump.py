@@ -313,6 +313,26 @@ INTO "c)d" VALUES (10,1,'x'),(11,3,NULL);
 insert/**/into`c)d`(id,ab_id)values(12,2);
 """
 
+# Names that Spark would read as syntax: a backtick, and a dot (a struct
+# field access) in a key, a link, a date, a field and an embedded
+# collection's name.
+NAMES_DUMP = """CREATE TABLE `p.q` (
+  `a.b` INT PRIMARY KEY,
+  `q``t` VARCHAR(20),
+  `d.t` DATE
+);
+CREATE TABLE `c``h` (
+  id INT PRIMARY KEY,
+  `a.b` INT,
+  `x.y` VARCHAR(10),
+  `q``t` DOUBLE,
+  FOREIGN KEY (`a.b`) REFERENCES `p.q` (`a.b`)
+);
+INSERT INTO `p.q` VALUES (1,'one','2024-01-02'),(2,NULL,NULL),(3,'x',NULL);
+INSERT INTO `c``h` VALUES (10,1,'x',1.5),(11,1,NULL,NULL),(12,NULL,'z',2.0),
+  (13,3,'w',NULL);
+"""
+
 # pg_dump --inserts output: its header turns standard_conforming_strings
 # on, after which a '...' literal keeps `\` as data and only E'...'
 # unescapes.
@@ -351,6 +371,7 @@ def _dump_cases():
         "comments": COMMENTS_DUMP,
         "heads": HEADS_DUMP,
         "pg_standard_strings": PG_STANDARD_DUMP,
+        "names": NAMES_DUMP,
     }
 
 
