@@ -7,7 +7,9 @@ document collections out.
         --dump northwind.sql --log queries.log --dialect mysql --out out/
 
 Prints one JSON summary line: a run id, the output directory, the wall
-seconds per stage and the documents written per collection — the CLI
+seconds per stage, the tables the planner referenced to keep documents
+under MongoDB's 16 MiB limit (`size_referenced`) and the documents
+written per collection — the CLI
 twin of the reference's zip download (server/WriteToFile.js:27-35) and
 of the service's per-request record. A dump migrates on the driver
 without Spark (dump_migration.migrate_dump_on_driver; stages `parse`,
@@ -76,7 +78,8 @@ def build_parser() -> argparse.ArgumentParser:
 def main(argv: list[str] | None = None) -> int:
     args = build_parser().parse_args(argv)
     stages: dict[str, float] = {}
-    summary = {"id": uuid.uuid4().hex, "out": args.out, "stages": stages}
+    summary = {"id": uuid.uuid4().hex, "out": args.out, "stages": stages,
+               "size_referenced": []}
     log_content = None
     # Files are read as POST /migration reads an upload: line ends stay
     # as written (newline=""), so a raw \r inside a literal is data.
@@ -90,13 +93,14 @@ def main(argv: list[str] | None = None) -> int:
         # starts.
         with open(args.dump, encoding="utf-8", errors="replace",
                   newline="") as fh:
-            documents, _catalog, _plan = migrate_dump_on_driver(
+            documents, _catalog, plan = migrate_dump_on_driver(
                 fh.read(),
                 log_content=log_content,
                 log_dialect=args.dialect,
                 normalize_dates=not args.no_normalize_dates,
                 stages=stages,
             )
+        summary["size_referenced"] = plan.size_referenced
         with timed_stage(stages, "write"):
             summary["collections"] = write_documents(
                 documents, args.out, single_file=args.single_file,
@@ -116,22 +120,19 @@ def main(argv: list[str] | None = None) -> int:
     )
 
     spark = get_spark(app_name="rdnm-cli", master=args.master)
-    # Heavy roots (plans/nesting.stream_plan) assemble per-root in file
-    # space — the parquet-tables path carries the catalog row counts the
-    # decision needs.
     with timed_stage(stages, "migrate"):
-        collections, streamed = migrate_streamed(
+        collections, _streamed = migrate_streamed(
             spark,
             args.tables,
             log_content=log_content,
             log_dialect=args.dialect,
             normalize_dates=not args.no_normalize_dates,
+            size_referenced=summary["size_referenced"],
         )
 
-    # Doc counts are write-time byproducts of the sink (streamed roots
-    # from the collected roots frame, distributed writes via an
-    # observe() metric): no NDJSON re-read, no re-execution of each
-    # collection's plan for a .count().
+    # Doc counts are write-time byproducts of the sink (an observe()
+    # metric on each write job): no NDJSON re-read, no re-execution of
+    # each collection's plan for a .count().
     counts: dict[str, int] = {}
     with timed_stage(stages, "write"):
         write_json_collections(
@@ -139,7 +140,6 @@ def main(argv: list[str] | None = None) -> int:
             args.out,
             single_file=args.single_file,
             zip_path=args.zip_path,
-            streamed=streamed,
             counts=counts,
         )
     summary["collections"] = counts

@@ -715,42 +715,25 @@ def q_filter_nonempty_collection(spark, sf_dir):
 def q_sink_json_collections(spark, sf_dir):
     """Round-trip through the JSON collection sink (reference
     server/WriteToFile.js:5-62): migrate, write every non-empty collection
-    as distributed JSON, read it back, return per-collection doc counts.
+    as distributed JSON, return per-collection doc counts.
     Oracle: nesting preserves root-table row counts, so the expected frame
     is COUNT(*) per root collection straight from the base tables (the
-    root set is pinned by the plan golden, operators/plan_golden.json).
-    Heavy roots (subtree past nesting.HEAVY_ROOT_SUBTREE_ROWS — the sf10
-    probe corpus, never the driver/bench scales) assemble per-root in
-    file space via migrate_streamed, one part file per root, removing
-    the single-row root-document heap floor (r08 verdict #2): under a
-    1 GB heap the row path OOMs on 30x the sf0.1 tables where the
-    streamed path completes. The sf10 knee measurement of that
-    threshold is in git history at a6e084f."""
+    root set is pinned by the plan golden, operators/plan_golden.json)."""
     import shutil
 
-    from relational_to_doc_oriented_nosql_migrator_spark.engine import (
-        migrate_streamed,
-    )
+    from relational_to_doc_oriented_nosql_migrator_spark.engine import migrate
     from relational_to_doc_oriented_nosql_migrator_spark.sinks import (
         write_json_collections,
     )
 
     out_dir = __import__("tempfile").mkdtemp(prefix="sink_json_")
     try:
-        collections, streamed = migrate_streamed(spark, sf_dir)
         counts: dict[str, int] = {}
-        written = write_json_collections(collections, out_dir,
-                                         streamed=streamed, counts=counts)
-        # Doc counts are WRITE-TIME byproducts (r11 verdict task #4):
-        # the sink counts streamed roots from its driver-collected
-        # frame and distributed writes via an observe() metric on the
-        # write job — the previous NDJSON text-count read-back was a
-        # second full pass over every written byte (~1/3 of the sf10
-        # sink row). Full schema-parse round-trip fidelity is pinned
-        # separately by tests/test_streamed_sink.py and the golden
-        # suite, which read the same output back under the nested
-        # schema and compare values; tests/test_streamed_sink.py also
-        # pins counts == read-back line counts.
+        written = write_json_collections(migrate(spark, sf_dir), out_dir,
+                                         counts=counts)
+        # Doc counts are write-time byproducts: an observe() metric on
+        # each write job, no read-back pass over the written bytes.
+        # tests/test_sink.py pins counts == written line counts.
         rows = sorted((name, counts[name]) for name in written)
     finally:
         shutil.rmtree(out_dir, ignore_errors=True)
@@ -803,7 +786,8 @@ def nest_salted_df(spark, sf_dir):
     is the stage-1 shuffle-write buffer per task. The engine's real
     answers to this shape are volume-scaled FK repartition + sort-based
     aggregation (plans/nesting._attach_embedded) for many-moderate
-    groups, and per-root STREAMED assembly (sinks._write_streamed) for
+    groups, and the planner's 16 MiB mean-document cap
+    (plans/planner.py), which references a child instead of building
     giant documents — this op stays registered as the canonical salting
     shape with its trade-offs measured, not assumed."""
     salt_buckets = 8

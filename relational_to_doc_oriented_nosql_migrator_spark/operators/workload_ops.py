@@ -162,33 +162,22 @@ def _sql_lit(s: str) -> str:
     return "'" + s.replace("'", "''") + "'"
 
 
-_MYSQL_CMDS = (
-    "Connect|Quit|Query|Init DB|Sleep|Shutdown|Create DB|Drop DB|Refresh|"
-    "Statistics|Processlist|Kill|Change user|Binlog Dump|Table Dump|"
-    "Field List|Execute|Prepare|Close stmt|Reset stmt|Fetch|Daemon"
-)
-
-
 def _sql_stmts_cte(log_literal: str, dialect: str) -> str:
     """CTE chain: raw log -> lines -> entries (gaps-and-islands on the
-    timestamp anchor) -> command/body extraction -> normalized statements."""
+    timestamp anchor) -> command/body extraction -> normalized statements.
+    The stamp and entry patterns are workload.py's own constants, read
+    by DuckDB's regex engine."""
     if dialect == "mysql":
-        anchor = r"^\d{6}\s+\d{1,2}:\d{2}:\d{2}\s"
-        extract = (
-            rf"'(?s)^\d{{6}}\s+\d{{1,2}}:\d{{2}}:\d{{2}}\s+\d+\s+"
-            rf"({_MYSQL_CMDS})\s+(.*)$'"
-        )
+        anchor = "^" + W.MYSQL_STAMP
+        extract = _sql_lit(W.MYSQL_ENTRY_RE)
         body = (
             f"SELECT regexp_extract(entry, {extract}, 2) AS body"
             f" FROM entry_text"
             f" WHERE regexp_extract(entry, {extract}, 1) = 'Query'"
         )
     else:
-        anchor = r"^\d{4}-\d{2}-\d{2}\s+\d{2}:\d{2}:\d{2}\.\d{3}\s"
-        extract = (
-            r"'(?s)^\d{4}-\d{2}-\d{2}\s+\d{2}:\d{2}:\d{2}\.\d{3}\s*\+\d{2}"
-            r"\s*\[\d+\]\s*(?:LOG:\s*statement:|STATEMENT:)\s*(.*)$'"
-        )
+        anchor = "^" + W.PG_STAMP
+        extract = _sql_lit(W.PG_ENTRY_RE)
         body = (
             f"SELECT regexp_extract(entry, {extract}, 1) AS body"
             f" FROM entry_text"

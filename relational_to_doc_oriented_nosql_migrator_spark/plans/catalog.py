@@ -37,6 +37,10 @@ class TableMeta:
     foreign_keys: list[ForeignKey] = field(default_factory=list)
     gaf: int = 0
     uaf: int = 0
+    # Bytes of each column's values summed over the table's rows, as the
+    # reader measured them (parquet footers, dump text); None when the
+    # source gives no widths.
+    column_bytes: dict[str, int] | None = None
     # Derived by Catalog.finalize():
     is_referenced: bool = False
     referencing_tables: list[str] = field(default_factory=list)
@@ -126,8 +130,10 @@ TPCH_PRIMARY_KEYS: dict[str, list[str]] = {
 def tpch_catalog(
     columns: dict[str, list[str]],
     row_counts: dict[str, int],
+    column_bytes: dict[str, dict[str, int]] | None = None,
 ) -> Catalog:
-    """Build the testdata catalog from observed schemas + row counts."""
+    """Build the testdata catalog from observed schemas + row counts
+    (and column widths, when known)."""
     tables = [
         TableMeta(
             name=name,
@@ -135,6 +141,7 @@ def tpch_catalog(
             columns=list(columns.get(name, [])),
             primary_keys=list(TPCH_PRIMARY_KEYS.get(name, [])),
             foreign_keys=[ForeignKey(*edge) for edge in edges],
+            column_bytes=(column_bytes or {}).get(name),
         )
         for name, edges in TPCH_FOREIGN_KEYS.items()
     ]

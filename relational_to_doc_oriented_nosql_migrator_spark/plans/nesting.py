@@ -24,8 +24,6 @@ SURVEY §2.5 fidelity note).
 
 from __future__ import annotations
 
-from dataclasses import dataclass, field
-
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -46,14 +44,14 @@ from relational_to_doc_oriented_nosql_migrator_spark.plans.shape import (
 
 # When the parent table has only a handful of rows, each nesting group is
 # a corpus-share-sized document (5 regions -> ~1/5 of everything under
-# each), so every concurrently-running aggregation task pins one
-# document-sized buffer in its heap. Packing >= this many groups per
-# task caps the number of simultaneously-materialized giant documents at
-# parent_rows / HEAVY_GROUPS_PER_TASK per executor heap (the sink's
-# sort-based aggregation streams the groups within a task one at a
-# time), which is what lets the full 10x migrate+sink run inside the
-# sweep's 1 GB local-mode heap. Parents bigger than SMALL_PARENT_ROWS
-# have proportionally small per-group documents and keep full fan-out.
+# each, up to the planner's 16 MiB mean-document cap), so every
+# concurrently-running aggregation task pins one document-sized buffer
+# in its heap. Packing >= this many groups per task caps the number of
+# simultaneously-materialized large documents at parent_rows /
+# HEAVY_GROUPS_PER_TASK per executor heap (the sink's sort-based
+# aggregation builds the groups within a task one at a time). Parents
+# bigger than SMALL_PARENT_ROWS have proportionally small per-group
+# documents and keep full fan-out.
 HEAVY_GROUPS_PER_TASK = 4
 SMALL_PARENT_ROWS = 256
 
@@ -69,278 +67,6 @@ SMALL_PARENT_ROWS = 256
 # At or below ~200k subtree rows per task the buffers stay tens of MB;
 # small inputs keep the configured partition count unchanged.
 TARGET_NEST_ROWS_PER_TASK = 200_000
-
-
-# Per-root STREAMED ASSEMBLY threshold (r08 verdict #2). Materializing a
-# root document as one row has an inherent heap floor: with a tiny root
-# cardinality each document holds ~|subtree|/|roots| rows (a region at
-# the 100x dataset embeds ~1/5 of the corpus — a ~420 MB single row,
-# then a comparably-sized JSON string in ONE task at write time), and
-# that floor grows linearly with scale under the same root count. Past
-# this subtree-row bound the JSON sink assembles such roots in FILE
-# space instead of row space: EVERY over-threshold embedded child is
-# written as per-root sorted JSON fragments (one nesting level down —
-# bounded by the LEVEL-2 document size, |subtree|/|level-2 groups|) and
-# the root line is stitched by streaming concatenation, so no task ever
-# holds a root-document-sized buffer. Below the bound nothing changes —
-# the recorded sf0.1 bench and sf1.0 sweep plans are untouched.
-#
-# The trick applies RECURSIVELY (StreamedLevel): while a split-out
-# child's own documents would still be row-materialization hazards
-# (>= 1 embedded subtree past the threshold and the child cardinality
-# SMALL_PARENT_ROWS-tiny), the child level splits again — its fragments
-# carry only scalars + light sibling arrays (sortable struct segments
-# around the heavy children's positions) and each heavy descendant
-# becomes its own fragment dataset. At the 100x dataset that takes the
-# largest executor-side row from a ~120 MB nation document (whose
-# sorter-page copies were humongous G1 allocations — a 4 GB heap OOMed
-# in the fragment sort) down to a ~KB customer document; the floor
-# stops scaling with the corpus entirely.
-#
-# Measured under a 1 GB driver heap on 10x and 30x copies of the sf0.1
-# tables: both paths complete at 10x with equal output, and at 30x the
-# row path dies with OutOfMemoryError while the streamed one completes.
-# The stream planners read this constant at call time (tests patch it).
-HEAVY_ROOT_SUBTREE_ROWS = 5_000_000
-
-
-@dataclass
-class StreamedLevel:
-    """One HEAVY embedded collection, split out of its parent's document
-    rows into a per-parent-key fragment dataset. Exactly one of
-    rows/fragments is set:
-
-    - LEAF mode (rows): (__pk, __st) — one row per complete child
-      DOCUMENT (its own nested arrays already attached), keyed by the
-      canonical-encoded parent FK value (_stream_key). Struct-typed so
-      the sink can sort by __st (field-by-field struct ordering ==
-      array_sort's element comparator) before rendering with to_json.
-    - SPLIT mode (fragments + children): this level's own documents are
-      still row-materialization hazards (tiny cardinality, >= 1 embedded
-      subtree past the threshold), so its heavy children recurse as
-      StreamedLevels of their own and the fragment row carries only what
-      remains: (__pk, __k0..__k{J-1}, __seg0..__segJ) — one canonical
-      key per heavy child (NULL coalesced to NULL_KEY_SENTINEL) and the
-      document's scalars + light sibling arrays as J+1 sortable struct
-      segments around the heavy children's schema positions.
-
-    The array order contract weakens only on exact scalar+light-array
-    ties in SPLIT mode (array_sort would compare the split-out heavy
-    arrays too); with unique leading keys — every planner catalog
-    here — the orders are identical.
-    """
-
-    name: str
-    rows: DataFrame | None = None
-    fragments: DataFrame | None = None
-    children: list["StreamedLevel"] = field(default_factory=list)
-
-
-@dataclass
-class StreamedRoot:
-    """Pieces the JSON sink needs to assemble one heavy root collection
-    by streaming (sinks/json_collections._write_streamed): roots is one
-    row per root document — per heavy child i its canonical-encoded FK
-    key __fk{i} (NULL keys stay NULL and simply get no child array) and
-    the document's JSON split at the heavy children's schema positions
-    (__seg0..__segN halves, to_json rendered with the same
-    null-omission semantics as the distributed writer). children holds
-    one StreamedLevel per heavy child, recursively (r09 verdict #4:
-    EVERY over-threshold child streams, not just the heaviest)."""
-
-    roots: DataFrame
-    children: list[StreamedLevel]
-
-
-def stream_plan(catalog: Catalog, plan: NoSQLPlan) -> dict[str, list[str]]:
-    """root collection name -> ALL embedded children whose subtree has
-    at least HEAVY_ROOT_SUBTREE_ROWS rows (plan order), for roots whose
-    tiny cardinality (at most SMALL_PARENT_ROWS catalog rows) makes
-    single-row documents a heap hazard. The cardinality gate also bounds
-    the sink's streamed write at SMALL_PARENT_ROWS part files, one root
-    each. Catalog-metadata only — no Spark job."""
-    out: dict[str, list[str]] = {}
-    for root in plan.collections:
-        heavy = _heavy_children(catalog, root)
-        if heavy:
-            out[root.name] = [e.name for e in heavy]
-    return out
-
-
-def _heavy_children(catalog: Catalog, node: Collection | Shape) -> list:
-    """The one streaming rule, for a root and for every streamed level
-    below it: node's embedded children whose subtree has at least
-    HEAVY_ROOT_SUBTREE_ROWS rows (plan order), or none unless node has
-    1..SMALL_PARENT_ROWS catalog rows."""
-    if not node.embedded:
-        return []
-    rows = catalog.get_table(node.name).num_rows or 0
-    if not 0 < rows <= SMALL_PARENT_ROWS:
-        return []
-    return [e for e in node.embedded
-            if _subtree_rows(catalog, e) >= HEAVY_ROOT_SUBTREE_ROWS]
-
-
-def _stream_key(col: Column) -> Column:
-    """Spark-side CANONICAL encoding of a streamed-assembly key: cast to
-    string, URL-encode, prefix 'k'. Both the partition column and the
-    collected lookup value go through this one expression (r09 deferred
-    findings #1/#2), so: bool/decimal/timestamp keys can never mismatch
-    a Python str() rendering (Spark casts both sides); an empty-string
-    key stays a real non-empty partition value instead of falling into
-    __HIVE_DEFAULT_PARTITION__ (where it would be indistinguishable
-    from NULL); and the encoded text contains no tabs or control chars,
-    making the two-level fragment line framing safe for any key value.
-    The writer's escapePathName('%' -> '%25') is exactly reversed by
-    the sink's single urllib unquote, restoring this encoded value."""
-    return F.concat(F.lit("k"), F.url_encode(col.cast("string")))
-
-
-# Fragment rows whose child key is NULL keep their line framing via this
-# sentinel; its directory lookup misses, so the grandchild array is
-# omitted — the same result the distributed path's null-key FK join
-# produces.
-NULL_KEY_SENTINEL = "__sg_null_key__"
-
-
-def _split_segments(
-    order: list[str], heavy_names: list[str], present: set[str]
-) -> list[list[str]]:
-    """Split a document's field order into the J+1 column segments
-    around its J heavy children's positions (heavy_names in order
-    order); columns absent from `present` are dropped (unmatched
-    attributes)."""
-    segs: list[list[str]] = []
-    cur: list[str] = []
-    heavy_set = set(heavy_names)
-    for c in order:
-        if c in heavy_set:
-            segs.append(cur)
-            cur = []
-        elif c in present:
-            cur.append(c)
-    segs.append(cur)
-    return segs
-
-
-def materialize_streamed_root(
-    tables: dict[str, DataFrame],
-    catalog: Catalog,
-    plan: NoSQLPlan,
-    root_name: str,
-    child_names: list[str] | str,
-    normalize_dates: bool = True,
-) -> StreamedRoot:
-    """Build the streamed-assembly pieces for one heavy root: the root
-    frame WITHOUT the heavy children (all other children attached as
-    usual), split into JSON segments around the heavy children's schema
-    positions, plus one recursive StreamedLevel per heavy child (each
-    splits again while its own documents are still heap hazards — see
-    _streamed_level). Field order and null-omission match the normal
-    nested frame exactly, so the assembled NDJSON parses identically
-    under the nested schema (pinned by tests/test_streamed_sink.py)."""
-    if isinstance(child_names, str):
-        child_names = [child_names]
-    child_names = set(child_names)
-    root = next(s for s in document_shapes(catalog, plan)
-                if s.name == root_name)
-    # Plan order, regardless of caller order:
-    heavies = [e for e in root.embedded if e.name in child_names]
-    missing = child_names - {e.name for e in root.embedded}
-    if missing:
-        raise ValueError(f"{root_name} has no embedded child {missing}")
-    df = _root_frame(tables, root, normalize_dates)
-    for emb in root.embedded:
-        if emb.name in child_names:
-            continue
-        df = _attach_embedded(tables, catalog, df, root.name, emb,
-                              normalize_dates)
-    # Normal-mode column order is the fields, then embedded children in
-    # plan order (each attach appends its array column): splice the
-    # heavy children back at their positions.
-    order = _field_names(root) + [e.name for e in root.embedded]
-    segs = _split_segments(order, [e.name for e in heavies],
-                           set(df.columns))
-    cols = [
-        _stream_key(_col(e.parent_key)).alias(f"__fk{i}")
-        for i, e in enumerate(heavies)
-    ]
-    for i, seg in enumerate(segs):
-        cols.append(
-            (
-                F.to_json(F.struct(*[_col(c) for c in seg]))
-                if seg else F.lit("{}")
-            ).alias(f"__seg{i}")
-        )
-    roots = df.select(*cols)
-    children = [
-        _streamed_level(tables, catalog, e, normalize_dates) for e in heavies
-    ]
-    return StreamedRoot(roots=roots, children=children)
-
-
-def _streamed_level(
-    tables: dict[str, DataFrame],
-    catalog: Catalog,
-    emb: Shape,
-    normalize_dates: bool,
-) -> StreamedLevel:
-    """One heavy embedded collection as a streamed level. Recurses while
-    the level's own documents are still heap hazards: >= 1 embedded
-    subtree past the threshold AND this level's cardinality tiny enough
-    that per-key fragment dirs stay metadata-scale. Then the level is
-    fragments (scalars + light siblings as struct segments around the
-    heavy children's positions) and each heavy child becomes its own
-    level — executor-side row sizes drop one document level per split.
-
-    NULL-keyed rows never join a parent in the distributed path (FK
-    equality with NULL), so they are filtered; NULL heavy-child keys
-    keep their fragment line framing via NULL_KEY_SENTINEL (the sink's
-    directory lookup misses, omitting the array — same result as the
-    distributed path's null-key FK join)."""
-    heavy = _heavy_children(catalog, emb)
-    if not heavy:
-        df, fields, fk_col = _prepare_child(
-            tables, catalog, emb, normalize_dates
-        )
-        rows = df.filter(_col(fk_col).isNotNull()).select(
-            _stream_key(_col(fk_col)).alias("__pk"),
-            F.struct(*[_col(f_) for f_ in fields]).alias("__st"),
-        )
-        return StreamedLevel(name=emb.name, rows=rows)
-    heavy_names = [n.name for n in heavy]
-    frag_df, frag_fields, frag_fk = _prepare_child(
-        tables, catalog, emb, normalize_dates,
-        skip_children=set(heavy_names),
-    )
-    # frag_fields lacks the heavy children; their normal-mode positions
-    # are the fields, then embedded in plan order.
-    full_order = _field_names(emb) + [n.name for n in emb.embedded]
-    segs = _split_segments(full_order, heavy_names, set(frag_fields))
-    cols = [_stream_key(_col(frag_fk)).alias("__pk")]
-    for j, n in enumerate(heavy):
-        cols.append(
-            F.coalesce(
-                _stream_key(_col(n.parent_key)),
-                F.lit(NULL_KEY_SENTINEL),
-            ).alias(f"__k{j}")
-        )
-    for j, seg in enumerate(segs):
-        cols.append(
-            (
-                F.struct(*[_col(c) for c in seg]) if seg
-                else F.struct(F.lit(None).alias("__none"))
-            ).alias(f"__seg{j}")
-        )
-    fragments = frag_df.filter(_col(frag_fk).isNotNull()).select(*cols)
-    return StreamedLevel(
-        name=emb.name,
-        fragments=fragments,
-        children=[
-            _streamed_level(tables, catalog, n, normalize_dates)
-            for n in heavy
-        ],
-    )
 
 
 def normalize_date_columns(df: DataFrame) -> DataFrame:
@@ -407,23 +133,18 @@ def _prepare_child(
     catalog: Catalog,
     emb: Shape,
     normalize_dates: bool,
-    skip_children: set[str] | None = None,
 ) -> tuple[DataFrame, list[str], str]:
     """Build the child DataFrame for one embedded collection.
 
     Returns (df, struct_field_names, link_column): df carries the
     fields, any already-nested child arrays, and the link column to the
-    parent. skip_children omits embedded collections (the
-    streamed-assembly path splices them back in file space — see
-    StreamedLevel).
+    parent.
     """
     df = _table(tables, emb.name, normalize_dates)
 
     # Bottom-up: attach this collection's own embedded children first, so
     # their arrays become ordinary columns of the child.
-    embedded = [n for n in emb.embedded
-                if n.name not in (skip_children or ())]
-    for nested in embedded:
+    for nested in emb.embedded:
         df = _attach_embedded(tables, catalog, df, emb.name, nested,
                               normalize_dates)
 
@@ -446,10 +167,10 @@ def _prepare_child(
         )
     names = _field_names(emb)
     keep = [_field_col(f, prefix if f.other else "") for f in emb.fields]
-    keep += [_col(n.name) for n in embedded]
+    keep += [_col(n.name) for n in emb.embedded]
     if emb.link not in names:
         keep.append(_col(emb.link))
-    fields = names + [n.name for n in embedded]
+    fields = names + [n.name for n in emb.embedded]
     return df.select(*keep), fields, emb.link
 
 
@@ -556,3 +277,7 @@ def materialize(
                                   normalize_dates)
         out[root.name] = df
     return out
+
+
+# perfbench/spans.py traces this name (TARGETS); nothing else calls it.
+materialize_streamed_root = materialize

@@ -20,6 +20,10 @@ Reproduces, rule for rule, the reference's conversion logic:
 - referencing (FK columns renamed *_REF): server/DBMigration.js:319-333
 - embedding may target an already-embedded collection — BFS lookup:
   server/models/NoSQLDatabase.js:13-27
+
+One rule beyond the reference's: an embed that would push its root's
+estimated mean document past MongoDB's 16 MiB limit is referenced
+instead (`reference_size`, see _plan).
 """
 
 from __future__ import annotations
@@ -62,8 +66,12 @@ class Collection:
 
 @dataclass
 class NoSQLPlan:
+    """The root collections, and the tables the document size rule
+    referenced (`size_referenced`, in processing order)."""
+
     name: str
     collections: list[Collection] = field(default_factory=list)
+    size_referenced: list[str] = field(default_factory=list)
 
     def get_collection(self, name: str) -> Collection | None:
         for root in self.collections:
@@ -128,14 +136,23 @@ def create_table_queue(catalog: Catalog) -> list[TableMeta]:
     return queue
 
 
-def _one_way_embed(plan: NoSQLPlan, table: TableMeta) -> None:
+# MongoDB refuses a document over 16 MiB (its BSON document size limit,
+# https://www.mongodb.com/docs/manual/reference/limits/#mongodb-limit-BSON-Document-Size).
+MAX_DOCUMENT_BYTES = 16 * 1024 * 1024
+
+
+def _one_way_embed(
+    plan: NoSQLPlan, table: TableMeta
+) -> list[tuple[Collection, Collection]]:
     fk = table.foreign_keys[0]
     parent = plan.get_collection(fk.referenced_table)
     attributes = [c for c in table.columns if c != fk.column]
-    parent.embedded.append(Collection(table.name, attributes))
+    return [(parent, Collection(table.name, attributes))]
 
 
-def _two_way_embed(catalog: Catalog, plan: NoSQLPlan, table: TableMeta) -> None:
+def _two_way_embed(
+    catalog: Catalog, plan: NoSQLPlan, table: TableMeta
+) -> list[tuple[Collection, Collection]]:
     fk1, fk2 = table.foreign_keys[0], table.foreign_keys[1]
     endpoint1 = plan.get_collection(fk1.referenced_table)
     endpoint2 = plan.get_collection(fk2.referenced_table)
@@ -158,63 +175,131 @@ def _two_way_embed(catalog: Catalog, plan: NoSQLPlan, table: TableMeta) -> None:
                       embedded_attributes_from=endpoint2.name)
     emb2 = Collection(table.name, attrs_into_2,
                       embedded_attributes_from=endpoint1.name)
-    endpoint1.embedded.append(emb1)
-    endpoint2.embedded.append(emb2)
+    return [(endpoint1, emb1), (endpoint2, emb2)]
 
 
-def _referencing(plan: NoSQLPlan, table: TableMeta) -> None:
+def _referencing(table: TableMeta) -> Collection:
     fk_columns = {fk.column for fk in table.foreign_keys}
     attributes = [
         c + "_REF" if c in fk_columns else c for c in table.columns
     ]
-    plan.collections.append(Collection(table.name, attributes))
+    return Collection(table.name, attributes)
+
+
+def _reference_decision(catalog: Catalog, maf: float, table: TableMeta) -> str:
+    """The reference's rule cascade (server/DBMigration.js:335-392)."""
+    if table.num_foreign_keys == 0:
+        return "root"
+    if is_self_referencing(table):
+        return "reference_self"
+    if table.num_foreign_keys > 2:
+        return "reference_many_fks"
+    use_referencing = table.uaf > maf
+    if table.is_referenced and not use_referencing:
+        use_referencing = any(
+            catalog.get_table(r).uaf > maf
+            for r in table.referencing_tables
+            if catalog.get_table(r) is not None
+        )
+    if use_referencing:
+        return "reference_workload"
+    if table.num_foreign_keys == 2:
+        return "embed_two_way"
+    return "embed_one_way"
+
+
+def _document_bytes(catalog: Catalog, table: TableMeta,
+                    coll: Collection) -> float:
+    """Estimated JSON bytes of `table`'s rows as `coll` documents, without
+    their embedded arrays: per row, the braces and each attribute's
+    `"key":` and separator, exactly, plus the mean bytes of the column it
+    reads (a two-way junction's denormalized columns read the other
+    endpoint's). A table whose reader measured no widths counts 0."""
+    if table.column_bytes is None:
+        return 0.0
+    other = (catalog.get_table(coll.embedded_attributes_from)
+             if coll.embedded_attributes_from else None)
+    per_row = 2.0
+    for attr in coll.attributes:
+        per_row += len(attr.encode()) + 4  # two quotes, colon, comma
+        owner = other if other is not None and attr in other.columns else table
+        column = (attr[:-4] if attr.endswith("_REF")
+                  and attr not in owner.columns else attr)
+        if owner.column_bytes and owner.num_rows:
+            per_row += owner.column_bytes.get(column, 0) / owner.num_rows
+    return table.num_rows * per_row
+
+
+def _mean_over_limit(catalog: Catalog, root: str, total: float) -> bool:
+    """Whether `total` estimated bytes over the root's rows exceed
+    MAX_DOCUMENT_BYTES; a root with no rows writes no documents."""
+    rows = catalog.get_table(root).num_rows
+    return bool(rows) and total / rows > MAX_DOCUMENT_BYTES
+
+
+def _root_of(plan: NoSQLPlan, name: str) -> Collection:
+    """The root whose documents hold collection `name` where
+    `plan.get_collection` finds it."""
+    return next(r for r in plan.collections if r.find(name) is not None)
+
+
+def _plan(catalog: Catalog, name: str) -> tuple[NoSQLPlan,
+                                                list[tuple[TableMeta, str]]]:
+    """The plan and every table's decision, in processing order.
+
+    After the reference's rules, one rule of our own: an embed that
+    would push a root's estimated mean document past MAX_DOCUMENT_BYTES
+    is referenced instead (`reference_size`). A root's estimate is the
+    sum of _document_bytes over its embed tree (a two-way junction counts
+    in both endpoints' roots), divided by the root's rows. It bounds the
+    mean document, not the largest: a root row holding most of a child's
+    rows can still exceed the limit."""
+    plan = NoSQLPlan(name)
+    maf = catalog.maf
+    root_bytes: dict[str, float] = {}
+    decisions: list[tuple[TableMeta, str]] = []
+    for table in create_table_queue(catalog):
+        decision = _reference_decision(catalog, maf, table)
+        if decision == "embed_one_way":
+            embeds = _one_way_embed(plan, table)
+        elif decision == "embed_two_way":
+            embeds = _two_way_embed(catalog, plan, table)
+        else:
+            embeds = []
+        added: dict[str, float] = {}
+        for parent, child in embeds:
+            root = _root_of(plan, parent.name).name
+            added[root] = (added.get(root, 0.0)
+                           + _document_bytes(catalog, table, child))
+        if any(extra and _mean_over_limit(catalog, root,
+                                          root_bytes[root] + extra)
+               for root, extra in added.items()):
+            decision = "reference_size"
+            plan.size_referenced.append(table.name)
+        if decision.startswith("embed"):
+            for parent, child in embeds:
+                parent.embedded.append(child)
+            for root, extra in added.items():
+                root_bytes[root] += extra
+        else:
+            coll = (Collection(table.name, list(table.columns))
+                    if decision == "root" else _referencing(table))
+            plan.collections.append(coll)
+            root_bytes[table.name] = _document_bytes(catalog, table, coll)
+        decisions.append((table, decision))
+    return plan, decisions
 
 
 def classify_tables(catalog: Catalog) -> list[tuple[TableMeta, str]]:
     """Label every table in processing order with its embed-vs-reference
-    decision (the rule cascade of server/DBMigration.js:335-392). This is
-    the single decision point — `convert_schema` dispatches on these labels,
-    and the `plan_embed_or_reference` registry query exposes them.
+    decision (the rule cascade of server/DBMigration.js:335-392, then the
+    document size rule). This is the single decision point —
+    `convert_schema` builds the plan from the same pass, and the
+    `plan_embed_or_reference` registry query exposes the labels.
     """
-    maf = catalog.maf
-    out: list[tuple[TableMeta, str]] = []
-    for table in create_table_queue(catalog):
-        if table.num_foreign_keys == 0:
-            decision = "root"
-        elif is_self_referencing(table):
-            decision = "reference_self"
-        elif table.num_foreign_keys <= 2:
-            use_referencing = table.uaf > maf
-            if table.is_referenced and not use_referencing:
-                use_referencing = any(
-                    catalog.get_table(r).uaf > maf
-                    for r in table.referencing_tables
-                    if catalog.get_table(r) is not None
-                )
-            if use_referencing:
-                decision = "reference_workload"
-            elif table.num_foreign_keys == 2:
-                decision = "embed_two_way"
-            else:
-                decision = "embed_one_way"
-        else:
-            decision = "reference_many_fks"
-        out.append((table, decision))
-    return out
+    return _plan(catalog, "db")[1]
 
 
 def convert_schema(catalog: Catalog, name: str = "db") -> NoSQLPlan:
     """Run the embed-vs-reference rules over the processing queue."""
-    plan = NoSQLPlan(name)
-
-    for table, decision in classify_tables(catalog):
-        if decision == "root":
-            plan.collections.append(Collection(table.name, list(table.columns)))
-        elif decision == "embed_two_way":
-            _two_way_embed(catalog, plan, table)
-        elif decision == "embed_one_way":
-            _one_way_embed(plan, table)
-        else:
-            _referencing(plan, table)
-
-    return plan
+    return _plan(catalog, name)[0]

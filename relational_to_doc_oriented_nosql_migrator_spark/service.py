@@ -44,7 +44,8 @@ admission limit. The HTTP thread reads the body and hands it to a
 worker, which parses the upload, migrates it and publishes its zip; the
 server alone records the result id and writes the log. A worker that
 dies fails its request with a 500 and is replaced. Each POST writes one
-JSON line to stderr: its id, status, stage wall seconds, documents per
+JSON line to stderr: its id, status, stage wall seconds, the tables
+the planner referenced to keep documents under 16 MiB, documents per
 collection and bytes in and out, and on a failure the error class
 (after the traceback).
 
@@ -183,8 +184,10 @@ def run_migration(
     worker's traceback as its cause.
 
     `record` supplies the id (`id`) and receives the stage wall seconds
-    (`stages`), documents per collection (`documents`) and the archive
-    size (`bytes_out`), on a failure as far as the migration got."""
+    (`stages`), the tables the planner referenced to keep documents under
+    16 MiB (`size_referenced`), documents per collection (`documents`)
+    and the archive size (`bytes_out`), on a failure as far as the
+    migration got."""
     payload, done, exc, worker_tb = workers.run(
         content_type, body, results_dir, record)
     record.update(done)
@@ -224,6 +227,7 @@ def _run_in_worker(content_type: str, body: bytes, results_dir: str,
             sql_text, log_content=log_content, log_dialect=dialect,
             stages=stages,
         )
+        record["size_referenced"] = plan.size_referenced
         # Per-collection whole-array JSON files + zip, like the
         # reference's WriteToFile + archiver flow
         # (server/WriteToFile.js:5-62). The empty-collection drop rides

@@ -77,8 +77,9 @@ def get_spark(
         # native type for; read as long and restore micros timestamps at the
         # source (sources/parquet.py).
         .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-        # Python tasks (the streamed sink's per-root stitch) import this
-        # package on the workers: put its parent directory on their path.
+        # Python tasks (the mapInPandas and applyInPandasWithState
+        # operators) import their functions from this package on the
+        # workers: put its parent directory on their path.
         # Spark merges this with any PYTHONPATH the workers already have.
         .config("spark.executorEnv.PYTHONPATH", _PACKAGE_PARENT)
         # PySpark 4 records the Python call site of every Column call in

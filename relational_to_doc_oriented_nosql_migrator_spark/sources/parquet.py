@@ -14,6 +14,7 @@ scan is built with that schema, so Spark runs no inference or count job.
 
 from __future__ import annotations
 
+import datetime as _dt
 import glob
 import os
 from typing import NamedTuple
@@ -151,6 +152,9 @@ class ParquetTable(NamedTuple):
     schema: T.StructType  # Spark's read schema (nanos columns as long)
     num_rows: int  # summed over the part files
     nanos_columns: tuple[str, ...]  # top-level TIMESTAMP(NANOS) columns
+    # top-level column -> its values' bytes, summed over the part files'
+    # row groups (see _column_bytes)
+    column_bytes: dict[str, int]
 
 
 def footer_schema(md: pq.FileMetaData) -> tuple[T.StructType, tuple[str, ...]]:
@@ -172,14 +176,51 @@ def footer_schema(md: pq.FileMetaData) -> tuple[T.StructType, tuple[str, ...]]:
     return T.StructType(fields), tuple(nanos)
 
 
+def _value_width(stats: pq.Statistics) -> float:
+    """JSON bytes of a typical value of a column chunk, from its
+    statistics' extremes: a string's mean length plus its quotes, a date
+    or timestamp as its quoted `yyyy-MM-dd` (the normalized form), any
+    other value as the wider of the two."""
+    lo, hi = stats.min, stats.max
+    if isinstance(lo, (str, bytes)):
+        return (len(lo) + len(hi)) / 2 + 2
+    if isinstance(lo, _dt.date):
+        return 12
+    return max(len(str(lo)), len(str(hi)))
+
+
+def _column_bytes(metas: list[pq.FileMetaData]) -> dict[str, int]:
+    """Each top-level column's value bytes, summed over every row group
+    of every footer: the width the planner's document size rule reads
+    (plans/planner.py). A chunk counts the larger of its
+    `total_uncompressed_size` and its non-null values times the width
+    of its statistics' extremes: a dictionary-encoded chunk stores each
+    repeated value once, so its size alone undercounts the text."""
+    out: dict[str, int] = {}
+    for md in metas:
+        for g in range(md.num_row_groups):
+            rg = md.row_group(g)
+            for j in range(rg.num_columns):
+                chunk = rg.column(j)
+                size = chunk.total_uncompressed_size
+                stats = chunk.statistics
+                if stats is not None and stats.has_min_max:
+                    size = max(size, (stats.num_values - stats.null_count)
+                               * _value_width(stats))
+                name = chunk.path_in_schema.split(".", 1)[0]
+                out[name] = out.get(name, 0) + int(size)
+    return out
+
+
 def read_footer(sf_dir: str, name: str) -> ParquetTable:
     """Table `name` under `sf_dir` from one footer read per data file (see
-    parquet_files): the schema from the first, the row count summed over
-    all. No Spark job."""
+    parquet_files): the schema from the first, the row count and column
+    widths summed over all. No Spark job."""
     path = _table_path(sf_dir, name)
     metas = [pq.read_metadata(f) for f in parquet_files(path)]
     schema, nanos = footer_schema(metas[0])
-    return ParquetTable(path, schema, sum(m.num_rows for m in metas), nanos)
+    return ParquetTable(path, schema, sum(m.num_rows for m in metas), nanos,
+                        _column_bytes(metas))
 
 
 def scan(spark: SparkSession, table: ParquetTable) -> DataFrame:
@@ -207,14 +248,15 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
 
 def parquet_catalog(sf_dir: str) -> tuple[Catalog, dict[str, ParquetTable]]:
     """The catalog of every table of plans/catalog.py's TPCH_FOREIGN_KEYS
-    under `sf_dir`, and each table's footer: columns and row counts from
-    one footer read per data file, no Spark job; the FK graph from
-    plans/catalog.py."""
+    under `sf_dir`, and each table's footer: columns, row counts and
+    column widths from one footer read per data file, no Spark job; the
+    FK graph from plans/catalog.py."""
     footers = {
         name: read_footer(sf_dir, name) for name in TPCH_FOREIGN_KEYS
     }
     catalog = tpch_catalog(
         {name: t.schema.names for name, t in footers.items()},
         {name: t.num_rows for name, t in footers.items()},
+        {name: t.column_bytes for name, t in footers.items()},
     )
     return catalog, footers

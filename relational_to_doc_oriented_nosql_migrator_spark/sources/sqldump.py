@@ -353,10 +353,10 @@ def _insert_converter(parse, string):
     return convert
 
 
-def _insert_texts(tokens) -> list[str] | None:
+def _insert_texts(tokens, joined: str) -> list[str] | None:
     """The texts of a column of plain '...' literals (no NULL, escape or
-    doubled quote), at C speed; None for any other column."""
-    joined = "".join(tokens)
+    doubled quote), at C speed; None for any other column. `joined` is
+    the tokens joined."""
     if ("\\" in joined or joined.count("'") != 2 * len(tokens)
             or any(map("'".__ne__, map(itemgetter(0), tokens)))):
         return None
@@ -372,10 +372,12 @@ def _copy_converter(parse):
     return convert
 
 
-def _copy_texts(fields: tuple[str, ...]) -> tuple[str, ...] | None:
+def _copy_texts(fields: tuple[str, ...],
+                joined: str) -> tuple[str, ...] | None:
     """A COPY column's fields as its texts when none holds a backslash
-    (so no NULL and no escape); None for any other column."""
-    return None if "\\" in "".join(fields) else fields
+    (so no NULL and no escape); None for any other column. `joined` is
+    the fields joined."""
+    return None if "\\" in joined else fields
 
 
 def _scan(text: str):
@@ -446,6 +448,8 @@ class _TableDef:
     foreign_keys: list[ForeignKey] = field(default_factory=list)
     # one value list per field, in field order
     columns: list[list] = field(default_factory=list)
+    # field -> length of its values' text as the dump writes them
+    column_bytes: dict[str, int] = field(default_factory=dict)
 
     @property
     def num_rows(self) -> int:
@@ -527,10 +531,15 @@ class _TableDef:
             if name not in listed:
                 column.extend([None] * len(rows))
             else:
+                # the column's text, joined once: its length is the
+                # column's value bytes, and `texts` reads it
+                joined = "".join(listed[name])
+                self.column_bytes[name] = (self.column_bytes.get(name, 0)
+                                           + len(joined))
                 column.extend(self._decode(
-                    name, dtype, listed[name], texts, converter))
+                    name, dtype, listed[name], joined, texts, converter))
 
-    def _decode(self, name, dtype, tokens, texts, converter) -> list:
+    def _decode(self, name, dtype, tokens, joined, texts, converter) -> list:
         """One column's tokens -> values. int and float map over the
         tokens and every other type over the texts of a plain column;
         anything those cannot read (NULL, escapes, quoted numbers, zero
@@ -539,7 +548,7 @@ class _TableDef:
         try:
             if parse is int or parse is float:
                 return list(map(parse, tokens))
-            plain = texts(tokens)
+            plain = texts(tokens, joined)
             if plain is not None:
                 return plain if parse is str else list(map(parse, plain))
         except ValueError:
@@ -653,8 +662,9 @@ def read_dump(
     """Dump text -> (db_name, parsed tables with their columns, annotated
     Catalog), on the driver. The catalog carries the same metadata the
     reference introspects from a live server, so `convert_schema` runs on
-    dump input unchanged. A foreign key between columns of different
-    types raises ValueError (see _check_fk_types)."""
+    dump input unchanged, plus each column's value bytes: the length of
+    the value tokens the parse already split out. A foreign key between
+    columns of different types raises ValueError (see _check_fk_types)."""
     db_name, defs = _parse_dump(sql_text, default_db)
     _check_fk_types(defs)
     catalog = Catalog([
@@ -664,6 +674,7 @@ def read_dump(
             columns=[n for n, _ in tdef.fields],
             primary_keys=tdef.primary_keys,
             foreign_keys=tdef.foreign_keys,
+            column_bytes=tdef.column_bytes,
         )
         for tdef in defs.values()
     ])

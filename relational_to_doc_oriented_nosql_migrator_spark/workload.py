@@ -11,7 +11,7 @@ The log is already one string on the driver (the CLI reads the file, the
 service receives it in the POST body) and the reference scans it once in
 memory, so this is one plain-Python pass with no Spark job. The regex
 constants below are Java-syntax patterns (the DuckDB oracles in
-operators/workload_ops.py mirror them); the compiled forms reproduce Java's
+operators/workload_ops.py read them too); the compiled forms reproduce Java's
 semantics in Python: ASCII `\\d`/`\\s`, Java's multiline `^` after any line
 terminator, and a trim of spaces only, as Spark's `trim` does.
 """
@@ -28,19 +28,29 @@ from relational_to_doc_oriented_nosql_migrator_spark.functions.sqlparse import (
 from relational_to_doc_oriented_nosql_migrator_spark.plans.catalog import Catalog
 
 # Entry anchors (reference server/LogManager.js:15-16,36-37). We anchor on
-# the line-start timestamp of each entry; bodies may span lines.
-_MYSQL_STAMP = r"\d{6}\s+\d{1,2}:\d{2}:\d{2}\s"
-_PG_STAMP = r"\d{4}-\d{2}-\d{2}\s+\d{2}:\d{2}:\d{2}\.\d{3}\s"
-MYSQL_ENTRY_SPLIT = rf"(?m)(?=^{_MYSQL_STAMP})"
+# the line-start timestamp of each entry; bodies may span lines. Beyond
+# the reference's stamps (MySQL 5.x `240807 10:15:22`, pg `%m` with a
+# `+hh` zone) these accept MySQL 8's ISO stamps
+# (`2024-01-01T10:00:00.123456Z`, or `+07:00` under
+# log_timestamps=SYSTEM), pg's `%t` (no milliseconds) and any pg zone:
+# an abbreviation (`UTC`, `EST`) or a `±hh[[:]mm]` offset.
+_MYSQL_TIME = (r"(?:\d{6}\s+\d{1,2}:\d{2}:\d{2}"
+               r"|\d{4}-\d{2}-\d{2}T\d{2}:\d{2}:\d{2}(?:\.\d+)?"
+               r"(?:Z|[+-]\d{2}:\d{2}))")
+MYSQL_STAMP = rf"{_MYSQL_TIME}\s"
+_PG_TIME = r"\d{4}-\d{2}-\d{2}\s+\d{2}:\d{2}:\d{2}(?:\.\d{3})?"
+PG_STAMP = rf"{_PG_TIME}\s"
+_PG_ZONE = r"(?:[A-Za-z]+|[+-]\d{2}(?::?\d{2})?)"
+MYSQL_ENTRY_SPLIT = rf"(?m)(?=^{MYSQL_STAMP})"
 MYSQL_ENTRY_RE = (
-    r"(?s)^\d{6}\s+\d{1,2}:\d{2}:\d{2}\s+\d+\s+"
+    rf"(?s)^{_MYSQL_TIME}\s+\d+\s+"
     r"(Connect|Quit|Query|Init DB|Sleep|Shutdown|Create DB|Drop DB|Refresh|"
     r"Statistics|Processlist|Kill|Change user|Binlog Dump|Table Dump|"
     r"Field List|Execute|Prepare|Close stmt|Reset stmt|Fetch|Daemon)\s+(.*)$"
 )
-PG_ENTRY_SPLIT = rf"(?m)(?=^{_PG_STAMP})"
+PG_ENTRY_SPLIT = rf"(?m)(?=^{PG_STAMP})"
 PG_ENTRY_RE = (
-    r"(?s)^\d{4}-\d{2}-\d{2}\s+\d{2}:\d{2}:\d{2}\.\d{3}\s*\+\d{2}\s*\[\d+\]\s*"
+    rf"(?s)^{_PG_TIME}\s*{_PG_ZONE}\s*\[\d+\]\s*"
     r"(?:LOG:\s*statement:|STATEMENT:)\s*(.*)$"
 )
 
@@ -55,12 +65,12 @@ _JAVA_LINE_START = r"(?:(?<=[\n\u0085\u2028\u2029])|(?<=\r)(?!\n))"
 # (split regex, entry regex, keep only `Query` entries)
 _TOKENIZERS = {
     "mysql": (
-        re.compile(rf"{_JAVA_LINE_START}(?={_MYSQL_STAMP})", re.ASCII),
+        re.compile(rf"{_JAVA_LINE_START}(?={MYSQL_STAMP})", re.ASCII),
         re.compile(MYSQL_ENTRY_RE, re.ASCII),
         True,
     ),
     "postgres": (
-        re.compile(rf"{_JAVA_LINE_START}(?={_PG_STAMP})", re.ASCII),
+        re.compile(rf"{_JAVA_LINE_START}(?={PG_STAMP})", re.ASCII),
         re.compile(PG_ENTRY_RE, re.ASCII),
         False,
     ),

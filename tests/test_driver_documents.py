@@ -15,6 +15,9 @@ from relational_to_doc_oriented_nosql_migrator_spark.dump_migration import (
 from relational_to_doc_oriented_nosql_migrator_spark.engine import (
     migrate_from_dump,
 )
+from relational_to_doc_oriented_nosql_migrator_spark.plans.planner import (
+    MAX_DOCUMENT_BYTES,
+)
 from relational_to_doc_oriented_nosql_migrator_spark.sinks import (
     write_documents,
     write_json_collections,
@@ -97,6 +100,20 @@ DOUBLES_DUMP = (
 )
 
 
+# One shelf whose four books' text alone passes MongoDB's 16 MiB document
+# limit: the planner references book (shelf_id_REF) instead of embedding
+# it, on both executors.
+WIDE_DUMP = (
+    "CREATE TABLE shelf (id INT PRIMARY KEY, name VARCHAR(10));\n"
+    "CREATE TABLE book (id INT PRIMARY KEY, shelf_id INT, body TEXT,\n"
+    "  FOREIGN KEY (shelf_id) REFERENCES shelf (id));\n"
+    "INSERT INTO shelf VALUES (1, 'tall');\n"
+    "INSERT INTO book VALUES\n" + ",\n".join(
+        f"  ({i}, 1, '{c * (MAX_DOCUMENT_BYTES // 4)}')"
+        for i, c in enumerate("wxyz")) + ";\n"
+)
+
+
 def _array_texts(text: str) -> list[str]:
     """The element texts of a single-file collection (`[doc,doc,...]`),
     exactly as written."""
@@ -119,12 +136,13 @@ def _collections(out_dir: str) -> dict[str, list[str]]:
 
 def _assert_same(spark, tmp_path, dump, log=None, normalize_dates=True):
     spark_dir, driver_dir = tmp_path / "spark", tmp_path / "driver"
-    collections, _catalog, _plan = migrate_from_dump(
+    collections, _catalog, spark_plan = migrate_from_dump(
         spark, dump, log_content=log, normalize_dates=normalize_dates)
     write_json_collections(collections, str(spark_dir), single_file=True)
-    documents, _catalog, _plan = migrate_dump_on_driver(
+    documents, _catalog, driver_plan = migrate_dump_on_driver(
         dump, log_content=log, normalize_dates=normalize_dates)
     write_documents(documents, str(driver_dir), single_file=True)
+    assert spark_plan.size_referenced == driver_plan.size_referenced
     expected, got = _collections(spark_dir), _collections(driver_dir)
     assert sorted(got) == sorted(expected)
     for name in expected:
@@ -132,7 +150,7 @@ def _assert_same(spark, tmp_path, dump, log=None, normalize_dates=True):
 
 
 _CASES = {**_dump_cases(), "two_way": TWO_WAY_DUMP, "nested": NESTED_DUMP,
-          "doubles": DOUBLES_DUMP}
+          "doubles": DOUBLES_DUMP, "wide": WIDE_DUMP}
 
 
 @pytest.mark.parametrize("normalize_dates", [True, False])
@@ -156,7 +174,8 @@ def test_driver_documents_equal_spark_on_perfbench_dumps(spark, tmp_path,
 
 def test_the_new_dumps_reach_their_shapes():
     """The hand-written dumps exercise what they are for: a two-way
-    junction in both endpoints, a two-level embed, Java's exponent form."""
+    junction in both endpoints, a two-level embed, Java's exponent form,
+    a child referenced by the document size rule."""
     docs = migrate_dump_on_driver(TWO_WAY_DUMP)[0]
     assert set(docs) == {"student", "course"}
     assert '"enrollment":[{"credits":0.5},{"credits":0.5},' in docs["student"][0]
@@ -168,3 +187,7 @@ def test_the_new_dumps_reach_their_shapes():
     assert asia["nation"][2]["city"][-1]["seen"] == "1900-01-01"
     docs = migrate_dump_on_driver(DOUBLES_DUMP)[0]["num"]
     assert '"x":1.0E16,' in docs[1] and '"x":1.0E-4,' in docs[13]
+    docs, _catalog, plan = migrate_dump_on_driver(WIDE_DUMP)
+    assert plan.size_referenced == ["book"]
+    assert docs["shelf"] == ['{"id":1,"name":"tall"}']
+    assert [json.loads(d)["shelf_id_REF"] for d in docs["book"]] == [1] * 4

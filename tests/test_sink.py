@@ -250,3 +250,87 @@ def test_pooled_submits_every_collection_at_once(spark):
         return df.count()
 
     assert _pooled(job, frames) == {f"c{i}": i + 1 for i in range(7)}
+
+
+def _ndjson_lines(target_dir):
+    lines = []
+    for name in sorted(os.listdir(target_dir)):
+        if name.startswith("part-"):
+            with open(os.path.join(target_dir, name)) as fh:
+                lines.extend(line for line in fh.read().splitlines() if line)
+    return lines
+
+
+def test_bare_local_out_dir_rejected_off_local_master(tmp_path):
+    """A bare local out_dir on a non-local master must raise loudly:
+    each executor would write its part files to its own disk."""
+
+    class _Ctx:
+        master = "spark://cluster:7077"
+
+    class _Sess:
+        sparkContext = _Ctx()
+
+    class _DF:
+        sparkSession = _Sess()
+
+    with pytest.raises(ValueError, match="scatter"):
+        write_json_collections({"c": _DF()}, str(tmp_path / "o"))
+
+
+def test_write_time_counts_match_line_counts(spark, tmp_path):
+    """The counts= out-param (an observe() metric on each write job)
+    equals the NDJSON line counts on disk, so no caller re-reads the
+    output to count it."""
+    from relational_to_doc_oriented_nosql_migrator_spark.engine import migrate
+    from tests.conftest import SF0001
+
+    out = str(tmp_path / "counted")
+    counts = {}
+    written = write_json_collections(migrate(spark, SF0001), out,
+                                     counts=counts)
+    assert sorted(counts) == sorted(written)
+    for name in written:
+        assert counts[name] == len(_ndjson_lines(os.path.join(out, name)))
+        assert counts[name] > 0, name
+
+
+def test_rerun_overwrites_stale_parts(spark, tmp_path):
+    """Rerunning into the same target with fewer part files leaves none
+    of the earlier run's: every reader lists part-*, so a leftover file
+    is a phantom document."""
+    out = str(tmp_path / "out")
+    many = spark.range(40).repartition(4)
+    assert write_json_collections({"c": many}, out) == ["c"]
+    assert len(_ndjson_lines(os.path.join(out, "c"))) == 40
+    counts = {}
+    write_json_collections({"c": spark.range(3).coalesce(1)}, out,
+                           counts=counts)
+    parts = [f for f in os.listdir(os.path.join(out, "c"))
+             if f.startswith("part-")]
+    assert len(parts) == 1 and counts == {"c": 3}
+    assert len(_ndjson_lines(os.path.join(out, "c"))) == 3
+
+
+def test_empty_rerun_removes_old_output(spark, tmp_path):
+    """A rerun in which a collection is empty writes nothing, does not
+    report it, and removes the output an earlier run wrote for it."""
+    out = str(tmp_path / "out")
+    cols = _collections(spark)
+    assert write_json_collections({"c": cols["full"]}, out) == ["c"]
+    assert os.path.isdir(os.path.join(out, "c"))
+    assert write_json_collections({"c": cols["empty"]}, out) == []
+    assert os.listdir(out) == []
+
+
+def test_uri_out_dir_round_trips(spark, tmp_path):
+    """A scheme-qualified out_dir goes through the store Spark writes to:
+    the collections land there and an empty one is removed there."""
+    uri = "file://" + str(tmp_path / "uri_out")
+    counts = {}
+    assert write_json_collections(_collections(spark), uri,
+                                  counts=counts) == ["full"]
+    assert counts == {"full": 3}
+    assert os.listdir(tmp_path / "uri_out") == ["full"]
+    back = spark.read.json(uri + "/full")
+    assert sorted(r["k"] for r in back.collect()) == [0, 1, 2]

@@ -79,6 +79,30 @@ def _pg(sep: str, bodies: list[str]) -> str:
                     f"statement: {b}" for i, b in enumerate(bodies)) + sep
 
 
+# Entry stamps beyond the reference's (an extension): MySQL 8's ISO
+# stamps, pg `%t` (no milliseconds), and pg zones other than `+hh`.
+_STAMPS = {
+    "mysql": {
+        "mysql8_utc": "2024-01-01T10:00:{i:02d}.123456Z\t   1{i} Query\t",
+        "mysql8_offset":
+            "2024-01-01T10:00:{i:02d}.123456+07:00\t   1{i} Query\t",
+    },
+    "postgres": {
+        "pg_zone_utc": "2024-01-01 10:00:{i:02d}.123 UTC [42{i}] LOG:  "
+                       "statement: ",
+        "pg_zone_minus05": "2024-01-01 10:00:{i:02d}.123 -05 [42{i}] LOG:  "
+                           "statement: ",
+        "pg_zone_plus0530": "2024-01-01 10:00:{i:02d}.123 +05:30 [42{i}] "
+                            "LOG:  statement: ",
+        "pg_no_millis": "2024-01-01 10:00:{i:02d} UTC [42{i}] STATEMENT:  ",
+    },
+}
+
+
+def _stamped(stamp: str, bodies: list[str]) -> str:
+    return "".join(stamp.format(i=i) + b + "\n" for i, b in enumerate(bodies))
+
+
 _BODIES = [
     "SELECT * FROM orders WHERE o_custkey = 7",
     "UPDATE lineitem SET l_quantity = 3 WHERE l_orderkey = 1",
@@ -130,6 +154,9 @@ LOGS = {
                          "240807 10:15:22\t   42 Connect\troot@localhost\n"
                          "240807 10:15:23\t   42 Init DB\ttpch\n"
                          "240807 10:15:24\t   42 Quit\t\n"),
+    **{name: (dialect, _stamped(stamp, _BODIES))
+       for dialect, stamps in _STAMPS.items()
+       for name, stamp in stamps.items()},
     "no_statement_entries_pg": ("postgres",
                                 "2024-08-07 10:15:25.404 +07 [4243] LOG:  "
                                 "duration: 1.2 ms\n"),
@@ -166,3 +193,10 @@ def test_apply_workload_weights_by_row_count():
 def test_unknown_dialect_is_refused():
     with pytest.raises(ValueError, match="unknown dialect"):
         W.statements(MYSQL_LOG, "postgresql")
+
+
+@pytest.mark.parametrize("name", [n for stamps in _STAMPS.values()
+                                  for n in stamps])
+def test_wider_entry_stamps_keep_every_statement(name):
+    dialect, log = LOGS[name]
+    assert W.statements(log, dialect) == _BODIES
