@@ -7,9 +7,10 @@ document collections out.
         --dump northwind.sql --log queries.log --dialect mysql --out out/
 
 Prints one JSON summary line: a run id, the output directory, the wall
-seconds per stage, the tables the planner referenced to keep documents
-under MongoDB's 16 MiB limit (`size_referenced`) and the documents
-written per collection — the CLI
+seconds per stage, the log's kept statements (`statements`) and the DML
+refs naming no catalog table (`unmatched_refs`), the tables the planner
+referenced to keep documents under MongoDB's 16 MiB limit
+(`size_referenced`) and the documents written per collection — the CLI
 twin of the reference's zip download (server/WriteToFile.js:27-35) and
 of the service's per-request record. A dump migrates on the driver
 without Spark (dump_migration.migrate_dump_on_driver; stages `parse`,
@@ -78,8 +79,7 @@ def build_parser() -> argparse.ArgumentParser:
 def main(argv: list[str] | None = None) -> int:
     args = build_parser().parse_args(argv)
     stages: dict[str, float] = {}
-    summary = {"id": uuid.uuid4().hex, "out": args.out, "stages": stages,
-               "size_referenced": []}
+    summary = {"id": uuid.uuid4().hex, "out": args.out, "stages": stages}
     log_content = None
     # Files are read as POST /migration reads an upload: line ends stay
     # as written (newline=""), so a raw \r inside a literal is data.
@@ -93,14 +93,13 @@ def main(argv: list[str] | None = None) -> int:
         # starts.
         with open(args.dump, encoding="utf-8", errors="replace",
                   newline="") as fh:
-            documents, _catalog, plan = migrate_dump_on_driver(
+            documents, _catalog, _plan = migrate_dump_on_driver(
                 fh.read(),
                 log_content=log_content,
                 log_dialect=args.dialect,
                 normalize_dates=not args.no_normalize_dates,
-                stages=stages,
+                record=summary,
             )
-        summary["size_referenced"] = plan.size_referenced
         with timed_stage(stages, "write"):
             summary["collections"] = write_documents(
                 documents, args.out, single_file=args.single_file,
@@ -127,7 +126,7 @@ def main(argv: list[str] | None = None) -> int:
             log_content=log_content,
             log_dialect=args.dialect,
             normalize_dates=not args.no_normalize_dates,
-            size_referenced=summary["size_referenced"],
+            record=summary,
         )
 
     # Doc counts are write-time byproducts of the sink (an observe()

@@ -50,23 +50,27 @@ def migrate_dump_on_driver(
     log_content: str | None = None,
     log_dialect: str = "mysql",
     normalize_dates: bool = True,
-    stages: dict | None = None,
+    record: dict | None = None,
 ):
     """Dump text plus an optional query log -> ({collection: [document
     JSON]}, catalog, plan); empty collections map to empty lists. The
     catalog, workload and plan are engine.migrate_from_dump's.
 
-    stages, when given, receives the wall seconds of `parse`, `workload`,
-    `plan` and `build`. The workload call resolves
-    `workload.apply_workload` at call time, so a tracer that patches it
-    sees the call."""
+    record, when given, receives the wall seconds of `parse`, `workload`,
+    `plan` and `build` (in `stages`), the log's `statements` and
+    `unmatched_refs` and the planner's `size_referenced`. The workload
+    call resolves `workload.apply_workload` at call time, so a tracer
+    that patches it sees the call."""
+    stages = None if record is None else record.setdefault("stages", {})
     with timed_stage(stages, "parse"):
         _db, defs, catalog = read_dump(sql_text)
     with timed_stage(stages, "workload"):
-        if log_content:
-            workload_mod.apply_workload(catalog, log_content, log_dialect)
+        counts = workload_mod.apply_workload(catalog, log_content,
+                                             log_dialect)
     with timed_stage(stages, "plan"):
         plan = convert_schema(catalog)
+    if record is not None:
+        record.update(counts, size_referenced=plan.size_referenced)
     with timed_stage(stages, "build"):
         documents = build_documents(
             defs, document_shapes(catalog, plan), normalize_dates)

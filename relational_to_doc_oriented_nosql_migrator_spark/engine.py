@@ -48,15 +48,19 @@ def _plan_and_materialize(
     log_content: str | None,
     log_dialect: str,
     normalize_dates: bool,
+    record: dict | None = None,
 ):
     """The tail every source shares: fold the query log into the catalog,
     plan, and build the nested collections. Returns (plan, collections).
-    The calls resolve `convert_schema`, `materialize` and
+    record, when given, receives the log's `statements` and
+    `unmatched_refs` and the planner's `size_referenced`. The calls
+    resolve `convert_schema`, `materialize` and
     `workload_mod.apply_workload` as module attributes at call time, so a
     tracer that patches those names (perfbench/spans.py) sees each call."""
-    if log_content:
-        workload_mod.apply_workload(catalog, log_content, log_dialect)
+    counts = workload_mod.apply_workload(catalog, log_content, log_dialect)
     plan = convert_schema(catalog)
+    if record is not None:
+        record.update(counts, size_referenced=plan.size_referenced)
     return plan, materialize(tables, catalog, plan,
                              normalize_dates=normalize_dates)
 
@@ -67,16 +71,13 @@ def migrate(
     log_content: str | None = None,
     log_dialect: str = "mysql",
     normalize_dates: bool = True,
-    size_referenced: list | None = None,
+    record: dict | None = None,
 ) -> dict[str, DataFrame]:
     """Full pipeline: returns {root collection name: nested DataFrame}.
-    size_referenced, when given, receives the tables the planner's
-    document size rule referenced (NoSQLPlan.size_referenced)."""
+    record, when given, receives what _plan_and_materialize puts in it."""
     catalog, tables = build_testdata_catalog(spark, sf_dir)
-    plan, collections = _plan_and_materialize(
-        tables, catalog, log_content, log_dialect, normalize_dates)
-    if size_referenced is not None:
-        size_referenced.extend(plan.size_referenced)
+    _plan, collections = _plan_and_materialize(
+        tables, catalog, log_content, log_dialect, normalize_dates, record)
     return collections
 
 

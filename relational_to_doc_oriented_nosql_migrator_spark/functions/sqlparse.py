@@ -1,114 +1,131 @@
-"""`fn_sql_tablelist` — SQL statement -> ['{op}::{db}::{table}', ...].
+"""The package's one SQL lexer, and `fn_sql_tablelist` on its tokens.
 
-The reference delegates to node-sql-parser's `tableList`
-(reference server/LogManager.js:53-75), returning one entry per *distinct*
-table referenced by the statement, tagged with the statement's operation;
-unparseable statements are skipped silently (:69-71).
-
-Implementation: a regex-based extractor that handles the log-statement
-shapes the workload analyzer sees (SELECT ... FROM a JOIN b / comma lists,
-INSERT INTO, UPDATE, DELETE FROM, CREATE TABLE, and non-correlated
-subqueries). Plain Python, called once per statement by the driver-side
-workload analyzer (workload.py).
+A quoted string, a quoted name and a comment are each one token, so
+nothing inside one is read. The dump reader (sources/sqldump.py) builds
+its patterns from these; `extract_table_refs` reads a log statement's
+distinct '{op}::{db}::{table}' refs, tagged with the statement's
+operation (reference server/LogManager.js:53-75, node-sql-parser's
+`tableList`): the names after `FROM`/`JOIN`/`STRAIGHT_JOIN` (comma
+lists with `[AS] alias`) and after a head `INSERT|REPLACE INTO`,
+`UPDATE` or `CREATE TABLE`, none in `EXTRACT(`/`SUBSTRING(`/`TRIM(`/
+`POSITION(`, nor a function or `dual`; a qualifier is the db ('null').
 """
 
 from __future__ import annotations
 
+import functools
 import re
 
-_IDENT = r'(?:`[^`]+`|"[^"]+"|\[[^\]]+\]|[A-Za-z_][\w$]*)(?:\s*\.\s*(?:`[^`]+`|"[^"]+"|[A-Za-z_][\w$]*))?'
+# A '...' or "..." literal whose body holds backslash escapes and doubled
+# quotes (unrolled: a missing closing quote costs one linear scan).
+_SQ = r"'[^'\\]*(?:(?:\\.|'')[^'\\]*)*'"
+_DQ = r'"[^"\\]*(?:(?:\\.|"")[^"\\]*)*"'
+# A standard-conforming pg string (after `SET standard_conforming_strings
+# = on`, which pg_dump writes in every header): a '...' body keeps `\` as
+# data and only a doubled quote is special; an E'...' body keeps its
+# backslash escapes.
+_SQ_STANDARD = rf"(?<!\b[eE])'[^']*(?:''[^']*)*'|(?<=\b[eE]){_SQ}"
+# A comment, which both servers skip anywhere outside a literal: `-- ...`
+# to the end of the line, or `/* ... */`. mysqldump's version-gated
+# `/*!40101 SET ... */` is skipped too: what it runs changes no table.
+_COMMENT = r"--[^\r\n]*|/\*.*?\*/"
+# Whitespace or a comment, as between the words of a statement head.
+_S = rf"(?:\s|{_COMMENT})"
+# A quoted identifier (a doubled quote inside is one quote) or a bare
+# word, and a name of such parts, qualified (`db`.`t`, "public"."t").
+_BQ = r"`[^`]*(?:``[^`]*)*`"
+_DQ_NAME = r'"[^"]*(?:""[^"]*)*"'
+_WORD = r"[\w$]+"
+_IDENT = rf"{_BQ}|{_DQ_NAME}|{_WORD}"
 
-_FROM_RE = re.compile(
-    rf"\bfrom\s+({_IDENT}(?:\s*,\s*{_IDENT})*)", re.IGNORECASE
-)
-_JOIN_RE = re.compile(rf"\bjoin\s+({_IDENT})", re.IGNORECASE)
-_INSERT_RE = re.compile(rf"^\s*insert\s+(?:ignore\s+)?into\s+({_IDENT})",
-                        re.IGNORECASE)
-_UPDATE_RE = re.compile(rf"^\s*update\s+(?:only\s+)?({_IDENT})", re.IGNORECASE)
-_DELETE_RE = re.compile(rf"^\s*delete\s+from\s+({_IDENT})", re.IGNORECASE)
-_CREATE_RE = re.compile(
-    rf"^\s*create\s+(?:temporary\s+|temp\s+)?table\s+(?:if\s+not\s+exists\s+)?({_IDENT})",
-    re.IGNORECASE,
-)
-_KEYWORDS = {
-    "select", "where", "group", "order", "limit", "on", "using", "as",
-    "inner", "left", "right", "full", "cross", "join", "values", "set",
-    "dual", "union", "having", "offset", "natural", "outer", "lateral",
+
+def _qualified(ident: str) -> str:
+    return rf"(?:{ident})(?:\s*\.\s*(?:{ident}))*"
+
+
+_NAME = _qualified(_IDENT)
+_NAME_RE = re.compile(_NAME)
+_IDENT_RE = re.compile(_IDENT)
+
+
+def _parts(name: str) -> list[str]:
+    """A name's parts; a doubled quote inside a quoted part is one."""
+    return [part[1:-1].replace(part[0] * 2, part[0]) if part[0] in '`"'
+            else part for part in _IDENT_RE.findall(name)]
+
+
+def _unquote(ident: str) -> str:
+    """A name's last part as the server reads it: `db`.`t` is t."""
+    name = _NAME_RE.match(ident.strip())
+    return _parts(name[0])[-1] if name else ident.strip()
+
+
+# Words that end a table item instead of aliasing it.
+_CLAUSE_WORDS = (
+    "where|on|using|join|straight_join|inner|cross|left|right|full|natural"
+    "|outer|set|group|order|having|limit|offset|fetch|union|except"
+    "|intersect|window|for|lock|into|values|select|returning|partition"
+    "|use|force|ignore|from")
+_END = r"(?![\w$])"
+_OPS = {"select", "insert", "replace", "update", "delete", "create"}
+_OP_RE = re.compile(r"\s*([A-Za-z]+)")
+
+
+def _reader(quoted: str, ident: str) -> tuple[re.Pattern, re.Pattern]:
+    """One dialect's statement scan, whose every match ends at a table
+    list (the last group) or at the end, skipping whole tokens, and its
+    pattern of one list item (the name in group 1)."""
+    name = rf"(?>{_qualified(ident)})(?!\s*\()"
+    alias = (rf"(?:{_S}+(?:as{_S}+)?"
+             rf"(?!(?:{_CLAUSE_WORDS}){_END})(?:{ident}))?")
+    names = rf"{name}{alias}(?:{_S}*,{_S}*{name}{alias})*"
+    inner = rf"(?:{quoted}|{_COMMENT}|[^()'\"`/-]+|['\"`/-])*+"
+    call = (rf"(?:extract|substring|trim|position)\s*\((?:{quoted}"
+            rf"|{_COMMENT}|[^()'\"`/-]+|\({inner}\)|['\"`/-])*+\)")
+    head = rf"(?:from|join|straight_join){_END}"
+    skip = (rf"(?:{quoted}|{_COMMENT}|{call}|(?!{head}){_WORD}"
+            rf"|[^\w$'\"`/-]+|[^\w$])*+")
+    scan = re.compile(
+        rf"\A\s*(?:(?:insert(?:{_S}+ignore)?|replace){_S}+into|create"
+        rf"(?:{_S}+temp(?:orary)?)?{_S}+table(?:{_S}+if{_S}+not{_S}+exists)?)"
+        rf"{_END}{_S}*((?>{_qualified(ident)}))"
+        rf"|\A\s*update(?:{_S}+only)?{_END}{_S}*({names})"
+        rf"|{skip}(?:{head}{_S}*({names})?|\Z)", re.I | re.S)
+    return scan, re.compile(rf"({name}){alias}{_S}*,?{_S}*", re.I | re.S)
+
+
+# MySQL: '...' keeps backslash escapes, "..." is a string, `...` a name.
+# Postgres: '...' is standard-conforming (E'...' keeps its escapes) and
+# "..." is a name.
+_READERS = {
+    "mysql": _reader(rf"{_SQ}|{_DQ}|{_BQ}", rf"{_BQ}|{_WORD}"),
+    "postgres": _reader(rf"{_SQ_STANDARD}|{_DQ_NAME}", rf"{_DQ_NAME}|{_WORD}"),
 }
 
 
-def _clean_ident(raw: str) -> str:
-    parts = re.split(r"\s*\.\s*", raw.strip())
-    name = parts[-1].strip("`\"[]")
-    return name
+@functools.lru_cache(maxsize=4096)
+def _table_list(text: str, dialect: str) -> tuple[str, ...]:
+    """'::{db}::{table}' for each name of a table list's text."""
+    out, pos, item = [], 0, _READERS[dialect][1]
+    while pos < len(text) and (m := item.match(text, pos)):
+        *db, table = _parts(m[1])
+        if table.lower() != "dual":
+            out.append(f"::{db[-1] if db else 'null'}::{table}")
+        pos = m.end()
+    return tuple(out)
 
 
-def _op_of(statement: str) -> str | None:
-    m = re.match(r"^\s*([A-Za-z]+)", statement)
-    if not m:
-        return None
-    op = m.group(1).lower()
-    return op if op in ("select", "insert", "update", "delete", "create") else None
-
-
-def _db_of(raw: str) -> str:
-    parts = re.split(r"\s*\.\s*", raw.strip())
-    if len(parts) == 2:
-        return parts[0].strip("`\"[]")
-    return "null"
-
-
-def _extract_regex(statement: str) -> list[str]:
-    op = _op_of(statement)
-    if op is None:
+def extract_table_refs(statement: str, dialect: str = "mysql") -> list[str]:
+    """A statement's distinct '{op}::{db}::{table}' refs, read with the
+    query log's dialect (`mysql` or `postgres`); [] for a statement that
+    is no select, insert, replace, update, delete or create."""
+    head = _OP_RE.match(statement)
+    op = head[1].lower() if head else None
+    if op not in _OPS:
         return []
-    refs: list[tuple[str, str]] = []  # (db, table)
-
-    def add(raw: str) -> None:
-        name = _clean_ident(raw)
-        if name and name.lower() not in _KEYWORDS and not name.isdigit():
-            refs.append((_db_of(raw), name))
-
-    if op == "insert":
-        m = _INSERT_RE.search(statement)
-        if m:
-            add(m.group(1))
-    elif op == "update":
-        m = _UPDATE_RE.search(statement)
-        if m:
-            add(m.group(1))
-    elif op == "create":
-        m = _CREATE_RE.search(statement)
-        if m:
-            add(m.group(1))
-    elif op == "delete":
-        m = _DELETE_RE.search(statement)
-        if m:
-            add(m.group(1))
-
-    # FROM/JOIN clauses (SELECT bodies, subqueries in any statement type).
-    if op in ("select", "insert", "update", "delete", "create"):
-        for m in _FROM_RE.finditer(statement):
-            for raw in re.split(r"\s*,\s*", m.group(1)):
-                # Strip trailing alias tokens: "orders o" -> "orders".
-                add(raw.split()[0] if raw.split() else raw)
-        for m in _JOIN_RE.finditer(statement):
-            add(m.group(1))
-
-    # Distinct per statement, insertion-ordered (node-sql-parser's tableList
-    # returns a unique list).
-    seen: set[str] = set()
-    out: list[str] = []
-    for db, table in refs:
-        entry = f"{op}::{db}::{table}"
-        if entry not in seen:
-            seen.add(entry)
-            out.append(entry)
-    return out
-
-
-def extract_table_refs(statement: str) -> list[str]:
-    """Pure-Python extraction (unit-testable without Spark)."""
-    if statement is None:
-        return []
-    return _extract_regex(statement)
+    refs: dict[str, None] = {}
+    for m in _READERS[dialect][0].finditer(statement):
+        if m.lastindex:
+            for ref in _table_list(m[m.lastindex], dialect):
+                refs[op + ref] = None
+    return list(refs)

@@ -1,11 +1,12 @@
 """Workload-analyzer operators (SURVEY §2.2, §2.4, §2.8) with DuckDB oracles.
 
 The Spark side runs the real analyzer (workload.py: one plain-Python pass
-over the log string — tokenizer -> statement filter -> table-ref extraction
--> per-table counts) and wraps its output with `createDataFrame`, so the
-registry and the migrator share one implementation. The oracle
-reimplements the same semantics independently in DuckDB SQL
-(gaps-and-islands entry reconstruction + regexp ref extraction), so a
+over the log string — tokenizer -> statement filter -> table refs read
+from the SQL lexer's tokens (functions/sqlparse.py) -> per-table counts)
+and wraps its output with `createDataFrame`, so the registry and the
+migrator share one implementation. The oracle reimplements the same
+semantics independently in DuckDB SQL (gaps-and-islands entry
+reconstruction + regexp ref extraction), so a
 hash match is a genuine cross-engine check, not a tautology.
 """
 
@@ -94,7 +95,7 @@ def q_fn_sql_tablelist(spark, sf_dir):
     (reference server/LogManager.js:53-75)."""
     return spark.createDataFrame(
         [(ref,) for s in W.statements(MYSQL_LOG, "mysql")
-         for ref in extract_table_refs(s)],
+         for ref in extract_table_refs(s, "mysql")],
         "ref string",
     )
 
@@ -120,7 +121,7 @@ def q_filter_dml_type(spark, sf_dir):
 def _gaf_uaf_rows(spark, sf_dir) -> list[tuple[str, int, int]]:
     """(table_name, gaf, uaf) for the log's tables present in sf_dir."""
     num_rows = dict(q_agg_count_star(spark, sf_dir).collect())
-    counts = W.access_counts(MYSQL_LOG, "mysql")
+    counts = W.access_counts(W.statements(MYSQL_LOG, "mysql"), "mysql")
     return [(name, accesses * num_rows[name], writes * num_rows[name])
             for name, (accesses, writes) in counts.items() if name in num_rows]
 

@@ -184,8 +184,10 @@ def run_migration(
     worker's traceback as its cause.
 
     `record` supplies the id (`id`) and receives the stage wall seconds
-    (`stages`), the tables the planner referenced to keep documents under
-    16 MiB (`size_referenced`), documents per collection (`documents`)
+    (`stages`), the log's kept statements (`statements`) and DML refs
+    naming no catalog table (`unmatched_refs`), the tables the planner
+    referenced to keep documents under 16 MiB (`size_referenced`),
+    documents per collection (`documents`)
     and the archive size (`bytes_out`), on a failure as far as the
     migration got."""
     payload, done, exc, worker_tb = workers.run(
@@ -225,9 +227,8 @@ def _run_in_worker(content_type: str, body: bytes, results_dir: str,
     try:
         documents, catalog, plan = migrate_dump_on_driver(
             sql_text, log_content=log_content, log_dialect=dialect,
-            stages=stages,
+            record=record,
         )
-        record["size_referenced"] = plan.size_referenced
         # Per-collection whole-array JSON files + zip, like the
         # reference's WriteToFile + archiver flow
         # (server/WriteToFile.js:5-62). The empty-collection drop rides

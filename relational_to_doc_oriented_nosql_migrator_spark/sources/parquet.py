@@ -179,11 +179,14 @@ def footer_schema(md: pq.FileMetaData) -> tuple[T.StructType, tuple[str, ...]]:
 def _value_width(stats: pq.Statistics) -> float:
     """JSON bytes of a typical value of a column chunk, from its
     statistics' extremes: a string's mean length plus its quotes, a date
-    or timestamp as its quoted `yyyy-MM-dd` (the normalized form), any
-    other value as the wider of the two."""
+    as its quoted `yyyy-MM-dd`, a timestamp as the sink writes it under
+    --no-normalize-dates (`"1998-06-22T00:00:00.000"`, the wider of its
+    renderings), any other value as the wider of the two."""
     lo, hi = stats.min, stats.max
     if isinstance(lo, (str, bytes)):
         return (len(lo) + len(hi)) / 2 + 2
+    if isinstance(lo, _dt.datetime):
+        return 25
     if isinstance(lo, _dt.date):
         return 12
     return max(len(str(lo)), len(str(hi)))

@@ -49,6 +49,9 @@ from dataclasses import dataclass, field
 from operator import itemgetter
 from typing import TYPE_CHECKING
 
+from relational_to_doc_oriented_nosql_migrator_spark.functions.sqlparse import (
+    _BQ, _COMMENT, _DQ, _DQ_NAME, _NAME, _NAME_RE, _S, _SQ, _SQ_STANDARD,
+    _unquote)
 from relational_to_doc_oriented_nosql_migrator_spark.plans.catalog import (
     Catalog,
     ForeignKey,
@@ -111,30 +114,8 @@ _TYPE_MAP: list[tuple[re.Pattern, _ColumnType]] = [
     (re.compile(r"^(datetime|timestamp)", re.I), TimestampType()),
 ]
 
-# The quoted-string patterns every split below builds on: a '...' or
-# "..." literal whose body holds backslash escapes and doubled quotes
-# (written unrolled, so a missing closing quote costs one linear scan).
-_SQ = r"'[^'\\]*(?:(?:\\.|'')[^'\\]*)*'"
-_DQ = r'"[^"\\]*(?:(?:\\.|"")[^"\\]*)*"'
-# A standard-conforming pg string (after `SET standard_conforming_strings
-# = on`, which pg_dump writes in every header): a '...' body keeps `\` as
-# data and only a doubled quote is special; an E'...' body keeps its
-# backslash escapes.
-_SQ_STANDARD = rf"(?<!\b[eE])'[^']*(?:''[^']*)*'|(?<=\b[eE]){_SQ}"
-# A comment, which both servers skip anywhere outside a literal: `-- ...`
-# to the end of the line, or `/* ... */`. mysqldump's version-gated
-# `/*!40101 SET ... */` is skipped too: what it runs changes no table.
-_COMMENT = r"--[^\r\n]*|/\*.*?\*/"
-# Whitespace or a comment, as between the words of a statement head.
-_S = rf"(?:\s|{_COMMENT})"
-# A quoted identifier (a doubled quote inside is one quote) or a bare
-# word, and a name of such parts, qualified (`db`.`t`, "public"."t").
-_BQ = r"`[^`]*(?:``[^`]*)*`"
-_DQ_NAME = r'"[^"]*(?:""[^"]*)*"'
-_IDENT = rf"{_BQ}|{_DQ_NAME}|[\w$]+"
-_NAME = rf"(?:{_IDENT})(?:\s*\.\s*(?:{_IDENT}))*"
-_NAME_RE = re.compile(_NAME)
-_IDENT_RE = re.compile(_IDENT)
+# The token patterns (_SQ, _DQ, _BQ, _COMMENT, _NAME, ...) are the
+# package's one SQL lexer's (functions/sqlparse.py).
 # A parenthesized column list, whose quoted names and comments may hold
 # a ')'.
 _COLUMN_LIST = rf"\(((?:{_BQ}|{_DQ_NAME}|{_COMMENT}|[^)`\"])*+)\)"
@@ -248,19 +229,6 @@ _E_ESCAPE_RE = re.compile(
     r"|U([0-9A-Fa-f]{8})|(.))|''",
     re.S,
 )
-
-
-def _unquote(ident: str) -> str:
-    """A name's last part as the server reads it: `db`.`t` is t, and a
-    doubled quote inside a quoted part is one quote."""
-    ident = ident.strip()
-    name = _NAME_RE.match(ident)
-    if not name:
-        return ident
-    part = _IDENT_RE.findall(name[0])[-1]
-    if part[0] in '`"':
-        return part[1:-1].replace(part[0] * 2, part[0])
-    return part
 
 
 def _mysql_string(token: str) -> str:

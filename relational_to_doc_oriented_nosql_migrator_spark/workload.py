@@ -9,7 +9,11 @@ maf = 0.0125 * sum(gaf) (server/models/RelationalDatabase.js:17-24).
 
 The log is already one string on the driver (the CLI reads the file, the
 service receives it in the POST body) and the reference scans it once in
-memory, so this is one plain-Python pass with no Spark job. The regex
+memory, so this is one plain-Python pass with no Spark job. Refs are
+read in the log's dialect from the SQL lexer's tokens
+(functions/sqlparse.py) of the whitespace-normalized statement, as the
+reference parses it (server/LogManager.js:24,41 before :67): a `--`
+comment in a multi-line entry runs to the statement's end. The regex
 constants below are Java-syntax patterns (the DuckDB oracles in
 operators/workload_ops.py read them too); the compiled forms reproduce Java's
 semantics in Python: ASCII `\\d`/`\\s`, Java's multiline `^` after any line
@@ -118,31 +122,39 @@ def statements(log_content: str, dialect: str = "mysql") -> list[str]:
     return out
 
 
-def table_refs(stmts: list[str]) -> list[tuple[str, str, str]]:
+def table_refs(stmts: list[str], dialect: str = "mysql") -> list[tuple[str, str, str]]:
     """`fn_sql_tablelist` -> `fn_split_tableref`: (op, db, table) for each
     distinct ref of each statement (reference server/LogManager.js:53-82)."""
-    return [tuple(ref.split("::")[:3])
-            for stmt in stmts for ref in extract_table_refs(stmt)]
+    return [tuple(ref.split("::", 2))
+            for stmt in stmts for ref in extract_table_refs(stmt, dialect)]
 
 
-def access_counts(log_content: str, dialect: str = "mysql") -> dict[str, tuple[int, int]]:
+def access_counts(stmts: list[str], dialect: str = "mysql") -> dict[str, tuple[int, int]]:
     """`filter_dml_type` + the counting half of `agg_workload_gaf_uaf`:
-    table -> (accesses, writes) over the DML refs of the log."""
+    table -> (accesses, writes) over the statements' DML refs."""
     accesses: Counter[str] = Counter()
     writes: Counter[str] = Counter()
-    for op, _db, table in table_refs(statements(log_content, dialect)):
+    for op, _db, table in table_refs(stmts, dialect):
         if op in DML_OPS:
             accesses[table] += 1
             writes[table] += op != "select"
     return {table: (n, writes[table]) for table, n in accesses.items()}
 
 
-def apply_workload(catalog: Catalog, log_content: str, dialect: str = "mysql") -> None:
-    """Fold the log's row-count-weighted access stats into the catalog.
-    Tables absent from the catalog are skipped (reference
-    server/LogManager.js:91-97)."""
-    for name, (accesses, writes) in access_counts(log_content, dialect).items():
+def apply_workload(catalog: Catalog, log_content: str | None,
+                   dialect: str = "mysql") -> dict[str, int]:
+    """Fold the log's (if any) row-count-weighted access stats into the
+    catalog. Tables absent from the catalog are skipped (reference
+    server/LogManager.js:91-97). Returns the kept statement count
+    (`statements`) and the DML refs that name no catalog table
+    (`unmatched_refs`), so a log that matched nothing shows."""
+    stmts = statements(log_content or "", dialect)
+    unmatched = 0
+    for name, (accesses, writes) in access_counts(stmts, dialect).items():
         table = catalog.get_table(name)
-        if table is not None:
+        if table is None:
+            unmatched += accesses
+        else:
             table.gaf = accesses * table.num_rows
             table.uaf = writes * table.num_rows
+    return {"statements": len(stmts), "unmatched_refs": unmatched}

@@ -83,7 +83,7 @@ def test_cli_parquet_tables_to_json_dir(spark, tmp_path):
     assert {"region", "part", "lineitem"} <= written
 
 
-def test_cli_postgres_log_changes_the_plan(spark, tmp_path):
+def test_cli_postgres_log_changes_the_plan(spark, tmp_path, capsys):
     from relational_to_doc_oriented_nosql_migrator_spark import cli
     from relational_to_doc_oriented_nosql_migrator_spark.operators.workload_ops import (
         PG_LOG,
@@ -94,8 +94,11 @@ def test_cli_postgres_log_changes_the_plan(spark, tmp_path):
     log.write_text(PG_LOG)
     idle, hot = tmp_path / "idle", tmp_path / "hot"
     assert cli.main(["--tables", SF0001, "--out", str(idle)]) == 0
+    capsys.readouterr()
     assert cli.main(["--tables", SF0001, "--log", str(log),
                      "--dialect", "postgres", "--out", str(hot)]) == 0
+    summary = json.loads(capsys.readouterr().out)
+    assert (summary["statements"], summary["unmatched_refs"]) == (5, 0)
     # write-hot orders leaves the region tree for its own collection
     assert "orders" not in os.listdir(idle)
     assert "orders" in os.listdir(hot)
@@ -191,6 +194,7 @@ def test_cli_tables_single_file_zip_matches_summary(spark, tmp_path, capsys):
     assert len(summary["id"]) == 32 and int(summary["id"], 16) >= 0
     assert list(summary["stages"]) == ["migrate", "write"]
     assert summary["stages"]["write"] > 0
+    assert (summary["statements"], summary["unmatched_refs"]) == (0, 0)
     counts = summary["collections"]
     assert {"region", "part", "lineitem"} <= set(counts)
     with zipfile.ZipFile(zip_path) as zf:
@@ -213,5 +217,29 @@ def test_cli_dump_summary_has_an_id_and_stage_times(tmp_path, capsys):
     assert list(summary["stages"]) == [
         "parse", "workload", "plan", "build", "write"]
     assert all(s >= 0 for s in summary["stages"].values())
+    assert (summary["statements"], summary["unmatched_refs"]) == (5, 0)
     assert summary["collections"] == {"dept": 3, "employee": 3}
 
+
+
+# The tables MYSQL_LOG names, but supplier.
+NO_SUPPLIER_DUMP = "".join(
+    f"CREATE TABLE {t} (id INT PRIMARY KEY);\nINSERT INTO {t} VALUES (1);\n"
+    for t in ("region", "nation", "customer", "part", "orders", "lineitem"))
+
+
+def test_cli_dump_summary_counts_refs_to_no_catalog_table(tmp_path, capsys):
+    """A log's statements and its DML refs to no catalog table are in
+    the summary, so a log that matched nothing shows."""
+    from relational_to_doc_oriented_nosql_migrator_spark import cli
+    from relational_to_doc_oriented_nosql_migrator_spark.operators.workload_ops import (
+        MYSQL_LOG,
+    )
+
+    dump, log = tmp_path / "d.sql", tmp_path / "q.log"
+    dump.write_text(NO_SUPPLIER_DUMP)
+    log.write_text(MYSQL_LOG)
+    assert cli.main(["--dump", str(dump), "--log", str(log),
+                     "--out", str(tmp_path / "out")]) == 0
+    summary = json.loads(capsys.readouterr().out)
+    assert (summary["statements"], summary["unmatched_refs"]) == (11, 1)

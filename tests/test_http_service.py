@@ -329,9 +329,27 @@ def test_each_post_logs_one_record_with_its_id(server, capfd):
     assert ok["id"] == result_id and ok["status"] == 200
     assert set(ok["stages"]) == {"parse", "workload", "plan", "build", "zip"}
     assert ok["documents"] == {"dept": 3}
+    assert (ok["statements"], ok["unmatched_refs"]) == (0, 0)
     assert ok["bytes_in"] > len(DUMP_FIXTURE) and ok["bytes_out"] > 0
     assert failed["id"] == failed_id != result_id
     assert failed["status"] == 500 and failed["error"] == "ValueError"
+
+
+def test_record_counts_log_refs_to_no_catalog_table(server, capfd):
+    """The record has the log's statements and its DML refs to no
+    catalog table: MYSQL_LOG against a dump without supplier."""
+    from relational_to_doc_oriented_nosql_migrator_spark.operators.workload_ops import (
+        MYSQL_LOG,
+    )
+    from tests.test_cli import NO_SUPPLIER_DUMP
+
+    capfd.readouterr()
+    with _post(server, {"sqlFile": ("d.sql", NO_SUPPLIER_DUMP),
+                        "logFile": ("q.log", MYSQL_LOG)}):
+        pass
+    record, = [json.loads(line) for line in capfd.readouterr().err
+               .splitlines() if line.startswith("{")]
+    assert (record["statements"], record["unmatched_refs"]) == (11, 1)
 
 
 def test_service_starts_no_jvm(tmp_path):

@@ -145,3 +145,23 @@ def test_planner_scenario_catalog_is_the_engine_catalog(spark):
     scenario = planops._scenarios(SF0001)["tpch"]
     assert list(scenario.tables.values()) == list(
         engine_catalog.tables.values())
+
+
+def test_column_bytes_counts_timestamps_as_the_sink_writes_them(tmp_path):
+    """A timestamp counts at its width under --no-normalize-dates, the
+    wider of its two renderings; a date at its quoted yyyy-MM-dd. One
+    repeated value is dictionary-encoded, so the values' width, not the
+    chunk's size, decides."""
+    from relational_to_doc_oriented_nosql_migrator_spark.sources.parquet import (
+        _column_bytes,
+    )
+
+    path = str(tmp_path / "t.parquet")
+    pq.write_table(pa.table({
+        "ts": pa.array([datetime.datetime(1998, 6, 22)] * 10_000,
+                       pa.timestamp("us")),
+        "d": pa.array([datetime.date(1998, 6, 22)] * 10_000, pa.date32()),
+    }), path)
+    widths = _column_bytes([pq.read_metadata(path)])
+    assert widths == {"ts": 10_000 * len('"1998-06-22T00:00:00.000"'),
+                      "d": 10_000 * len('"1998-06-22"')}

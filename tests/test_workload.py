@@ -4,7 +4,7 @@ The reference is the log tokenizer as Spark built-ins (Java regex
 `split`, `regexp_extract`, `regexp_replace`, `trim`, `lower`, `rlike`)
 over the unchanged regex constants of workload.py, with
 `extract_table_refs` for the refs and a Spark split + groupBy for the
-counts. Where Java and Python regex semantics differ (line terminators,
+counts. A case table pins the refs the SQL lexer reads in each dialect. Where Java and Python regex semantics differ (line terminators,
 `\\s`, `\\b`, trim), the reference decides.
 """
 
@@ -54,7 +54,7 @@ def spark_statements(spark, log: str, dialect: str) -> list[str]:
 
 
 def spark_access_counts(spark, stmts: list[str], dialect: str) -> dict:
-    refs = [(ref,) for s in stmts for ref in extract_table_refs(s)]
+    refs = [(ref,) for s in stmts for ref in extract_table_refs(s, dialect)]
     parts = F.split("ref", "::")
     counted = (
         spark.createDataFrame(refs, "ref string")
@@ -167,20 +167,31 @@ LOGS = {
 def test_python_core_matches_spark_reference(name, spark):
     dialect, log = LOGS[name]
     expected = spark_statements(spark, log, dialect)
-    assert W.statements(log, dialect) == expected
-    assert W.access_counts(log, dialect) == spark_access_counts(
+    stmts = W.statements(log, dialect)
+    assert stmts == expected
+    assert W.access_counts(stmts, dialect) == spark_access_counts(
         spark, expected, dialect)
 
 
 def test_generated_log_keeps_every_query():
-    log, stats = gen.mysql_general_log(7, 2_000, gen.table_sizes(0.02))
-    assert len(W.statements(log, "mysql")) == stats["queries"]
+    """The generator's own tallies, seeds 1-10: every Query entry is
+    kept, each join shape names two tables and every other query one,
+    and the writes are the write entries."""
+    for seed in range(1, 11):
+        log, stats = gen.mysql_general_log(seed, 2_000,
+                                           gen.table_sizes(0.02))
+        stmts = W.statements(log, "mysql")
+        assert len(stmts) == stats["queries"], seed
+        counts = W.access_counts(stmts, "mysql").values()
+        assert sum(n for n, _ in counts) == (
+            stats["queries"] + stats["joins"]), seed
+        assert sum(w for _, w in counts) == stats["writes"], seed
 
 
 def test_apply_workload_weights_by_row_count():
     catalog = Catalog([TableMeta("orders", 10), TableMeta("lineitem", 100),
                        TableMeta("unused", 5)])
-    W.apply_workload(catalog, MYSQL_LOG, "mysql")
+    counts = W.apply_workload(catalog, MYSQL_LOG, "mysql")
     # orders: 2 selects + 2 updates; lineitem: 1 insert, 1 delete, 1 join
     assert (catalog.tables["orders"].gaf, catalog.tables["orders"].uaf) == (
         40, 20)
@@ -188,6 +199,19 @@ def test_apply_workload_weights_by_row_count():
             catalog.tables["lineitem"].uaf) == (300, 200)
     assert (catalog.tables["unused"].gaf, catalog.tables["unused"].uaf) == (
         0, 0)
+    # customer 1, nation 2, part 1, supplier 1, region 1
+    assert counts == {"statements": 11, "unmatched_refs": 6}
+
+
+def test_apply_workload_reports_refs_to_no_catalog_table():
+    """MYSQL_LOG against a catalog without supplier: one DML ref
+    matches no table."""
+    names = ("region", "nation", "customer", "part", "orders", "lineitem")
+    catalog = Catalog([TableMeta(n, 1) for n in names])
+    assert W.apply_workload(catalog, MYSQL_LOG, "mysql") == {
+        "statements": 11, "unmatched_refs": 1}
+    assert W.apply_workload(Catalog([]), "", "mysql") == {
+        "statements": 0, "unmatched_refs": 0}
 
 
 def test_unknown_dialect_is_refused():
@@ -200,3 +224,55 @@ def test_unknown_dialect_is_refused():
 def test_wider_entry_stamps_keep_every_statement(name):
     dialect, log = LOGS[name]
     assert W.statements(log, dialect) == _BODIES
+
+
+# statement -> (mysql refs, postgres refs); a single list is both.
+_REF_CASES = {
+    "SELECT * FROM orders o, customer c WHERE o.o_custkey = c.c_custkey":
+        ["select::null::orders", "select::null::customer"],
+    "SELECT * FROM orders AS o, customer AS c":
+        ["select::null::orders", "select::null::customer"],
+    "SELECT * FROM t WHERE note = 'from x join y'": ["select::null::t"],
+    "SELECT * FROM t -- from z": ["select::null::t"],
+    "SELECT * FROM t /* join z */ WHERE a = 1": ["select::null::t"],
+    "SELECT EXTRACT(YEAR FROM o_orderdate) FROM orders":
+        ["select::null::orders"],
+    "SELECT SUBSTRING(c_name FROM 2 FOR 3), TRIM(LEADING 'x' FROM c_name),"
+    " POSITION('a' IN c_name) FROM customer": ["select::null::customer"],
+    "SELECT EXTRACT(DAY FROM DATE(o_orderdate)) FROM orders":
+        ["select::null::orders"],
+    "SELECT * FROM `order`": (["select::null::order"], []),
+    'SELECT * FROM "order"': ([], ["select::null::order"]),
+    "SELECT * FROM a STRAIGHT_JOIN b": ["select::null::a", "select::null::b"],
+    "SELECT * FROM t WHERE p = 'C:\\' OR q = ' from x'":
+        (["select::null::t", "select::null::x"], ["select::null::t"]),
+    "SELECT * FROM t WHERE p = E'\\' from x'": ["select::null::t"],
+    "SELECT * FROM t WHERE p = '\\' from x'":
+        (["select::null::t"], ["select::null::t", "select::null::x"]),
+    # a string in MySQL, a name in Postgres: one token in both
+    "SELECT * FROM t WHERE p = \"from x\"": ["select::null::t"],
+    "INSERT INTO lineitem (a, b) VALUES (1, 'from q')":
+        ["insert::null::lineitem"],
+    "UPDATE orders o, customer c SET o.x = c.y":
+        ["update::null::orders", "update::null::customer"],
+    "SELECT * FROM generate_series(1, 3)": [],
+    # multi-table writes, qualifiers, subqueries and non-tables
+    "UPDATE a JOIN b ON a.id = b.id SET a.x = 1":
+        ["update::null::a", "update::null::b"],
+    "DELETE a FROM a JOIN b ON a.id = b.id":
+        ["delete::null::a", "delete::null::b"],
+    "SELECT * FROM db.t": ["select::db::t"],
+    "CREATE TABLE IF NOT EXISTS tmp (x INT)": ["create::null::tmp"],
+    "SELECT * FROM (SELECT * FROM x) y WHERE 1": ["select::null::x"],
+    "SELECT 1 FROM dual": [],
+    "GRANT ALL ON db TO root": [],
+}
+
+
+@pytest.mark.parametrize("dialect", W.DIALECTS)
+@pytest.mark.parametrize("stmt", list(_REF_CASES))
+def test_refs_are_read_from_the_lexers_tokens(stmt, dialect):
+    want = _REF_CASES[stmt]
+    if isinstance(want, tuple):
+        want = want[W.DIALECTS.index(dialect)]
+    assert extract_table_refs(stmt, dialect) == want
