@@ -6,9 +6,11 @@ its patterns from these; `extract_table_refs` reads a log statement's
 distinct '{op}::{db}::{table}' refs, tagged with the statement's
 operation (reference server/LogManager.js:53-75, node-sql-parser's
 `tableList`): the names after `FROM`/`JOIN`/`STRAIGHT_JOIN` (comma
-lists with `[AS] alias`) and after a head `INSERT|REPLACE INTO`,
-`UPDATE` or `CREATE TABLE`, none in `EXTRACT(`/`SUBSTRING(`/`TRIM(`/
-`POSITION(`, nor a function or `dual`; a qualifier is the db ('null').
+lists with `[AS] alias`; a parenthesized item, such as a derived table,
+is read for its own table lists) and after a head `INSERT|REPLACE
+INTO`, `UPDATE` or `CREATE TABLE`, none in `EXTRACT(`/`SUBSTRING(`/
+`TRIM(`/`POSITION(`, nor a function or `dual`; a qualifier is the db
+('null').
 """
 
 from __future__ import annotations
@@ -74,14 +76,20 @@ _OP_RE = re.compile(r"\s*([A-Za-z]+)")
 def _reader(quoted: str, ident: str) -> tuple[re.Pattern, re.Pattern]:
     """One dialect's statement scan, whose every match ends at a table
     list (the last group) or at the end, skipping whole tokens, and its
-    pattern of one list item (the name in group 1)."""
+    pattern of one list item: a name (group 1) or a parenthesized item
+    (group 2), each with its alias."""
     name = rf"(?>{_qualified(ident)})(?!\s*\()"
     alias = (rf"(?:{_S}+(?:as{_S}+)?"
              rf"(?!(?:{_CLAUSE_WORDS}){_END})(?:{ident}))?")
-    names = rf"{name}{alias}(?:{_S}*,{_S}*{name}{alias})*"
-    inner = rf"(?:{quoted}|{_COMMENT}|[^()'\"`/-]+|['\"`/-])*+"
-    call = (rf"(?:extract|substring|trim|position)\s*\((?:{quoted}"
-            rf"|{_COMMENT}|[^()'\"`/-]+|\({inner}\)|['\"`/-])*+\)")
+    # parentheses nested up to three deep, whole tokens inside
+    paren = ""
+    for _ in range(3):
+        nested = paren and f"|{paren}"
+        paren = (rf"\((?:{quoted}|{_COMMENT}|[^()'\"`/-]+{nested}"
+                 rf"|['\"`/-])*+\)")
+    item = rf"(?:{name}|{paren}){alias}"
+    names = rf"{item}(?:{_S}*,{_S}*{item})*"
+    call = rf"(?:extract|substring|trim|position)\s*{paren}"
     head = rf"(?:from|join|straight_join){_END}"
     skip = (rf"(?:{quoted}|{_COMMENT}|{call}|(?!{head}){_WORD}"
             rf"|[^\w$'\"`/-]+|[^\w$])*+")
@@ -91,7 +99,8 @@ def _reader(quoted: str, ident: str) -> tuple[re.Pattern, re.Pattern]:
         rf"{_END}{_S}*((?>{_qualified(ident)}))"
         rf"|\A\s*update(?:{_S}+only)?{_END}{_S}*({names})"
         rf"|{skip}(?:{head}{_S}*({names})?|\Z)", re.I | re.S)
-    return scan, re.compile(rf"({name}){alias}{_S}*,?{_S}*", re.I | re.S)
+    return scan, re.compile(rf"(?:({name})|({paren})){alias}{_S}*,?{_S}*",
+                            re.I | re.S)
 
 
 # MySQL: '...' keeps backslash escapes, "..." is a string, `...` a name.
@@ -105,14 +114,25 @@ _READERS = {
 
 @functools.lru_cache(maxsize=4096)
 def _table_list(text: str, dialect: str) -> tuple[str, ...]:
-    """'::{db}::{table}' for each name of a table list's text."""
+    """'::{db}::{table}' for each name of a table list's text, and for
+    the tables a parenthesized item (a derived table) reads."""
     out, pos, item = [], 0, _READERS[dialect][1]
     while pos < len(text) and (m := item.match(text, pos)):
-        *db, table = _parts(m[1])
-        if table.lower() != "dual":
-            out.append(f"::{db[-1] if db else 'null'}::{table}")
+        if m[2]:
+            out.extend(_refs(m[2][1:-1], dialect))
+        else:
+            *db, table = _parts(m[1])
+            if table.lower() != "dual":
+                out.append(f"::{db[-1] if db else 'null'}::{table}")
         pos = m.end()
     return tuple(out)
+
+
+def _refs(text: str, dialect: str):
+    """'::{db}::{table}' for each name of each table list in text."""
+    for m in _READERS[dialect][0].finditer(text):
+        if m.lastindex:
+            yield from _table_list(m[m.lastindex], dialect)
 
 
 def extract_table_refs(statement: str, dialect: str = "mysql") -> list[str]:
@@ -123,9 +143,4 @@ def extract_table_refs(statement: str, dialect: str = "mysql") -> list[str]:
     op = head[1].lower() if head else None
     if op not in _OPS:
         return []
-    refs: dict[str, None] = {}
-    for m in _READERS[dialect][0].finditer(statement):
-        if m.lastindex:
-            for ref in _table_list(m[m.lastindex], dialect):
-                refs[op + ref] = None
-    return list(refs)
+    return list(dict.fromkeys(op + ref for ref in _refs(statement, dialect)))

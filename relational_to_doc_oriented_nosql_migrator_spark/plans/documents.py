@@ -6,9 +6,13 @@ documents are built here in plain Python by the same document shapes
 (plans/shape.py) the Catalyst nesting DAG is built from: one dict index per
 join column, and each document rendered as the JSON text Spark's `toJSON`
 writes for it — key order, null omission, `array_sort` element order,
-Jackson's string escapes and Java's double spelling. Rows are read as
-`zip(*columns)` and rendered one at a time, each field by the renderer its
-column type chose once.
+Jackson's string escapes and Java's double spelling. Root documents are
+rendered a chunk of CHUNK_ROWS rows at a time and column at a time: each
+field's slice becomes JSON texts through one `map` of the renderer its
+column type chose once, its key is prefixed the same way, and a row's
+parts are joined with one more `map`. A chunk's documents can be written
+out before the next chunk is rendered (sinks/documents.py), so a
+collection's whole text is never held at once.
 """
 
 from __future__ import annotations
@@ -17,8 +21,11 @@ import datetime as _dt
 import math
 import re
 from collections import defaultdict
+from collections.abc import Iterable, Iterator
+from functools import partial
+from itertools import compress, repeat
 from json.encoder import encode_basestring
-from operator import add, call, itemgetter
+from operator import itemgetter, methodcaller
 from zoneinfo import ZoneInfo
 
 from relational_to_doc_oriented_nosql_migrator_spark.plans.shape import (
@@ -35,6 +42,10 @@ from relational_to_doc_oriented_nosql_migrator_spark.sources.sqldump import (
 )
 
 _BANGKOK = ZoneInfo(BANGKOK_TZ)
+
+# Root rows rendered per chunk: large enough that the per-chunk calls
+# are negligible, small enough that a chunk's texts stay a few MB.
+CHUNK_ROWS = 4096
 
 # Jackson escapes '"', '\' and U+0000-U+001F: five by their short form,
 # the rest as \u00XX with uppercase hex. Everything else is written raw.
@@ -71,37 +82,49 @@ def _double(x: float) -> str:
     return f"{sign}{digits[0]}.{digits[1:] or '0'}E{point - 1}"
 
 
-def _timestamp(ts: _dt.datetime) -> str:
-    # the sink's session time zone is UTC (session.get_spark)
-    return '"' + ts.isoformat(timespec="milliseconds") + 'Z"'
+_PLAIN_LOW, _PLAIN_HIGH = 1e-3, 1e7
 
 
+def _doubles(values: list) -> Iterable[str]:
+    """repr when every value is 0 or in Java's plain range (no NaN or
+    infinity either), else _double."""
+    magnitudes = list(filter(None, map(abs, values)))
+    if all(map(_PLAIN_LOW.__le__, magnitudes)) and all(
+            map(_PLAIN_HIGH.__gt__, magnitudes)):
+        return map(repr, values)
+    return map(_double, values)
+
+
+_BOOLEANS = {True: "true", False: "false"}
+_TIMESTAMP = methodcaller("isoformat", timespec="milliseconds")
+
+# A type's renderer of a column slice without nulls to its JSON texts.
+# A timestamp's sink time zone is UTC (session.get_spark).
 _RENDER = {
-    BooleanType: lambda v: "true" if v else "false",
-    LongType: str,
-    DoubleType: _double,
-    TimestampType: _timestamp,
-    DateType: lambda d: '"' + d.isoformat() + '"',
+    BooleanType: lambda vs: map(_BOOLEANS.__getitem__, vs),
+    LongType: lambda vs: map(str, vs),
+    DoubleType: _doubles,
+    TimestampType: lambda vs: map('"%sZ"'.__mod__, map(_TIMESTAMP, vs)),
+    DateType: lambda vs: map('"%s"'.__mod__, map(_dt.date.isoformat, vs)),
 }
 
 
 def _renderer(dtype, column: list):
-    """The renderer of a column's non-null values, chosen once from its
+    """The renderer of a column's non-null slices, chosen once from its
     type and, for strings, its values."""
     if isinstance(dtype, StringType):
         # json's C encoder unless a value holds one of its lowercase hexes
         if _LOWER_HEX_CONTROLS.search("".join(filter(None, column))):
-            return _string
-        return encode_basestring
+            return partial(map, _string)
+        return partial(map, encode_basestring)
     return _RENDER[type(dtype)]
 
 
-def _bangkok_date(v) -> str:
-    """functions/scalar.date_normalize on a driver value: a timestamp's
-    Asia/Bangkok local date, a date as is."""
-    if isinstance(v, _dt.datetime):
-        v = v.replace(tzinfo=_dt.timezone.utc).astimezone(_BANGKOK).date()
-    return v.isoformat()
+def _bangkok_date(ts: _dt.datetime) -> str:
+    """functions/scalar.date_normalize on a driver timestamp: its
+    Asia/Bangkok local date."""
+    return ts.replace(tzinfo=_dt.timezone.utc).astimezone(_BANGKOK).date(
+        ).isoformat()
 
 
 def _key(v):
@@ -109,17 +132,37 @@ def _key(v):
     return (0,) if v is None else (2,) if v != v else (1, v)
 
 
-def _document(keys, renders, values, array_keys, arrays) -> str:
-    """`{"k":v,...}` over the non-null values, each by its field's
-    renderer, then the present arrays (each a (sort key, text) pair);
-    the keys are the encoded '"name":'s."""
-    if None in values:
-        parts = [k + render(v) for k, render, v in zip(keys, renders, values)
-                 if v is not None]
-    else:
-        parts = list(map(add, keys, map(call, renders, values)))
-    parts += [k + a[1] for k, a in zip(array_keys, arrays) if a is not None]
-    return "{" + ",".join(parts) + "}"
+def _texts(render, values: list) -> list:
+    """The JSON text of each value, None for each null."""
+    if None not in values:
+        return list(render(values))
+    texts = render([v for v in values if v is not None])
+    return [None if v is None else next(texts) for v in values]
+
+
+def _documents(keys, renders, columns, array_keys, array_columns) -> list:
+    """`{"k":v,...}` per row of the columns: the non-null values, each by
+    its field's renderer, then the present arrays (each a (sort key,
+    text) pair or None); the keys are the encoded '"name":'s. Without a
+    null, every row is one `%` of a format string; else each present
+    part is prefixed with its key and a row's parts are joined."""
+    texts = [_texts(render, column)
+             for render, column in zip(renders, columns)]
+    texts += [[None if a is None else a[1] for a in column]
+              for column in array_columns]
+    keys = keys + array_keys
+    if not any(None in column for column in texts):
+        row = "{" + ",".join(k.replace("%", "%%") + "%s" for k in keys) + "}"
+        return list(map(row.__mod__, zip(*texts)))
+    parts = [[None if t is None else k + t for t in column]
+             for k, column in zip(keys, texts)]
+    rows = map(filter, repeat(None), zip(*parts))
+    return list(map("{%s}".__mod__, map(",".join, rows)))
+
+
+def _present(*values) -> bool:
+    """Whether na.drop(how="all") keeps a row: NaN counts as null."""
+    return any(v is not None and v == v for v in values)
 
 
 class _Builder:
@@ -129,14 +172,14 @@ class _Builder:
         self._tables: dict[str, tuple[dict[str, int], list, list]] = {}
 
     def table(self, name: str) -> tuple[dict[str, int], list, list]:
-        """(column -> position, columns, renderers), date columns
-        normalized: each is mapped on its own, the rest are shared."""
+        """(column -> position, columns, renderers), timestamp columns
+        normalized to dates: each is mapped on its own, the rest are
+        shared. A date's text and order are the same either way."""
         if name not in self._tables:
             tdef = self.defs[name]
             columns, renders = list(tdef.columns), []
             for i, (_n, dtype) in enumerate(tdef.fields):
-                if self.normalize_dates and isinstance(
-                        dtype, (DateType, TimestampType)):
+                if self.normalize_dates and isinstance(dtype, TimestampType):
                     columns[i] = [None if v is None else _bangkok_date(v)
                                   for v in columns[i]]
                     dtype = StringType()
@@ -149,29 +192,28 @@ class _Builder:
     def _embeds(self, shape: Shape, pos: dict[str, int]):
         return [(self.arrays(e), pos[e.parent_key]) for e in shape.embedded]
 
-    def roots(self, shape: Shape) -> list[str]:
+    def roots(self, shape: Shape) -> Iterator[list[str]]:
+        """The root documents, CHUNK_ROWS rows at a time (one list, maybe
+        empty, for a table without rows)."""
         pos, columns, renders = self.table(shape.name)
         keys, array_keys = _keys(shape)
         cols = [pos[f.column] for f in shape.fields]
         field_renders = [renders[i] for i in cols]
         embeds = self._embeds(shape, pos)
-        # na.drop(how="all") counts NaN as null: a field column with
-        # neither keeps every row
         types = self.defs[shape.name].fields
-        keep_all = any(None not in columns[i]
-                       and not isinstance(types[i][1], DoubleType)
-                       for i in cols)
-        n = len(cols)
-        docs = []
-        for row in zip(*[columns[i] for i in cols],
-                       *[columns[i] for _g, i in embeds]):
-            values = row[:n]
-            if not keep_all and all(v is None or v != v for v in values):
-                continue
-            docs.append(_document(
+        doubles = [isinstance(types[i][1], DoubleType) for i in cols]
+        for start in range(0, max(len(columns[0]), 1), CHUNK_ROWS):
+            values = [columns[i][start:start + CHUNK_ROWS] for i in cols]
+            docs = _documents(
                 keys, field_renders, values, array_keys,
-                [g.get(v) for (g, _i), v in zip(embeds, row[n:])]))
-        return docs
+                [list(map(g.get, columns[i][start:start + CHUNK_ROWS]))
+                 for g, i in embeds])
+            # na.drop(how="all") counts NaN as null: a field slice with
+            # neither keeps every row
+            if not any(None not in v and not d
+                       for v, d in zip(values, doubles)):
+                docs = list(compress(docs, map(_present, *values)))
+            yield docs
 
     def arrays(self, shape: Shape) -> dict:
         """Link value -> (sort key, JSON array text) of the embedded
@@ -180,44 +222,40 @@ class _Builder:
         pos, columns, _renders = this
         keys, array_keys = _keys(shape)
         other = shape.other and self.table(shape.other.table)
-        # (read from the other endpoint's row, position) and renderer
-        cols, field_renders = [], []
-        for f in shape.fields:
-            opos, _c, orenders = other if f.other else this
-            cols.append((f.other, opos[f.column]))
-            field_renders.append(orenders[opos[f.column]])
-        embeds = self._embeds(shape, pos)
-        others = {}
+        link = pos[shape.link]
+        rows = [row for row in zip(*columns) if row[link] is not None]
         if shape.other:
+            # each row inner-joined to the other endpoint's rows
             opos, ocolumns, _r = other
-            k = opos[shape.other.key]
+            k, column = opos[shape.other.key], pos[shape.other.column]
             others = defaultdict(list)
             for o in zip(*ocolumns):
                 if o[k] is not None:
                     others[o[k]].append(o)
-        link = pos[shape.link]
+            pairs = [(row, o) for row in rows
+                     for o in others.get(row[column], ())]
+        else:
+            pairs = [(row, None) for row in rows]
+        values, field_renders = [], []
+        for f in shape.fields:
+            opos, _c, orenders = other if f.other else this
+            i = opos[f.column]
+            values.append([(o if f.other else row)[i] for row, o in pairs])
+            field_renders.append(orenders[i])
+        arrays = [[g.get(row[i]) for row, _o in pairs]
+                  for g, i in self._embeds(shape, pos)]
+        docs = _documents(keys, field_renders, values, array_keys, arrays)
+        sort_keys = zip(*[map(_key, v) for v in values],
+                        *[[(0,) if a is None else (1, a[0]) for a in column]
+                          for column in arrays])
         groups = defaultdict(list)
-        for row in zip(*columns):
-            if row[link] is None:
-                continue
-            arrays = [g.get(row[i]) for g, i in embeds]
-            array_order = tuple((0,) if a is None else (1, a[0])
-                                for a in arrays)
-            matches = ((None,) if shape.other is None
-                       else others.get(row[pos[shape.other.column]], ()))
-            for o in matches:
-                values = [(o if from_other else row)[i]
-                          for from_other, i in cols]
-                groups[row[link]].append((
-                    tuple(map(_key, values)) + array_order,
-                    _document(keys, field_renders, values, array_keys,
-                              arrays),
-                ))
+        for (row, _o), sort_key, doc in zip(pairs, sort_keys, docs):
+            groups[row[link]].append((sort_key, doc))
         out = {}
-        for value, docs in groups.items():
-            docs.sort(key=itemgetter(0))
-            out[value] = (tuple(k for k, _ in docs),
-                          "[" + ",".join(d for _, d in docs) + "]")
+        for value, group in groups.items():
+            group.sort(key=itemgetter(0))
+            out[value] = (tuple(k for k, _ in group),
+                          "[" + ",".join(d for _, d in group) + "]")
         return out
 
 
@@ -227,11 +265,25 @@ def _keys(shape: Shape) -> tuple[list[str], list[str]]:
             [_string(e.name) + ":" for e in shape.embedded])
 
 
-def build_documents(
+def document_chunks(
     defs: dict, shapes: list[Shape], normalize_dates: bool = True
-) -> dict[str, list[str]]:
-    """{root collection: its documents' JSON texts} for parsed dump tables
-    (sources.sqldump.read_dump) and the plan's document shapes. An empty
-    collection maps to an empty list."""
+) -> Iterator[tuple[str, list[str]]]:
+    """(root collection, documents' JSON texts) chunks for parsed dump
+    tables (sources.sqldump.read_dump) and the plan's document shapes, in
+    plan order, each of at most CHUNK_ROWS source rows: a collection's
+    chunks follow one another, and an empty collection yields one empty
+    chunk."""
     builder = _Builder(defs, normalize_dates)
-    return {shape.name: builder.roots(shape) for shape in shapes}
+    for shape in shapes:
+        for docs in builder.roots(shape):
+            yield shape.name, docs
+
+
+def build_documents(chunks) -> dict[str, list[str]]:
+    """{collection: its documents} of a document_chunks stream, in plan
+    order, for callers that want whole lists; an empty collection maps
+    to an empty list."""
+    out: dict[str, list[str]] = {}
+    for name, docs in chunks:
+        out.setdefault(name, []).extend(docs)
+    return out

@@ -8,26 +8,31 @@ JSON collections written during the migration (reference
 server/index.js:33-61 for the POST contract, :63-66 for the download,
 server/WriteToFile.js:5-62 for the results layout). This module closes
 that last reference-surface gap with a dependency-free stdlib server
-(`http.server` + `email` multipart parsing — no Flask/Express
-analogue is installable here) around the engine seam the CLI uses for
-a dump: dump_migration.migrate_dump_on_driver (sources/sqldump.read_dump
--> workload -> plans.convert_schema -> plans/documents.py) ->
-sinks.write_documents.
+(`http.server` and a byte-level RFC 7578 multipart reader — no
+Flask/Express analogue is installable here) around the engine seam the
+CLI uses for a dump: dump_migration.migrate_dump_on_driver
+(sources/sqldump.read_dump -> workload -> plans.convert_schema ->
+plans/documents.py) -> sinks.zip_documents.
 
 Scale stance: the HTTP surface is a CONTROL-PLANE endpoint. An upload
 is at most MAX_UPLOAD_BYTES and is parsed into Python columns on the
 driver, so its documents are built there too, with no Spark session
 and no JVM; they are the same JSON texts the Spark nesting path writes
 for the dump. The process loads no pyspark, py4j or pyarrow module. The
-collection files behind /download/result use the sink's single-file
-parity mode, like the reference's per-collection JSON.stringify files
-(server/WriteToFile.js:13-20). A corpus-scale
+archive behind /download/result holds one JSON array per collection,
+the sink's single-file parity layout, like the reference's
+per-collection JSON.stringify files (server/WriteToFile.js:13-20); the
+documents are rendered a chunk at a time and each chunk is deflated
+straight into its zip entry at Z_BEST_SPEED, with no collection file
+on disk (the server binds 127.0.0.1, so the larger archive crosses no
+network). A corpus-scale
 migration goes through the CLI's parquet path on Spark, not an HTTP
 upload; this endpoint mirrors the reference's actual usage (a schema
 dump + query log, both small).
 
-Requests are independent. Each migration writes into its own
-directory, then publishes `<resultId>.zip`. The POST response carries
+Requests are independent. Each migration streams its archive into a
+temp file of its own in the results directory, then publishes it as
+`<resultId>.zip` by a rename. The POST response carries
 `resultId` (and the `X-Migration-Id` header), and
 `GET /download/result?id=<resultId>` serves exactly that archive; a
 bare `GET /download/result` (what the reference client calls) serves
@@ -44,7 +49,8 @@ admission limit. The HTTP thread reads the body and hands it to a
 worker, which parses the upload, migrates it and publishes its zip; the
 server alone records the result id and writes the log. A worker that
 dies fails its request with a 500 and is replaced. Each POST writes one
-JSON line to stderr: its id, status, stage wall seconds, the tables
+JSON line to stderr: its id, status, stage wall seconds (`build` and
+`zip` each summed over the document chunks), the tables
 the planner referenced to keep documents under 16 MiB, documents per
 collection and bytes in and out, and on a failure the error class
 (after the traceback).
@@ -55,14 +61,11 @@ Run:  python -m relational_to_doc_oriented_nosql_migrator_spark.service [--port 
 from __future__ import annotations
 
 import contextlib
-import email
-import email.policy
 import json
 import multiprocessing
 import os
 import queue
 import re
-import shutil
 import signal
 import sys
 import tempfile
@@ -82,7 +85,7 @@ from relational_to_doc_oriented_nosql_migrator_spark.functions.template import (
     document_template,
 )
 from relational_to_doc_oriented_nosql_migrator_spark.sinks.documents import (
-    write_documents,
+    zip_documents,
 )
 
 ZIP_NAME = "collections.zip"
@@ -209,10 +212,12 @@ def _run_in_worker(content_type: str, body: bytes, results_dir: str,
                    record: dict) -> dict:
     """run_migration's work, in a worker process.
 
-    The per-collection files go to a directory of this request alone,
-    which is removed once the zip is built; the zip is then published by
-    a rename to result_zip(results_dir, resultId), so that path only
-    ever holds a complete archive."""
+    The documents are built a chunk at a time and each chunk is deflated
+    straight into its collection's zip entry, in a temp file beside the
+    published archives; no collection file is written. The temp file is
+    published by a rename to result_zip(results_dir, resultId), so that
+    path only ever holds a complete archive, and is removed if the
+    migration fails."""
     fields = _parse_multipart(content_type, body)
     sql_text = fields.get("sqlFile")
     if sql_text is None:
@@ -223,24 +228,27 @@ def _run_in_worker(content_type: str, body: bytes, results_dir: str,
                else "mysql")
     result_id = record["id"]
     stages = record.setdefault("stages", {})
-    work_dir = os.path.join(results_dir, result_id)
+    published = result_zip(results_dir, result_id)
+    zip_tmp = published + ".part"
     try:
-        documents, catalog, plan = migrate_dump_on_driver(
+        chunks, catalog, plan = migrate_dump_on_driver(
             sql_text, log_content=log_content, log_dialect=dialect,
             record=record,
         )
-        # Per-collection whole-array JSON files + zip, like the
+        # One whole-array JSON entry per non-empty collection, like the
         # reference's WriteToFile + archiver flow
-        # (server/WriteToFile.js:5-62). The empty-collection drop rides
-        # along (filter_nonempty_collection).
-        zip_tmp = os.path.join(work_dir, ZIP_NAME)
+        # (server/WriteToFile.js:5-62, filter_nonempty_collection).
+        # The chunks are built inside the loop: `build` is their share,
+        # `zip` the rest.
         with timed_stage(stages, "zip"):
-            record["documents"] = write_documents(
-                documents, work_dir, single_file=True, zip_path=zip_tmp)
+            record["documents"] = zip_documents(chunks, zip_tmp)
+        stages["zip"] = round(stages["zip"] - stages["build"], 6)
         record["bytes_out"] = os.path.getsize(zip_tmp)
-        os.replace(zip_tmp, result_zip(results_dir, result_id))
-    finally:
-        shutil.rmtree(work_dir, ignore_errors=True)
+        os.replace(zip_tmp, published)
+    except BaseException:
+        with contextlib.suppress(FileNotFoundError):
+            os.remove(zip_tmp)
+        raise
     return {
         "resultId": result_id,
         "tables": _catalog_tables_payload(catalog),
@@ -248,23 +256,76 @@ def _run_in_worker(content_type: str, body: bytes, results_dir: str,
     }
 
 
+# One `; name=value` parameter of a header (RFC 7578 §4.2): a quoted
+# value may hold `;` and `\"`.
+_PARAM = re.compile(r';\s*([^\s=;]+)\s*=\s*(?:"((?:[^"\\]|\\.)*)"|([^;]*))')
+# What may follow `--boundary` on a delimiter line: `--` on the close
+# delimiter, then transport padding and the line end (RFC 2046 §5.1.1).
+_DELIMITER_END = re.compile(rb"(--)?[ \t]*(?:\r\n|\Z)")
+
+
+def _params(value: str) -> dict[str, str]:
+    """A header value's parameters, names lowercased, quoted values
+    unquoted as email.utils.unquote does."""
+    params, pos = {}, value.find(";")
+    while pos >= 0 and (m := _PARAM.match(value, pos)):
+        if m[2] is None:
+            params[m[1].lower()] = m[3].strip()
+        else:
+            params[m[1].lower()] = m[2].replace("\\\\", "\\").replace(
+                '\\"', '"')
+        pos = m.end()
+    return params
+
+
+def _body_parts(body: bytes, boundary: bytes):
+    """The bytes of each part of a multipart body: between delimiter
+    lines `--boundary`, each at the start of the body or after a CRLF
+    (which belongs to the delimiter), up to the close delimiter
+    `--boundary--`. The preamble and the epilogue are dropped."""
+    sep = b"\r\n--" + boundary
+    start = None  # where the current part begins
+    # a delimiter at the start of the body is found as if a CRLF were
+    # before it
+    at = -2 if body.startswith(sep[2:]) else body.find(sep)
+    while at != -1:
+        end = _DELIMITER_END.match(body, at + len(sep))
+        if end:
+            if start is not None:
+                yield body[start:at]
+            if end[1]:
+                return
+            start = end.end()
+        at = body.find(sep, at + len(sep))
+    if start is not None:
+        yield body[start:]
+
+
 def _parse_multipart(content_type: str, body: bytes) -> dict[str, str]:
     """Multipart form fields -> {name: UTF-8 text}, file parts and plain
-    fields alike (undecodable bytes are replaced). Stdlib email parsing:
-    the body IS a MIME document once a header is prefixed."""
-    msg = email.message_from_bytes(
-        b"Content-Type: " + content_type.encode() + b"\r\n\r\n" + body,
-        policy=email.policy.HTTP,
-    )
-    if not msg.is_multipart():
+    fields alike (undecodable bytes are replaced; a later part of the same
+    name wins). Split at the byte level per RFC 7578: a part is its
+    header lines, a blank line and its content; a part without a
+    Content-Disposition `name` is skipped. A Content-Transfer-Encoding,
+    which RFC 7578 §4.7 deprecates, is not decoded."""
+    mime = content_type.partition(";")[0].strip().lower()
+    boundary = _params(content_type).get("boundary")
+    if not mime.startswith("multipart/") or not boundary:
         raise ValueError("expected multipart/form-data")
     fields: dict[str, str] = {}
-    for part in msg.iter_parts():
-        name = part.get_param("name", header="content-disposition")
-        if name is None:
-            continue
-        payload = part.get_payload(decode=True) or b""
-        fields[name] = payload.decode("utf-8", "replace")
+    for part in _body_parts(body, boundary.encode("utf-8")):
+        if part.startswith(b"\r\n"):
+            head, content = b"", part[2:]
+        else:
+            head, _sep, content = part.partition(b"\r\n\r\n")
+        disposition = None
+        for line in head.decode("utf-8", "replace").split("\r\n"):
+            name, _colon, value = line.partition(":")
+            if name.strip().lower() == "content-disposition":
+                disposition = value
+        name = disposition and _params(disposition).get("name")
+        if name is not None:
+            fields[name] = content.decode("utf-8", "replace")
     return fields
 
 

@@ -176,7 +176,7 @@ def write_json_collections(
         # driver — small outputs only. The default distributed mode is
         # the one to point at a real corpus.
         texts = _pooled(lambda _name, df: df.toJSON().collect(), frames)
-        wrote = write_documents(texts, out_dir, single_file=True,
+        wrote = write_documents(texts.items(), out_dir, single_file=True,
                                 zip_path=zip_path)
     else:
         root = out_dir.rstrip("/")

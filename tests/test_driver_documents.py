@@ -15,6 +15,10 @@ from relational_to_doc_oriented_nosql_migrator_spark.dump_migration import (
 from relational_to_doc_oriented_nosql_migrator_spark.engine import (
     migrate_from_dump,
 )
+from relational_to_doc_oriented_nosql_migrator_spark.plans.documents import (
+    CHUNK_ROWS,
+    build_documents,
+)
 from relational_to_doc_oriented_nosql_migrator_spark.plans.planner import (
     MAX_DOCUMENT_BYTES,
 )
@@ -22,7 +26,7 @@ from relational_to_doc_oriented_nosql_migrator_spark.sinks import (
     write_documents,
     write_json_collections,
 )
-from tests.test_sqldump import _dump_cases, _perfbench_gen
+from tests.test_sqldump import _driver_documents, _dump_cases, _perfbench_gen
 
 # A two-way junction: enrollment embeds into both endpoints with the
 # other endpoint's columns, which replace the junction's (course.title
@@ -114,6 +118,46 @@ WIDE_DUMP = (
 )
 
 
+def _edge_row(i: int) -> str:
+    """Row i of EDGES_DUMP's reading table."""
+    if i in (10, 4095):  # every field NULL or NaN: the row is dropped
+        return "(NULL, NaN, NULL, NULL, NULL, NULL)"
+    rid = "NULL" if i in (4094, 4097) else str(i)
+    x = {0: "0.0", 3: "1e-4", 5: "1e7", 7: "-0.0", 9: "NaN", 11: "Infinity",
+         13: "-Infinity", 4096: "NULL", 4098: "NULL"}.get(i, str(i / 2 + .25))
+    some = "NULL" if i % 3 == 0 else f"'v{i}'"
+    made = ("'0000-00-00'" if i % 7 == 0 else "NULL" if i % 7 == 1
+            else f"'2024-01-{i % 28 + 1:02d}'")
+    seen = ("'2024-01-01 16:59:59'" if i % 4 == 0
+            else "'2024-01-01 17:00:00'" if i % 4 == 1
+            else "'0000-00-00 00:00:00'" if i % 4 == 2 else "NULL")
+    return f"({rid}, {x}, NULL, {some}, {made}, {seen})"
+
+
+# Every exit from the renderers' fast paths: one double column mixing
+# 1e-4, 1e7, -0.0, NaN and the infinities with in-range values (and only
+# in-range values past the first chunk), an all-NULL and a partly-NULL
+# column, keys holding `%` (a null-free table's rows are one `%`
+# format), rows whose fields are all NULL or NaN, MySQL zero dates and
+# timestamps on both sides of the Asia/Bangkok day boundary, and a table
+# longer than one chunk (plans.documents.CHUNK_ROWS) with NULLs and
+# embedded arrays on both sides of the chunk boundary.
+EDGES_DUMP = (
+    "CREATE TABLE reading (id INT PRIMARY KEY, x DOUBLE, nothing "
+    "VARCHAR(5), `pct%s` VARCHAR(8), made DATE, seen DATETIME);\n"
+    "CREATE TABLE tag (id INT PRIMARY KEY, reading_id INT, label "
+    "VARCHAR(8), FOREIGN KEY (reading_id) REFERENCES reading (id));\n"
+    "INSERT INTO reading VALUES\n"
+    + ",\n".join(map(_edge_row, range(5000))) + ";\n"
+    "INSERT INTO tag VALUES " + ",".join(
+        f"({j}, {r}, {label})" for j, (r, label) in enumerate([
+            (1, "'a'"), (1, "NULL"), (4093, "'b'"), (4095, "'c'"),
+            (4096, "'d'"), (4096, "'e'"), (4099, "NULL"), (4999, "'z'")]))
+    + ";\nCREATE TABLE pcts (`a%s` INT PRIMARY KEY, `b%%` VARCHAR(3));\n"
+    "INSERT INTO pcts VALUES (1, 'x'), (2, 'y');\n"
+)
+
+
 def _array_texts(text: str) -> list[str]:
     """The element texts of a single-file collection (`[doc,doc,...]`),
     exactly as written."""
@@ -139,9 +183,9 @@ def _assert_same(spark, tmp_path, dump, log=None, normalize_dates=True):
     collections, _catalog, spark_plan = migrate_from_dump(
         spark, dump, log_content=log, normalize_dates=normalize_dates)
     write_json_collections(collections, str(spark_dir), single_file=True)
-    documents, _catalog, driver_plan = migrate_dump_on_driver(
+    chunks, _catalog, driver_plan = migrate_dump_on_driver(
         dump, log_content=log, normalize_dates=normalize_dates)
-    write_documents(documents, str(driver_dir), single_file=True)
+    write_documents(chunks, str(driver_dir), single_file=True)
     assert spark_plan.size_referenced == driver_plan.size_referenced
     expected, got = _collections(spark_dir), _collections(driver_dir)
     assert sorted(got) == sorted(expected)
@@ -150,7 +194,7 @@ def _assert_same(spark, tmp_path, dump, log=None, normalize_dates=True):
 
 
 _CASES = {**_dump_cases(), "two_way": TWO_WAY_DUMP, "nested": NESTED_DUMP,
-          "doubles": DOUBLES_DUMP, "wide": WIDE_DUMP}
+          "doubles": DOUBLES_DUMP, "wide": WIDE_DUMP, "renderer_edges": EDGES_DUMP}
 
 
 @pytest.mark.parametrize("normalize_dates", [True, False])
@@ -174,20 +218,29 @@ def test_driver_documents_equal_spark_on_perfbench_dumps(spark, tmp_path,
 
 def test_the_new_dumps_reach_their_shapes():
     """The hand-written dumps exercise what they are for: a two-way
-    junction in both endpoints, a two-level embed, Java's exponent form,
-    a child referenced by the document size rule."""
-    docs = migrate_dump_on_driver(TWO_WAY_DUMP)[0]
+    junction in both endpoints, a two-level embed, rows dropped and
+    arrays embedded across a chunk boundary, Java's exponent form, a
+    child referenced by the document size rule."""
+    docs = _driver_documents(TWO_WAY_DUMP)
     assert set(docs) == {"student", "course"}
     assert '"enrollment":[{"credits":0.5},{"credits":0.5},' in docs["student"][0]
-    docs = migrate_dump_on_driver(NESTED_DUMP)[0]
+    docs = _driver_documents(NESTED_DUMP)
     assert list(docs) == ["region"] and len(docs["region"]) == 3
     asia = json.loads(docs["region"][0])
     assert [n.get("name") for n in asia["nation"]] == [None, None, "thai",
                                                        "thai"]
     assert asia["nation"][2]["city"][-1]["seen"] == "1900-01-01"
-    docs = migrate_dump_on_driver(DOUBLES_DUMP)[0]["num"]
+    docs = _driver_documents(EDGES_DUMP)["reading"]
+    assert _driver_documents(EDGES_DUMP)["pcts"][1] == '{"a%s":2,"b%%":"y"}'
+    assert len(docs) == 4998 and CHUNK_ROWS == 4096
+    assert docs[9] == ('{"id":9,"x":"NaN","made":"2024-01-10",'
+                       '"seen":"2024-01-02"}')
+    assert docs[4094] == ('{"id":4096,"pct%s":"v4096","seen":"2024-01-01",'
+                          '"tag":[{"id":4,"label":"d"},{"id":5,"label":"e"}]}')
+    docs = _driver_documents(DOUBLES_DUMP)["num"]
     assert '"x":1.0E16,' in docs[1] and '"x":1.0E-4,' in docs[13]
-    docs, _catalog, plan = migrate_dump_on_driver(WIDE_DUMP)
+    chunks, _catalog, plan = migrate_dump_on_driver(WIDE_DUMP)
+    docs = build_documents(chunks)
     assert plan.size_referenced == ["book"]
     assert docs["shelf"] == ['{"id":1,"name":"tall"}']
     assert [json.loads(d)["shelf_id_REF"] for d in docs["book"]] == [1] * 4

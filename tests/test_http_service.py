@@ -107,6 +107,122 @@ def test_post_bad_dump_is_500_like_the_reference(server):
     assert ei.value.read() == b"Internal Server Error"
 
 
+def _email_fields(content_type: str, body: bytes) -> dict[str, str]:
+    """The form fields as the stdlib email parser reads the body."""
+    import email
+    import email.policy
+
+    msg = email.message_from_bytes(
+        b"Content-Type: " + content_type.encode() + b"\r\n\r\n" + body,
+        policy=email.policy.HTTP)
+    if not msg.is_multipart():
+        raise ValueError("expected multipart/form-data")
+    fields = {}
+    for part in msg.iter_parts():
+        name = part.get_param("name", header="content-disposition")
+        if name is not None:
+            payload = part.get_payload(decode=True) or b""
+            fields[name] = payload.decode("utf-8", "replace")
+    return fields
+
+
+_CT = "multipart/form-data; boundary=xB"
+_DISPOSITION = b'Content-Disposition: form-data; name='
+_MULTIPART_CASES = {
+    "quoted_boundary": (
+        'multipart/form-data; boundary="a b:c=d"',
+        b'--a b:c=d\r\n' + _DISPOSITION + b'"sqlFile"\r\n\r\nSELECT 1;'
+        b'\r\n--a b:c=d--\r\n',
+        {"sqlFile": "SELECT 1;"}),
+    "part_content_types": (
+        _CT,
+        b'--xB\r\n' + _DISPOSITION + b'"sqlFile"; filename="d.sql"\r\n'
+        b'Content-Type: application/sql\r\n\r\nCREATE TABLE t (id INT);'
+        b'\r\n--xB\r\ncontent-type: text/plain; charset=utf-8\r\n'
+        b'content-disposition: form-data; name=dbType\r\n\r\npostgres'
+        b'\r\n--xB--\r\n',
+        {"sqlFile": "CREATE TABLE t (id INT);", "dbType": "postgres"}),
+    "filename_before_name": (
+        _CT,
+        b'--xB\r\nContent-Disposition: form-data; filename="a; name=b"; '
+        b'name="logFile"\r\n\r\nlog\r\n--xB--\r\n',
+        {"logFile": "log"}),
+    "preamble_and_epilogue": (
+        _CT,
+        b'preamble --xB\r\n\r\n--xB\r\n' + _DISPOSITION + b'"sqlFile"'
+        b'\r\n\r\nx\r\n--xB--  \r\nepilogue\r\n--xB\r\n' + _DISPOSITION
+        + b'"logFile"\r\n\r\nafter the end\r\n',
+        {"sqlFile": "x"}),
+    "crlf_in_body": (
+        _CT,
+        b'--xB\r\n' + _DISPOSITION + b'"sqlFile"\r\n\r\nline 1\r\n\r\n'
+        b'line 3\r\n--xBnot\r\n\r\n--xB--\r\n',
+        {"sqlFile": "line 1\r\n\r\nline 3\r\n--xBnot\r\n"}),
+    "undecodable_bytes": (
+        _CT,
+        b'--xB\r\n' + _DISPOSITION + b'"sqlFile"\r\n\r\n\xff\xfe caf\xc3\xa9 '
+        b'\xc3\r\n--xB--\r\n',
+        {"sqlFile": "\ufffd\ufffd caf\u00e9 \ufffd"}),
+    # the worker then fails the request with a 500
+    # (test_post_bad_dump_is_500_like_the_reference)
+    "no_sql_file": (
+        _CT,
+        b'--xB\r\n' + _DISPOSITION + b'"dbType"\r\n\r\nmysql\r\n--xB\r\n'
+        b'Content-Disposition: form-data\r\n\r\nnameless\r\n--xB--\r\n',
+        {"dbType": "mysql"}),
+}
+
+
+@pytest.mark.parametrize("case", list(_MULTIPART_CASES))
+def test_multipart_fields_are_read_as_email_reads_them(case):
+    content_type, body, want = _MULTIPART_CASES[case]
+    assert service._parse_multipart(content_type, body) == want
+    assert _email_fields(content_type, body) == want
+
+
+def test_a_body_that_is_not_multipart_is_refused():
+    for parse in (service._parse_multipart, _email_fields):
+        with pytest.raises(ValueError, match="expected multipart/form-data"):
+            parse("text/plain", b"sqlFile=x")
+
+
+def test_no_work_file_stays_in_the_results_dir(tmp_path, monkeypatch):
+    """After a good POST only its archive is in the results directory;
+    a dump that fails to parse, and a build that fails after the first
+    chunk went into the archive, leave nothing behind."""
+    from relational_to_doc_oriented_nosql_migrator_spark import (
+        dump_migration,
+    )
+
+    real = dump_migration.document_chunks
+
+    def failing_midway(defs, shapes, normalize_dates):
+        chunks = real(defs, shapes, normalize_dates)
+        yield next(chunks)
+        if "t_fail" in defs:
+            raise RuntimeError("build failed")
+        yield from chunks
+
+    # patched before serve() forks, so the workers run it
+    monkeypatch.setattr(dump_migration, "document_chunks", failing_midway)
+    monkeypatch.setenv("SPARK_GRAFT_CPUS", "1")
+    srv = service.serve(results_dir=str(tmp_path))
+    try:
+        with _post(srv, {"sqlFile": ("d.sql", DUMP_FIXTURE)}) as resp:
+            result_id = json.load(resp)["resultId"]
+        assert os.listdir(tmp_path) == [f"{result_id}.zip"]
+        for dump in ("CREATE TABLE t (id INT);\nINSERT INTO t VALUES (x1);\n",
+                     "CREATE TABLE a (id INT);\nINSERT INTO a VALUES (1);\n"
+                     "CREATE TABLE t_fail (id INT);\n"):
+            with pytest.raises(urllib.error.HTTPError) as ei:
+                _post(srv, {"sqlFile": ("d.sql", dump)})
+            assert ei.value.code == 500
+            ei.value.close()
+            assert os.listdir(tmp_path) == [f"{result_id}.zip"]
+    finally:
+        srv.shutdown()
+
+
 def test_unknown_paths_404(server):
     for method, path in (("GET", "/nope"), ("POST", "/nope")):
         req = urllib.request.Request(

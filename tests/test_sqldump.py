@@ -346,6 +346,18 @@ INSERT INTO public.path (id, p) VALUES (3, E'\x41\101\u00e9\'\q');
 """
 
 
+def _driver_documents(dump: str, **kwargs) -> dict[str, list[str]]:
+    """{collection: documents} of the driver-side dump migration."""
+    from relational_to_doc_oriented_nosql_migrator_spark.dump_migration import (
+        migrate_dump_on_driver,
+    )
+    from relational_to_doc_oriented_nosql_migrator_spark.plans.documents import (
+        build_documents,
+    )
+
+    return build_documents(migrate_dump_on_driver(dump, **kwargs)[0])
+
+
 def _perfbench_gen():
     import os
     import sys
@@ -459,9 +471,6 @@ def test_fk_type_mismatch_is_rejected_on_both_dump_paths(spark):
 def test_numeric_fk_pairs_are_accepted(spark):
     """An INT column may reference a DECIMAL one: both executors join
     numeric keys by value."""
-    from relational_to_doc_oriented_nosql_migrator_spark.dump_migration import (
-        migrate_dump_on_driver,
-    )
     from relational_to_doc_oriented_nosql_migrator_spark.engine import (
         migrate_from_dump,
     )
@@ -469,7 +478,7 @@ def test_numeric_fk_pairs_are_accepted(spark):
     import json
 
     dump = _FK_TYPE_MISMATCH.replace("VARCHAR(10)", "DECIMAL(10,0)")
-    documents, _catalog, _plan = migrate_dump_on_driver(dump)
+    documents = _driver_documents(dump)
     collections, _catalog, _plan = migrate_from_dump(spark, dump)
     for texts in (documents["p"], collections["p"].toJSON().collect()):
         docs = [json.loads(t) for t in texts]
@@ -481,9 +490,6 @@ def test_serial_keys_are_integers_that_integer_fks_reference():
     reference one, and their values come out as numbers."""
     import json
 
-    from relational_to_doc_oriented_nosql_migrator_spark.dump_migration import (
-        migrate_dump_on_driver,
-    )
 
     dump = """
 CREATE TABLE p (id SERIAL PRIMARY KEY, name TEXT);
@@ -492,7 +498,7 @@ CREATE TABLE c (cid BIGSERIAL PRIMARY KEY, pid INTEGER,
 INSERT INTO p VALUES (1,'a');
 INSERT INTO c VALUES (7,1);
 """
-    documents, _catalog, _plan = migrate_dump_on_driver(dump)
+    documents = _driver_documents(dump)
     assert [json.loads(d) for d in documents["p"]] == [
         {"id": 1, "name": "a", "c": [{"cid": 7}]}
     ]
@@ -545,15 +551,12 @@ def test_rows_must_match_their_column_list(spark, dump, match):
 def test_insert_ignore_and_replace_rows_load(spark):
     """mysqldump --insert-ignore and --replace rows load like INSERT rows
     on both dump paths (primary-key duplicates are not modelled)."""
-    from relational_to_doc_oriented_nosql_migrator_spark.dump_migration import (
-        migrate_dump_on_driver,
-    )
 
     dump = ("CREATE TABLE t (id INT, PRIMARY KEY (id));\n"
             "INSERT IGNORE INTO t VALUES (1),(2);\n"
             "REPLACE INTO t VALUES (3);\n"
             "insert  ignore  into t (id) values (4);\n")
-    documents = migrate_dump_on_driver(dump)[0]
+    documents = _driver_documents(dump)
     assert documents["t"] == [f'{{"id":{i}}}' for i in (1, 2, 3, 4)]
     table = import_sql_dump(spark, dump)[1]["t"]
     assert [r["id"] for r in table.collect()] == [1, 2, 3, 4]
@@ -562,9 +565,6 @@ def test_insert_ignore_and_replace_rows_load(spark):
 def test_introducers_and_zero_dates(spark):
     """A charset introducer reads as its quoted text, and MySQL's zero
     dates load as NULL, on both dump paths."""
-    from relational_to_doc_oriented_nosql_migrator_spark.dump_migration import (
-        migrate_dump_on_driver,
-    )
     from relational_to_doc_oriented_nosql_migrator_spark.sources.sqldump import (
         read_dump,
     )
@@ -583,7 +583,7 @@ def test_introducers_and_zero_dates(spark):
     got = table.selectExpr("id", "data", "CAST(made AS STRING)",
                            "CAST(seen AS STRING)").collect()
     assert {r[0]: tuple(r[1:]) for r in got} == want
-    documents = migrate_dump_on_driver(MYSQLDUMP8_DUMP)[0]["blob_t"]
+    documents = _driver_documents(MYSQLDUMP8_DUMP)["blob_t"]
     assert documents[0] == '{"id":1,"data":"ab"}'
 
 
@@ -720,15 +720,12 @@ def test_statement_heads_skip_comments_and_read_quoted_names(spark):
     """A comment between a head's words is skipped, and a quoted name is
     one token, whatever it holds: every row loads, under the name the
     server gives it, on both dump paths."""
-    from relational_to_doc_oriented_nosql_migrator_spark.dump_migration import (
-        migrate_dump_on_driver,
-    )
 
     assert _loaded_rows(spark, HEADS_DUMP, "a;b") == [
         ("i)d", "na,me"), (1, "one"), (2, "two"), (3, "th;ree")]
     assert _loaded_rows(spark, HEADS_DUMP, "c)d") == [
         ("id", "ab_id", 'q"t'), (10, 1, "x"), (11, 3, None), (12, 2, None)]
-    documents = migrate_dump_on_driver(HEADS_DUMP)[0]
+    documents = _driver_documents(HEADS_DUMP)
     assert documents["a;b"] == [
         '{"i)d":1,"na,me":"one","c)d":[{"id":10,"q\\"t":"x"}]}',
         '{"i)d":2,"na,me":"two","c)d":[{"id":12}]}',
@@ -758,7 +755,7 @@ def test_dates_with_qualifiers_are_dates(spark):
     assert _loaded_rows(spark, dump, "c") == [
         ("id", "d", "made", "at"), (1, day, None, at), (2, day, dt.date(2024, 2, 29), at)]
     for normalize in (True, False):
-        doc = migrate_dump_on_driver(dump, normalize_dates=normalize)[0]
+        doc = _driver_documents(dump, normalize_dates=normalize)
         assert '{"id":2,"made":"2024-02-29",' in doc["p"][0]
     bad = dump.replace("2024-02-29", "2024-13-45")
     match = r"table c: column made: row 2: cannot read '2024-13-45' as date"

@@ -264,6 +264,12 @@ _REF_CASES = {
     "SELECT * FROM db.t": ["select::db::t"],
     "CREATE TABLE IF NOT EXISTS tmp (x INT)": ["create::null::tmp"],
     "SELECT * FROM (SELECT * FROM x) y WHERE 1": ["select::null::x"],
+    # a derived table in a comma list: the list goes on after it
+    "SELECT * FROM (SELECT * FROM x) y, z":
+        ["select::null::x", "select::null::z"],
+    "SELECT * FROM a, (SELECT 1) t, b": ["select::null::a", "select::null::b"],
+    "SELECT * FROM a, (SELECT * FROM (SELECT * FROM x) i) AS t JOIN b ON 1":
+        ["select::null::a", "select::null::x", "select::null::b"],
     "SELECT 1 FROM dual": [],
     "GRANT ALL ON db TO root": [],
 }
