@@ -15,7 +15,7 @@ twin of the reference's zip download (server/WriteToFile.js:27-35) and
 of the service's per-request record. A dump migrates on the driver
 without Spark (dump_migration.migrate_dump_on_driver; stages `parse`,
 `workload`, `plan`, `build`, `write`); parquet tables run on Spark
-(stages `migrate`, `write`).
+(stages `workload` and `plan`, both within `migrate`, and `write`).
 """
 
 from __future__ import annotations

@@ -27,9 +27,6 @@ from relational_to_doc_oriented_nosql_migrator_spark.plans.documents import (
 from relational_to_doc_oriented_nosql_migrator_spark.plans.planner import (
     convert_schema,
 )
-from relational_to_doc_oriented_nosql_migrator_spark.plans.shape import (
-    document_shapes,
-)
 from relational_to_doc_oriented_nosql_migrator_spark.sources.sqldump import (
     read_dump,
 )
@@ -91,6 +88,5 @@ def migrate_dump_on_driver(
         plan = convert_schema(catalog)
     if record is not None:
         record.update(counts, size_referenced=plan.size_referenced)
-    chunks = document_chunks(defs, document_shapes(catalog, plan),
-                             normalize_dates)
+    chunks = document_chunks(defs, plan.collections, normalize_dates)
     return _timed_chunks(chunks, stages, "build"), catalog, plan

@@ -29,6 +29,9 @@ from relational_to_doc_oriented_nosql_migrator_spark.sources.parquet import (
     scan,
 )
 from relational_to_doc_oriented_nosql_migrator_spark import workload as workload_mod
+from relational_to_doc_oriented_nosql_migrator_spark.dump_migration import (
+    timed_stage,
+)
 
 
 def build_testdata_catalog(
@@ -52,13 +55,18 @@ def _plan_and_materialize(
 ):
     """The tail every source shares: fold the query log into the catalog,
     plan, and build the nested collections. Returns (plan, collections).
-    record, when given, receives the log's `statements` and
-    `unmatched_refs` and the planner's `size_referenced`. The calls
-    resolve `convert_schema`, `materialize` and
-    `workload_mod.apply_workload` as module attributes at call time, so a
-    tracer that patches those names (perfbench/spans.py) sees each call."""
-    counts = workload_mod.apply_workload(catalog, log_content, log_dialect)
-    plan = convert_schema(catalog)
+    record, when given, receives the wall seconds of `workload` and
+    `plan` (in `stages`), the log's `statements` and `unmatched_refs` and
+    the planner's `size_referenced`. The calls resolve `convert_schema`,
+    `materialize` and `workload_mod.apply_workload` as module attributes
+    at call time, so a tracer that patches those names
+    (perfbench/spans.py) sees each call."""
+    stages = None if record is None else record.setdefault("stages", {})
+    with timed_stage(stages, "workload"):
+        counts = workload_mod.apply_workload(catalog, log_content,
+                                             log_dialect)
+    with timed_stage(stages, "plan"):
+        plan = convert_schema(catalog)
     if record is not None:
         record.update(counts, size_referenced=plan.size_referenced)
     return plan, materialize(tables, catalog, plan,

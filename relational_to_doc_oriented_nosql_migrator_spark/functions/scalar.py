@@ -9,7 +9,7 @@ from __future__ import annotations
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
-from relational_to_doc_oriented_nosql_migrator_spark.plans.shape import (
+from relational_to_doc_oriented_nosql_migrator_spark.plans.documents import (
     BANGKOK_TZ,
 )
 

@@ -2,11 +2,12 @@
 
 A SQL dump is parsed into Python columns on the driver
 (sources/sqldump.py) and is bounded by the service's upload limit, so its
-documents are built here in plain Python by the same document shapes
-(plans/shape.py) the Catalyst nesting DAG is built from: one dict index per
-join column, and each document rendered as the JSON text Spark's `toJSON`
-writes for it — key order, null omission, `array_sort` element order,
-Jackson's string escapes and Java's double spelling. Root documents are
+documents are built here in plain Python from the plan's collections
+(plans/planner.Collection: fields, link FK, other-endpoint FK), as the
+Catalyst nesting DAG is: one dict index per join column, and each
+document rendered as the JSON text Spark's `toJSON` writes for it —
+key order, null omission, `array_sort` element order, Jackson's string
+escapes and Java's double spelling. Root documents are
 rendered a chunk of CHUNK_ROWS rows at a time and column at a time: each
 field's slice becomes JSON texts through one `map` of the renderer its
 column type chose once, its key is prefixed the same way, and a row's
@@ -28,9 +29,8 @@ from json.encoder import encode_basestring
 from operator import itemgetter, methodcaller
 from zoneinfo import ZoneInfo
 
-from relational_to_doc_oriented_nosql_migrator_spark.plans.shape import (
-    BANGKOK_TZ,
-    Shape,
+from relational_to_doc_oriented_nosql_migrator_spark.plans.planner import (
+    Collection,
 )
 from relational_to_doc_oriented_nosql_migrator_spark.sources.sqldump import (
     BooleanType,
@@ -41,6 +41,9 @@ from relational_to_doc_oriented_nosql_migrator_spark.sources.sqldump import (
     TimestampType,
 )
 
+# The zone of the reference's date normalization (reference
+# server/MySQLDBManager.js:268-276).
+BANGKOK_TZ = "Asia/Bangkok"
 _BANGKOK = ZoneInfo(BANGKOK_TZ)
 
 # Root rows rendered per chunk: large enough that the per-chunk calls
@@ -189,18 +192,20 @@ class _Builder:
                 renders)
         return self._tables[name]
 
-    def _embeds(self, shape: Shape, pos: dict[str, int]):
-        return [(self.arrays(e), pos[e.parent_key]) for e in shape.embedded]
+    def _embeds(self, coll: Collection, pos: dict[str, int]):
+        return [(self.arrays(e), pos[e.link.referenced_column])
+                for e in coll.embedded]
 
-    def roots(self, shape: Shape) -> Iterator[list[str]]:
+    def roots(self, coll: Collection) -> Iterator[list[str]]:
         """The root documents, CHUNK_ROWS rows at a time (one list, maybe
         empty, for a table without rows)."""
-        pos, columns, renders = self.table(shape.name)
-        keys, array_keys = _keys(shape)
-        cols = [pos[f.column] for f in shape.fields]
+        pos, columns, renders = self.table(coll.name)
+        fields = coll.document_fields
+        keys, array_keys = _keys(coll)
+        cols = [pos[f.column] for f in fields]
         field_renders = [renders[i] for i in cols]
-        embeds = self._embeds(shape, pos)
-        types = self.defs[shape.name].fields
+        embeds = self._embeds(coll, pos)
+        types = self.defs[coll.name].fields
         doubles = [isinstance(types[i][1], DoubleType) for i in cols]
         for start in range(0, max(len(columns[0]), 1), CHUNK_ROWS):
             values = [columns[i][start:start + CHUNK_ROWS] for i in cols]
@@ -215,19 +220,21 @@ class _Builder:
                 docs = list(compress(docs, map(_present, *values)))
             yield docs
 
-    def arrays(self, shape: Shape) -> dict:
+    def arrays(self, coll: Collection) -> dict:
         """Link value -> (sort key, JSON array text) of the embedded
         documents joined to it, in array_sort order."""
-        this = self.table(shape.name)
+        this = self.table(coll.name)
         pos, columns, _renders = this
-        keys, array_keys = _keys(shape)
-        other = shape.other and self.table(shape.other.table)
-        link = pos[shape.link]
+        fields = coll.document_fields
+        keys, array_keys = _keys(coll)
+        other = coll.other and self.table(coll.other.referenced_table)
+        link = pos[coll.link.column]
         rows = [row for row in zip(*columns) if row[link] is not None]
-        if shape.other:
+        if coll.other:
             # each row inner-joined to the other endpoint's rows
             opos, ocolumns, _r = other
-            k, column = opos[shape.other.key], pos[shape.other.column]
+            k = opos[coll.other.referenced_column]
+            column = pos[coll.other.column]
             others = defaultdict(list)
             for o in zip(*ocolumns):
                 if o[k] is not None:
@@ -237,13 +244,13 @@ class _Builder:
         else:
             pairs = [(row, None) for row in rows]
         values, field_renders = [], []
-        for f in shape.fields:
+        for f in fields:
             opos, _c, orenders = other if f.other else this
             i = opos[f.column]
             values.append([(o if f.other else row)[i] for row, o in pairs])
             field_renders.append(orenders[i])
         arrays = [[g.get(row[i]) for row, _o in pairs]
-                  for g, i in self._embeds(shape, pos)]
+                  for g, i in self._embeds(coll, pos)]
         docs = _documents(keys, field_renders, values, array_keys, arrays)
         sort_keys = zip(*[map(_key, v) for v in values],
                         *[[(0,) if a is None else (1, a[0]) for a in column]
@@ -259,24 +266,24 @@ class _Builder:
         return out
 
 
-def _keys(shape: Shape) -> tuple[list[str], list[str]]:
-    """The encoded '"name":'s of the fields and of the arrays."""
-    return ([_string(f.name) + ":" for f in shape.fields],
-            [_string(e.name) + ":" for e in shape.embedded])
+def _keys(coll: Collection) -> tuple[list[str], list[str]]:
+    """The encoded '"name":'s of the document fields and of the arrays."""
+    return ([_string(f.name) + ":" for f in coll.document_fields],
+            [_string(e.name) + ":" for e in coll.embedded])
 
 
 def document_chunks(
-    defs: dict, shapes: list[Shape], normalize_dates: bool = True
+    defs: dict, roots: list[Collection], normalize_dates: bool = True
 ) -> Iterator[tuple[str, list[str]]]:
     """(root collection, documents' JSON texts) chunks for parsed dump
-    tables (sources.sqldump.read_dump) and the plan's document shapes, in
-    plan order, each of at most CHUNK_ROWS source rows: a collection's
+    tables (sources.sqldump.read_dump) and the plan's root collections,
+    in plan order, each of at most CHUNK_ROWS source rows: a collection's
     chunks follow one another, and an empty collection yields one empty
     chunk."""
     builder = _Builder(defs, normalize_dates)
-    for shape in shapes:
-        for docs in builder.roots(shape):
-            yield shape.name, docs
+    for root in roots:
+        for docs in builder.roots(root):
+            yield root.name, docs
 
 
 def build_documents(chunks) -> dict[str, list[str]]:

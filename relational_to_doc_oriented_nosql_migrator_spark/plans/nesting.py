@@ -10,9 +10,11 @@ Spark nesting idiom:
     child.groupBy(fk).agg(collect_list(struct(*fields)))  # one shuffle
          .join(parent, parent[ref] == child[fk], "left")  # hash/SMJ join
 
-applied bottom-up over the nesting tree, so multi-level embedding (region >
-territory[] > employeeterritory[], reference server/models/NoSQLDatabase.js:
-13-27) rides along as already-nested array columns. Catalyst picks broadcast
+applied bottom-up over the plan's collections (their fields, `link` FK
+and a two-way copy's `other` FK: plans/planner.Collection), so
+multi-level embedding (region > territory[] > employeeterritory[],
+reference server/models/NoSQLDatabase.js:13-27) rides along as
+already-nested array columns. Catalyst picks broadcast
 vs sort-merge per side; AQE re-plans for skew at scale.
 
 Scale notes (100 TB): every nesting edge is exactly ONE shuffle of the child
@@ -34,12 +36,8 @@ from relational_to_doc_oriented_nosql_migrator_spark.functions.scalar import (
 from relational_to_doc_oriented_nosql_migrator_spark.plans.catalog import Catalog
 from relational_to_doc_oriented_nosql_migrator_spark.plans.planner import (
     Collection,
-    NoSQLPlan,
-)
-from relational_to_doc_oriented_nosql_migrator_spark.plans.shape import (
     Field,
-    Shape,
-    document_shapes,
+    NoSQLPlan,
 )
 
 # When the parent table has only a handful of rows, each nesting group is
@@ -103,16 +101,12 @@ def _col(name: str) -> Column:
     return F.col(_quoted(name))
 
 
-def _field_names(shape: Shape) -> list[str]:
-    return [f.name for f in shape.fields]
-
-
 def _field_col(f: Field, prefix: str = "") -> Column:
     col = _col(prefix + f.column)
     return col if prefix + f.column == f.name else col.alias(f.name)
 
 
-def _subtree_rows(catalog: Catalog, emb: Collection | Shape) -> int:
+def _subtree_rows(catalog: Catalog, emb: Collection) -> int:
     """Catalog row count of an embedded collection plus everything nested
     under it — the true payload volume of the child frame being
     repartitioned, since earlier attaches fold descendants into arrays."""
@@ -131,7 +125,7 @@ def _table(tables: dict[str, DataFrame], name: str,
 def _prepare_child(
     tables: dict[str, DataFrame],
     catalog: Catalog,
-    emb: Shape,
+    emb: Collection,
     normalize_dates: bool,
 ) -> tuple[DataFrame, list[str], str]:
     """Build the child DataFrame for one embedded collection.
@@ -148,30 +142,33 @@ def _prepare_child(
         df = _attach_embedded(tables, catalog, df, emb.name, nested,
                               normalize_dates)
 
+    fields = emb.document_fields
     prefix = ""
     if emb.other:
         # Two-way embedded junction: the reference's per-junction-row
         # point probe (server/DBMigration.js:524-575) is an inner
         # equi-join with fan-out; the other endpoint's columns come in
-        # prefixed and replace the junction's (Shape.other).
+        # prefixed and replace the junction's (Collection.other).
         other = emb.other
         prefix = "__other_"
-        prefixed = _table(tables, other.table, normalize_dates).select(
-            [_col(other.key).alias("__other_key")]
+        prefixed = _table(tables, other.referenced_table,
+                          normalize_dates).select(
+            [_col(other.referenced_column).alias("__other_key")]
             + [_col(f.column).alias(prefix + f.column)
-               for f in emb.fields if f.other]
+               for f in fields if f.other]
         )
         df = df.join(
             prefixed, df[_quoted(other.column)] == prefixed["__other_key"],
             "inner",
         )
-    names = _field_names(emb)
-    keep = [_field_col(f, prefix if f.other else "") for f in emb.fields]
+    names = [f.name for f in fields]
+    link = emb.link.column
+    keep = [_field_col(f, prefix if f.other else "") for f in fields]
     keep += [_col(n.name) for n in emb.embedded]
-    if emb.link not in names:
-        keep.append(_col(emb.link))
-    fields = names + [n.name for n in emb.embedded]
-    return df.select(*keep), fields, emb.link
+    if link not in names:
+        keep.append(_col(link))
+    names += [n.name for n in emb.embedded]
+    return df.select(*keep), names, link
 
 
 def _attach_embedded(
@@ -179,7 +176,7 @@ def _attach_embedded(
     catalog: Catalog,
     parent_df: DataFrame,
     parent_table: str,
-    emb: Shape,
+    emb: Collection,
     normalize_dates: bool,
 ) -> DataFrame:
     """Nest one embedded collection under parent_df as an array column."""
@@ -242,7 +239,8 @@ def _attach_embedded(
     right = grouped if parent_is_raw else grouped.hint("shuffle_hash")
     out = left.join(
         right,
-        parent_df[_quoted(emb.parent_key)] == grouped["__nest_key"],
+        parent_df[_quoted(emb.link.referenced_column)]
+        == grouped["__nest_key"],
         "left",
     ).drop("__nest_key")
     return out
@@ -250,15 +248,16 @@ def _attach_embedded(
 
 def _root_frame(
     tables: dict[str, DataFrame],
-    root: Shape,
+    root: Collection,
     normalize_dates: bool,
 ) -> DataFrame:
     """A root collection's own document fields, before any child is
     attached; `filter_nonempty_doc` drops documents where no field is
     set (reference server/DBMigration.js:473,481,491)."""
     df = _table(tables, root.name, normalize_dates)
-    return df.select(*[_field_col(f) for f in root.fields]).na.drop(
-        how="all", subset=[_quoted(n) for n in _field_names(root)])
+    fields = root.document_fields
+    return df.select(*[_field_col(f) for f in fields]).na.drop(
+        how="all", subset=[_quoted(f.name) for f in fields])
 
 
 def materialize(
@@ -268,9 +267,9 @@ def materialize(
     normalize_dates: bool = True,
 ) -> dict[str, DataFrame]:
     """Materialize every root collection of the plan as a nested
-    DataFrame, built from its document shape (plans/shape.py)."""
+    DataFrame, laid out as the planner's Collection says."""
     out: dict[str, DataFrame] = {}
-    for root in document_shapes(catalog, plan):
+    for root in plan.collections:
         df = _root_frame(tables, root, normalize_dates)
         for emb in root.embedded:
             df = _attach_embedded(tables, catalog, df, root.name, emb,

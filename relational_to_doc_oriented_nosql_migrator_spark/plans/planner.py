@@ -24,6 +24,14 @@ Reproduces, rule for rule, the reference's conversion logic:
 One rule beyond the reference's: an embed that would push its root's
 estimated mean document past MongoDB's 16 MiB limit is referenced
 instead (`reference_size`, see _plan).
+
+The plan is the one owner of the document layout: each Collection holds
+its fields (output key, source column, which side of a two-way junction
+it reads), the FK it is embedded by (`link`) and, for a two-way copy,
+the FK to the other endpoint (`other`). Both executors, the Catalyst
+nesting DAG (plans/nesting.py) and the driver-side builder for dumps
+(plans/documents.py), read these and nothing else, so they cannot
+disagree on a document's layout.
 """
 
 from __future__ import annotations
@@ -33,24 +41,64 @@ from dataclasses import dataclass, field
 
 from relational_to_doc_oriented_nosql_migrator_spark.plans.catalog import (
     Catalog,
+    ForeignKey,
     TableMeta,
 )
 
 
+@dataclass(frozen=True)
+class Field:
+    """An output key and the source column it reads; an `other` field
+    reads a two-way junction's other endpoint."""
+
+    name: str
+    column: str
+    other: bool = False
+
+
 @dataclass
 class Collection:
-    """A (possibly embedded) output collection.
+    """A (possibly embedded) output collection and its document layout.
 
-    `attributes` is the ordered output field list; embedded children land
-    after the attributes under their own table-name key. For a two-way
-    embedded junction, `embedded_attributes_from` names the other endpoint
-    whose attributes are denormalized into each junction document.
+    A document is the collection's fields in order (null fields
+    omitted), then one array per embedded child in plan order, keyed by
+    the child's name (absent when no child row matches). An embedded
+    collection joins its `link` FK column to the parent's referenced
+    column; rows with a null link join nothing, and a link column that
+    is not a field is left out of the document. A root drops documents
+    whose fields are all null.
+
+    A two-way embedded junction also carries `other`, its FK to the
+    other endpoint (reference server/DBMigration.js:524-575): each
+    junction row is inner-joined to the endpoint rows the FK references,
+    and the endpoint's `other` fields replace the junction's, nulls
+    included (server/DBMigration.js:559-569).
     """
 
     name: str
-    attributes: list[str]
+    fields: list[Field]
     embedded: list["Collection"] = field(default_factory=list)
-    embedded_attributes_from: str | None = None
+    link: ForeignKey | None = None
+    other: ForeignKey | None = None
+
+    @property
+    def attributes(self) -> list[str]:
+        """The output keys in field order, repeats included (the
+        reference's attribute list)."""
+        return [f.name for f in self.fields]
+
+    @property
+    def embedded_attributes_from(self) -> str | None:
+        """A two-way junction copy's other endpoint, whose attributes it
+        denormalizes."""
+        return self.other.referenced_table if self.other else None
+
+    @property
+    def document_fields(self) -> list[Field]:
+        """The fields a document holds: a repeated key keeps its first
+        position and reads the last field of that name (a two-way copy's
+        other endpoint over the junction)."""
+        return list({f.name: f for f in self.fields}.values())
 
     def find(self, name: str) -> "Collection | None":
         """BFS through nested embedded collections (reference
@@ -141,49 +189,46 @@ def create_table_queue(catalog: Catalog) -> list[TableMeta]:
 MAX_DOCUMENT_BYTES = 16 * 1024 * 1024
 
 
+def _fields(columns, other: bool = False) -> list[Field]:
+    return [Field(c, c, other) for c in columns]
+
+
 def _one_way_embed(
     plan: NoSQLPlan, table: TableMeta
 ) -> list[tuple[Collection, Collection]]:
     fk = table.foreign_keys[0]
     parent = plan.get_collection(fk.referenced_table)
-    attributes = [c for c in table.columns if c != fk.column]
-    return [(parent, Collection(table.name, attributes))]
+    fields = _fields(c for c in table.columns if c != fk.column)
+    return [(parent, Collection(table.name, fields, link=fk))]
 
 
 def _two_way_embed(
     catalog: Catalog, plan: NoSQLPlan, table: TableMeta
 ) -> list[tuple[Collection, Collection]]:
     fk1, fk2 = table.foreign_keys[0], table.foreign_keys[1]
-    endpoint1 = plan.get_collection(fk1.referenced_table)
-    endpoint2 = plan.get_collection(fk2.referenced_table)
-    table1 = catalog.get_table(fk1.referenced_table)
-    table2 = catalog.get_table(fk2.referenced_table)
+    junction = _fields(
+        c for c in table.columns if c != fk1.column and c != fk2.column)
 
-    junction_attrs = [
-        c for c in table.columns if c != fk1.column and c != fk2.column
-    ]
-    # Each copy denormalizes the OTHER endpoint's columns (minus the column
-    # the junction references there).
-    attrs_into_1 = junction_attrs + [
-        c for c in table2.columns if c != fk2.referenced_column
-    ]
-    attrs_into_2 = junction_attrs + [
-        c for c in table1.columns if c != fk1.referenced_column
-    ]
+    def copy(link: ForeignKey, other: ForeignKey) -> tuple[Collection,
+                                                           Collection]:
+        # Each copy denormalizes the OTHER endpoint's columns (minus the
+        # column the junction references there).
+        other_table = catalog.get_table(other.referenced_table)
+        fields = junction + _fields(
+            (c for c in other_table.columns if c != other.referenced_column),
+            other=True)
+        return (plan.get_collection(link.referenced_table),
+                Collection(table.name, fields, link=link, other=other))
 
-    emb1 = Collection(table.name, attrs_into_1,
-                      embedded_attributes_from=endpoint2.name)
-    emb2 = Collection(table.name, attrs_into_2,
-                      embedded_attributes_from=endpoint1.name)
-    return [(endpoint1, emb1), (endpoint2, emb2)]
+    return [copy(fk1, fk2), copy(fk2, fk1)]
 
 
 def _referencing(table: TableMeta) -> Collection:
     fk_columns = {fk.column for fk in table.foreign_keys}
-    attributes = [
-        c + "_REF" if c in fk_columns else c for c in table.columns
-    ]
-    return Collection(table.name, attributes)
+    return Collection(table.name, [
+        Field(c + "_REF", c) if c in fk_columns else Field(c, c)
+        for c in table.columns
+    ])
 
 
 def _reference_decision(catalog: Catalog, maf: float, table: TableMeta) -> str:
@@ -211,22 +256,20 @@ def _reference_decision(catalog: Catalog, maf: float, table: TableMeta) -> str:
 def _document_bytes(catalog: Catalog, table: TableMeta,
                     coll: Collection) -> float:
     """Estimated JSON bytes of `table`'s rows as `coll` documents, without
-    their embedded arrays: per row, the braces and each attribute's
+    their embedded arrays: per row, the braces and each document field's
     `"key":` and separator, exactly, plus the mean bytes of the column it
-    reads (a two-way junction's denormalized columns read the other
+    reads (a two-way junction's `other` fields read the other
     endpoint's). A table whose reader measured no widths counts 0."""
     if table.column_bytes is None:
         return 0.0
-    other = (catalog.get_table(coll.embedded_attributes_from)
-             if coll.embedded_attributes_from else None)
+    other = (catalog.get_table(coll.other.referenced_table)
+             if coll.other else None)
     per_row = 2.0
-    for attr in coll.attributes:
-        per_row += len(attr.encode()) + 4  # two quotes, colon, comma
-        owner = other if other is not None and attr in other.columns else table
-        column = (attr[:-4] if attr.endswith("_REF")
-                  and attr not in owner.columns else attr)
+    for f in coll.document_fields:
+        per_row += len(f.name.encode()) + 4  # two quotes, colon, comma
+        owner = other if f.other else table
         if owner.column_bytes and owner.num_rows:
-            per_row += owner.column_bytes.get(column, 0) / owner.num_rows
+            per_row += owner.column_bytes.get(f.column, 0) / owner.num_rows
     return table.num_rows * per_row
 
 
@@ -282,7 +325,7 @@ def _plan(catalog: Catalog, name: str) -> tuple[NoSQLPlan,
             for root, extra in added.items():
                 root_bytes[root] += extra
         else:
-            coll = (Collection(table.name, list(table.columns))
+            coll = (Collection(table.name, _fields(table.columns))
                     if decision == "root" else _referencing(table))
             plan.collections.append(coll)
             root_bytes[table.name] = _document_bytes(catalog, table, coll)

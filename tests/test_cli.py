@@ -180,8 +180,8 @@ def test_cli_dump_rerun_zip_holds_only_this_runs_collections(
 def test_cli_tables_single_file_zip_matches_summary(spark, tmp_path, capsys):
     """The Spark single-file mode from the CLI: one JSON array per
     written collection in the zip, as long as the summary's count. The
-    summary has a run id and the wall seconds of the Spark migration and
-    the write."""
+    summary has a run id and the wall seconds of the workload and plan
+    steps, of the Spark migration they are part of, and of the write."""
     import zipfile
 
     from relational_to_doc_oriented_nosql_migrator_spark import cli
@@ -192,8 +192,10 @@ def test_cli_tables_single_file_zip_matches_summary(spark, tmp_path, capsys):
                      "--single-file", "--zip", str(zip_path)]) == 0
     summary = json.loads(capsys.readouterr().out)
     assert len(summary["id"]) == 32 and int(summary["id"], 16) >= 0
-    assert list(summary["stages"]) == ["migrate", "write"]
-    assert summary["stages"]["write"] > 0
+    stages = summary["stages"]
+    assert list(stages) == ["workload", "plan", "migrate", "write"]
+    assert stages["write"] > 0
+    assert 0 <= stages["workload"] + stages["plan"] <= stages["migrate"]
     assert (summary["statements"], summary["unmatched_refs"]) == (0, 0)
     counts = summary["collections"]
     assert {"region", "part", "lineitem"} <= set(counts)

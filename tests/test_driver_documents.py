@@ -118,6 +118,20 @@ WIDE_DUMP = (
 )
 
 
+# A junction whose two FKs reference one table: each copy links by its
+# own FK and denormalizes the other one's endpoint, so a user holds two
+# `follows` arrays, the users it follows and the users following it.
+SELF_JUNCTION_DUMP = """CREATE TABLE usr (id INT PRIMARY KEY, name VARCHAR(20));
+CREATE TABLE follows (
+  a INT, b INT, since INT,
+  FOREIGN KEY (a) REFERENCES usr (id),
+  FOREIGN KEY (b) REFERENCES usr (id)
+);
+INSERT INTO usr VALUES (1, 'ann'), (2, 'bob'), (3, 'cy');
+INSERT INTO follows VALUES (1, 2, 10), (1, 3, 11), (3, 1, 12);
+"""
+
+
 def _edge_row(i: int) -> str:
     """Row i of EDGES_DUMP's reading table."""
     if i in (10, 4095):  # every field NULL or NaN: the row is dropped
@@ -194,7 +208,8 @@ def _assert_same(spark, tmp_path, dump, log=None, normalize_dates=True):
 
 
 _CASES = {**_dump_cases(), "two_way": TWO_WAY_DUMP, "nested": NESTED_DUMP,
-          "doubles": DOUBLES_DUMP, "wide": WIDE_DUMP, "renderer_edges": EDGES_DUMP}
+          "doubles": DOUBLES_DUMP, "wide": WIDE_DUMP, "renderer_edges": EDGES_DUMP,
+          "self_junction": SELF_JUNCTION_DUMP}
 
 
 @pytest.mark.parametrize("normalize_dates", [True, False])
@@ -220,7 +235,8 @@ def test_the_new_dumps_reach_their_shapes():
     """The hand-written dumps exercise what they are for: a two-way
     junction in both endpoints, a two-level embed, rows dropped and
     arrays embedded across a chunk boundary, Java's exponent form, a
-    child referenced by the document size rule."""
+    child referenced by the document size rule, a junction linked and
+    denormalized by its own FK in each copy."""
     docs = _driver_documents(TWO_WAY_DUMP)
     assert set(docs) == {"student", "course"}
     assert '"enrollment":[{"credits":0.5},{"credits":0.5},' in docs["student"][0]
@@ -244,3 +260,9 @@ def test_the_new_dumps_reach_their_shapes():
     assert plan.size_referenced == ["book"]
     assert docs["shelf"] == ['{"id":1,"name":"tall"}']
     assert [json.loads(d)["shelf_id_REF"] for d in docs["book"]] == [1] * 4
+    ann, bob, cy = _driver_documents(SELF_JUNCTION_DUMP)["usr"]
+    assert ('"follows":[{"since":10,"name":"bob"},{"since":11,"name":"cy"}]'
+            in ann and '"follows":[{"since":12,"name":"cy"}]' in ann)
+    assert bob == '{"id":2,"name":"bob","follows":[{"since":10,"name":"ann"}]}'
+    assert ('"follows":[{"since":12,"name":"ann"}]' in cy
+            and '"follows":[{"since":11,"name":"ann"}]' in cy)

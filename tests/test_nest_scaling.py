@@ -25,9 +25,7 @@ from relational_to_doc_oriented_nosql_migrator_spark.plans.nesting import (
 )
 from relational_to_doc_oriented_nosql_migrator_spark.plans.planner import (
     Collection,
-)
-from relational_to_doc_oriented_nosql_migrator_spark.plans.shape import (
-    embedded_shape,
+    Field,
 )
 
 
@@ -50,14 +48,24 @@ def _catalog(child_rows: int, grandchild_rows: int = 0) -> Catalog:
     return Catalog(tables)
 
 
+def _fields(*columns: str) -> list[Field]:
+    return [Field(c, c) for c in columns]
+
+
+def _child(cat: Catalog) -> Collection:
+    """c embedded in p by its FK."""
+    return Collection("c", _fields("ck", "cval"),
+                      link=cat.get_table("c").foreign_keys[0])
+
+
 def test_subtree_rows_counts_descendants():
     cat = _catalog(child_rows=70, grandchild_rows=400)
-    emb = Collection("c", ["ck", "cval"],
-                     embedded=[Collection("g", ["gk"])])
+    emb = Collection("c", _fields("ck", "cval"),
+                     embedded=[Collection("g", _fields("gk"))])
     # An attach of c onto p moves c's rows WITH g's arrays already folded
     # in, so the payload volume is the whole subtree.
     assert _subtree_rows(cat, emb) == 470
-    assert _subtree_rows(cat, Collection("g", ["gk"])) == 400
+    assert _subtree_rows(cat, Collection("g", _fields("gk"))) == 400
 
 
 def _nest_exchange_counts(spark, child_rows: int) -> list[int]:
@@ -70,9 +78,8 @@ def _nest_exchange_counts(spark, child_rows: int) -> list[int]:
         [(i, f"c{i}", i % 10) for i in range(50)],
         "ck int, cval string, pk_fk int")
     cat = _catalog(child_rows=child_rows)
-    emb = embedded_shape(cat, "p", Collection("c", ["ck", "cval"]))
     out = _attach_embedded(
-        {"p": parent, "c": child}, cat, parent, "p", emb,
+        {"p": parent, "c": child}, cat, parent, "p", _child(cat),
         normalize_dates=False,
     )
     plan = out._jdf.queryExecution().sparkPlan().toString()
@@ -110,7 +117,7 @@ def test_large_child_scales_partitions(spark):
     cat = _catalog(child_rows=claimed)
     out = _attach_embedded(
         {"p": parent, "c": child}, cat,
-        parent, "p", embedded_shape(cat, "p", Collection("c", ["ck", "cval"])),
+        parent, "p", _child(cat),
         normalize_dates=False,
     )
     row = out.select("pk", F.to_json("c").alias("c")).collect()[0]

@@ -5,12 +5,11 @@ two-way embeds from both endpoints (category/supplier x product,
 customer/shipper x salesorder, employee x employeeterritory), multi-level
 nest with embed-into-embedded (region), and referencing (orderdetail).
 
-The plan is pinned to the archived artifact rather than re-derived: the
-archived run had orderdetail update-hot WITHOUT the normative parent-chain
-flip (salesorder/product stayed embedded — FIXTURES.md §1.2 quirk notes),
-so the normative planner cannot reproduce the artifact's exact collection
-set. Plan-structure parity is tested separately (tests/test_planner.py);
-this test isolates the MATERIALIZER's document values. Divergences
+The plan is pinned to the archived artifact rather than re-derived
+(tests/northwind_golden.artifact_plan, itself checked without the
+archive). Plan-structure parity is tested separately
+(tests/test_planner.py); this test isolates the MATERIALIZER's document
+values. Divergences
 normalized per SURVEY §7.4: array order (sorted both sides), null-vs-absent
 keys, date normalization disabled (golden keeps raw ISO timestamps).
 """
@@ -21,15 +20,13 @@ from relational_to_doc_oriented_nosql_migrator_spark.engine import (
     migrate_from_dump,
 )
 from relational_to_doc_oriented_nosql_migrator_spark.plans import (
-    Collection,
-    NoSQLPlan,
-    convert_schema,
     northwind_catalog,
 )
 from relational_to_doc_oriented_nosql_migrator_spark.plans.nesting import (
     materialize,
 )
 from tests.northwind_golden import (
+    artifact_plan,
     collections_to_docs,
     invert_golden,
     load_golden,
@@ -37,13 +34,6 @@ from tests.northwind_golden import (
     northwind_dump,
     spark_tables,
 )
-
-
-def _prune(col: Collection, name: str) -> None:
-    """Remove an embedded collection (artifact divergence pinning)."""
-    col.embedded = [c for c in col.embedded if c.name != name]
-    for c in col.embedded:
-        _prune(c, name)
 
 
 @pytest.fixture(scope="module")
@@ -56,34 +46,8 @@ def materialized(spark, golden):
     base = invert_golden(golden)
     tables = spark_tables(spark, base)
     catalog = northwind_catalog({k: len(v) for k, v in base.items()})
-
-    idle = convert_schema(catalog)
-    roots = {c.name: c for c in idle.collections}
-    # Archived artifact: orderdetail was referencing, but product stayed
-    # embedded — prune orderdetail from the embedded trees and add the flat
-    # referencing root by hand (its shape is golden-tested in test_planner).
-    keep = ["category", "customer", "employee", "region", "shipper",
-            "supplier"]
-    for name in keep:
-        _prune(roots[name], "orderdetail")
-    # Artifact quirk (FIXTURES.md §1.2): the archived run's two-way embed
-    # dropped the OTHER ENDPOINT's foreign-key columns too (collection3's
-    # employeeterritory docs carry territorydescription but not territory's
-    # regionId), while the current reference code
-    # (server/DBMigration.js:304-309) filters only the referenced PK.
-    # Pin the attribute list to the artifact.
-    et = roots["employee"].embedded[0]
-    assert et.name == "employeeterritory"
-    et.attributes = [a for a in et.attributes if a != "regionId"]
-    orderdetail = Collection(
-        "orderdetail",
-        ["orderDetailId", "orderId_REF", "productId_REF", "unitPrice",
-         "quantity", "discount"],
-    )
-    plan = NoSQLPlan(
-        "northwind_artifact", [roots[n] for n in keep] + [orderdetail]
-    )
-    out = materialize(tables, catalog, plan, normalize_dates=False)
+    out = materialize(tables, catalog, artifact_plan(catalog),
+                      normalize_dates=False)
     return {
         name: sorted(
             (normalize_doc(r.asDict(recursive=True)) for r in df.collect()),
@@ -91,6 +55,26 @@ def materialized(spark, golden):
         )
         for name, df in out.items()
     }
+
+
+def test_artifact_plan_pins_the_archived_layout():
+    """The pinned plan itself, checked without the golden archive."""
+    plan = artifact_plan(northwind_catalog())
+    et = plan.get_collection("employee").embedded[0]
+    assert et.name == "employeeterritory"
+    assert "regionId" not in et.attributes
+    orderdetail = plan.collections[-1]
+    assert orderdetail.name == "orderdetail" and orderdetail.link is None
+    assert orderdetail.attributes == [
+        "orderDetailId", "orderId_REF", "productId_REF", "unitPrice",
+        "quantity", "discount"]
+    assert plan.get_collection("orderdetail") is orderdetail
+    stack = [e for root in plan.collections for e in root.embedded]
+    assert stack
+    while stack:
+        emb = stack.pop()
+        assert emb.link is not None, emb.name
+        stack.extend(emb.embedded)
 
 
 def _golden_norm(docs):

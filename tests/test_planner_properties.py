@@ -9,6 +9,9 @@ with independent reimplementations, not by replaying the planner's code:
 - rule outcomes: 0-FK root, >2-FK referencing with *_REF renames,
   hot-table referencing, idle 1-FK one-way embed without the FK column,
   idle 2-FK junction embedded under BOTH endpoints with cross-marking
+- links, also when two FKs reference one table: an embedded collection
+  joins its parent by one of its own FKs, and a two-way junction's two
+  copies by different ones, each denormalizing the other's endpoint
 """
 
 from hypothesis import given, settings, strategies as st
@@ -25,6 +28,19 @@ from relational_to_doc_oriented_nosql_migrator_spark.plans.planner import (
 )
 
 
+def _meta(draw, name: str, fks: list[ForeignKey]) -> TableMeta:
+    meta = TableMeta(
+        name=name,
+        num_rows=draw(st.integers(min_value=1, max_value=1000)),
+        columns=[f"{name}_id", f"{name}_a"] + [fk.column for fk in fks],
+        primary_keys=[f"{name}_id"],
+        foreign_keys=fks,
+    )
+    meta.gaf = draw(st.integers(min_value=0, max_value=100_000))
+    meta.uaf = draw(st.integers(min_value=0, max_value=meta.gaf))
+    return meta
+
+
 @st.composite
 def catalogs(draw):
     n = draw(st.integers(min_value=2, max_value=8))
@@ -39,18 +55,24 @@ def catalogs(draw):
             )
         ) if n_fks else []
         fks = [ForeignKey(f"fk_{j}", f"t{j}", f"t{j}_id") for j in targets]
-        columns = [f"{name}_id", f"{name}_a"] + [fk.column for fk in fks]
-        meta = TableMeta(
-            name=name,
-            num_rows=draw(st.integers(min_value=1, max_value=1000)),
-            columns=columns,
-            primary_keys=[f"{name}_id"],
-            foreign_keys=fks,
-        )
-        meta.gaf = draw(st.integers(min_value=0, max_value=100_000))
-        meta.uaf = draw(st.integers(min_value=0, max_value=meta.gaf))
-        metas.append(meta)
+        metas.append(_meta(draw, name, fks))
     return Catalog(metas)
+
+
+@st.composite
+def catalogs_with_shared_targets(draw):
+    """Like catalogs, but a table's FKs may reference one table more than
+    once (a self-junction, a two-column composite FK)."""
+    n = draw(st.integers(min_value=2, max_value=8))
+    metas = []
+    for i in range(1, n + 1):
+        name = f"t{i}"
+        targets = draw(st.lists(st.integers(min_value=0, max_value=i - 1),
+                                max_size=min(3, i)))
+        fks = [ForeignKey(f"fk{k}_t{j}", f"t{j}", f"t{j}_id")
+               for k, j in enumerate(targets)]
+        metas.append(_meta(draw, name, fks))
+    return Catalog([_meta(draw, "t0", [])] + metas)
 
 
 def _fixpoint_admissible(catalog: Catalog) -> set[str]:
@@ -159,3 +181,26 @@ def test_rule_outcomes(catalog):
                 for fk in table.foreign_keys
             }
             assert marks == endpoints
+
+
+@given(st.one_of(catalogs(), catalogs_with_shared_targets()))
+@settings(max_examples=200, deadline=None)
+def test_links_are_own_fks_to_the_parent(catalog):
+    plan = convert_schema(catalog)
+    copies: dict[str, list[Collection]] = {}
+    stack = [(None, root) for root in plan.collections]
+    while stack:
+        parent, coll = stack.pop()
+        stack.extend((coll, e) for e in coll.embedded)
+        if parent is None:
+            assert coll.link is None and coll.other is None
+            continue
+        fks = catalog.get_table(coll.name).foreign_keys
+        assert any(fk is coll.link for fk in fks)
+        assert coll.link.referenced_table == parent.name
+        if coll.other is not None:
+            assert any(fk is coll.other for fk in fks)
+            copies.setdefault(coll.name, []).append(coll)
+    for name, (one, two) in copies.items():
+        assert one.link is not two.link, name
+        assert one.other is two.link and two.other is one.link, name
